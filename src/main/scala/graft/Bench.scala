@@ -5,16 +5,9 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.{Failure, Success, Try}
 
 object Bench {
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** A JSON string literal (quoted and escaped) for the record. */
+  private def jsonString(s: String): String = json.writeValueAsString(s)
 
   /** Accumulates per-task shuffle read/write and spill bytes across the
     * whole app; per-query numbers are deltas between snapshots. Wall-time
@@ -234,7 +227,7 @@ object Bench {
           s""","t_requiet":$t,"load_requiet":${jd(r.loadRequiet.get)}""")
           .getOrElse("")
         s"""\"$k\":{"t":${r.med},"min":${r.mn},"max":${r.mx},"n_runs":${r.n},"load_1m":${jd(r.load1m)}$rq,"shuffle_read":${r.bytes(0)},"shuffle_write":${r.bytes(1)},"spill_mem":${r.bytes(2)},"spill_disk":${r.bytes(3)}}"""
-      case (k, Left(e)) => s"\"$k\":{\"error\":\"${jsonEscape(e)}\"}"
+      case (k, Left(e)) => s"\"$k\":{\"error\":${jsonString(e)}}"
     }.mkString("{", ",", "}")
     val errors = results.collect { case (k, Left(e)) => k -> e }
     val total = results.collect { case (_, Right(r)) => r.med }.sum
@@ -260,7 +253,7 @@ object Bench {
     // on a quiet box the three numbers coincide.
     val headline = if (contaminated) totalRequiet else total
     val loadJson = s""""load_1m_before":${jn(loadBefore)},"load_1m_after":${jn(loadAfter)},"load_1m_max":${jn(loadPeak)},"load_gate":${jn(loadGate)},"preflight_wait_s":$preflightWaitS,"contaminated":$contaminated,"n_requiet":${flagged.size},"value_wall":$total,"value_requiet":$totalRequiet"""
-    val full = s"""{"metric":"total","value":$headline,"unit":"sec","timing":"median_of_3","queries":$qs,"shuffle_read_total":${totalBytes(0)},"shuffle_write_total":${totalBytes(1)},"spill_mem_total":${totalBytes(2)},"spill_disk_total":${totalBytes(3)},"n_errors":${errors.size},$loadJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$headline,"unit":"sec","timing":"median_of_3","queries":$qs,"shuffle_read_total":${totalBytes(0)},"shuffle_write_total":${totalBytes(1)},"spill_mem_total":${totalBytes(2)},"spill_disk_total":${totalBytes(3)},"n_errors":${errors.size},$loadJson,"sf":${jsonString(sfDir)}}"""
     // The full per-query JSON (381 queries) overflows what the driver's
     // stdout capture retains (r5 recorded "parsed": null with only the tail
     // ~80 timings) — so the complete record goes to a FILE artifact, and
@@ -275,8 +268,8 @@ object Bench {
       .sortBy(-_._2).take(25)
       .map { case (k, t) => s"\"$k\":$t" }.mkString("{", ",", "}")
     val errJson = errors.take(10)
-      .map { case (k, e) => s"\"$k\":\"${jsonEscape(e)}\"" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$headline,"unit":"sec","timing":"median_of_3","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"errors":$errJson,"shuffle_write_total":${totalBytes(1)},"spill_disk_total":${totalBytes(3)},$loadJson,"sf":"$sfDir","full_json":"target/bench_full.json"}""")
+      .map { case (k, e) => s"\"$k\":${jsonString(e)}" }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$headline,"unit":"sec","timing":"median_of_3","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"errors":$errJson,"shuffle_write_total":${totalBytes(1)},"spill_disk_total":${totalBytes(3)},$loadJson,"sf":${jsonString(sfDir)},"full_json":"target/bench_full.json"}""")
     spark.stop()
     if (errors.nonEmpty) {
       errors.foreach { case (k, e) => System.err.println(s"[bench] FAILED $k: $e") }

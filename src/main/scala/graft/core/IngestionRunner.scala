@@ -54,6 +54,7 @@ object IngestionRunner {
   def runMaintenance(spark: SparkSession,
                      m: graft.config.MaintenanceConfig): Unit = {
     import graft.lakehouse.{Compaction, ZOrder}
+    import graft.similarity.BucketedIndex
     m.`type`.toLowerCase match {
       case "compact" if m.partitioned =>
         Compaction.compactPartitioned(spark, m.path, m.targetFileBytes, m.minFiles); ()
@@ -299,15 +300,12 @@ object IngestionRunner {
           graft.similarity.DedupIndex.appendAtomic(
             spark.read.parquet(src), idCol, textCol, m.path, key,
             publish = m.publish)
-      case "dedup-index-compact" =>
-        // bucket-preserving small-file rewrite + band_sizes delta fold:
-        // the operational other half of the bucketed index layout — every
-        // batch append adds ≥1 file per bucket, forever, without this
-        graft.similarity.DedupIndex.compact(spark, m.path, m.targetFileBytes); ()
-      case "media-index-compact" =>
-        graft.similarity.MediaDedupIndex.compact(spark, m.path, m.targetFileBytes); ()
-      case "ann-index-compact" =>
-        graft.similarity.AnnIndex.compact(spark, m.path, m.targetFileBytes); ()
+      case BucketedIndex.Compact(index) =>
+        // dedup/media/ann-index-compact: bucket-preserving small-file
+        // rewrite + band_sizes delta fold — the operational other half of
+        // the bucketed index layout: every batch append adds ≥1 file per
+        // bucket, forever, without this
+        index.compact(spark, m.path, m.targetFileBytes); ()
       case "profile-compact" =>
         // fold the append-only profile store to one snapshot; appliedness
         // of every folded batch is preserved as _commits markers
@@ -363,19 +361,12 @@ object IngestionRunner {
             ()
           }
         }
-      case "dedup-index-rebucket" =>
-        // O(index) rewrite to `buckets` buckets (never a corpus re-shingle)
+      case BucketedIndex.Rebucket(index) =>
+        // dedup/media/ann-index-rebucket: O(index) rewrite to `buckets`
+        // buckets from the stored rows (never a corpus re-derivation)
         if (m.buckets <= 0) throw new IllegalArgumentException(
-          "dedup-index-rebucket needs buckets > 0")
-        graft.similarity.DedupIndex.rebucket(spark, m.path, m.buckets)
-      case "media-index-rebucket" =>
-        if (m.buckets <= 0) throw new IllegalArgumentException(
-          "media-index-rebucket needs buckets > 0")
-        graft.similarity.MediaDedupIndex.rebucket(spark, m.path, m.buckets)
-      case "ann-index-rebucket" =>
-        if (m.buckets <= 0) throw new IllegalArgumentException(
-          "ann-index-rebucket needs buckets > 0")
-        graft.similarity.AnnIndex.rebucket(spark, m.path, m.buckets)
+          s"${m.`type`.toLowerCase} needs buckets > 0")
+        index.rebucket(spark, m.path, m.buckets)
       case "profile" =>
         // fold a batch's per-column profile into the monoid profile store
         // (one aggregate pass over the batch; the store itself is tiny

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * needed. The 100 TB property: a table ingested over a year is profiled
   * by touching each byte exactly once at ingest time — the fold input is
   * #batches × #columns rows of metadata, never the data again (the
-  * [[graft.similarity.DedupIndex]] lifecycle, for metrics).
+  * [[graft.similarity.BucketedIndex]] lifecycle, for metrics).
   *
   * Every statistic kept is a commutative monoid (counts and sums add,
   * min/max fold by least/greatest, HLL sketches union via Spark's

@@ -1014,8 +1014,8 @@ object PipelineQueries {
 
   /** Stored-index dedup LIFECYCLE (q80's missing half): the corpus is
     * fingerprinted once into a persistent [[graft.similarity.DedupIndex]]
-    * (two parquet tables + manifest), then two successive "crawl batches"
-    * round-trip it — load → dedup batch 1 → APPEND batch 1 → load → dedup
+    * (the shared [[graft.similarity.BucketedIndex]] lifecycle), then two
+    * "crawl batches" round-trip it — load → dedup batch 1 → APPEND → dedup
     * batch 2 (which must now also see batch-1 docs as corpus). The indexed
     * corpus is never re-read or re-shingled; each batch costs O(batch).
     * The bucket cap spans the combined (index + batch) sides per stage,
@@ -2257,16 +2257,15 @@ object PipelineQueries {
     * the aggregate is one combinable pass. At 100 TB this is the
     * bronze-tier format-migration job: one scan each way, no shuffle
     * beyond the ≤8-group rollup. */
-  /** Persistent ANN SERVING-INDEX lifecycle — the q85 discipline for
-    * embedding similarity search ([[graft.similarity.AnnIndex]]): the
-    * corpus is hyperplane-banded ONCE into bucketed catalog tables
-    * (vectors + bands + band_sizes + manifest), then two successive
-    * "serve batches" round-trip it — query batch 1 top-3 against the
-    * stored bands → APPEND batch 1 → query batch 2 (which must now also
-    * see batch-1 vectors as corpus). The indexed corpus is never
-    * re-banded or re-read from the source column; each batch costs
-    * O(batch) shuffle (BucketedIndexPlanSpec pins no corpus-side
-    * Exchange). The bucket cap spans the combined (index + batch) sides
+  /** Persistent ANN SERVING-INDEX lifecycle — q85's shared
+    * [[graft.similarity.BucketedIndex]] lifecycle for embedding search
+    * ([[graft.similarity.AnnIndex]]): the corpus is hyperplane-banded ONCE
+    * into bucketed tables, then two successive "serve batches" round-trip
+    * it — query batch 1 top-3 against the stored bands → APPEND batch 1 →
+    * query batch 2 (which must now also see batch-1 vectors as corpus).
+    * The indexed corpus is never re-banded or re-read from the source
+    * column; each batch costs O(batch) shuffle (BucketedIndexPlanSpec
+    * pins no corpus-side Exchange). The bucket cap spans the combined (index + batch) sides
     * per stage, and the oracle replays both stages exactly — the same
     * inlined hyperplane literals, cap scopes, left-to-right float64
     * cosine, and (cosine desc, id) rank tie-break, so rank AND cosine

@@ -4,194 +4,82 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Persistent ANN SERVING index — the [[DedupIndex]]/[[MediaDedupIndex]]
-  * lifecycle for embedding similarity search: hyperplane-band the corpus
-  * ONCE into bucketed catalog tables, then serve "top-k neighbors of this
-  * new batch" queries against the STORED bands at O(batch) shuffle cost,
+/** Persistent ANN SERVING index — the [[BucketedIndex]] lifecycle for
+  * embedding similarity search: hyperplane-band the corpus ONCE into
+  * bucketed catalog tables, then serve "top-k neighbors of this new
+  * batch" queries against the STORED bands at O(batch) shuffle cost,
   * appending each served batch into the index so later batches see it as
   * corpus. Before this, every ANN query ([[LshAnn.topKBucketed]] and
   * friends) re-banded the corpus per query — fine for one-shot analytics,
   * wrong for the serving shape where a 100 TB embedding corpus must be
   * indexed once and probed forever (r11 verdict task 1).
   *
-  * Layout (three tables + manifest under one root; each table dir is
-  * versioned `_v<N>` by the manifest — compaction/rebucketing publish a
-  * new version through ONE atomic manifest replace and retire the old
-  * dirs one maintenance cycle later, the [[DedupIndex]] discipline):
-  *   <path>/vectors[_vN]    — (id, v double[], nrm), BUCKETED by id
-  *                            (exact-cosine verify / indexed-id anti-join
-  *                            side; vectors are stored post-cast with the
-  *                            norm precomputed, so serving never re-reads
-  *                            the source embedding column)
-  *   <path>/bands[_vN]      — (id, bkey), BUCKETED by bkey — one row per
-  *                            vector per hash table ("<table>|<bits>",
-  *                            [[LshAnn.bandKeys]]); the candidate join side
-  *   <path>/band_sizes[_vN] — (bkey, n) append-only per-batch size deltas
-  *                            (the degenerate-bucket cap's corpus half —
-  *                            see [[CapFold]])
-  *   <path>/index.json      — banding constants (nTables/nBits/dim/seed)
-  *                            + bucket count + live version, pinned at
-  *                            build so every append/query bands with the
-  *                            planes the corpus was banded with
+  * Tables: `vectors` — (id, v double[], nrm), bucketed by id (exact-cosine
+  * verify / indexed-id anti-join side; stored post-cast with the norm
+  * precomputed, so serving never re-reads the source embedding column);
+  * `bands` — (id, bkey), bucketed by bkey, one row per vector per hash
+  * table ("<table>|<bits>", [[LshAnn.bandKeys]]); `band_sizes` — (bkey, n)
+  * deltas. The manifest pins nTables/nBits/dim/seed, so every append and
+  * query bands with the planes the corpus was banded with.
   *
   * Scale shape: [[queryBatch]]'s candidate join exchanges ONLY the query
-  * batch (the bands table is bucketed by bkey, the vectors table by id —
-  * machine-pinned by BucketedIndexPlanSpec: no Exchange between either
-  * bucketed scan and its join), the cap fold reads the precomputed
+  * batch (machine-pinned by BucketedIndexPlanSpec: no Exchange between
+  * either bucketed scan and its join), the cap fold reads the precomputed
   * band_sizes deltas (never re-counting the bands table), and the only
   * per-query-windowed operator is the top-k rank, bounded per query by
   * its capped candidate count. Recall is the multi-table LSH profile
   * (>98% for cosine ≥ 0.9 at 8 tables × 6 bits); raise nBits with corpus
   * size to hold per-bucket cardinality, nTables for recall.
   */
-object AnnIndex {
+object AnnIndex extends BucketedIndex(
+    label = "ann", primaryBase = "vectors", primaryPrefix = "graft_ann_vecs",
+    bandsPrefix = "graft_ann_bands", bandCols = Seq("bkey"),
+    primaryDdlField = "vecsDdl", keepsIdCol = false) {
 
   /** Banding constants + bucketed-layout metadata, persisted as
-    * `<path>/index.json`. `version` names the live table dirs
-    * ([[IndexCatalog.tableDir]]); the two schema DDLs make fresh-session
-    * re-registration O(1) metadata. */
+    * `<path>/index.json` (see [[BucketedIndex.Layout]]). */
   final case class Manifest(nTables: Int, nBits: Int, dim: Int, seed: Long,
                             numBuckets: Int = 8, version: Int = 0,
                             vecsDdl: String = "", bandsDdl: String = "",
                             epoch: Int = 0)
-
-  private def vecsDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "vectors", m.version)
-  private def bandsDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "bands", m.version)
-  private def sizesDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "band_sizes", m.version)
-  private def vecsName(dir: String) = IndexCatalog.tableName("graft_ann_vecs", dir)
-  private def bandsName(dir: String) = IndexCatalog.tableName("graft_ann_bands", dir)
-  private def opt(s: String): Option[String] = Some(s).filter(_.nonEmpty)
-  private val Bases = Seq("vectors", "bands", "band_sizes")
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "index.json")
-
-  private def writeManifest(spark: SparkSession, path: String, m: Manifest): Unit =
-    IndexCatalog.replaceManifest(spark, manifestPath(path),
-      s"""{"nTables": ${m.nTables}, "nBits": ${m.nBits}, "dim": ${m.dim}""" +
-        s""", "seed": ${m.seed}, "numBuckets": ${m.numBuckets}""" +
-        s""", "version": ${m.version}, "epoch": ${m.epoch}""" +
-        s""", "vecsDdl": "${IndexCatalog.jsonEscape(m.vecsDdl)}"""" +
-        s""", "bandsDdl": "${IndexCatalog.jsonEscape(m.bandsDdl)}"}""")
-
-  /** True iff an index (manifest, or a crashed replace's promotable tmp)
-    * is already present at `path`. */
-  def exists(spark: SparkSession, path: String): Boolean =
-    IndexCatalog.manifestPresent(spark, manifestPath(path))
-
-  /** Read the banding constants the index was built with (healing a
-    * crashed manifest replace — [[IndexCatalog.readManifestText]]). */
-  def manifest(spark: SparkSession, path: String): Manifest = {
-    val p = manifestPath(path)
-    val text = IndexCatalog.readManifestText(spark, p)
-    def num(name: String): Option[Long] =
-      s""""$name"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-    def required(name: String): Long = num(name).getOrElse(
-      throw new IllegalStateException(
-        s"ann index manifest at $p missing field $name"))
-    def sfield(name: String): String =
-      IndexCatalog.stringField(text, name).getOrElse("")
-    Manifest(required("nTables").toInt, required("nBits").toInt,
-      required("dim").toInt, required("seed"),
-      num("numBuckets").map(_.toInt).getOrElse(8),
-      num("version").map(_.toInt).getOrElse(0),
-      sfield("vecsDdl"), sfield("bandsDdl"),
-      num("epoch").map(_.toInt).getOrElse(0))
+      extends BucketedIndex.Manifest {
+    def idCol: String = "id"
+    def primaryDdl: String = vecsDdl
   }
+  type M = Manifest
+
+  protected def constants(m: Manifest): Seq[(String, Long)] = Seq(
+    "nTables" -> m.nTables, "nBits" -> m.nBits, "dim" -> m.dim,
+    "seed" -> m.seed)
+  protected def manifestOf(c: String => Long,
+                           l: BucketedIndex.Layout): Manifest =
+    Manifest(c("nTables").toInt, c("nBits").toInt, c("dim").toInt, c("seed"),
+      l.numBuckets, l.version, l.primaryDdl, l.bandsDdl, l.epoch)
 
   /** (id, v, nrm) — cast to float64 once, norm precomputed once. Zero
     * vectors are the caller's concern (cosine is undefined for them), the
     * [[LshAnn]] contract. */
-  private def normalized(vectors: DataFrame, idCol: String,
-                         vecCol: String): DataFrame =
+  protected def primaryRows(vectors: DataFrame, idCol: String, vecCol: String,
+                            m: Manifest): DataFrame =
     vectors.select(col(idCol).as("id"),
         CosineKnn.toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", sqrt(CosineKnn.dot(col("v"), col("v"))))
 
   /** One (id, bkey) row per vector per hash table, banded with the
     * manifest's planes. */
-  private def banded(vecs: DataFrame, nTables: Int, nBits: Int, dim: Int,
-                     seed: Long): DataFrame =
+  protected def bandRows(vecs: DataFrame, m: Manifest): DataFrame =
     vecs.select(col("id"), explode(array(
-      LshAnn.bandKeys(col("v"), nTables, nBits, dim, seed): _*)).as("bkey"))
-
-  /** Grace-period expiry — drop the names and delete the files of every
-    * table-dir version other than `keep` (retired by the previous
-    * compact/rebucket; kept one maintenance cycle so in-flight scans in
-    * other sessions finish against their resolved listings). */
-  private def cleanRetired(spark: SparkSession, path: String,
-                           keep: Int): Unit =
-    IndexCatalog.retiredVersions(spark, path, Bases, keep).foreach {
-      case (base, ver) =>
-        val dir = IndexCatalog.tableDir(path, base, ver)
-        if (base == "vectors")
-          spark.sql(s"DROP TABLE IF EXISTS `${vecsName(dir)}`")
-        if (base == "bands")
-          spark.sql(s"DROP TABLE IF EXISTS `${bandsName(dir)}`")
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-    }
+      LshAnn.bandKeys(col("v"), m.nTables, m.nBits, m.dim, m.seed): _*))
+      .as("bkey"))
 
   /** Band `vectors` once and write a fresh bucketed index (overwrites any
     * existing index at `path`). `dim`/`seed` pin the hyperplanes: every
     * later append and query bands with exactly these planes. */
   def build(vectors: DataFrame, idCol: String, vecCol: String, path: String,
             nTables: Int = 8, nBits: Int = 6, dim: Int = 64,
-            seed: Long = 42L, numBuckets: Int = 8): Unit = {
-    val spark = vectors.sparkSession
-    // a rebuild over a compacted/rebucketed index must not orphan its
-    // _v<N> dirs; version 0 dirs are overwritten in place below
-    cleanRetired(spark, path, keep = 0)
-    val m0 = Manifest(nTables, nBits, dim, seed, numBuckets, version = 0)
-    IndexCatalog.writeFresh(normalized(vectors, idCol, vecCol),
-      vecsName(vecsDir(path, m0)), vecsDir(path, m0), Seq("id"), numBuckets)
-    // band keys from the STORED vectors (no re-read of the caller's
-    // lineage per reference)
-    val stored = spark.table(vecsName(vecsDir(path, m0)))
-    IndexCatalog.writeFresh(banded(stored, nTables, nBits, dim, seed),
-      bandsName(bandsDir(path, m0)), bandsDir(path, m0), Seq("bkey"),
-      numBuckets)
-    val bandsT = spark.table(bandsName(bandsDir(path, m0)))
-    bandsT.groupBy(col("bkey")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(sizesDir(path, m0))
-    writeManifest(spark, path, m0.copy(
-      vecsDdl = stored.schema.toDDL, bandsDdl = bandsT.schema.toDDL))
-  }
-
-  /** Append new vectors using the index's pinned planes; each table gains
-    * only the batch's rows in its bucket layout, band_sizes gains the
-    * batch's per-bucket delta rows. */
-  def append(vectors: DataFrame, idCol: String, vecCol: String,
-             path: String): Unit = {
-    val spark = vectors.sparkSession
-    val m = manifest(spark, path)
-    // pin the batch BEFORE mutating any index table: the caller's frame
-    // may reference the index itself (the idempotent-append anti-join in
-    // StreamOps does), and the vectors append refreshes the table's file
-    // index IN PLACE — a lazy recompute after it would see the batch's
-    // own ids as already indexed and silently append zero band rows
-    val vecs = normalized(vectors, idCol, vecCol).localCheckpoint(true)
-    IndexCatalog.appendTo(vecs, vecsName(vecsDir(path, m)), vecsDir(path, m),
-      Seq("id"), m.numBuckets, opt(m.vecsDdl), m.epoch)
-    val bandRows = banded(vecs, m.nTables, m.nBits, m.dim, m.seed)
-    IndexCatalog.appendTo(bandRows, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("bkey"), m.numBuckets, opt(m.bandsDdl), m.epoch)
-    bandRows.groupBy(col("bkey")).agg(count(lit(1)).as("n"))
-      .write.mode("append").parquet(sizesDir(path, m))
-  }
-
-  /** Stored ids, column-pruned and bucketed — the anti-join side for
-    * idempotent appends exchanges only the incoming batch. */
-  def indexedIds(spark: SparkSession, path: String): DataFrame = {
-    val m = manifest(spark, path)
-    IndexCatalog.table(spark, vecsName(vecsDir(path, m)), vecsDir(path, m),
-      Seq("id"), m.numBuckets, opt(m.vecsDdl), m.epoch).select(col("id"))
-  }
+            seed: Long = 42L, numBuckets: Int = 8): Unit =
+    create(vectors, idCol, vecCol, path,
+      Manifest(nTables, nBits, dim, seed, numBuckets))
 
   /** Top-k nearest stored neighbors of each query vector, served from the
     * STORED band index: `(query_id, neighbor_id, rank, cosine)` with rank
@@ -208,16 +96,14 @@ object AnnIndex {
                  idCol: String, vecCol: String, k: Int,
                  maxBucket: Option[Int] = None): DataFrame = {
     val m = manifest(spark, path)
-    val corpusBands = IndexCatalog.table(spark, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("bkey"), m.numBuckets, opt(m.bandsDdl), m.epoch)
-    val corpusVecs = IndexCatalog.table(spark, vecsName(vecsDir(path, m)),
-      vecsDir(path, m), Seq("id"), m.numBuckets, opt(m.vecsDdl), m.epoch)
-    val sizes = spark.read.parquet(sizesDir(path, m))
-    val qn = normalized(queries, idCol, vecCol)
+    val corpusBands = bandsTable(spark, path, m)
+    val corpusVecs = primaryTable(spark, path, m)
+    val sizes = bandSizes(spark, path, m)
+    val qn = primaryRows(queries, idCol, vecCol, m)
       .select(col("id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
-    val qbands = banded(qn.select(col("query_id").as("id"),
-        col("qv").as("v")), m.nTables, m.nBits, m.dim, m.seed)
+    val qbands = bandRows(qn.select(col("query_id").as("id"),
+        col("qv").as("v")), m)
       .select(col("id").as("query_id"), col("bkey"))
     val capped = CapFold.applyCap(qbands, Seq("bkey"), maxBucket, sizes)
     val cand = corpusBands.join(capped, Seq("bkey"))
@@ -234,66 +120,5 @@ object AnnIndex {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
         col("cosine"))
-  }
-
-  /** Bucket-preserving maintenance compaction — the ANN twin of
-    * [[DedupIndex.compact]]: zero-shuffle rewrites into fresh `_v<N+1>`
-    * dirs on a dedicated child session, published by ONE atomic manifest
-    * replace; retired dirs stay one maintenance cycle. */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024)
-      : Map[String, IndexCatalog.TableCompaction] = {
-    val m = manifest(spark, path)
-    // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
-    cleanRetired(spark, path, keep = m.version)
-    val next = m.copy(version = m.version + 1)
-    val stats = Map(
-      "vectors" -> IndexCatalog.rewriteBucketed(spark,
-        vecsName(vecsDir(path, m)), vecsDir(path, m),
-        vecsName(vecsDir(path, next)), vecsDir(path, next),
-        Seq("id"), m.numBuckets, targetFileBytes, opt(m.vecsDdl), m.epoch),
-      "bands" -> IndexCatalog.rewriteBucketed(spark,
-        bandsName(bandsDir(path, m)), bandsDir(path, m),
-        bandsName(bandsDir(path, next)), bandsDir(path, next),
-        Seq("bkey"), m.numBuckets, targetFileBytes, opt(m.bandsDdl), m.epoch),
-      "band_sizes" -> IndexCatalog.foldSizeDeltasTo(spark,
-        sizesDir(path, m), sizesDir(path, next), Seq("bkey"),
-        targetFileBytes))
-    writeManifest(spark, path, next.copy(
-      vecsDdl = opt(next.vecsDdl).getOrElse(
-        spark.table(vecsName(vecsDir(path, next))).schema.toDDL),
-      bandsDdl = opt(next.bandsDdl).getOrElse(
-        spark.table(bandsName(bandsDir(path, next))).schema.toDDL)))
-    // retire the old NAMES (metadata only); files stay for the grace period
-    spark.sql(s"DROP TABLE IF EXISTS `${vecsName(vecsDir(path, m))}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${bandsName(bandsDir(path, m))}`")
-    stats
-  }
-
-  /** Re-bucket an index whose corpus outgrew its build-time `numBuckets`
-    * — O(index) rewrite from the STORED rows (vectors are never
-    * re-banded: the bands table rows carry their keys), published by one
-    * atomic manifest replace; old dirs retire in place. */
-  def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
-    val m = manifest(spark, path)
-    require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    cleanRetired(spark, path, keep = m.version)
-    val next = m.copy(numBuckets = newBuckets, version = m.version + 1,
-      epoch = 0)
-    val vecs = IndexCatalog.table(spark, vecsName(vecsDir(path, m)),
-      vecsDir(path, m), Seq("id"), m.numBuckets, opt(m.vecsDdl), m.epoch)
-    val bands = IndexCatalog.table(spark, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("bkey"), m.numBuckets, opt(m.bandsDdl), m.epoch)
-    IndexCatalog.writeFresh(vecs, vecsName(vecsDir(path, next)),
-      vecsDir(path, next), Seq("id"), newBuckets)
-    IndexCatalog.writeFresh(bands, bandsName(bandsDir(path, next)),
-      bandsDir(path, next), Seq("bkey"), newBuckets)
-    IndexCatalog.foldSizeDeltasTo(spark, sizesDir(path, m),
-      sizesDir(path, next), Seq("bkey"))
-    writeManifest(spark, path, next.copy(
-      vecsDdl = spark.table(vecsName(vecsDir(path, next))).schema.toDDL,
-      bandsDdl = spark.table(bandsName(bandsDir(path, next))).schema.toDDL))
-    spark.sql(s"DROP TABLE IF EXISTS `${vecsName(vecsDir(path, m))}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${bandsName(bandsDir(path, m))}`")
   }
 }

@@ -92,8 +92,8 @@ object BandedHamming {
   /** Near-duplicates of `batch` codes against a prebuilt corpus band
     * index — the incremental/streaming shape (per-batch SHUFFLE cost
     * O(batch) when `corpusBands` is a table bucketed by (band, bkey),
-    * the [[MediaDedupIndex]] layout — only the batch side is exchanged;
-    * the media twin of [[MinHashLsh.nearDuplicatesAgainstIndex]]).
+    * the [[BucketedIndex]] layout [[MediaDedupIndex]] persists — only the
+    * batch side is exchanged).
     * `corpusBands` is a persisted [[bandKeys]] frame
     * (id, code, band, bkey) built with the SAME nBands/bandBits; the
     * bucket cap applies to the COMBINED (index + batch) bucket size — a

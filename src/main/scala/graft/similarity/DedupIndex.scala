@@ -3,42 +3,18 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persistent MinHash dedup index — the lifecycle around
-  * [[MinHashLsh.nearDuplicatesAgainstIndex]] that makes "fingerprint the
-  * corpus ONCE" real across runs: build → write → load → dedup a batch →
-  * append the batch → dedup the next batch, with the corpus never
-  * re-shingled AND never re-shuffled.
+/** Persistent MinHash dedup index — the [[BucketedIndex]] lifecycle
+  * around [[MinHashLsh.nearDuplicatesAgainstIndex]] that makes
+  * "fingerprint the corpus ONCE" real across runs: build → write → load →
+  * dedup a batch → append the batch → dedup the next batch, with the
+  * corpus never re-shingled AND never re-shuffled.
   *
-  * Layout (three tables + manifest under one root; each table dir is
-  * versioned `_v<N>` by the manifest — compaction/rebucketing publish a
-  * new version through ONE atomic manifest replace and retire the old
-  * dirs one maintenance cycle later):
-  *   <path>/fingerprints[_vN] — (idCol, shingle_set), BUCKETED by idCol
-  *                              (verify join / indexed-id anti-join side)
-  *   <path>/bands[_vN]        — (idCol, band), BUCKETED by band
-  *                              (candidate join side)
-  *   <path>/band_sizes[_vN]   — (band, n) append-only per-batch size
-  *                              deltas (the cap fold's corpus half —
-  *                              see [[CapFold]])
-  *
-  * The two big tables are external BUCKETED catalog tables
-  * ([[IndexCatalog]]): each per-batch join against them co-locates on
-  * the bucket layout, so [[dedupBatch]] exchanges ONLY the batch side —
-  * per-batch shuffle cost is O(batch), not O(corpus + batch), which is
-  * the property that keeps continuous-ingestion dedup alive at 100 TB
-  * (a frequent micro-batch cadence re-shuffling a TB-scale band table
-  * was the r9 scale finding this layout removes). Scans of the corpus
-  * tables are still O(index) I/O per batch — the index is a few percent
-  * of the text it covers — and the cap fold reads only the small
-  * band_sizes deltas, never the bands table.
-  *
-  * Appends are bucketed table appends — each batch adds its own files
-  * per bucket, no rewrite of existing index data. Band constants
-  * (shingleN/bands/rowsPerBand) and the bucket count are fixed at build
-  * time and enforced via a JSON manifest written next to the tables.
-  * `numBuckets` sizes the per-batch join width: 8 suits test scale; a
-  * 100 TB corpus would use O(thousands) so each bucket's band rows fit
-  * an executor.
+  * Tables: `fingerprints` — (idCol, shingle_set), bucketed by the
+  * caller's id column (kept in the manifest as `idCol`); `bands` —
+  * (idCol, band), bucketed by band; `band_sizes` — (band, n) deltas.
+  * Scans of the corpus tables are still O(index) I/O per batch — the
+  * index is a few percent of the text it covers — and the cap fold
+  * reads only the small band_sizes deltas, never the bands table.
   *
   * LEGACY layout (manifest without `numBuckets`): flat/recursive parquet
   * dirs as written by [[appendAtomic]]'s rename-published batch units —
@@ -48,130 +24,44 @@ import org.apache.spark.sql.functions._
   * [[append]] refuses a legacy one, because a rename-published subdir
   * inside a bucketed table location would corrupt the bucket layout.
   */
-object DedupIndex {
+object DedupIndex extends BucketedIndex(
+    label = "dedup", primaryBase = "fingerprints",
+    primaryPrefix = "graft_dedup_fps", bandsPrefix = "graft_dedup_bands",
+    bandCols = Seq("band"), primaryDdlField = "fpsDdl", keepsIdCol = true) {
 
   /** Band constants + bucketed-layout metadata, persisted as
-    * `<path>/index.json`. `version` names the live table directories
-    * ([[IndexCatalog.tableDir]]) so a rebucket switches layouts through
-    * ONE atomic manifest replace; `idCol` + the two schema DDLs make
-    * fresh-session re-registration O(1) metadata instead of a full
-    * file-listing footer read of a possibly-huge index (r10 advice).
-    * Legacy manifests (pre-r11) lack the new fields — `idCol`/DDLs fall
-    * back to a footer read, `version` to 0 (the unsuffixed dirs). */
+    * `<path>/index.json` (see [[BucketedIndex.Layout]]). Legacy manifests
+    * (pre-r11) lack the layout fields beyond `numBuckets` — `idCol`/DDLs
+    * fall back to a footer read, `version` to 0 (the unsuffixed dirs). */
   final case class Manifest(shingleN: Int, bands: Int, rowsPerBand: Int,
                             numBuckets: Int = 0, version: Int = 0,
                             idCol: String = "", fpsDdl: String = "",
-                            bandsDdl: String = "", epoch: Int = 0) {
-    def bucketed: Boolean = numBuckets > 0
+                            bandsDdl: String = "", epoch: Int = 0)
+      extends BucketedIndex.Manifest {
+    def primaryDdl: String = fpsDdl
   }
+  type M = Manifest
 
-  private def fpsDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "fingerprints", m.version)
-  private def bandsDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "bands", m.version)
-  private def sizesDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "band_sizes", m.version)
-  private val Bases = Seq("fingerprints", "bands", "band_sizes")
-
-  /** Drop the catalog names and delete the files of every table-dir
-    * version other than `keep` — the grace-period expiry: a compact or
-    * rebucket leaves its predecessor's dirs in place (in-flight scans in
-    * other sessions finish against their resolved listings) and the NEXT
-    * maintenance run, or an explicit rebuild, reclaims them. */
-  private def cleanRetired(spark: SparkSession, path: String,
-                           keep: Int): Unit =
-    IndexCatalog.retiredVersions(spark, path, Bases, keep).foreach {
-      case (base, ver) =>
-        val dir = IndexCatalog.tableDir(path, base, ver)
-        if (base == "fingerprints")
-          spark.sql(s"DROP TABLE IF EXISTS `${fpsName(dir)}`")
-        if (base == "bands")
-          spark.sql(s"DROP TABLE IF EXISTS `${bandsName(dir)}`")
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-    }
-  // table names hash the LIVE table dir: a rebucketed layout (new dir)
-  // gets a fresh name, so no session can confuse the two registrations
-  private def fpsName(dir: String) = IndexCatalog.tableName("graft_dedup_fps", dir)
-  private def bandsName(dir: String) = IndexCatalog.tableName("graft_dedup_bands", dir)
-  private def opt(s: String): Option[String] = Some(s).filter(_.nonEmpty)
-
-  private def manifestPath(path: String) = new org.apache.hadoop.fs.Path(path, "index.json")
-
-  private def manifestJson(m: Manifest): String = {
-    val buckets = if (m.bucketed)
-      s""", "numBuckets": ${m.numBuckets}, "version": ${m.version}""" +
-        s""", "epoch": ${m.epoch}""" +
-        s""", "idCol": "${IndexCatalog.jsonEscape(m.idCol)}"""" +
-        s""", "fpsDdl": "${IndexCatalog.jsonEscape(m.fpsDdl)}"""" +
-        s""", "bandsDdl": "${IndexCatalog.jsonEscape(m.bandsDdl)}""""
-    else ""
-    s"""{"shingleN": ${m.shingleN}, "bands": ${m.bands}, "rowsPerBand": ${m.rowsPerBand}$buckets}"""
-  }
-
-  private def writeManifest(spark: SparkSession, path: String, m: Manifest): Unit =
-    IndexCatalog.replaceManifest(spark, manifestPath(path), manifestJson(m))
-
-  /** True iff an index (manifest, or a crashed replace's promotable tmp)
-    * is already present at `path`. */
-  def exists(spark: SparkSession, path: String): Boolean =
-    IndexCatalog.manifestPresent(spark, manifestPath(path))
-
-  /** Read the band constants the index was built with (healing a crashed
-    * manifest replace — see [[IndexCatalog.readManifestText]]). */
-  def manifest(spark: SparkSession, path: String): Manifest = {
-    val p = manifestPath(path)
-    val text = IndexCatalog.readManifestText(spark, p)
-    def field(name: String): Option[Int] =
-      s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(text).map(_.group(1).toInt)
-    def required(name: String): Int = field(name).getOrElse(
-      throw new IllegalStateException(
-        s"dedup index manifest at $p missing field $name"))
-    def sfield(name: String): String =
-      IndexCatalog.stringField(text, name).getOrElse("")
-    Manifest(required("shingleN"), required("bands"), required("rowsPerBand"),
-      field("numBuckets").getOrElse(0), field("version").getOrElse(0),
-      sfield("idCol"), sfield("fpsDdl"), sfield("bandsDdl"),
-      field("epoch").getOrElse(0))
-  }
-
-  /** The stored fingerprints table's id column (the bucket column) —
-    * from the manifest when present (r11+), else from the stored schema
-    * (legacy bucketed manifests without `idCol`). */
-  private def storedIdCol(spark: SparkSession, path: String,
-                          m: Manifest): String =
-    if (m.idCol.nonEmpty) m.idCol
-    else spark.read.parquet(fpsDir(path, m)).schema.head.name
+  protected def constants(m: Manifest): Seq[(String, Long)] = Seq(
+    "shingleN" -> m.shingleN, "bands" -> m.bands,
+    "rowsPerBand" -> m.rowsPerBand)
+  protected def manifestOf(c: String => Long,
+                           l: BucketedIndex.Layout): Manifest =
+    Manifest(c("shingleN").toInt, c("bands").toInt, c("rowsPerBand").toInt,
+      l.numBuckets, l.version, l.idCol, l.primaryDdl, l.bandsDdl, l.epoch)
+  protected def primaryRows(docs: DataFrame, idCol: String, textCol: String,
+                            m: Manifest): DataFrame =
+    MinHashLsh.fingerprints(docs, idCol, textCol, m.shingleN)
+  protected def bandRows(fps: DataFrame, m: Manifest): DataFrame =
+    MinHashLsh.bandIndex(fps, fps.columns.head, m.bands, m.rowsPerBand)
 
   /** Fingerprint `docs` and write a fresh bucketed index (overwrites any
     * existing index at `path`). */
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
             shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-            numBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    // a rebuild over a compacted/rebucketed index must not orphan its
-    // _v<N> dirs (live OR grace-retired) — version 0 dirs are overwritten
-    // in place below
-    cleanRetired(spark, path, keep = 0)
-    val m0 = Manifest(shingleN, bands, rowsPerBand, numBuckets, version = 0,
-      idCol = idCol)
-    val fps = MinHashLsh.fingerprints(docs, idCol, textCol, shingleN)
-    IndexCatalog.writeFresh(fps, fpsName(fpsDir(path, m0)), fpsDir(path, m0),
-      Seq(idCol), numBuckets)
-    // band keys from the STORED fingerprints (no re-shingle via lineage)
-    val stored = spark.table(fpsName(fpsDir(path, m0)))
-    IndexCatalog.writeFresh(
-      MinHashLsh.bandIndex(stored, idCol, bands, rowsPerBand),
-      bandsName(bandsDir(path, m0)), bandsDir(path, m0), Seq("band"), numBuckets)
-    // size snapshot from the STORED bands (no recompute)
-    val bandsT = spark.table(bandsName(bandsDir(path, m0)))
-    bandsT.groupBy(col("band"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(sizesDir(path, m0))
-    writeManifest(spark, path, m0.copy(
-      fpsDdl = stored.schema.toDDL, bandsDdl = bandsT.schema.toDDL))
-  }
+            numBuckets: Int = 8): Unit =
+    create(docs, idCol, textCol, path,
+      Manifest(shingleN, bands, rowsPerBand, numBuckets))
 
   /** The legacy layout's readable paths for one table: root-level files
     * (pre-atomic plain appends), rename-published `batch-*` units, and
@@ -196,150 +86,22 @@ object DedupIndex {
     * subdirectories, one read covers every legacy shape. */
   def load(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
     val m = manifest(spark, path)
-    if (m.bucketed)
-      (IndexCatalog.table(spark, fpsName(fpsDir(path, m)), fpsDir(path, m),
-        Seq(storedIdCol(spark, path, m)), m.numBuckets, opt(m.fpsDdl),
-        m.epoch),
-        IndexCatalog.table(spark, bandsName(bandsDir(path, m)),
-          bandsDir(path, m), Seq("band"), m.numBuckets, opt(m.bandsDdl),
-          m.epoch))
+    if (m.bucketed) (primaryTable(spark, path, m), bandsTable(spark, path, m))
     else
       (spark.read.parquet(legacyPaths(spark, path, "fingerprints"): _*),
         spark.read.parquet(legacyPaths(spark, path, "bands"): _*))
   }
 
   /** Stored ids, column-pruned — the anti-join side for idempotent
-    * appends; bucketed by this column, so the anti-join exchanges only
-    * the incoming batch. */
-  def indexedIds(spark: SparkSession, path: String): DataFrame = {
-    val m = manifest(spark, path)
-    if (m.bucketed) {
-      val idCol = storedIdCol(spark, path, m)
-      IndexCatalog.table(spark, fpsName(fpsDir(path, m)), fpsDir(path, m),
-        Seq(idCol), m.numBuckets, opt(m.fpsDdl), m.epoch).select(col(idCol))
-    } else {
+    * appends; on a bucketed index bucketed by this column, so the
+    * anti-join exchanges only the incoming batch. */
+  override def indexedIds(spark: SparkSession, path: String): DataFrame =
+    if (manifest(spark, path).bucketed) super.indexedIds(spark, path)
+    else {
       val df = spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$path/fingerprints")
       df.select(col(df.schema.head.name))
     }
-  }
-
-  /** Append a new batch to an existing bucketed index using ITS band
-    * constants — the batch is shingled per written table (O(batch));
-    * both big tables gain only the batch's rows in their bucket layout,
-    * and band_sizes gains the batch's per-band delta rows. */
-  def append(batch: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    val spark = batch.sparkSession
-    val m = manifest(spark, path)
-    require(m.bucketed,
-      s"index at $path uses the legacy rename-published layout; append via appendAtomic")
-    // pin the batch (shingled ONCE) BEFORE mutating any index table: the
-    // caller's frame may reference the index itself (the idempotent-
-    // append anti-join in StreamOps does), and the fingerprints append
-    // refreshes the table's file index IN PLACE — a lazy recompute after
-    // it would see the batch's own ids as already indexed and silently
-    // append zero band rows
-    val fps = MinHashLsh.fingerprints(batch, idCol, textCol, m.shingleN)
-      .localCheckpoint(true)
-    IndexCatalog.appendTo(fps, fpsName(fpsDir(path, m)), fpsDir(path, m),
-      Seq(idCol), m.numBuckets, opt(m.fpsDdl), m.epoch)
-    val bandRows = MinHashLsh.bandIndex(fps, idCol, m.bands, m.rowsPerBand)
-    IndexCatalog.appendTo(bandRows, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("band"), m.numBuckets, opt(m.bandsDdl), m.epoch)
-    bandRows.groupBy(col("band")).agg(count(lit(1)).as("n"))
-      .write.mode("append").parquet(sizesDir(path, m))
-  }
-
-  /** Bucket-preserving maintenance compaction of a bucketed index: both
-    * big tables rewrite to ~1 file per bucket per `targetFileBytes`
-    * ([[IndexCatalog.rewriteBucketed]] — a ZERO-shuffle rewrite on a
-    * dedicated child session, so the pinned planner confs never leak into
-    * concurrently-planning queries; the bucket layout, and with it the
-    * no-corpus-Exchange join property, survives), and the append-only
-    * `band_sizes` delta table folds to one snapshot (the cap fold sums
-    * deltas, so the fold is semantics-free). All three tables land in
-    * fresh `_v<N+1>` dirs and the switch publishes through ONE atomic
-    * manifest replace — the rebucket discipline: a crash before the
-    * publish leaves the old layout fully live (orphan dirs are
-    * overwritten by the retry), and the RETIRED dirs stay on disk until
-    * the next maintenance run so a scan in flight in another session
-    * finishes against its resolved file listing instead of
-    * FAILED_READ_FILE (r11 advice #3; previously the swap deleted the
-    * pre-publish files at publish time). Run on a maintenance cadence (or
-    * via the sink's `compactEveryNBatches` knob) — per-bucket file counts
-    * otherwise grow without bound under streaming appends. */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024)
-      : Map[String, IndexCatalog.TableCompaction] = {
-    val m = manifest(spark, path)
-    require(m.bucketed,
-      s"index at $path uses the legacy rename-published layout; compact " +
-        "it with lakehouse.Compaction.compact per batch directory")
-    val idCol = storedIdCol(spark, path, m)
-    // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
-    cleanRetired(spark, path, keep = m.version)
-    val next = m.copy(version = m.version + 1, idCol = idCol)
-    val stats = Map(
-      "fingerprints" -> IndexCatalog.rewriteBucketed(spark,
-        fpsName(fpsDir(path, m)), fpsDir(path, m),
-        fpsName(fpsDir(path, next)), fpsDir(path, next),
-        Seq(idCol), m.numBuckets, targetFileBytes, opt(m.fpsDdl), m.epoch),
-      "bands" -> IndexCatalog.rewriteBucketed(spark,
-        bandsName(bandsDir(path, m)), bandsDir(path, m),
-        bandsName(bandsDir(path, next)), bandsDir(path, next),
-        Seq("band"), m.numBuckets, targetFileBytes, opt(m.bandsDdl), m.epoch),
-      "band_sizes" -> IndexCatalog.foldSizeDeltasTo(spark,
-        sizesDir(path, m), sizesDir(path, next), Seq("band"),
-        targetFileBytes))
-    writeManifest(spark, path, next.copy(
-      fpsDdl = opt(next.fpsDdl).getOrElse(
-        spark.table(fpsName(fpsDir(path, next))).schema.toDDL),
-      bandsDdl = opt(next.bandsDdl).getOrElse(
-        spark.table(bandsName(bandsDir(path, next))).schema.toDDL)))
-    // retire the old NAMES now (metadata only — other sessions re-derive
-    // the new names from the manifest on their next touch); the old FILES
-    // stay for the grace period
-    spark.sql(s"DROP TABLE IF EXISTS `${fpsName(fpsDir(path, m))}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${bandsName(bandsDir(path, m))}`")
-    stats
-  }
-
-  /** Re-bucket an index whose corpus outgrew its build-time `numBuckets`
-    * (each bucket's band rows must fit an executor; a 100 TB corpus wants
-    * O(thousands)). Rewrites both tables from the STORED rows — O(index),
-    * never a re-shingle of the corpus — into fresh `_v<N>` directories,
-    * then publishes the switch through ONE atomic manifest replace: a
-    * crash before the publish leaves the old layout fully live (orphan
-    * `_v<N>` dirs are overwritten by the retry); after it, the new layout
-    * is fully live and the old dirs are deleted best-effort. Appends and
-    * dedupBatch pick up the new bucket count from the manifest; stale
-    * same-session registrations of the OLD layout are dropped. */
-  def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
-    val m = manifest(spark, path)
-    require(m.bucketed,
-      s"index at $path uses the legacy rename-published layout; re-build it")
-    require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    val idCol = storedIdCol(spark, path, m)
-    // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
-    cleanRetired(spark, path, keep = m.version)
-    val next = m.copy(numBuckets = newBuckets, version = m.version + 1,
-      idCol = idCol, epoch = 0)
-    val (fps, bands) = load(spark, path)
-    IndexCatalog.writeFresh(fps, fpsName(fpsDir(path, next)),
-      fpsDir(path, next), Seq(idCol), newBuckets)
-    IndexCatalog.writeFresh(bands, bandsName(bandsDir(path, next)),
-      bandsDir(path, next), Seq("band"), newBuckets)
-    IndexCatalog.foldSizeDeltasTo(spark, sizesDir(path, m),
-      sizesDir(path, next), Seq("band"))
-    writeManifest(spark, path, next.copy(
-      fpsDdl = spark.table(fpsName(fpsDir(path, next))).schema.toDDL,
-      bandsDdl = spark.table(bandsName(bandsDir(path, next))).schema.toDDL))
-    // the switch is published: retire the old layout's NAMES (metadata
-    // only); its files stay until the next maintenance run, so scans in
-    // flight in other sessions finish against their resolved listings
-    spark.sql(s"DROP TABLE IF EXISTS `${fpsName(fpsDir(path, m))}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${bandsName(bandsDir(path, m))}`")
-  }
 
   /** True iff [[appendAtomic]] fully published batch `batchKey`: under
     * rename publish, the bands batch directory is renamed LAST, so its
@@ -429,9 +191,7 @@ object DedupIndex {
                  maxBucket: Option[Int] = None): DataFrame = {
     val m = manifest(spark, path)
     val (fps, bands) = load(spark, path)
-    val sizes =
-      if (m.bucketed) Some(spark.read.parquet(sizesDir(path, m)))
-      else None
+    val sizes = if (m.bucketed) Some(bandSizes(spark, path, m)) else None
     MinHashLsh.nearDuplicatesAgainstIndex(fps, bands, batch, idCol, textCol,
       m.shingleN, m.bands, m.rowsPerBand, threshold, maxBucket, sizes)
   }

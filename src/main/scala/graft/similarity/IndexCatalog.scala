@@ -3,8 +3,9 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Catalog plumbing shared by [[DedupIndex]] and [[MediaDedupIndex]]'s
-  * BUCKETED layouts: persistent index tables are written with
+/** Catalog plumbing under the [[BucketedIndex]] lifecycle, shared by
+  * every kind ([[DedupIndex]], [[MediaDedupIndex]], [[AnnIndex]]):
+  * persistent index tables are written with
   * `bucketBy(numBuckets, joinKeys...)` as EXTERNAL tables (data stays
   * under the index root; only metadata lives in the session catalog), so
   * every per-batch join against the corpus side — band-key candidate
@@ -41,8 +42,7 @@ private[similarity] object IndexCatalog {
     * [[ensureRegistered]] touch (r11 verdict: q85's bench floor rose
     * 2.90→3.83 s from exactly this churn). */
   def writeFresh(df: DataFrame, name: String, location: String,
-                 bucketCols: Seq[String], numBuckets: Int,
-                 epoch: Int = 0): Unit = {
+                 bucketCols: Seq[String], numBuckets: Int): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
     val loc = new org.apache.hadoop.fs.Path(location)
@@ -52,13 +52,8 @@ private[similarity] object IndexCatalog {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .option("path", location)
       .saveAsTable(name)
-    // saveAsTable writes no graft epoch table-property; align the catalog
-    // metadata with the manifest epoch the caller will register against,
-    // so staleRegistration never drops a self-written table either
-    if (epoch != 0)
-      spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES " +
-        s"('$EpochProp' = '$epoch')")
-    recordSeen(spark, name, epoch, "")
+    // a fresh table carries no epoch property, i.e. layout epoch 0
+    recordSeen(spark, name, 0, "")
   }
 
   /** Append `df` to the bucketed table (re-registering it in this
@@ -148,15 +143,10 @@ private[similarity] object IndexCatalog {
     new java.util.WeakHashMap[SparkSession,
       scala.collection.mutable.Map[String, (Int, String)]]
   private def recordSeen(spark: SparkSession, name: String, epoch: Int,
-                         gen: String): Unit = seenState.synchronized {
-    var m = seenState.get(spark)
-    if (m == null) {
-      m = scala.collection.mutable.Map.empty
-      seenState.put(spark, m)
-    }
-    m.put(name, (epoch, gen))
-    ()
+                         gen: String): Unit = {
+    stateMoved(spark, name, epoch, gen); ()
   }
+  /** Record (epoch, gen) as seen; true iff it differs from the last. */
   private def stateMoved(spark: SparkSession, name: String, epoch: Int,
                          gen: String): Boolean = seenState.synchronized {
     var m = seenState.get(spark)
@@ -213,17 +203,6 @@ private[similarity] object IndexCatalog {
       if (stateMoved(spark, name, epoch, gen))
         spark.catalog.refreshTable(name)
     }
-  }
-
-  /** The bucketed table as a DataFrame (registering on first touch in
-    * this session). Reads via `spark.table` — a plain path read would
-    * lose the bucketing metadata and with it the shuffle-free join. */
-  def table(spark: SparkSession, name: String, location: String,
-            bucketCols: Seq[String], numBuckets: Int,
-            schemaDdl: Option[String] = None, epoch: Int = 0): DataFrame = {
-    ensureRegistered(spark, name, location, bucketCols, numBuckets,
-      schemaDdl, epoch)
-    spark.table(name)
   }
 
   final case class TableCompaction(filesBefore: Int, filesAfter: Int,
@@ -342,38 +321,10 @@ private[similarity] object IndexCatalog {
     }
   }
 
-  /** JSON string-field escape/unescape for manifest-persisted schema DDL
-    * (the regex-parsed manifests stay dependency-free). */
-  def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c    => c.toString
-  }
-  def jsonUnescape(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        b.append(s(i + 1) match {
-          case 'n' => '\n'
-          case c   => c
-        })
-        i += 2
-      } else { b.append(s(i)); i += 1 }
-    }
-    b.toString
-  }
-
-  /** Extract a JSON string field from regex-parsed manifest text. */
-  def stringField(text: String, name: String): Option[String] =
-    ("\"" + name + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(text).map(m => jsonUnescape(m.group(1)))
-
   /** Versioned table directory: version 0 is the original `<path>/<base>`
     * layout; a rebucket bumps the version and lands at
     * `<path>/<base>_v<N>` so the switch publishes through ONE atomic
-    * manifest replace (see [[DedupIndex.rebucket]]). */
+    * manifest replace (see [[BucketedIndex.rebucket]]). */
   def tableDir(path: String, base: String, version: Int): String =
     if (version == 0) s"$path/$base" else s"$path/${base}_v$version"
 

@@ -5,249 +5,50 @@ import org.apache.spark.sql.functions._
 
 /** Persistent banded-Hamming dedup index for MEDIA fingerprint codes
   * (image dHash, acoustic fingerprints, per-frame clip hashes — any
-  * ≤64-bit code) — the [[DedupIndex]] lifecycle with [[BandedHamming]]
-  * as the candidate engine instead of MinHash: fingerprint each batch
-  * ONCE as it arrives, match it against the stored corpus at O(batch)
-  * shuffle cost, and fold it into the index; the corpus codes are never
-  * recomputed and the media bytes themselves are never stored or
-  * re-decoded.
+  * ≤64-bit code) — the [[BucketedIndex]] lifecycle with [[BandedHamming]]
+  * as the candidate engine: fingerprint each batch ONCE as it arrives,
+  * match it against the stored corpus at O(batch) shuffle cost, and fold
+  * it into the index; the corpus codes are never recomputed and the media
+  * bytes themselves are never stored or re-decoded.
   *
-  * Layout (three tables + manifest under one root; each table dir is
-  * versioned `_v<N>` by the manifest — compaction/rebucketing publish a
-  * new version through ONE atomic manifest replace and retire the old
-  * dirs one maintenance cycle later):
-  *   <path>/codes[_vN]      — (id, code), BUCKETED by id
-  *                            (idempotent-append anti-join side)
-  *   <path>/bands[_vN]      — (id, code, band, bkey), BUCKETED by
-  *                            (band, bkey) (candidate join side)
-  *   <path>/band_sizes[_vN] — (band, bkey, n) append-only per-batch size
-  *                            deltas (the cap fold's corpus half,
-  *                            [[CapFold]])
-  *   <path>/index.json      — band constants + bucket count + live
-  *                            version, pinned at build
-  *
-  * The two big tables are external BUCKETED catalog tables
-  * ([[IndexCatalog]]), so [[dedupBatch]]'s candidate join and the
-  * streaming sink's indexed-id anti-join co-locate on the bucket layout
-  * and exchange ONLY the batch side — per-micro-batch shuffle cost is
-  * O(batch) regardless of corpus size (both tables are a few dozen
-  * bytes per media item; `numBuckets` = 8 at test scale, O(thousands)
-  * at 100 TB).
+  * Tables: `codes` — (id, code), bucketed by id (the id column is always
+  * normalized to `id`); `bands` — (id, code, band, bkey), bucketed by
+  * (band, bkey); `band_sizes` — (band, bkey, n) deltas. Both tables are a
+  * few dozen bytes per media item.
   */
-object MediaDedupIndex {
+object MediaDedupIndex extends BucketedIndex(
+    label = "media dedup", primaryBase = "codes",
+    primaryPrefix = "graft_media_codes", bandsPrefix = "graft_media_bands",
+    bandCols = Seq("band", "bkey"), primaryDdlField = "codesDdl",
+    keepsIdCol = false) {
 
-  /** Band constants + bucketed-layout metadata — the media twin of
-    * [[DedupIndex.Manifest]]: `version` names the live table dirs (a
-    * rebucket flips layouts via one atomic manifest replace), the two
-    * schema DDLs make fresh-session re-registration O(1) metadata.
-    * Legacy manifests default the new fields (version 0, footer-read
-    * schema); the stored id column is always `id` (build normalizes). */
+  /** Band constants + bucketed-layout metadata, persisted as
+    * `<path>/index.json` (see [[BucketedIndex.Layout]]). */
   final case class Manifest(nBands: Int, bandBits: Int, numBuckets: Int = 8,
                             version: Int = 0, codesDdl: String = "",
                             bandsDdl: String = "", epoch: Int = 0)
-
-  private def codesDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "codes", m.version)
-  private def bandsDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "bands", m.version)
-  private def sizesDir(path: String, m: Manifest): String =
-    IndexCatalog.tableDir(path, "band_sizes", m.version)
-  private val Bases = Seq("codes", "bands", "band_sizes")
-
-  /** Grace-period expiry — the media twin of [[DedupIndex]]'s
-    * cleanRetired: drop the names and delete the files of every table-dir
-    * version other than `keep` (retired by the previous compact/rebucket;
-    * kept one maintenance cycle so in-flight scans finish). */
-  private def cleanRetired(spark: SparkSession, path: String,
-                           keep: Int): Unit =
-    IndexCatalog.retiredVersions(spark, path, Bases, keep).foreach {
-      case (base, ver) =>
-        val dir = IndexCatalog.tableDir(path, base, ver)
-        if (base == "codes")
-          spark.sql(s"DROP TABLE IF EXISTS `${codesName(dir)}`")
-        if (base == "bands")
-          spark.sql(s"DROP TABLE IF EXISTS `${bandsName(dir)}`")
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-    }
-  private def codesName(dir: String) = IndexCatalog.tableName("graft_media_codes", dir)
-  private def bandsName(dir: String) = IndexCatalog.tableName("graft_media_bands", dir)
-  private def opt(s: String): Option[String] = Some(s).filter(_.nonEmpty)
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "index.json")
-
-  private def writeManifest(spark: SparkSession, path: String, m: Manifest): Unit =
-    IndexCatalog.replaceManifest(spark, manifestPath(path),
-      s"""{"nBands": ${m.nBands}, "bandBits": ${m.bandBits}, "numBuckets": ${m.numBuckets}""" +
-        s""", "version": ${m.version}, "epoch": ${m.epoch}""" +
-        s""", "codesDdl": "${IndexCatalog.jsonEscape(m.codesDdl)}"""" +
-        s""", "bandsDdl": "${IndexCatalog.jsonEscape(m.bandsDdl)}"}""")
-
-  /** True iff an index (manifest, or a crashed replace's promotable tmp)
-    * is already present at `path` — the exists()-gated streaming sink
-    * must never mistake a mid-replace index for an absent one (it would
-    * silently rebuild the corpus index from one batch). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    IndexCatalog.manifestPresent(spark, manifestPath(path))
-
-  /** Read the band constants the index was built with (healing a crashed
-    * manifest replace — see [[IndexCatalog.readManifestText]]). */
-  def manifest(spark: SparkSession, path: String): Manifest = {
-    val p = manifestPath(path)
-    val text = IndexCatalog.readManifestText(spark, p)
-    def field(name: String): Option[Int] =
-      s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(text).map(_.group(1).toInt)
-    def required(name: String): Int = field(name).getOrElse(
-      throw new IllegalStateException(
-        s"media dedup index manifest at $p missing field $name"))
-    def sfield(name: String): String =
-      IndexCatalog.stringField(text, name).getOrElse("")
-    // pre-bucketing manifests carry no numBuckets; those indexes were
-    // plain parquet dirs — re-build to adopt the bucketed layout
-    Manifest(required("nBands"), required("bandBits"),
-      field("numBuckets").getOrElse(0), field("version").getOrElse(0),
-      sfield("codesDdl"), sfield("bandsDdl"), field("epoch").getOrElse(0))
+      extends BucketedIndex.Manifest {
+    def idCol: String = "id"
+    def primaryDdl: String = codesDdl
   }
+  type M = Manifest
 
-  private def requireBucketed(path: String, m: Manifest): Unit =
-    require(m.numBuckets > 0,
-      s"media index at $path predates the bucketed layout; re-build it")
+  protected def constants(m: Manifest): Seq[(String, Long)] =
+    Seq("nBands" -> m.nBands, "bandBits" -> m.bandBits)
+  protected def manifestOf(c: String => Long,
+                           l: BucketedIndex.Layout): Manifest =
+    Manifest(c("nBands").toInt, c("bandBits").toInt, l.numBuckets, l.version,
+      l.primaryDdl, l.bandsDdl, l.epoch)
+  protected def primaryRows(codes: DataFrame, idCol: String, codeCol: String,
+                            m: Manifest): DataFrame =
+    codes.select(col(idCol).as("id"), col(codeCol).as("code"))
+  protected def bandRows(codes: DataFrame, m: Manifest): DataFrame =
+    BandedHamming.bandKeys(codes, "id", "code", m.nBands, m.bandBits)
 
   /** Write a fresh index from (id, code) rows (overwrites any existing). */
   def build(codes: DataFrame, idCol: String, codeCol: String, path: String,
-            nBands: Int = 4, bandBits: Int = 16, numBuckets: Int = 8): Unit = {
-    val spark = codes.sparkSession
-    // a rebuild over a compacted/rebucketed index must not orphan its
-    // _v<N> dirs (live OR grace-retired) — version 0 dirs are overwritten
-    // in place below
-    cleanRetired(spark, path, keep = 0)
-    val m0 = Manifest(nBands, bandBits, numBuckets, version = 0)
-    val normalized = codes.select(col(idCol).as("id"), col(codeCol).as("code"))
-    IndexCatalog.writeFresh(normalized, codesName(codesDir(path, m0)),
-      codesDir(path, m0), Seq("id"), numBuckets)
-    // re-read instead of recompute: the band explode must not re-run the
-    // caller's (possibly decode-backed) lineage per reference
-    val stored = spark.table(codesName(codesDir(path, m0)))
-    IndexCatalog.writeFresh(
-      BandedHamming.bandKeys(stored, "id", "code", nBands, bandBits),
-      bandsName(bandsDir(path, m0)), bandsDir(path, m0), Seq("band", "bkey"),
-      numBuckets)
-    val bandsT = spark.table(bandsName(bandsDir(path, m0)))
-    bandsT.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(sizesDir(path, m0))
-    writeManifest(spark, path, m0.copy(
-      codesDdl = stored.schema.toDDL, bandsDdl = bandsT.schema.toDDL))
-  }
-
-  /** Append new (id, code) rows using the index's band constants; each
-    * table gains only the batch's rows in its bucket layout, band_sizes
-    * gains the batch's per-bucket delta rows. */
-  def append(codes: DataFrame, idCol: String, codeCol: String,
-             path: String): Unit = {
-    val spark = codes.sparkSession
-    val m = manifest(spark, path)
-    requireBucketed(path, m)
-    // pin the batch BEFORE mutating any index table: the caller's frame
-    // may reference the index itself (the idempotent-append anti-join in
-    // StreamOps does), and the codes append refreshes the table's file
-    // index IN PLACE — a lazy recompute after it would see the batch's
-    // own ids as already indexed and silently append zero band rows
-    val normalized = codes.select(col(idCol).as("id"), col(codeCol).as("code"))
-      .localCheckpoint(true)
-    IndexCatalog.appendTo(normalized, codesName(codesDir(path, m)),
-      codesDir(path, m), Seq("id"), m.numBuckets, opt(m.codesDdl), m.epoch)
-    // one band pass (over the pinned batch) feeds both the bands table
-    // and the size deltas
-    val bandRows = BandedHamming.bandKeys(normalized, "id", "code",
-      m.nBands, m.bandBits)
-    IndexCatalog.appendTo(bandRows, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("band", "bkey"), m.numBuckets, opt(m.bandsDdl),
-      m.epoch)
-    bandRows.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
-      .write.mode("append").parquet(sizesDir(path, m))
-  }
-
-  /** Stored ids, column-pruned and bucketed — the anti-join side for
-    * idempotent appends exchanges only the incoming batch. */
-  def indexedIds(spark: SparkSession, path: String): DataFrame = {
-    val m = manifest(spark, path)
-    requireBucketed(path, m)
-    IndexCatalog.table(spark, codesName(codesDir(path, m)),
-      codesDir(path, m), Seq("id"), m.numBuckets, opt(m.codesDdl), m.epoch)
-      .select(col("id"))
-  }
-
-  /** Bucket-preserving maintenance compaction — the media twin of
-    * [[DedupIndex.compact]]: zero-shuffle rewrites into fresh `_v<N+1>`
-    * dirs on a dedicated child session (pinned planner confs never leak
-    * into concurrent queries), published by ONE atomic manifest replace;
-    * the retired dirs stay on disk one maintenance cycle so in-flight
-    * scans in other sessions finish against their resolved listings. */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024)
-      : Map[String, IndexCatalog.TableCompaction] = {
-    val m = manifest(spark, path)
-    requireBucketed(path, m)
-    // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
-    cleanRetired(spark, path, keep = m.version)
-    val next = m.copy(version = m.version + 1)
-    val stats = Map(
-      "codes" -> IndexCatalog.rewriteBucketed(spark,
-        codesName(codesDir(path, m)), codesDir(path, m),
-        codesName(codesDir(path, next)), codesDir(path, next),
-        Seq("id"), m.numBuckets, targetFileBytes, opt(m.codesDdl), m.epoch),
-      "bands" -> IndexCatalog.rewriteBucketed(spark,
-        bandsName(bandsDir(path, m)), bandsDir(path, m),
-        bandsName(bandsDir(path, next)), bandsDir(path, next),
-        Seq("band", "bkey"), m.numBuckets, targetFileBytes, opt(m.bandsDdl),
-        m.epoch),
-      "band_sizes" -> IndexCatalog.foldSizeDeltasTo(spark,
-        sizesDir(path, m), sizesDir(path, next), Seq("band", "bkey"),
-        targetFileBytes))
-    writeManifest(spark, path, next.copy(
-      codesDdl = opt(next.codesDdl).getOrElse(
-        spark.table(codesName(codesDir(path, next))).schema.toDDL),
-      bandsDdl = opt(next.bandsDdl).getOrElse(
-        spark.table(bandsName(bandsDir(path, next))).schema.toDDL)))
-    // retire the old NAMES (metadata only); files stay for the grace period
-    spark.sql(s"DROP TABLE IF EXISTS `${codesName(codesDir(path, m))}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${bandsName(bandsDir(path, m))}`")
-    stats
-  }
-
-  /** Re-bucket an index that outgrew its build-time `numBuckets` — the
-    * media twin of [[DedupIndex.rebucket]]: O(index) rewrite from the
-    * stored codes (media bytes are never stored, so there is nothing to
-    * re-decode), published by one atomic manifest replace. */
-  def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
-    val m = manifest(spark, path)
-    requireBucketed(path, m)
-    require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
-    cleanRetired(spark, path, keep = m.version)
-    val next = m.copy(numBuckets = newBuckets, version = m.version + 1,
-      epoch = 0)
-    val codes = IndexCatalog.table(spark, codesName(codesDir(path, m)),
-      codesDir(path, m), Seq("id"), m.numBuckets, opt(m.codesDdl), m.epoch)
-    val bands = IndexCatalog.table(spark, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("band", "bkey"), m.numBuckets, opt(m.bandsDdl),
-      m.epoch)
-    IndexCatalog.writeFresh(codes, codesName(codesDir(path, next)),
-      codesDir(path, next), Seq("id"), newBuckets)
-    IndexCatalog.writeFresh(bands, bandsName(bandsDir(path, next)),
-      bandsDir(path, next), Seq("band", "bkey"), newBuckets)
-    IndexCatalog.foldSizeDeltasTo(spark, sizesDir(path, m),
-      sizesDir(path, next), Seq("band", "bkey"))
-    writeManifest(spark, path, next.copy(
-      codesDdl = spark.table(codesName(codesDir(path, next))).schema.toDDL,
-      bandsDdl = spark.table(bandsName(bandsDir(path, next))).schema.toDDL))
-    // retire the old NAMES (metadata only); files stay for the grace period
-    spark.sql(s"DROP TABLE IF EXISTS `${codesName(codesDir(path, m))}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${bandsName(bandsDir(path, m))}`")
-  }
+            nBands: Int = 4, bandBits: Int = 16, numBuckets: Int = 8): Unit =
+    create(codes, idCol, codeCol, path, Manifest(nBands, bandBits, numBuckets))
 
   /** Near-duplicates of `batch` (id, code) rows against the stored index
     * at O(batch) shuffle cost: `(corpus_id, batch_id, hamming)` for
@@ -258,14 +59,9 @@ object MediaDedupIndex {
   def dedupBatch(spark: SparkSession, path: String, batch: DataFrame,
                  idCol: String, codeCol: String, maxHamming: Int,
                  maxBucket: Option[Int] = None): DataFrame = {
-    val m = manifest(spark, path)
-    requireBucketed(path, m)
-    val corpusBands = IndexCatalog.table(spark, bandsName(bandsDir(path, m)),
-      bandsDir(path, m), Seq("band", "bkey"), m.numBuckets, opt(m.bandsDdl),
-      m.epoch)
-    val sizes = spark.read.parquet(sizesDir(path, m))
-    BandedHamming.pairsAgainstIndex(corpusBands,
-      batch.select(col(idCol).as("id"), col(codeCol).as("code")),
-      "id", "code", m.nBands, m.bandBits, maxHamming, maxBucket, Some(sizes))
+    val m = bucketedManifest(spark, path)
+    BandedHamming.pairsAgainstIndex(bandsTable(spark, path, m),
+      primaryRows(batch, idCol, codeCol, m), "id", "code", m.nBands,
+      m.bandBits, maxHamming, maxBucket, Some(bandSizes(spark, path, m)))
   }
 }

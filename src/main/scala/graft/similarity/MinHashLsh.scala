@@ -109,15 +109,16 @@ object MinHashLsh {
   // keys), then each incoming batch computes only ITS OWN signatures and
   // equi-joins the band index. The corpus is never re-read, re-shingled,
   // or re-hashed, and when the index tables are BUCKETED on their join
-  // keys (the [[DedupIndex]] layout: bands by `band`, fingerprints by the
-  // id column) the corpus side is never re-SHUFFLED either — the batch
-  // side alone is exchanged to the bucket layout, so per-batch shuffle
-  // cost is O(batch). The corpus-side scan of the band index within the
-  // candidate join is still O(corpus-index) I/O per batch (the index is a
-  // few percent of corpus text size); the cap fold avoids even that for
-  // its half by reading the small precomputed bucket-size deltas instead
-  // ([[CapFold]]). Streaming twin: streaming/StreamOps.nearDupCollisions
-  // (same banding constants, FlatMapGroupsWithState band state).
+  // keys (the [[BucketedIndex]] layout [[DedupIndex]] persists: bands by
+  // `band`, fingerprints by the id column) the corpus side is never
+  // re-SHUFFLED either — the batch side alone is exchanged to the bucket
+  // layout, so per-batch shuffle cost is O(batch). The corpus-side scan
+  // of the band index within the candidate join is still O(corpus-index)
+  // I/O per batch (the index is a few percent of corpus text size); the
+  // cap fold avoids even that for its half by reading the small
+  // precomputed bucket-size deltas instead ([[CapFold]]). Streaming twin:
+  // streaming/StreamOps.nearDupCollisions (same banding constants,
+  // FlatMapGroupsWithState band state).
 
   /** The verify-side index: one row per document, its distinct shingle
     * set. Persist next to the band index. */
@@ -140,7 +141,7 @@ object MinHashLsh {
     * pair-equivalent (a pair needs a row from each side; see [[CapFold]])
     * and keeps the corpus index out of the cap's groupBy entirely.
     * `corpusBandSizes` is the precomputed (band, n) bucket-size frame the
-    * persistent [[DedupIndex]] maintains (delta rows, summed in the
+    * [[BucketedIndex]] lifecycle maintains (delta rows, summed in the
     * fold); one-shot callers omit it and the sizes are counted from
     * `corpusBands` — still a map-side-combined aggregate, but a corpus
     * scan the stored index avoids. Band constants must match the ones

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.similarity.{AnnIndex, DedupIndex, MediaDedupIndex}
+
 /** Event-time streaming operators.
   *
   * The reference's streaming path is pure source→sink append with no
@@ -185,78 +187,62 @@ object StreamOps {
         org.apache.spark.sql.streaming.OutputMode.Update())
   }
 
+  /** Replace ONE `partCol = value` partition of the parquet dir at
+    * `path` — dynamic partition overwrite as a per-write option, so the
+    * session-global `spark.sql.sources.partitionOverwriteMode` is never
+    * touched (a save/flip/restore of the shared conf races every other
+    * writer planning on the same session). The idempotence primitive of
+    * every replay-safe sink here: a re-run batch REPLACES its own
+    * partition instead of duplicating rows. */
+  def overwritePartition(df: DataFrame, partCol: String, value: Any,
+                         path: String): Unit =
+    df.withColumn(partCol, lit(value))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
+
+  private def foreachBatchSink(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+      .start()
+
   /** Idempotent foreachBatch write: data lands in a `batch_id=N` partition
     * with per-partition overwrite, so a replayed micro-batch (checkpoint
     * recovery) overwrites its own partition instead of duplicating rows —
     * exactly-once on a plain parquet sink without a transaction log. */
   def exactlyOnceParquet(df: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id").parquet(path)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
-      .start()
+    foreachBatchSink(df, checkpoint) { (batch, batchId) =>
+      overwritePartition(batch, "batch_id", batchId, path)
+    }
 
-  /** One micro-batch of continuous dedup-index maintenance (the body of
-    * [[dedupIndexSink]], callable directly so replay semantics are unit-
-    * testable): dedup `batch` against the persistent
-    * [[graft.similarity.DedupIndex]] at `indexPath`, write the match
-    * records EXACTLY-ONCE into a `batch_id` partition of `matchesPath`
-    * (dynamic per-partition overwrite — a replayed batch overwrites its
-    * own output), then append the batch to the index IDEMPOTENTLY: only
-    * ids not already present are appended (an anti-join against the
-    * index's column-pruned id column), so checkpoint-recovery replays
-    * cannot double-index a document and later batches cannot produce
-    * duplicate match rows. */
+  /** One micro-batch of continuous dedup-index maintenance (the
+    * [[graft.similarity.BucketedIndex.sinkBatch]] replay contract):
+    * dedup `batch` against the persistent [[graft.similarity.DedupIndex]]
+    * at `indexPath` (which must already exist — this sink never builds
+    * it), write the matches exactly-once into a `micro_batch_id`
+    * partition of `matchesPath` (the match schema already has a
+    * `batch_id` column, the matched document's id), then append the
+    * not-yet-indexed docs. */
   def dedupIndexBatch(batch: DataFrame, batchId: Long, idCol: String,
                       textCol: String, indexPath: String, matchesPath: String,
                       threshold: Double = 0.5,
                       maxBucket: Option[Int] = None,
                       compactEveryNBatches: Int = 0,
-                      compactTargetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    import graft.similarity.DedupIndex
-    val spark = batch.sparkSession
-    // corpus_id =!= batch_id: on replay the batch's own docs are already
-    // indexed (appended by the first attempt), and a doc must not match
-    // itself — with the guard, a replayed batch reproduces its original
-    // match set exactly
-    val matches = DedupIndex.dedupBatch(spark, indexPath, batch, idCol,
-        textCol, threshold, maxBucket)
-      .filter(col("corpus_id") =!= col("batch_id"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      // partition column named micro_batch_id: the match schema already
-      // has a batch_id column (the matched document's id)
-      matches.withColumn("micro_batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("micro_batch_id").parquet(matchesPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+                      compactTargetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    DedupIndex.sinkBatch(batch, batchId, idCol, textCol, indexPath,
+        matchesPath, createWith = None, compactEveryNBatches,
+        compactTargetFileBytes) {
+      // corpus_id =!= batch_id: on replay the batch's own docs are already
+      // indexed (appended by the first attempt), and a doc must not match
+      // itself — with the guard, a replayed batch reproduces its original
+      // match set exactly
+      DedupIndex.dedupBatch(batch.sparkSession, indexPath, batch, idCol,
+          textCol, threshold, maxBucket)
+        .filter(col("corpus_id") =!= col("batch_id"))
     }
-    // column-pruned AND bucketed by id: the anti-join exchanges only the
-    // incoming batch, never the stored corpus
-    val fresh = batch.join(DedupIndex.indexedIds(spark, indexPath),
-      Seq(idCol), "left_anti")
-    DedupIndex.append(fresh, idCol, textCol, indexPath)
-    // every append adds ≥1 file per bucket (and one band_sizes delta
-    // file); at streaming cadence that grows without bound, so the sink
-    // self-maintains on a batch-count cadence. Compaction is
-    // content-idempotent — a checkpoint replay at a compaction batch
-    // just compacts an already-compact index
-    if (compactEveryNBatches > 0 && (batchId + 1) % compactEveryNBatches == 0)
-      DedupIndex.compact(spark, indexPath, compactTargetFileBytes)
-  }
 
   /** Continuous ingestion dedup: every micro-batch is near-dup-checked
     * against the persistent index and then becomes part of it — the
@@ -270,67 +256,37 @@ object StreamOps {
                      compactEveryNBatches: Int = 0,
                      compactTargetFileBytes: Long = 128L * 1024 * 1024)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupIndexBatch(batch, batchId, idCol, textCol, indexPath,
-          matchesPath, threshold, maxBucket, compactEveryNBatches,
-          compactTargetFileBytes)
-      }
-      .start()
+    foreachBatchSink(docs, checkpoint) { (batch, batchId) =>
+      dedupIndexBatch(batch, batchId, idCol, textCol, indexPath,
+        matchesPath, threshold, maxBucket, compactEveryNBatches,
+        compactTargetFileBytes)
+    }
 
-  /** One micro-batch of continuous MEDIA dedup-index maintenance — the
-    * multimodal twin of [[dedupIndexBatch]] (same replay contract,
-    * callable directly so the semantics are unit-testable): `batch`
-    * carries (id, code) fingerprint rows — an image dHash or acoustic
-    * fingerprint computed upstream by the narrow decode chain
+  /** One micro-batch of continuous MEDIA dedup-index maintenance (the
+    * [[graft.similarity.BucketedIndex.sinkBatch]] replay contract):
+    * `batch` carries (id, code) fingerprint rows — an image dHash or
+    * acoustic fingerprint computed upstream by the narrow decode chain
     * ([[graft.multimodal.MediaCodec]]; media BYTES never reach this
-    * operator or the index). The batch is Hamming-matched against the
-    * persistent [[graft.similarity.MediaDedupIndex]], matches land
-    * EXACTLY-ONCE in a `micro_batch_id` partition (dynamic overwrite —
-    * a replayed batch overwrites its own output), and only
-    * not-yet-indexed ids are appended (anti-join on the column-pruned id
-    * column), so checkpoint-recovery replays cannot double-index a
-    * fingerprint. Creates the index on the first batch. */
+    * operator or the index), Hamming-matched against the persistent
+    * [[graft.similarity.MediaDedupIndex]]. Creates the index on the first
+    * batch, with this sink's banding constants. */
   def mediaDedupIndexBatch(batch: DataFrame, batchId: Long, idCol: String,
                            codeCol: String, indexPath: String,
                            matchesPath: String, maxHamming: Int,
                            nBands: Int = 4, bandBits: Int = 16,
                            maxBucket: Option[Int] = None,
                            compactEveryNBatches: Int = 0,
-                           compactTargetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    import graft.similarity.MediaDedupIndex
-    val spark = batch.sparkSession
-    if (!MediaDedupIndex.exists(spark, indexPath)) {
-      MediaDedupIndex.build(batch.limit(0), idCol, codeCol, indexPath,
-        nBands, bandBits)
+                           compactTargetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    MediaDedupIndex.sinkBatch(batch, batchId, idCol, codeCol, indexPath,
+        matchesPath, Some(MediaDedupIndex.Manifest(nBands, bandBits)),
+        compactEveryNBatches, compactTargetFileBytes) {
+      // corpus_id =!= batch_id: on replay the batch's own codes are already
+      // indexed, and an item must not match itself — with the guard a
+      // replayed batch reproduces its original match set exactly
+      MediaDedupIndex.dedupBatch(batch.sparkSession, indexPath, batch,
+          idCol, codeCol, maxHamming, maxBucket)
+        .filter(col("corpus_id") =!= col("batch_id"))
     }
-    // corpus_id =!= batch_id: on replay the batch's own codes are already
-    // indexed, and an item must not match itself — with the guard a
-    // replayed batch reproduces its original match set exactly
-    val matches = MediaDedupIndex.dedupBatch(spark, indexPath, batch,
-        idCol, codeCol, maxHamming, maxBucket)
-      .filter(col("corpus_id") =!= col("batch_id"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      matches.withColumn("micro_batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("micro_batch_id")
-        .parquet(matchesPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    val fresh = batch.join(
-      MediaDedupIndex.indexedIds(spark, indexPath)
-        .withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-    MediaDedupIndex.append(fresh, idCol, codeCol, indexPath)
-    // bounded-file-count self-maintenance, same contract as
-    // dedupIndexBatch (content-idempotent under checkpoint replay)
-    if (compactEveryNBatches > 0 && (batchId + 1) % compactEveryNBatches == 0)
-      MediaDedupIndex.compact(spark, indexPath, compactTargetFileBytes)
-  }
 
   /** Continuous multimodal ingestion dedup: every micro-batch of media
     * fingerprints is Hamming-checked against the persistent banded index
@@ -346,27 +302,19 @@ object StreamOps {
                           compactEveryNBatches: Int = 0,
                           compactTargetFileBytes: Long = 128L * 1024 * 1024)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    codes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mediaDedupIndexBatch(batch, batchId, idCol, codeCol, indexPath,
-          matchesPath, maxHamming, nBands, bandBits, maxBucket,
-          compactEveryNBatches, compactTargetFileBytes)
-      }
-      .start()
+    foreachBatchSink(codes, checkpoint) { (batch, batchId) =>
+      mediaDedupIndexBatch(batch, batchId, idCol, codeCol, indexPath,
+        matchesPath, maxHamming, nBands, bandBits, maxBucket,
+        compactEveryNBatches, compactTargetFileBytes)
+    }
 
-  /** One micro-batch of continuous ANN-index serving — the embedding twin
-    * of [[dedupIndexBatch]] (same replay contract, callable directly so
-    * the semantics are unit-testable): `batch` carries (id, vector) rows;
-    * each batch is top-k-matched against the persistent
-    * [[graft.similarity.AnnIndex]] (corpus side probed through the stored
-    * bucketed band tables — never re-banded, never exchanged), matches
-    * land EXACTLY-ONCE in a `micro_batch_id` partition (dynamic overwrite
-    * — a replayed batch overwrites its own output), and only
-    * not-yet-indexed ids are appended (anti-join on the column-pruned id
-    * column), so checkpoint-recovery replays cannot double-index a
-    * vector. Creates the index on the first batch (banding constants from
-    * the sink parameters, pinned in the manifest thereafter);
+  /** One micro-batch of continuous ANN-index serving (the
+    * [[graft.similarity.BucketedIndex.sinkBatch]] replay contract):
+    * `batch` carries (id, vector) rows, top-k-matched against the
+    * persistent [[graft.similarity.AnnIndex]] (corpus side probed through
+    * the stored bucketed band tables — never re-banded, never exchanged).
+    * Creates the index on the first batch (banding constants from the
+    * sink parameters, pinned in the manifest thereafter);
     * [[graft.similarity.AnnIndex.queryBatch]] excludes self-matches, so a
     * replayed batch whose own vectors were already appended never reports
     * itself. */
@@ -375,35 +323,13 @@ object StreamOps {
                     k: Int, nTables: Int = 8, nBits: Int = 6, dim: Int = 64,
                     seed: Long = 42L, maxBucket: Option[Int] = None,
                     compactEveryNBatches: Int = 0,
-                    compactTargetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    import graft.similarity.AnnIndex
-    val spark = batch.sparkSession
-    if (!AnnIndex.exists(spark, indexPath))
-      AnnIndex.build(batch.limit(0), idCol, vecCol, indexPath,
-        nTables, nBits, dim, seed)
-    val matches = AnnIndex.queryBatch(spark, indexPath, batch, idCol, vecCol,
-      k, maxBucket)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      matches.withColumn("micro_batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("micro_batch_id")
-        .parquet(matchesPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+                    compactTargetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    AnnIndex.sinkBatch(batch, batchId, idCol, vecCol, indexPath, matchesPath,
+        Some(AnnIndex.Manifest(nTables, nBits, dim, seed)),
+        compactEveryNBatches, compactTargetFileBytes) {
+      AnnIndex.queryBatch(batch.sparkSession, indexPath, batch, idCol,
+        vecCol, k, maxBucket)
     }
-    // column-pruned AND bucketed by id: the anti-join exchanges only the
-    // incoming batch, never the stored corpus
-    val fresh = batch.join(
-      AnnIndex.indexedIds(spark, indexPath).withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-    AnnIndex.append(fresh, idCol, vecCol, indexPath)
-    // bounded-file-count self-maintenance (content-idempotent under
-    // checkpoint replay, same contract as dedupIndexBatch)
-    if (compactEveryNBatches > 0 && (batchId + 1) % compactEveryNBatches == 0)
-      AnnIndex.compact(spark, indexPath, compactTargetFileBytes)
-  }
 
   /** Continuous embedding ingestion + similarity serving: every
     * micro-batch is top-k-matched against the persistent ANN index and
@@ -418,14 +344,11 @@ object StreamOps {
                    compactEveryNBatches: Int = 0,
                    compactTargetFileBytes: Long = 128L * 1024 * 1024)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annIndexBatch(batch, batchId, idCol, vecCol, indexPath, matchesPath,
-          k, nTables, nBits, dim, seed, maxBucket, compactEveryNBatches,
-          compactTargetFileBytes)
-      }
-      .start()
+    foreachBatchSink(vectors, checkpoint) { (batch, batchId) =>
+      annIndexBatch(batch, batchId, idCol, vecCol, indexPath, matchesPath,
+        k, nTables, nBits, dim, seed, maxBucket, compactEveryNBatches,
+        compactTargetFileBytes)
+    }
 
   /** Per-micro-batch count-min-sketch maintenance — the streaming twin of
     * q108: each batch's token counters land as one `micro_batch_id`
@@ -436,19 +359,10 @@ object StreamOps {
     * CMS merge property (counter-wise addition over disjoint slices)
     * makes the partitioned layout exactly equivalent to one sketch. */
   def cmsBatch(batch: DataFrame, batchId: Long, tokenCol: String,
-               cmsPath: String, depth: Int = 4, width: Int = 256): Unit = {
-    val spark = batch.sparkSession
-    val counters =
-      graft.functions.CountMinSketch.counters(batch, tokenCol, depth, width)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try counters.withColumn("micro_batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("micro_batch_id").parquet(cmsPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+               cmsPath: String, depth: Int = 4, width: Int = 256): Unit =
+    overwritePartition(
+      graft.functions.CountMinSketch.counters(batch, tokenCol, depth, width),
+      "micro_batch_id", batchId, cmsPath)
 
   /** Per-micro-batch incremental gold-view maintenance — the streaming
     * twin of q365/q369: the batch's signed view delta (built by the
@@ -460,28 +374,16 @@ object StreamOps {
     * group-fold needs to stay exactly-once on top of at-least-once batch
     * replays. State stays #batches × #groups metadata rows; the view's
     * base data is never re-read. */
-  def ivmBatch(delta: DataFrame, batchId: Long, statePath: String): Unit = {
-    val spark = delta.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try delta.withColumn("micro_batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("micro_batch_id").parquet(statePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def ivmBatch(delta: DataFrame, batchId: Long, statePath: String): Unit =
+    overwritePartition(delta, "micro_batch_id", batchId, statePath)
 
   /** Continuous view maintenance over a stream via [[ivmBatch]]. */
   def ivmSink(df: DataFrame, toDelta: DataFrame => DataFrame,
               statePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivmBatch(toDelta(batch), batchId, statePath)
-      }
-      .start()
+    foreachBatchSink(df, checkpoint) { (batch, batchId) =>
+      ivmBatch(toDelta(batch), batchId, statePath)
+    }
 
   /** The current view: fold every stored per-batch delta partition. */
   def ivmView(spark: org.apache.spark.sql.SparkSession, statePath: String,
@@ -493,12 +395,9 @@ object StreamOps {
   def cmsSink(tokens: DataFrame, tokenCol: String, cmsPath: String,
               checkpoint: String, depth: Int = 4, width: Int = 256)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    tokens.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cmsBatch(batch, batchId, tokenCol, cmsPath, depth, width)
-      }
-      .start()
+    foreachBatchSink(tokens, checkpoint) { (batch, batchId) =>
+      cmsBatch(batch, batchId, tokenCol, cmsPath, depth, width)
+    }
 
   /** The live sketch: counter-wise sum over all batch partitions. */
   def cmsRead(spark: org.apache.spark.sql.SparkSession, cmsPath: String): DataFrame =
@@ -544,26 +443,16 @@ object StreamOps {
           .as("term"))
       .agg(max(col("tn")).cast("long").as("n_tokens"),
         round(sum(col("term").cast("decimal(27,12)")).cast("double"), 6).as("kl"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try metrics.withColumn("micro_batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("micro_batch_id").parquet(metricsPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    overwritePartition(metrics, "micro_batch_id", batchId, metricsPath)
   }
 
   /** Continuous drift monitoring over a token stream via [[driftBatch]]. */
   def driftSink(tokens: DataFrame, tokenCol: String, baselinePath: String,
                 metricsPath: String, checkpoint: String, buckets: Int = 256)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    tokens.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftBatch(batch, batchId, tokenCol, baselinePath, metricsPath, buckets)
-      }
-      .start()
+    foreachBatchSink(tokens, checkpoint) { (batch, batchId) =>
+      driftBatch(batch, batchId, tokenCol, baselinePath, metricsPath, buckets)
+    }
 
   /** Watermarked stream-stream inner join within a time bound: each left
     * row matches right rows with the same key whose event time lies in
@@ -594,18 +483,15 @@ object StreamOps {
                         cleanPath: String, quarantinePath: String,
                         checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tagged = batch.withColumn("__bad", violation).persist()
-        try {
-          tagged.filter(!col("__bad")).drop("__bad")
-            .write.mode("append").parquet(cleanPath)
-          tagged.filter(col("__bad")).drop("__bad")
-            .write.mode("append").parquet(quarantinePath)
-        } finally { tagged.unpersist(); () }
-      }
-      .start()
+    foreachBatchSink(df, checkpoint) { (batch, _) =>
+      val tagged = batch.withColumn("__bad", violation).persist()
+      try {
+        tagged.filter(!col("__bad")).drop("__bad")
+          .write.mode("append").parquet(cleanPath)
+        tagged.filter(col("__bad")).drop("__bad")
+          .write.mode("append").parquet(quarantinePath)
+      } finally { tagged.unpersist(); () }
+    }
 }
 
 /** StreamingQueryListener bridge for per-batch metrics (reference's metric

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * covers the insert-only monoid family; this covers the group family
   * under deletes.
   *
-  * State lifecycle mirrors [[graft.similarity.DedupIndex]] /
-  * [[graft.metrics.ProfileStore]]: `append` writes tiny per-batch delta
+  * State lifecycle mirrors the [[graft.similarity.BucketedIndex]] /
+  * [[graft.metrics.ProfileStore]] one: `append` writes tiny per-batch delta
   * parquet into a state dir; `current` folds all stored deltas and
   * drops groups whose net multiplicity reached zero (a fully-retracted
   * group must VANISH from the view, not linger as a zero row).
@@ -70,19 +70,9 @@ object Ivm {
     * This is what makes a re-run pipeline idempotent: the same source
     * path folds into the view once, however many times the job runs. */
   def appendIdempotent(delta: DataFrame, stateDir: String,
-      batchKey: String): Unit = {
-    val spark = delta.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try delta.withColumn(BatchCol, lit(batchKey))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(stateDir)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      batchKey: String): Unit =
+    graft.streaming.StreamOps.overwritePartition(delta, BatchCol, batchKey,
+      stateDir)
 
   /** Fold stored deltas into the current view. Sums add by key; groups
     * with net multiplicity 0 are dropped. One #batches x #groups-row

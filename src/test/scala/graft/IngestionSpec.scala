@@ -682,28 +682,47 @@ class IngestionSpec extends SparkSpec {
   test("maintenance: dedup-index-compact and dedup-index-rebucket run the " +
        "index maintenance from pipeline config") {
     import graft.core.IngestionRunner
+    import graft.similarity.{AnnIndex, BucketedIndex, DedupIndex, MediaDedupIndex}
+    import org.apache.spark.sql.functions.{array, col, sin, xxhash64}
     val root = tmpDir("mnt-idx")
-    val idx = s"$root/index"
-    val docs = (0L until 40L)
-      .map(i => (i, s"nu xi omicron doc $i tail ${i * 17}"))
-      .toDF("doc_id", "text")
-    graft.similarity.DedupIndex.build(docs, "doc_id", "text", idx)
-    (1 to 3).foreach(b => graft.similarity.DedupIndex.append(
-      docs.withColumn("doc_id",
-        org.apache.spark.sql.functions.col("doc_id") + b * 1000L),
-      "doc_id", "text", idx))
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "dedup-index-compact", path = idx))
-    graft.lakehouse.Compaction.parquetFileCount(spark,
-      s"$idx/bands_v1") shouldBe 8
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "dedup-index-rebucket", path = idx, buckets = 16))
-    graft.similarity.DedupIndex.manifest(spark, idx).numBuckets shouldBe 16
-    graft.similarity.DedupIndex.load(spark, idx)._1.count() shouldBe 160L
-    // rebucket without a bucket count refuses loudly
-    an[IllegalArgumentException] should be thrownBy
-      IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-        `type` = "dedup-index-rebucket", path = idx))
+    val ids = (0L until 40L).toDF("id")
+    // per input: (task-type prefix, index, its build, (doc_id, value) rows,
+    // value column); every kind is built from 40 rows, then appended 3
+    // times under shifted ids — 160 indexed rows in total
+    val inputs: Seq[(String, BucketedIndex,
+        (org.apache.spark.sql.DataFrame, String, String) => Unit,
+        org.apache.spark.sql.DataFrame, String)] = Seq(
+      ("dedup", DedupIndex, DedupIndex.build(_, "doc_id", _, _),
+        (0L until 40L).map(i => (i, s"nu xi omicron doc $i tail ${i * 17}"))
+          .toDF("doc_id", "text"), "text"),
+      ("media", MediaDedupIndex, MediaDedupIndex.build(_, "doc_id", _, _),
+        ids.select(col("id").as("doc_id"),
+          xxhash64(col("id")).as("dhash")), "dhash"),
+      ("ann", AnnIndex, AnnIndex.build(_, "doc_id", _, _),
+        ids.select(col("id").as("doc_id"), array((0 until 64)
+          .map(j => sin(col("id") * (j + 1) + 1.0)): _*).as("emb")), "emb"))
+    inputs.foreach { case (kind, index, build, docs, valueCol) =>
+      withClue(s"$kind: ") {
+        val idx = s"$root/$kind-index"
+        build(docs, valueCol, idx)
+        (1 to 3).foreach(b => index.append(
+          docs.withColumn("doc_id", col("doc_id") + b * 1000L),
+          "doc_id", valueCol, idx))
+        IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+          `type` = s"$kind-index-compact", path = idx))
+        graft.lakehouse.Compaction.parquetFileCount(spark,
+          s"$idx/bands_v1") shouldBe 8
+        IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+          `type` = s"$kind-index-rebucket", path = idx, buckets = 16))
+        index.manifest(spark, idx).numBuckets shouldBe 16
+        index.indexedIds(spark, idx).count() shouldBe 160L
+        // rebucket without a bucket count refuses loudly
+        an[IllegalArgumentException] should be thrownBy
+          IngestionRunner.runMaintenance(spark,
+            graft.config.MaintenanceConfig(
+              `type` = s"$kind-index-rebucket", path = idx))
+      }
+    }
   }
 
   private def rmrfDir(p: java.io.File): Unit = {

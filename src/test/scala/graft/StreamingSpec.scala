@@ -270,23 +270,42 @@ class StreamingSpec extends SparkSpec {
 
   test("mediaDedupIndexBatch compactEveryNBatches: file counts stay " +
        "bounded on the media index too") {
-    val root = tmpDir("midxc")
-    val (index, matches) = (root + "/index", root + "/matches")
-    graft.similarity.MediaDedupIndex.build(
-      Seq((1L, 4096L)).toDF("media_id", "dhash"), "media_id", "dhash", index)
-    (0 until 6).foreach { b =>
-      StreamOps.mediaDedupIndexBatch(
-        Seq((100L + b, 4096L + b)).toDF("media_id", "dhash"), b.toLong,
-        "media_id", "dhash", index, matches, maxHamming = 2,
-        compactEveryNBatches = 3)
+    import graft.similarity.{AnnIndex, BucketedIndex, MediaDedupIndex}
+    def vec(s: Long): Array[Double] =
+      Array.tabulate(8)(j => if (j == (s % 8).toInt) (s + 10).toDouble else 1.0)
+    // (index kind, build a one-row index, run sink batch b) per input: the
+    // media sink and the ANN sink share the same compaction cadence
+    val inputs: Seq[(String, BucketedIndex, String => Unit,
+        (Int, String, String) => Unit)] = Seq(
+      ("media", MediaDedupIndex,
+        index => MediaDedupIndex.build(
+          Seq((1L, 4096L)).toDF("media_id", "dhash"), "media_id", "dhash",
+          index),
+        (b, index, matches) => StreamOps.mediaDedupIndexBatch(
+          Seq((100L + b, 4096L + b)).toDF("media_id", "dhash"), b.toLong,
+          "media_id", "dhash", index, matches, maxHamming = 2,
+          compactEveryNBatches = 3)),
+      ("ann", AnnIndex,
+        index => AnnIndex.build(Seq((1L, vec(7L))).toDF("vec_id", "emb"),
+          "vec_id", "emb", index, nTables = 4, nBits = 4, dim = 8),
+        (b, index, matches) => StreamOps.annIndexBatch(
+          Seq((100L + b, vec(b.toLong))).toDF("vec_id", "emb"), b.toLong,
+          "vec_id", "emb", index, matches, k = 2, nTables = 4, nBits = 4,
+          dim = 8, compactEveryNBatches = 3)))
+    inputs.foreach { case (kind, ix, build, sinkBatch) =>
+      withClue(s"$kind: ") {
+        val root = tmpDir(s"${kind}idxc")
+        val (index, matches) = (root + "/index", root + "/matches")
+        build(index)
+        (0 until 6).foreach(b => sinkBatch(b, index, matches))
+        import graft.lakehouse.Compaction.parquetFileCount
+        val v = ix.manifest(spark, index).version
+        v shouldBe 2
+        parquetFileCount(spark, index + s"/bands_v$v") should be <= 2 * 8
+        parquetFileCount(spark, index + s"/band_sizes_v$v") should be <= 2
+        ix.indexedIds(spark, index).count() shouldBe 7L
+      }
     }
-    import graft.lakehouse.Compaction.parquetFileCount
-    val v = graft.similarity.MediaDedupIndex.manifest(spark, index).version
-    v shouldBe 2
-    parquetFileCount(spark, index + s"/bands_v$v") should be <= 2 * 8
-    parquetFileCount(spark, index + s"/band_sizes_v$v") should be <= 2
-    graft.similarity.MediaDedupIndex.indexedIds(spark, index)
-      .count() shouldBe 7L
   }
 
   test("annIndexSink: each micro-batch is served from the index, then " +
@@ -367,28 +386,33 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ivmSink: streamed deltas fold to the view; replay overwrites, never doubles") {
-    import graft.transform.Ivm
-    val root = tmpDir("ivm-stream")
-    val (path, cp) = (root + "/state", root + "/cp")
-    val in = MemoryStream[(String, Long)](spark)
-    def toDelta(b: org.apache.spark.sql.DataFrame) =
-      Ivm.viewDelta(Ivm.inserts(b.toDF("k", "v")), Seq("k"),
-        Seq("sv" -> col("v")))
-    val q = StreamOps.ivmSink(in.toDF().toDF("k", "v"), toDelta, path, cp)
-    try {
-      in.addData(("a", 1L), ("b", 5L)); q.processAllAvailable()
-      in.addData(("a", 2L)); q.processAllAvailable()
-    } finally q.stop()
-    val view = StreamOps.ivmView(spark, path, Seq("k"))
-      .select($"k", $"n_rows", $"sv").as[(String, Long, Long)].collect().toSet
-    view shouldBe Set(("a", 2L, 3L), ("b", 1L, 5L))
-    // replay micro-batch 1 (same delta, same id): its partition is
-    // REPLACED, so the folded view is unchanged — exactly-once semantics
-    // on top of an at-least-once replay
-    StreamOps.ivmBatch(toDelta(Seq(("a", 2L)).toDF("k", "v")), 1L, path)
-    StreamOps.ivmView(spark, path, Seq("k"))
-      .select($"k", $"n_rows", $"sv").as[(String, Long, Long)]
-      .collect().toSet shouldBe view
+    withStaticOverwriteMode {
+      import graft.transform.Ivm
+      val root = tmpDir("ivm-stream")
+      val (path, cp) = (root + "/state", root + "/cp")
+      val in = MemoryStream[(String, Long)](spark)
+      def toDelta(b: org.apache.spark.sql.DataFrame) =
+        Ivm.viewDelta(Ivm.inserts(b.toDF("k", "v")), Seq("k"),
+          Seq("sv" -> col("v")))
+      val q = StreamOps.ivmSink(in.toDF().toDF("k", "v"), toDelta, path, cp)
+      try {
+        in.addData(("a", 1L), ("b", 5L)); q.processAllAvailable()
+        in.addData(("a", 2L)); q.processAllAvailable()
+      } finally q.stop()
+      val view = StreamOps.ivmView(spark, path, Seq("k"))
+        .select($"k", $"n_rows", $"sv").as[(String, Long, Long)].collect().toSet
+      view shouldBe Set(("a", 2L, 3L), ("b", 1L, 5L))
+      // replay micro-batch 1 (same delta, same id): its partition is
+      // REPLACED, so the folded view is unchanged — exactly-once semantics
+      // on top of an at-least-once replay
+      StreamOps.ivmBatch(toDelta(Seq(("a", 2L)).toDF("k", "v")), 1L, path)
+      StreamOps.ivmView(spark, path, Seq("k"))
+        .select($"k", $"n_rows", $"sv").as[(String, Long, Long)]
+        .collect().toSet shouldBe view
+      // the replay under a STATIC session replaced only its own partition
+      spark.read.parquet(path).select("micro_batch_id").distinct()
+        .as[Long].collect().sorted shouldBe Array(0L, 1L)
+    }
   }
 
   test("driftSink: in-distribution batch scores near zero, skewed batch higher; replay idempotent") {
@@ -436,37 +460,56 @@ class StreamingSpec extends SparkSpec {
     back.select("batch_id").distinct().as[Long].collect().sorted shouldBe Array(0L, 1L)
   }
 
+  /** Run `body` with the session's partition-overwrite mode explicitly
+    * `static`, then assert the sinks never flipped it. */
+  private def withStaticOverwriteMode(body: => Unit): Unit = {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      body
+      spark.conf.get(key) shouldBe "static"
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("exactlyOnceParquet: restart from checkpoint replays a crashed batch without dup/loss") {
-    val in = MemoryStream[(Long, String)](spark)
-    val out = tmpDir("eopr") + "/t"
-    val cp = tmpDir("eopr") + "/cp"
-    val df = in.toDF().toDF("id", "v")
-    val q1 = StreamOps.exactlyOnceParquet(df, out, cp)
-    try {
-      in.addData((1L, "a")); q1.processAllAvailable()
-      in.addData((2L, "b")); q1.processAllAvailable()
-    } finally q1.stop()
-    // simulate a crash BETWEEN the sink write and the checkpoint commit:
-    // batch 1's data is already in the table, but its commit marker is
-    // gone — the restarted query must re-run batch 1, and the per-
-    // partition dynamic overwrite must land it on top of itself
-    val commits = new java.io.File(cp + "/commits")
-    val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
-      .maxBy(_.getName.toLong)
-    last.delete() shouldBe true
-    // ...and its Hadoop LocalFS .crc sidecar, or the replayed commit's
-    // atomic re-create trips the concurrent-writer guard
-    new java.io.File(commits, s".${last.getName}.crc").delete()
-    val q2 = StreamOps.exactlyOnceParquet(df, out, cp)
-    try {
-      q2.processAllAvailable() // replays batch 1 from the retained source
-      in.addData((3L, "c"))
-      q2.processAllAvailable() // then continues with batch 2
-    } finally q2.stop()
-    val back = spark.read.parquet(out)
-    back.select("id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
-    back.select("batch_id").distinct().as[Long].collect().sorted shouldBe
-      Array(0L, 1L, 2L)
+    withStaticOverwriteMode {
+      val in = MemoryStream[(Long, String)](spark)
+      val out = tmpDir("eopr") + "/t"
+      val cp = tmpDir("eopr") + "/cp"
+      val df = in.toDF().toDF("id", "v")
+      val q1 = StreamOps.exactlyOnceParquet(df, out, cp)
+      try {
+        in.addData((1L, "a")); q1.processAllAvailable()
+        in.addData((2L, "b")); q1.processAllAvailable()
+      } finally q1.stop()
+      // simulate a crash BETWEEN the sink write and the checkpoint commit:
+      // batch 1's data is already in the table, but its commit marker is
+      // gone — the restarted query must re-run batch 1, and the per-
+      // partition dynamic overwrite must land it on top of itself
+      val commits = new java.io.File(cp + "/commits")
+      val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
+        .maxBy(_.getName.toLong)
+      last.delete() shouldBe true
+      // ...and its Hadoop LocalFS .crc sidecar, or the replayed commit's
+      // atomic re-create trips the concurrent-writer guard
+      new java.io.File(commits, s".${last.getName}.crc").delete()
+      val q2 = StreamOps.exactlyOnceParquet(df, out, cp)
+      try {
+        q2.processAllAvailable() // replays batch 1 from the retained source
+        in.addData((3L, "c"))
+        q2.processAllAvailable() // then continues with batch 2
+      } finally q2.stop()
+      // under a STATIC session the replayed batch still replaced only its
+      // own partition (the sink's per-write dynamic overwrite option)
+      val back = spark.read.parquet(out)
+      back.select("id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
+      back.select("batch_id").distinct().as[Long].collect().sorted shouldBe
+        Array(0L, 1L, 2L)
+    }
   }
 
   test("foreachBatchSplit routes violations to quarantine") {
