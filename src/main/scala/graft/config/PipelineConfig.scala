@@ -30,24 +30,20 @@ final case class PipelineConfig(env: String,
 
 /** One maintenance task over a parquet table path — the OPTIMIZE /
   * rewrite_data_files chore as pipeline config instead of an ad-hoc
-  * notebook job. `type` = "compact" (small-file rewrite, optionally per
-  * partition directory), "zorder" (Morton-order rewrite on `columns` so
-  * min/max stats prune scans filtered on any of them), or "ivm"
-  * (incremental view maintenance: fold the signed delta batch at
-  * `source` into the [[graft.transform.Ivm]] state at `path` — grouped
-  * by `keys`, summing `sums` — and, when `view_path` is set, publish
-  * the folded current view there; the view's base data is never
-  * re-read). Persistent-dedup-index maintenance:
-  * "dedup-index-compact" / "media-index-compact" / "ann-index-compact"
-  * (bucket-preserving small-file rewrite + band_sizes delta fold,
-  * published as a fresh versioned layout) and "dedup-index-rebucket" /
-  * "media-index-rebucket" / "ann-index-rebucket" (O(index) rewrite to
-  * `buckets` buckets when the corpus outgrows the build-time layout).
-  * State-store maintenance: "profile-compact" (fold the append-only
-  * profile store to one snapshot, preserving every batch's appliedness)
-  * and "ivm-prune" (retire superseded stateful-fold snapshot
-  * generations, keeping the newest `keep`; pruned generations' batch
-  * keys persist as `_applied` markers so replays still skip). */
+  * notebook job. `type` is "compact" (small-file rewrite, optionally per
+  * partition dir); "zorder" (Morton-order rewrite on `columns`, so min/max
+  * stats prune scans filtered on any of them); "ivm" (fold the change
+  * batch at `source` into the [[graft.transform.Ivm]] state at `path` —
+  * `agg` group/min/topk — and publish the view at `view_path`; the base
+  * data is never re-read) or "ivm-prune" (retire superseded min/topk
+  * generations, keeping the newest `keep`; replays of pruned batches
+  * still skip); "dedup-index" or "profile" (append the batch at `source`)
+  * or "profile-compact" (fold the profile store to one snapshot);
+  * "<kind>-index-compact" or "<kind>-index-rebucket" (O(index) rewrite to
+  * `buckets` when the corpus outgrows the build-time layout) for kind
+  * dedup, media or ann. Stateful stores commit through
+  * [[graft.core.Commit]] (`publish` = "rename" or "pointer"). Every field,
+  * `keep` included, is read from both JSON and HOCON. */
 final case class MaintenanceConfig(`type`: String, path: String,
                                    columns: Seq[String] = Seq.empty,
                                    targetFileMb: Int = 128,
@@ -360,7 +356,7 @@ object HoconConfigLoader {
     v.stripPrefix("v").toInt
 
   private def toMaintenance(m: Obj): MaintenanceConfig = MaintenanceConfig(
-    `type` = str(m, "type").getOrElse(fail("maintenance task needs a type (compact/zorder)")),
+    `type` = str(m, "type").getOrElse(fail("maintenance task needs a type")),
     path = str(m, "path").getOrElse(fail("maintenance task needs a path")),
     columns = arr(m, "columns").map(Hocon.render),
     targetFileMb = num(m, "targetFileMb").orElse(num(m, "target_file_mb"))
@@ -377,7 +373,8 @@ object HoconConfigLoader {
     base = str(m, "base"),
     k = num(m, "k").map(_.intValue).getOrElse(10),
     publish = str(m, "publish").map(_.toLowerCase).getOrElse("rename"),
-    buckets = num(m, "buckets").map(_.intValue).getOrElse(0))
+    buckets = num(m, "buckets").map(_.intValue).getOrElse(0),
+    keep = num(m, "keep").map(_.intValue).getOrElse(2))
 
   private def toDq(d: Obj): DQConfig = DQConfig(
     policy = str(d, "policy").orElse(str(d, "on_fail"))

@@ -1,12 +1,13 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.dq.{DQRuleSet, DQSummary}
 import graft.io.SourceReader
-import graft.lakehouse.{LakehouseTable, SinkWriter}
+import graft.lakehouse.{LakehouseTable, Retention, SinkWriter}
 import graft.schema.SchemaValidator
 
 /** One ingestion job: read -> validate -> DQ -> write
@@ -29,7 +30,8 @@ import graft.schema.SchemaValidator
   *     re-appends the full table.
   *  6. Registry `retention_days` is enforced on write when `retention`
   *     names a governing time column: expired rows are filtered before DQ
-  *     (a literal cutoff — prunable, zero extra scans).
+  *     (a literal cutoff — prunable, zero extra scans); rows whose time is
+  *     null are kept and reach DQ.
   */
 final case class IngestionJob(domain: String, dataset: String,
                               layer: MedallionLayer,
@@ -63,10 +65,12 @@ final case class IngestionJob(domain: String, dataset: String,
   /** Batch path; also the body of each streaming micro-batch. */
   private[core] def runBatch(raw: DataFrame): DQSummary = {
     expectedSchema.foreach(SchemaValidator.validateOrThrow(raw, _))
-    // registry retention_days: expired rows never reach DQ or a sink
+    // registry retention_days: expired rows never reach DQ or a sink; an
+    // unknown (null) time is not an expired one, so those rows reach DQ
     val df = retention match {
       case Some((column, days)) =>
-        graft.lakehouse.Retention.currentRows(raw, column, days)
+        val cutoff = lit(Retention.cutoffFor(java.time.LocalDate.now(), days))
+        raw.filter(col(column).isNull || col(column) >= cutoff)
       case None => raw
     }
     // mask registry-flagged pii columns before anything is persisted to a

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.GraftSession
 import graft.config._
@@ -31,6 +31,8 @@ object IngestionRunner {
     args.sliding(2, 1).collectFirst { case Array("--config", p) => p }
 
   def runPipeline(spark: SparkSession, cfg: PipelineConfig): Seq[JobResult] = {
+    // a maintenance config error must fail the run before any job writes
+    val maintenance = cfg.maintenance.map(maintenanceTask)
     // register plugin catalogs FIRST: spark.sql.catalog.<name>.* conf
     // must be on the session before any job references the catalog
     // (plugins instantiate lazily through the CatalogManager)
@@ -43,381 +45,116 @@ object IngestionRunner {
     // Layout maintenance runs after the batch jobs land (and before any
     // indefinite streaming await), so a pipeline can ingest + compact /
     // z-order its own output in one config.
-    cfg.maintenance.foreach(runMaintenance(spark, _))
+    maintenance.foreach(_(spark))
     // Streaming jobs: await after ALL jobs have started.
     if (results.exists(_.streamingQuery.nonEmpty))
       spark.streams.awaitAnyTermination()
     results
   }
 
-  /** Execute one config-declared maintenance task (compact / zorder / ivm / dedup-index / profile). */
-  def runMaintenance(spark: SparkSession,
-                     m: graft.config.MaintenanceConfig): Unit = {
-    import graft.lakehouse.{Compaction, ZOrder}
-    import graft.similarity.BucketedIndex
-    m.`type`.toLowerCase match {
-      case "compact" if m.partitioned =>
-        Compaction.compactPartitioned(spark, m.path, m.targetFileBytes, m.minFiles); ()
-      case "compact" =>
-        Compaction.compact(spark, m.path, m.targetFileBytes); ()
-      case "zorder" =>
-        ZOrder.rewrite(spark, m.path, m.columns, m.targetFileBytes, m.bits); ()
-      case "ivm" =>
-        import org.apache.spark.sql.functions.{col, count, lit, min}
-        import graft.transform.Ivm
-        val src = m.source.getOrElse(throw new IllegalArgumentException(
-          "ivm maintenance task needs a source (signed delta batch path)"))
-        if (m.keys.isEmpty) throw new IllegalArgumentException(
-          "ivm maintenance task needs keys")
-        // batch identity derived from the source path: re-running the same
-        // pipeline folds the same batch into the view exactly ONCE
-        // (mirrors StreamOps.ivmBatch's micro-batch-id partitions)
-        val batchKey = batchKeyFor(src)
-        val batch = Ivm.asZ(spark.read.parquet(src))
-        def publish(view: org.apache.spark.sql.DataFrame): Unit =
-          m.viewPath.foreach(v =>
-            view.write.mode("overwrite").parquet(v))
-        // Crash-safe snapshot protocol for the stateful (non-invertible)
-        // folds: each applied batch publishes a COMPLETE next-state
-        // directory holding the fold output plus a `_batch_key` file,
-        // made visible by ONE atomic step. There is no window where
-        // state is updated but the applied record missing — the record
-        // travels inside the published unit, so a crash either leaves
-        // the old state fully current (rerun refolds from it) or the new
-        // state fully applied (rerun skips). Two publish modes
-        // (config `publish`):
-        //  - "rename" (default): the unit is `state-<n>`, moved into
-        //    place with one directory rename — atomic on POSIX/HDFS.
-        //  - "pointer": for object stores WITHOUT atomic directory
-        //    rename. The unit is written under a unique name
-        //    (`state-p-<n>-<keyhash>`, never renamed), then published by
-        //    creating a tiny `_commits/<n>` pointer file
-        //    create-no-overwrite (one conditional PUT on S3-like
-        //    stores); readers resolve pointers and ignore un-pointed
-        //    data dirs, so a crash mid-write leaves only an invisible
-        //    orphan that the deterministic rerun overwrites in place.
-        val viewRoot = new org.apache.hadoop.fs.Path(m.path)
-        lazy val fs =
-          viewRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val commitsDir = new org.apache.hadoop.fs.Path(viewRoot, "_commits")
-        // rename-protocol snapshots: `state-<n>` directories
-        def renameSnapshots(): Seq[(Int, org.apache.hadoop.fs.Path)] =
-          if (!fs.exists(viewRoot)) Seq.empty
-          else fs.listStatus(viewRoot).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("state-"))
-            .flatMap(s => scala.util.Try(
-                s.getPath.getName.stripPrefix("state-").toInt).toOption
-              .map(_ -> s.getPath))
-        // pointer-protocol snapshots: `_commits/<n>` -> data dir name
-        def pointerSnapshots(): Seq[(Int, org.apache.hadoop.fs.Path)] =
-          if (!fs.exists(commitsDir)) Seq.empty
-          else fs.listStatus(commitsDir).toSeq
-            .flatMap(s => scala.util.Try(s.getPath.getName.toInt).toOption
-              .map(_ -> s.getPath))
-            .flatMap { case (n, commit) =>
-              val in = fs.open(commit)
-              val name =
-                try new String(in.readAllBytes(), "UTF-8").trim
-                finally in.close()
-              val data = new org.apache.hadoop.fs.Path(viewRoot, name)
-              if (fs.exists(data)) Some(n -> data) else None
-            }
-        def stateSnapshots(): Seq[(Int, org.apache.hadoop.fs.Path)] =
-          renameSnapshots() ++ pointerSnapshots()
-        def batchKeyOf(p: org.apache.hadoop.fs.Path): Option[String] = {
-          val f = new org.apache.hadoop.fs.Path(p, "_batch_key")
-          if (!fs.exists(f)) None
-          else {
-            val in = fs.open(f)
-            try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-          }
-        }
-        // legacy flat `state` dir (pre-snapshot layout) reads as the base
-        def currentState(): Option[org.apache.hadoop.fs.Path] = {
-          val snaps = stateSnapshots()
-          if (snaps.nonEmpty) Some(snaps.maxBy(_._1)._2)
-          else {
-            val legacy = new org.apache.hadoop.fs.Path(viewRoot, "state")
-            if (fs.exists(legacy)) Some(legacy) else None
-          }
-        }
-        // Accept the pre-r8 UNSUFFIXED key too: legacy markers/snapshots
-        // were written without the sha suffix, and ignoring them would
-        // re-fold already-applied batches over pre-existing state (min
-        // double-counts n_rows, topk duplicates leaderboard rows).
-        def alreadyApplied(key: String): Boolean = {
-          val legacy = legacyBatchKeyFor(src)
-          stateSnapshots().exists(s => batchKeyOf(s._2)
-            .exists(k => k == key || k == legacy)) ||
-            Seq(key, legacy).exists(k => fs.exists(new org.apache.hadoop.fs.Path(
-              new org.apache.hadoop.fs.Path(viewRoot, "_applied"), k)))
-        }
-        def writeBatchKey(dir: org.apache.hadoop.fs.Path, key: String): Unit = {
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(dir, "_batch_key"), true)
-          try out.write(key.getBytes("UTF-8")) finally out.close()
-        }
-        def publishState(next: org.apache.spark.sql.DataFrame,
-                         key: String): Unit = m.publish match {
-          case "rename" =>
-            val n1 = stateSnapshots().map(_._1).maxOption.getOrElse(0) + 1
-            val tmp = new org.apache.hadoop.fs.Path(viewRoot, s".state-tmp-$key")
-            fs.delete(tmp, true)
-            next.write.mode("overwrite").parquet(tmp.toString)
-            writeBatchKey(tmp, key)
-            val dest = new org.apache.hadoop.fs.Path(viewRoot, f"state-$n1%06d")
-            if (!fs.rename(tmp, dest)) throw new IllegalStateException(
-              s"atomic state publish failed: $tmp -> $dest")
-          case "pointer" =>
-            // unique data-dir name per (n, batch): a crashed attempt left
-            // the SAME name un-pointed, so the deterministic rerun
-            // overwrites it in place and nothing dangles
-            val keySha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(key.getBytes("UTF-8")).take(6)
-              .map("%02x".format(_)).mkString
-            val n1 = stateSnapshots().map(_._1).maxOption.getOrElse(0) + 1
-            val data =
-              new org.apache.hadoop.fs.Path(viewRoot, f"state-p-$n1%06d-$keySha")
-            fs.delete(data, true)
-            next.write.mode("overwrite").parquet(data.toString)
-            writeBatchKey(data, key)
-            fs.mkdirs(commitsDir)
-            val commit = new org.apache.hadoop.fs.Path(commitsDir, f"$n1%06d")
-            try {
-              // overwrite = false: the create FAILS if another writer
-              // committed this n first (conditional-PUT semantics). A
-              // lost race means our fold read state that is no longer
-              // current — retrying would silently drop the other
-              // writer's batch, so surface it instead (stateful folds
-              // are single-writer; the pointer's job is detection).
-              val out = fs.create(commit, false)
-              try out.write(data.getName.getBytes("UTF-8"))
-              finally out.close()
-            } catch {
-              case e: java.io.IOException if fs.exists(commit) =>
-                fs.delete(data, true)
-                throw new IllegalStateException(
-                  s"pointer publish lost a commit race at $commit — " +
-                    "another writer folded concurrently; rerun to fold " +
-                    "from the new current state", e)
-            }
-          case other => throw new IllegalArgumentException(
-            s"unknown ivm publish mode '$other' (rename/pointer)")
-        }
-        def readState(): org.apache.spark.sql.DataFrame =
-          spark.read.parquet(currentState().getOrElse(
-            throw new IllegalStateException(
-              s"no state under ${m.path} after fold")).toString)
-        m.agg match {
-          case "group" =>
-            // invertible aggregates: idempotency via partition overwrite.
-            // If this source's delta was stored pre-r8 under the
-            // UNSUFFIXED key, reuse that key so the dynamic overwrite
-            // REPLACES the legacy partition instead of writing a second
-            // one (which would double-count the batch in the fold).
-            val legacy = legacyBatchKeyFor(src)
-            val groupKey =
-              if (legacy != batchKey && fs.exists(new org.apache.hadoop.fs.Path(
-                  viewRoot, s"${Ivm.BatchCol}=$legacy"))) legacy
-              else batchKey
-            Ivm.appendIdempotent(
-              Ivm.viewDelta(batch, m.keys, m.sums.map(c => c -> col(c))),
-              m.path, groupKey)
-            publish(Ivm.current(spark, m.path, m.keys))
-          case "min" =>
-            // non-invertible: fold inserts monoidally, repair retractions
-            // from `base`; idempotency + crash safety via the atomic
-            // snapshot protocol (a stateful fold can't be replayed by
-            // overwriting a partition)
-            val value = m.columns.headOption.getOrElse(
-              throw new IllegalArgumentException(
-                "ivm agg=min needs columns=[<valueColumn>]"))
-            if (!alreadyApplied(batchKey)) {
-              val kcols = m.keys.map(col)
-              val state0 = currentState()
-                .map(p => spark.read.parquet(p.toString))
-                .getOrElse(batch.limit(0).groupBy(kcols: _*)
-                  .agg(min(col(value)).as("min_v"),
-                    count(lit(1)).cast("long").as("n_rows")))
-              val ins = batch.filter(col(Ivm.MultCol) > 0)
-              val rets = batch.filter(col(Ivm.MultCol) < 0)
-              val afterIns = Ivm.minInsert(state0, ins, m.keys, value)
-              val next =
-                if (rets.isEmpty) afterIns
-                else {
-                  val basePath = m.base.getOrElse(
-                    throw new IllegalArgumentException(
-                      "ivm agg=min with retractions needs base=<post-delete" +
-                        " base table path> for the repair scan"))
-                  Ivm.minRetract(afterIns, rets,
-                    spark.read.parquet(basePath), m.keys, value)
-                    .drop("recomputed")
-                }
-              publishState(next, batchKey)
-            }
-            publish(readState())
-          case "topk" =>
-            // per-key leaderboard: union-then-truncate monoid fold over
-            // the spilling heap TopKPerKey (insert-only, like q374)
-            val orderCol = m.columns.headOption.getOrElse(
-              throw new IllegalArgumentException(
-                "ivm agg=topk needs columns=[<orderColumn>, <tiebreak>...]"))
-            if (!alreadyApplied(batchKey)) {
-              val rows = batch.filter(col(Ivm.MultCol) > 0).drop(Ivm.MultCol)
-              val order = col(orderCol).desc +:
-                m.columns.tail.map(c => col(c).asc)
-              val kcols = m.keys.map(col)
-              val topBatch = graft.plans.TopKPerKey.topKPerKey(
-                rows, kcols, order, m.k)
-              val next = currentState() match {
-                case Some(p) => graft.plans.TopKPerKey.topKPerKey(
-                  spark.read.parquet(p.toString).unionByName(topBatch),
-                  kcols, order, m.k)
-                case None => topBatch
-              }
-              publishState(next, batchKey)
-            }
-            publish(readState())
-          case other => throw new IllegalArgumentException(
-            s"unknown ivm agg '$other' (group/min/topk)")
-        }
-      case "dedup-index" =>
-        // build-or-append a document batch into a persistent MinHash-LSH
-        // dedup index (the batch twin of StreamOps.dedupIndexSink) —
-        // per-batch cost O(batch), never O(corpus). CRASH-ATOMIC since
-        // r9: the batch publishes as one renamed `batch-<key>` unit per
-        // table, appliedness travels inside it (DedupIndex.appendAtomic);
-        // pre-r9 `_applied/` markers still honored. publish="pointer"
-        // switches to the object-store-safe _commits protocol (r10).
-        val src = m.source.getOrElse(throw new IllegalArgumentException(
-          "dedup-index maintenance task needs a source (document batch path)"))
-        if (m.columns.length < 2) throw new IllegalArgumentException(
+  /** Execute one config-declared maintenance task. */
+  def runMaintenance(spark: SparkSession, m: MaintenanceConfig): Unit =
+    maintenanceTask(m)(spark)
+
+  /** A maintenance task whose config is checked: only running it is left. */
+  private type MaintenanceTask = SparkSession => Unit
+
+  /** Resolve config task `m` to the call that runs it. Every config error
+    * (unknown `type`, `publish` or `agg`; missing `source`, `keys`,
+    * `columns` or `buckets`) surfaces here, before anything runs. */
+  private def maintenanceTask(m: MaintenanceConfig): MaintenanceTask = {
+    Commit.pointerMode(m.publish)
+    tasks.getOrElse(m.`type`.toLowerCase, throw new IllegalArgumentException(
+      s"unknown maintenance type '${m.`type`}' (${tasks.keys.toSeq.sorted.mkString("/")})"))(m)
+  }
+
+  private def source(m: MaintenanceConfig, what: String): String =
+    m.source.getOrElse(throw new IllegalArgumentException(
+      s"${m.`type`} maintenance task needs a source ($what)"))
+
+  private lazy val tasks: Map[String, MaintenanceConfig => MaintenanceTask] = {
+    import graft.similarity.{BucketedIndex, DedupIndex}
+    import graft.metrics.ProfileStore
+    Map[String, MaintenanceConfig => MaintenanceTask](
+      "compact" -> (m => spark =>
+        if (m.partitioned)
+          Compaction.compactPartitioned(spark, m.path, m.targetFileBytes, m.minFiles)
+        else Compaction.compact(spark, m.path, m.targetFileBytes)),
+      "zorder" -> (m => spark =>
+        ZOrder.rewrite(spark, m.path, m.columns, m.targetFileBytes, m.bits)),
+      "ivm" -> ivmTask,
+      "ivm-prune" -> (m => spark => Commit(spark, m.path).prune(m.keep)),
+      // build-or-append a document batch into a persistent MinHash-LSH
+      // dedup index (the batch twin of StreamOps.dedupIndexSink) —
+      // per-batch cost O(batch), never O(corpus)
+      "dedup-index" -> { m =>
+        val src = source(m, "document batch path")
+        require(m.columns.length >= 2,
           "dedup-index needs columns=[<idColumn>, <textColumn>]")
-        val (idCol, textCol) = (m.columns(0), m.columns(1))
-        val key = batchKeyFor(src)
-        if (!legacyMarkerApplied(spark, m.path, src) &&
-            !graft.similarity.DedupIndex.batchApplied(spark, m.path, key))
-          graft.similarity.DedupIndex.appendAtomic(
-            spark.read.parquet(src), idCol, textCol, m.path, key,
-            publish = m.publish)
-      case BucketedIndex.Compact(index) =>
-        // dedup/media/ann-index-compact: bucket-preserving small-file
-        // rewrite + band_sizes delta fold — the operational other half of
-        // the bucketed index layout: every batch append adds ≥1 file per
-        // bucket, forever, without this
-        index.compact(spark, m.path, m.targetFileBytes); ()
-      case "profile-compact" =>
-        // fold the append-only profile store to one snapshot; appliedness
-        // of every folded batch is preserved as _commits markers
-        graft.metrics.ProfileStore.compact(spark, m.path); ()
-      case "ivm-prune" =>
-        // Prune SUPERSEDED stateful-fold generations: every applied batch
-        // publishes a complete next-state snapshot (state-<n> /
-        // pointer-published), and the fold only ever reads the LATEST —
-        // older generations exist solely so a crash mid-publish keeps a
-        // complete predecessor. Keep the newest `keep` (crash grace +
-        // debugging), retire the rest; each retired generation's batch
-        // key is FIRST re-recorded as an `_applied/<key>` marker (the
-        // record alreadyApplied consults), so replaying an old batch
-        // still skips after its snapshot is gone. Marker-first ordering
-        // makes every crash window safe: marker+snapshot is merely
-        // redundant, and the current generation is never touched.
-        val root = new org.apache.hadoop.fs.Path(m.path)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) {
-          val commitsDir = new org.apache.hadoop.fs.Path(root, "_commits")
-          val rename = fs.listStatus(root).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("state-"))
-            .flatMap(s => scala.util.Try(
-                s.getPath.getName.stripPrefix("state-").toInt).toOption
-              .map(n => (n, s.getPath,
-                None: Option[org.apache.hadoop.fs.Path])))
-          val pointer =
-            if (!fs.exists(commitsDir)) Seq.empty
-            else fs.listStatus(commitsDir).toSeq
-              .flatMap(s => scala.util.Try(s.getPath.getName.toInt).toOption
-                .map(_ -> s.getPath))
-              .map { case (n, commit) =>
-                val in = fs.open(commit)
-                val name = try new String(in.readAllBytes(), "UTF-8").trim
-                finally in.close()
-                (n, new org.apache.hadoop.fs.Path(root, name), Some(commit))
-              }
-          val retired = (rename ++ pointer).sortBy(_._1)
-            .dropRight(math.max(1, m.keep))
-          val applied = new org.apache.hadoop.fs.Path(root, "_applied")
-          retired.foreach { case (_, data, commit) =>
-            val bk = new org.apache.hadoop.fs.Path(data, "_batch_key")
-            if (fs.exists(bk)) {
-              val in = fs.open(bk)
-              val key = try new String(in.readAllBytes(), "UTF-8")
-              finally in.close()
-              fs.mkdirs(applied)
-              val marker = new org.apache.hadoop.fs.Path(applied, key)
-              if (!fs.exists(marker)) fs.create(marker, true).close()
-            }
-            commit.foreach(c => fs.delete(c, false))
-            fs.delete(data, true)
-            ()
-          }
+        appendOnce(m.path, src)(DedupIndex.batchApplied) { (spark, key) =>
+          DedupIndex.appendAtomic(spark.read.parquet(src), m.columns(0),
+            m.columns(1), m.path, key, publish = m.publish)
         }
-      case BucketedIndex.Rebucket(index) =>
-        // dedup/media/ann-index-rebucket: O(index) rewrite to `buckets`
-        // buckets from the stored rows (never a corpus re-derivation)
-        if (m.buckets <= 0) throw new IllegalArgumentException(
-          s"${m.`type`.toLowerCase} needs buckets > 0")
-        index.rebucket(spark, m.path, m.buckets)
-      case "profile" =>
-        // fold a batch's per-column profile into the monoid profile store
-        // (one aggregate pass over the batch; the store itself is tiny
-        // metadata, merged on read — the data is never re-scanned).
-        // CRASH-ATOMIC since r9, same one-renamed-unit protocol;
-        // publish="pointer" switches to the _commits protocol (r10).
-        val src = m.source.getOrElse(throw new IllegalArgumentException(
-          "profile maintenance task needs a source (batch path)"))
-        if (m.columns.isEmpty) throw new IllegalArgumentException(
-          "profile needs columns=[<col>, ...]")
-        val key = batchKeyFor(src)
-        if (!legacyMarkerApplied(spark, m.path, src) &&
-            !graft.metrics.ProfileStore.batchApplied(spark, m.path, key))
-          graft.metrics.ProfileStore.appendAtomic(
-            spark.read.parquet(src), m.columns, m.path, key,
-            publish = m.publish)
-      case other => throw new IllegalArgumentException(
-        s"unknown maintenance type '$other' " +
-          "(compact/zorder/ivm/dedup-index/profile/dedup-index-compact/" +
-          "media-index-compact/ann-index-compact/profile-compact/" +
-          "ivm-prune/dedup-index-rebucket/media-index-rebucket/" +
-          "ann-index-rebucket)")
+      },
+      // fold a batch's per-column profile into the monoid profile store
+      // (one aggregate pass over the batch; the data is never re-scanned)
+      "profile" -> { m =>
+        val src = source(m, "batch path")
+        require(m.columns.nonEmpty, "profile needs columns=[<col>, ...]")
+        appendOnce(m.path, src)(ProfileStore.batchApplied) { (spark, key) =>
+          ProfileStore.appendAtomic(spark.read.parquet(src), m.columns,
+            m.path, key, publish = m.publish)
+        }
+      },
+      "profile-compact" -> (m => spark => ProfileStore.compact(spark, m.path))
+    ) ++ BucketedIndex.kinds.flatMap { case (kind, index) =>
+      Seq[(String, MaintenanceConfig => MaintenanceTask)](
+        // bucket-preserving small-file rewrite + band_sizes delta fold:
+        // every batch append adds ≥1 file per bucket, forever, without it
+        s"$kind-index-compact" -> (m => spark =>
+          index.compact(spark, m.path, m.targetFileBytes)),
+        // O(index) rewrite to `buckets` buckets from the stored rows
+        s"$kind-index-rebucket" -> { m =>
+          require(m.buckets > 0, s"$kind-index-rebucket needs buckets > 0")
+          spark => index.rebucket(spark, m.path, m.buckets)
+        })
     }
   }
 
-  /** Injective batch key for idempotent maintenance folds: sanitized
-    * source path + a hash of the RAW path (sanitizing alone can collide —
-    * `/a/b` vs `/a_b` — which would silently replace or skip a batch). */
-  private def batchKeyFor(src: String): String = {
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(src.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    s"${legacyBatchKeyFor(src)}-$sha"
+  /** Incremental view maintenance: fold the change batch at `source` into
+    * the state at `path` once, however often the pipeline reruns, and
+    * publish the folded view at `view_path`. */
+  private def ivmTask(m: MaintenanceConfig): MaintenanceTask = {
+    import graft.transform.Ivm
+    val src = source(m, "signed delta batch path")
+    require(m.keys.nonEmpty, "ivm maintenance task needs keys")
+    def needColumns(what: String) =
+      require(m.columns.nonEmpty, s"ivm agg=${m.agg} needs columns=[$what]")
+    val fold: DataFrame => DataFrame = m.agg match {
+      case "group" => Ivm.foldGroup(_, src, m.path, m.keys, m.sums)
+      case "min" =>
+        needColumns("<valueColumn>")
+        Ivm.foldMin(_, src, m.path, m.keys, m.columns.head, m.base, m.publish)
+      case "topk" =>
+        needColumns("<orderColumn>, <tiebreak>...")
+        Ivm.foldTopK(_, src, m.path, m.keys, m.columns, m.k, m.publish)
+      case other => throw new IllegalArgumentException(
+        s"unknown ivm agg '$other' (group/min/topk)")
+    }
+    spark => {
+      val view = fold(spark.read.parquet(src))
+      m.viewPath.foreach(v => view.write.mode("overwrite").parquet(v))
+    }
   }
 
-  /** The pre-r8 key format (sanitized path, no hash suffix) — still
-    * ACCEPTED when checking applied-ness so stores written before the
-    * injective-key change don't re-fold their batches; never written. */
-  private def legacyBatchKeyFor(src: String): String =
-    src.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Pre-r9 stores recorded appliedness as a SEPARATE `_applied/<key>`
-    * marker written after the append (not crash-atomic — the reason the
-    * protocol moved to appendAtomic's in-unit appliedness). Those markers
-    * stay honored on read, under both the sha-suffixed and the pre-r8
-    * unsuffixed key formats, so migrated stores never re-append. */
-  private def legacyMarkerApplied(spark: SparkSession, path: String,
-                                  src: String): Boolean = {
-    val applied = new org.apache.hadoop.fs.Path(path, "_applied")
-    val fs = applied.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(batchKeyFor(src), legacyBatchKeyFor(src)).exists(k =>
-      fs.exists(new org.apache.hadoop.fs.Path(applied, k)))
+  /** Append the batch at `src` to the keyed store at `path` unless it is
+    * already applied there, or by a pre-r9 marker. */
+  private def appendOnce(path: String, src: String)(
+      applied: (SparkSession, String, String) => Boolean)(
+      append: (SparkSession, String) => Unit): MaintenanceTask = spark => {
+    val key = Commit.batchKeyFor(src)
+    if (!Commit(spark, path).markerApplied(src) && !applied(spark, path, key))
+      append(spark, key)
   }
 
   def buildJob(j: JobConfig, registry: Option[SchemaRegistry],

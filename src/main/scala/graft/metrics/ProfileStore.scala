@@ -54,67 +54,29 @@ object ProfileStore {
   def append(df: DataFrame, columns: Seq[String], stateDir: String): Unit =
     profile(df, columns).write.mode("append").parquet(stateDir)
 
-  /** True iff [[appendAtomic]] fully published batch `batchKey` — the
-    * rename-published `batch-<key>` unit exists, or the pointer-mode
-    * `_commits/<key>` file does. */
+  /** True iff [[appendAtomic]] fully published batch `batchKey`. */
   def batchApplied(spark: SparkSession, stateDir: String,
-                   batchKey: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/batch-$batchKey")) ||
-      graft.core.AppendCommits.isCommitted(fs, root, batchKey)
-  }
+                   batchKey: String): Boolean =
+    graft.core.Commit(spark, stateDir).applied(batchKey)
 
-  /** CRASH-ATOMIC batch append. `publish = "rename"` (POSIX default):
-    * the batch's profile rows land as one `batch-<key>` directory moved
-    * into place with a single rename, so appliedness ([[batchApplied]])
-    * travels inside the published unit. `publish = "pointer"` (object
-    * stores without atomic rename): rows land under a deterministic
-    * `batch-p-<key>` directory a rerun overwrites in place, and ONE
-    * create-no-overwrite `_commits/<key>` file makes them visible —
-    * [[current]] never reads an uncommitted pointer unit (see
-    * [[graft.core.AppendCommits]]). Either way a crash leaves either
-    * nothing visible (the rerun re-profiles) or the whole batch (the
-    * rerun skips); no window duplicates a batch's rows in the fold. The
+  /** CRASH-ATOMIC batch append: the profile rows are one
+    * [[graft.core.Commit]] keyed unit (`publish` = "rename" or "pointer"),
+    * so no crash window duplicates a batch's rows in the fold. The
     * maintenance-task twin of [[append]]. */
   def appendAtomic(df: DataFrame, columns: Seq[String], stateDir: String,
                    batchKey: String, publish: String = "rename"): Unit = {
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    publish match {
-      case "rename" =>
-        val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/.tmp-$batchKey")
-        val dest = new org.apache.hadoop.fs.Path(s"$stateDir/batch-$batchKey")
-        fs.delete(tmp, true)
-        profile(df, columns).write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(dest, true) // stale partial unit from a crashed attempt
-        if (!fs.rename(tmp, dest)) throw new IllegalStateException(
-          s"atomic profile publish failed: $tmp -> $dest")
-      case "pointer" =>
-        val data = s"$stateDir/${graft.core.AppendCommits.PointerPrefix}$batchKey"
-        profile(df, columns).write.mode("overwrite").parquet(data)
-        graft.core.AppendCommits.commit(fs, root, batchKey)
-      case other => throw new IllegalArgumentException(
-        s"unknown profile publish mode '$other' (rename/pointer)")
-    }
+    val store = graft.core.Commit(df.sparkSession, stateDir)
+    store.putBatch("", batchKey, publish)(
+      profile(df, columns).write.mode("overwrite").parquet(_))
+    store.commitBatch(batchKey, publish)
   }
 
   /** Fold all stored batch profiles into the current table profile.
     * Monoid fold: one #batches×#columns-row aggregate — the data itself
-    * is never re-read. Published-unit enumeration covers every layout:
-    * [[append]]'s root files, [[appendAtomic]]'s rename-published
-    * `batch-<key>` units, and COMMITTED pointer units (an uncommitted or
-    * torn `batch-p-*` directory is never read). */
-  def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = graft.core.AppendCommits.readablePaths(fs, root,
-      graft.core.AppendCommits.committedKeys(fs, root)).map(_.toString)
-    if (paths.isEmpty) throw new IllegalStateException(
-      s"no published profile batches under $stateDir")
-    merge(spark.read.parquet(paths: _*))
-  }
+    * is never re-read. Reads every published unit: [[append]]'s root
+    * files and [[appendAtomic]]'s committed units, never a torn one. */
+  def current(spark: SparkSession, stateDir: String): DataFrame =
+    merge(spark.read.parquet(graft.core.Commit(spark, stateDir).published(): _*))
 
   /** Merge profile rows (from any number of batches) by column. min/max
     * compare in the recorded native type; integral sums add exactly. */
@@ -162,57 +124,30 @@ object ProfileStore {
   /** Fold the whole store to ONE on-disk snapshot — the maintenance op
     * the append-only layout needs (every [[append]]/[[appendAtomic]] adds
     * a file/unit per batch FOREVER; [[current]] folds at read time but
-    * the per-read listing/footer cost grows without bound — r11 verdict
-    * "missing" #3). The fold is exactly [[merge]] — every statistic is a
-    * commutative monoid, so fold(fold(rows)) == fold(rows) and the
-    * snapshot replaces the units it folded without changing any reader's
-    * answer.
+    * the per-read listing/footer cost grows without bound). The fold is
+    * exactly [[merge]] — every statistic is a commutative monoid, so
+    * fold(fold(rows)) == fold(rows) and the snapshot replaces the units
+    * it folded without changing any reader's answer.
     *
     * Crash safety: the snapshot (plus the preserved appliedness record)
     * is built in a sibling temp dir and published by the two-rename swap
     * ([[graft.lakehouse.Compaction.swapRewrite]]) — the pre-compaction
     * store survives any crash; a stale temp from a crashed attempt is
-    * overwritten, never adopted. APPLIEDNESS IS PRESERVED: every folded
-    * rename-unit key and pointer key is re-recorded as a `_commits/<key>`
-    * marker in the new layout (and legacy `_applied` markers are carried
-    * over), so [[batchApplied]] still reports every folded batch as
-    * applied and a maintenance replay can never re-append one. */
+    * overwritten, never adopted. APPLIEDNESS IS PRESERVED
+    * ([[graft.core.Commit.Store.carryAppliedTo]]), so [[batchApplied]] still
+    * reports every folded batch as applied and a maintenance replay can
+    * never re-append one. */
   def compact(spark: SparkSession, stateDir: String): StoreCompaction = {
-    import graft.core.AppendCommits
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = AppendCommits.committedKeys(fs, root)
-    def readableCount(): Int =
-      AppendCommits.readablePaths(fs, root,
-        AppendCommits.committedKeys(fs, root)).size
-    val before = readableCount()
-    // rename-published unit keys: their appliedness lives in the dir name
-    // and must survive the fold as a commit marker
-    val renameKeys = fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("batch-") &&
-        !n.startsWith(AppendCommits.PointerPrefix))
-      .map(_.stripPrefix("batch-"))
+    val store = graft.core.Commit(spark, stateDir)
+    val before = store.published().size
     // pin the fold BEFORE the swap moves the source files it reads
     // (#batches × #columns rows — tiny by construction)
     val folded = current(spark, stateDir).localCheckpoint(true)
-    val appliedSrc = new org.apache.hadoop.fs.Path(root, "_applied")
-    val hadApplied = fs.exists(appliedSrc)
     graft.lakehouse.Compaction.swapRewrite(spark, stateDir) { tmp =>
       // Overwrite clears any stale junk from a crashed earlier attempt
       folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val tmpRoot = new org.apache.hadoop.fs.Path(tmp)
-      (commits ++ renameKeys).foreach { k =>
-        if (!AppendCommits.isCommitted(fs, tmpRoot, k))
-          AppendCommits.commit(fs, tmpRoot, k)
-      }
-      if (hadApplied) {
-        org.apache.hadoop.fs.FileUtil.copy(fs, appliedSrc, fs,
-          new org.apache.hadoop.fs.Path(tmpRoot, "_applied"), false,
-          spark.sparkContext.hadoopConfiguration)
-        ()
-      }
+      store.carryAppliedTo(tmp)
     }
-    StoreCompaction(before, readableCount())
+    StoreCompaction(before, store.published().size)
   }
 }

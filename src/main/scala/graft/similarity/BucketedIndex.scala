@@ -389,16 +389,7 @@ object BucketedIndex {
   private val json = JsonMapper.builder()
     .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
 
-  /** Every index kind by its maintenance-task prefix. */
-  private lazy val kinds: Map[String, BucketedIndex] = Map(
+  /** Every index kind by its maintenance-task prefix (`<kind>-index-*`). */
+  lazy val kinds: Map[String, BucketedIndex] = Map(
     "dedup" -> DedupIndex, "media" -> MediaDedupIndex, "ann" -> AnnIndex)
-
-  /** Resolves a maintenance task type `<kind>-index-<op>` to its index. */
-  final class Task(op: String) {
-    def unapply(taskType: String): Option[BucketedIndex] =
-      if (!taskType.endsWith(s"-index-$op")) None
-      else kinds.get(taskType.stripSuffix(s"-index-$op"))
-  }
-  val Compact = new Task("compact")
-  val Rebucket = new Task("rebucket")
 }

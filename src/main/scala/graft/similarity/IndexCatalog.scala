@@ -341,8 +341,7 @@ private[similarity] object IndexCatalog {
                       json: String): Unit = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = manifestTmp(p)
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    graft.core.Commit.writeText(fs, tmp, json)
     fs.delete(p, false)
     if (!fs.rename(tmp, p)) throw new IllegalStateException(
       s"manifest publish failed: $tmp -> $p")
@@ -377,9 +376,7 @@ private[similarity] object IndexCatalog {
       fs.rename(tmp, p)
       ()
     }
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    graft.core.Commit.readText(fs, p)
   }
 }
 

@@ -3,6 +3,9 @@ package graft.transform
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
+import graft.plans.TopKPerKey
+
 /** Incremental maintenance of join-aggregate views via signed deltas
   * (z-sets): every change batch is a relation of rows tagged with a
   * multiplicity `_m` (+1 insert, -1 retraction), the view delta is the
@@ -79,6 +82,68 @@ object Ivm {
     * aggregate — the base data is never re-read. */
   def current(spark: SparkSession, stateDir: String, keys: Seq[String]): DataFrame =
     merge(spark.read.parquet(stateDir), keys)
+
+  /** Fold the change batch read from `src` into the state at `stateDir`,
+    * by `keys` summing `sums`, and return the view. Count and sum are
+    * invertible, so a replay is idempotent by overwriting its partition. */
+  def foldGroup(batch: DataFrame, src: String, stateDir: String,
+      keys: Seq[String], sums: Seq[String]): DataFrame = {
+    appendIdempotent(viewDelta(asZ(batch), keys, sums.map(c => c -> col(c))),
+      stateDir, Commit(batch.sparkSession, stateDir).partitionKey(src, BatchCol))
+    current(batch.sparkSession, stateDir, keys)
+  }
+
+  /** Fold the change batch read from `src` into the MIN state at
+    * `stateDir` and return the view (keys, min_v, n_rows): inserts fold
+    * monoidally, retractions repair from the post-delete `base` path. */
+  def foldMin(batch: DataFrame, src: String, stateDir: String,
+      keys: Seq[String], valueCol: String, base: Option[String],
+      publish: String): DataFrame =
+    foldSnapshot(batch, src, stateDir, publish) { (z, state) =>
+      val state0 = state.getOrElse(z.limit(0).groupBy(keys.map(col): _*)
+        .agg(min(col(valueCol)).as("min_v"),
+          count(lit(1)).cast("long").as("n_rows")))
+      val afterIns = minInsert(state0, z.filter(col(MultCol) > 0), keys, valueCol)
+      val rets = z.filter(col(MultCol) < 0)
+      if (rets.isEmpty) afterIns
+      else {
+        val basePath = base.getOrElse(throw new IllegalArgumentException(
+          "ivm agg=min with retractions needs base=<post-delete base table " +
+            "path> for the repair scan"))
+        minRetract(afterIns, rets, z.sparkSession.read.parquet(basePath),
+          keys, valueCol).drop("recomputed")
+      }
+    }
+
+  /** Fold the inserts of the change batch read from `src` into the per-key
+    * top-`k` leaderboard at `stateDir` (first of `orderCols` descending,
+    * tiebreaks ascending) and return it: a union-then-truncate monoid
+    * fold over the spilling [[TopKPerKey]] heap. */
+  def foldTopK(batch: DataFrame, src: String, stateDir: String,
+      keys: Seq[String], orderCols: Seq[String], k: Int,
+      publish: String): DataFrame =
+    foldSnapshot(batch, src, stateDir, publish) { (z, state) =>
+      val order = col(orderCols.head).desc +: orderCols.tail.map(c => col(c).asc)
+      val kcols = keys.map(col)
+      val top = TopKPerKey.topKPerKey(z.filter(col(MultCol) > 0).drop(MultCol),
+        kcols, order, k)
+      state.fold(top)(s => TopKPerKey.topKPerKey(s.unionByName(top), kcols, order, k))
+    }
+
+  /** The non-invertible folds: unless the batch from `src` is already
+    * folded, `fold` it (as a z-set) into the newest state and publish the
+    * next [[Commit]] generation; then read the current state. */
+  private def foldSnapshot(batch: DataFrame, src: String, stateDir: String,
+      publish: String)(fold: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+    val spark = batch.sparkSession
+    val store = Commit(spark, stateDir)
+    if (!store.folded(src)) {
+      val next = fold(asZ(batch), store.current.map(p => spark.read.parquet(p)))
+      store.publishState(src, publish)(next.write.mode("overwrite").parquet(_))
+    }
+    spark.read.parquet(store.current.getOrElse(throw new IllegalStateException(
+      s"no state under $stateDir after fold")))
+  }
 
   /** Lift an unsigned (plain) relation into the z-set view: every stored
     * row has multiplicity +1. */

@@ -168,6 +168,15 @@ class ConfigSpec extends SparkSpec {
     cc.jobs.head.maskPii shouldBe Some("redact")
   }
 
+  test("maintenance keep is read from HOCON, defaulting to 2") {
+    val cfg = HoconConfigLoader.toPipelineConfig(Hocon.parse(
+      """maintenance = [
+        |  {type = "ivm-prune", path = "/st", keep = 5},
+        |  {type = "ivm-prune", path = "/st2"}
+        |]""".stripMargin))
+    cfg.maintenance.map(_.keep) shouldBe Seq(5, 2)
+  }
+
   test("Hocon: deep substitution chains resolve; genuine cycles fail") {
     // a 30-deep legitimate chain (the old fixed depth cap of 16 would
     // misreport this as a cycle)

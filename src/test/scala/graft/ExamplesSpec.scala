@@ -388,6 +388,32 @@ class ExamplesSpec extends SparkSpec {
       .select("customer_id").as[Long].collect() shouldBe Array(2L)
   }
 
+  test("retention keeps null-time rows for DQ: a malformed line reaches " +
+       "quarantine, an expired row is still dropped") {
+    import graft.config._
+    val dir = "/tmp/graft-retention-dq"
+    rmrf(new java.io.File(dir))
+    Files.createDirectories(Paths.get(s"$dir/in"))
+    val today = java.time.LocalDate.now()
+    Files.writeString(Paths.get(s"$dir/in/data.json"),
+      s"""{"customer_id": 1, "email": "old@x.com", "full_name": "Old", "signup_date": "${today.minusDays(400)}", "country": "DE"}
+         |{"customer_id": 2, "email": "new@x.com", "full_name": "New", "signup_date": "${today.minusDays(1)}", "country": "US"}
+         |{"customer_id": 3, "email": "broken""".stripMargin)
+    val job = JobConfig(
+      domain = "payments", dataset = "customers", layer = "bronze",
+      source = SourceConfig("json", path = Some(s"$dir/in")),
+      target = TargetConfig("parquet", s"$dir/bronze", mode = "overwrite"),
+      dq = Some(DQConfig(policy = "quarantine",
+        quarantine = Some(s"$dir/quarantine"), metadataChecks = true)),
+      retentionColumn = Some("signup_date"))
+    IngestionRunner.buildJob(job, Some(new SchemaRegistry("examples/schemas"))).run(spark)
+    spark.read.parquet(s"$dir/bronze")
+      .select("customer_id").as[Long].collect() shouldBe Array(2L)
+    val quar = spark.read.parquet(s"$dir/quarantine").collect()
+    quar should have length 1
+    quar(0).getAs[String]("_corrupt_record") should include("broken")
+  }
+
   test("full governance pipeline: retention + mask + metadata DQ + watermark interact") {
     import graft.config._
     rmrf(new java.io.File("/tmp/graft-governed"))

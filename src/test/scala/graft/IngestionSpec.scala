@@ -98,6 +98,30 @@ class IngestionSpec extends SparkSpec {
     spark.read.parquet(out).count() shouldBe 4
   }
 
+  test("a bad maintenance task fails runPipeline before any job writes") {
+    import graft.config._
+    val root = tmpDir("graft-bad-maint")
+    writeSource(s"$root/src")
+    val out = s"$root/out"
+    def pipeline(m: MaintenanceConfig) = PipelineConfig(env = "test",
+      jobs = Seq(JobConfig(domain = "payments", dataset = "tx",
+        layer = "bronze", validateSchema = false,
+        source = SourceConfig("parquet", path = Some(s"$root/src")),
+        target = TargetConfig("parquet", out, mode = "overwrite"))),
+      maintenance = Seq(m))
+    for (m <- Seq(
+        MaintenanceConfig(`type` = "nope", path = s"$root/st"),
+        MaintenanceConfig(`type` = "profile", path = s"$root/prof",
+          source = Some(out), columns = Seq("id"), publish = "nope"),
+        MaintenanceConfig(`type` = "ivm", path = s"$root/view-state",
+          keys = Seq("currency"), sums = Seq("amount"))))
+      withClue(s"${m.`type`}/${m.publish}: ") {
+        an[IllegalArgumentException] should be thrownBy
+          IngestionRunner.runPipeline(spark, pipeline(m))
+        new java.io.File(out).exists() shouldBe false
+      }
+  }
+
   test("watermark advances after a successful batch write (incremental loop)") {
     val src = tmpDir("wm") + "/src"
     val out = tmpDir("wm") + "/out"
@@ -615,43 +639,54 @@ class IngestionSpec extends SparkSpec {
        "keeps the newest `keep`, and replays of pruned batches still skip " +
        "via the preserved _applied markers") {
     import org.apache.spark.sql.functions._
-    val root = tmpDir("graft-ivm-prune")
-    val srcs = (1 to 4).map { i =>
-      val p = s"$root/b$i"
-      Seq((s"k$i", i.toLong * 10)).toDF("k", "v")
-        .write.mode("overwrite").parquet(p)
-      p
+    for (publish <- Seq("rename", "pointer")) withClue(s"publish=$publish: ") {
+      val root = tmpDir(s"graft-ivm-prune-$publish")
+      val srcs = (1 to 4).map { i =>
+        val p = s"$root/b$i"
+        Seq((s"k$i", i.toLong * 10)).toDF("k", "v")
+          .write.mode("overwrite").parquet(p)
+        p
+      }
+      def cfg(src: String) = graft.config.MaintenanceConfig(
+        `type` = "ivm", path = s"$root/st", source = Some(src),
+        keys = Seq("k"), columns = Seq("v"), agg = "min",
+        viewPath = Some(s"$root/view"), publish = publish)
+      srcs.foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
+      // a generation's dir: state-<n>, or state-p-<n>-<keyhash> (compared
+      // up to the key hash) under pointer publish
+      def gen(n: Int) =
+        if (publish == "rename") f"state-$n%06d" else f"state-p-$n%06d-"
+      def stateDirs() = new java.io.File(s"$root/st").listFiles()
+        .filter(_.getName.startsWith("state-")).map(_.getName).sorted.toSeq
+        .map(_.take(gen(0).length))
+      def commits() = Option(new java.io.File(s"$root/st/_commits").list())
+        .map(_.filterNot(_.startsWith(".")).sorted.toSeq).getOrElse(Seq.empty)
+      stateDirs() shouldBe (1 to 4).map(gen)
+      def view() = spark.read.parquet(s"$root/view").collect()
+        .map(r => r.getAs[String]("k") -> r.getAs[Number]("min_v").longValue())
+        .toMap
+      val full = view()
+      full.keySet shouldBe Set("k1", "k2", "k3", "k4")
+      IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+        `type` = "ivm-prune", path = s"$root/st", keep = 2))
+      stateDirs() shouldBe Seq(gen(3), gen(4))
+      // the retired generations' commit pointers went with them
+      if (publish == "pointer") commits() shouldBe Seq("000003", "000004")
+      // pruned generations left _applied markers behind (ignore the local
+      // filesystem's .crc sidecars)
+      new java.io.File(s"$root/st/_applied").list()
+        .count(!_.startsWith(".")) shouldBe 2
+      // replaying a PRUNED batch is a no-op: no new generation, view intact
+      rmrfDir(new java.io.File(s"$root/view"))
+      IngestionRunner.runMaintenance(spark, cfg(srcs.head))
+      stateDirs() shouldBe Seq(gen(3), gen(4))
+      view() shouldBe full
+      // a genuinely new batch still folds on top of the surviving state
+      val src5 = s"$root/b5"
+      Seq(("k5", 50L)).toDF("k", "v").write.parquet(src5)
+      IngestionRunner.runMaintenance(spark, cfg(src5))
+      view().keySet shouldBe Set("k1", "k2", "k3", "k4", "k5")
     }
-    def cfg(src: String) = graft.config.MaintenanceConfig(
-      `type` = "ivm", path = s"$root/st", source = Some(src),
-      keys = Seq("k"), columns = Seq("v"), agg = "min",
-      viewPath = Some(s"$root/view"))
-    srcs.foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
-    def stateDirs() = new java.io.File(s"$root/st").listFiles()
-      .filter(_.getName.startsWith("state-")).map(_.getName).sorted.toSeq
-    stateDirs() shouldBe (1 to 4).map(n => f"state-$n%06d")
-    def view() = spark.read.parquet(s"$root/view").collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[Number]("min_v").longValue())
-      .toMap
-    val full = view()
-    full.keySet shouldBe Set("k1", "k2", "k3", "k4")
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "ivm-prune", path = s"$root/st", keep = 2))
-    stateDirs() shouldBe Seq("state-000003", "state-000004")
-    // pruned generations left _applied markers behind (ignore the local
-    // filesystem's .crc sidecars)
-    new java.io.File(s"$root/st/_applied").list()
-      .count(!_.startsWith(".")) shouldBe 2
-    // replaying a PRUNED batch is a no-op: no new generation, view intact
-    rmrfDir(new java.io.File(s"$root/view"))
-    IngestionRunner.runMaintenance(spark, cfg(srcs.head))
-    stateDirs() shouldBe Seq("state-000003", "state-000004")
-    view() shouldBe full
-    // a genuinely new batch still folds on top of the surviving state
-    val src5 = s"$root/b5"
-    Seq(("k5", 50L)).toDF("k", "v").write.parquet(src5)
-    IngestionRunner.runMaintenance(spark, cfg(src5))
-    view().keySet shouldBe Set("k1", "k2", "k3", "k4", "k5")
   }
 
   test("maintenance: profile-compact folds the store through pipeline " +

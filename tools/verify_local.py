@@ -61,6 +61,19 @@ def cell_eq(a, b):
                 cell_eq(x, y) for x, y in zip(a, b))
     return a == b
 
+def memory_limit():
+    return con.sql("SELECT current_setting('memory_limit')").fetchone()[0]
+
+def mem_total():
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return " ".join(line.split()[1:])
+    except OSError:
+        pass
+    return "unknown"
+
 fail = 0
 run_dirs = sorted(d.split("/")[-1] for d in glob.glob(f"{out_dir}/*") if not d.endswith(".json"))
 for name in run_dirs:
@@ -81,6 +94,13 @@ for name in run_dirs:
         continue
     try:
         exp = canon(con.sql(oracles[name]).df())
+    except duckdb.OutOfMemoryException:
+        # the oracle needs more memory than this box gives DuckDB: an
+        # environment limit, not a result mismatch — still a failure
+        print(f"FAIL {name}: oracle out of memory (environment; "
+              f"DuckDB memory_limit={memory_limit()}, MemTotal={mem_total()})")
+        fail += 1
+        continue
     except Exception as e:
         print(f"FAIL {name}: oracle error: {e}")
         fail += 1
