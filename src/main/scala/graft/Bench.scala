@@ -3,11 +3,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 import scala.util.{Failure, Success, Try}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 object Bench {
-  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
-  /** A JSON string literal (quoted and escaped) for the record. */
-  private def jsonString(s: String): String = json.writeValueAsString(s)
+  private val json = new ObjectMapper()
+  /** A record number: NaN (an unavailable load average) is written null. */
+  private def num(d: Double): java.lang.Double =
+    if (d.isNaN) null else java.lang.Double.valueOf(d)
 
   /** Accumulates per-task shuffle read/write and spill bytes across the
     * whole app; per-query numbers are deltas between snapshots. Wall-time
@@ -220,15 +223,16 @@ object Bench {
           case other => other
         }
       }
-    def jd(d: Double): String = if (d.isNaN) "null" else d.toString
-    val qs = results.map {
+    val qs = json.createObjectNode()
+    results.foreach {
       case (k, Right(r)) =>
-        val rq = r.tRequiet.map(t =>
-          s""","t_requiet":$t,"load_requiet":${jd(r.loadRequiet.get)}""")
-          .getOrElse("")
-        s"""\"$k\":{"t":${r.med},"min":${r.mn},"max":${r.mx},"n_runs":${r.n},"load_1m":${jd(r.load1m)}$rq,"shuffle_read":${r.bytes(0)},"shuffle_write":${r.bytes(1)},"spill_mem":${r.bytes(2)},"spill_disk":${r.bytes(3)}}"""
-      case (k, Left(e)) => s"\"$k\":{\"error\":${jsonString(e)}}"
-    }.mkString("{", ",", "}")
+        val q = qs.putObject(k).put("t", r.med).put("min", r.mn).put("max", r.mx)
+          .put("n_runs", r.n).put("load_1m", num(r.load1m))
+        r.tRequiet.foreach(t => q.put("t_requiet", t).put("load_requiet", num(r.loadRequiet.get)))
+        q.put("shuffle_read", r.bytes(0)).put("shuffle_write", r.bytes(1))
+          .put("spill_mem", r.bytes(2)).put("spill_disk", r.bytes(3))
+      case (k, Left(e)) => qs.putObject(k).put("error", e)
+    }
     val errors = results.collect { case (k, Left(e)) => k -> e }
     val total = results.collect { case (_, Right(r)) => r.med }.sum
     // the headline with every loaded query's timing replaced by its
@@ -239,7 +243,6 @@ object Bench {
       .foldLeft(Seq(0L, 0L, 0L, 0L))((a, b) => a.zip(b).map(p => p._1 + p._2))
     val loadAfter = loadAvg1m()
     val loadPeak = java.lang.Double.longBitsToDouble(loadMax.get())
-    def jn(d: Double): String = if (d.isNaN) "null" else d.toString
     // contaminated = the guard gave up waiting AND the run still started
     // (or ran) above the gate — wall-clock numbers in this record are
     // suspect; byte counters remain trustworthy
@@ -252,8 +255,19 @@ object Bench {
     // wall sum stays in the record as value_wall, so nothing is hidden;
     // on a quiet box the three numbers coincide.
     val headline = if (contaminated) totalRequiet else total
-    val loadJson = s""""load_1m_before":${jn(loadBefore)},"load_1m_after":${jn(loadAfter)},"load_1m_max":${jn(loadPeak)},"load_gate":${jn(loadGate)},"preflight_wait_s":$preflightWaitS,"contaminated":$contaminated,"n_requiet":${flagged.size},"value_wall":$total,"value_requiet":$totalRequiet"""
-    val full = s"""{"metric":"total","value":$headline,"unit":"sec","timing":"median_of_3","queries":$qs,"shuffle_read_total":${totalBytes(0)},"shuffle_write_total":${totalBytes(1)},"spill_mem_total":${totalBytes(2)},"spill_disk_total":${totalBytes(3)},"n_errors":${errors.size},$loadJson,"sf":${jsonString(sfDir)}}"""
+    def record(queries: JsonNode) = json.createObjectNode().put("metric", "total")
+      .put("value", headline).put("unit", "sec").put("timing", "median_of_3")
+      .set[ObjectNode]("queries", queries)
+    def withLoad(o: ObjectNode) =
+      o.put("load_1m_before", num(loadBefore)).put("load_1m_after", num(loadAfter))
+        .put("load_1m_max", num(loadPeak)).put("load_gate", num(loadGate))
+        .put("preflight_wait_s", preflightWaitS).put("contaminated", contaminated)
+        .put("n_requiet", flagged.size).put("value_wall", total)
+        .put("value_requiet", totalRequiet).put("sf", sfDir)
+    val full = json.writeValueAsString(withLoad(record(qs)
+      .put("shuffle_read_total", totalBytes(0)).put("shuffle_write_total", totalBytes(1))
+      .put("spill_mem_total", totalBytes(2)).put("spill_disk_total", totalBytes(3))
+      .put("n_errors", errors.size)))
     // The full per-query JSON (381 queries) overflows what the driver's
     // stdout capture retains (r5 recorded "parsed": null with only the tail
     // ~80 timings) — so the complete record goes to a FILE artifact, and
@@ -264,12 +278,16 @@ object Bench {
     val artifact = java.nio.file.Paths.get("target/bench_full.json")
     java.nio.file.Files.createDirectories(artifact.getParent)
     java.nio.file.Files.writeString(artifact, full + "\n")
-    val slowest = results.collect { case (k, Right(r)) => k -> r.med }
-      .sortBy(-_._2).take(25)
-      .map { case (k, t) => s"\"$k\":$t" }.mkString("{", ",", "}")
-    val errJson = errors.take(10)
-      .map { case (k, e) => s"\"$k\":${jsonString(e)}" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$headline,"unit":"sec","timing":"median_of_3","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"errors":$errJson,"shuffle_write_total":${totalBytes(1)},"spill_disk_total":${totalBytes(3)},$loadJson,"sf":${jsonString(sfDir)},"full_json":"target/bench_full.json"}""")
+    val slowest = json.createObjectNode()
+    results.collect { case (k, Right(r)) => k -> r.med }.sortBy(-_._2).take(25)
+      .foreach { case (k, t) => slowest.put(k, t) }
+    val errJson = json.createObjectNode()
+    errors.take(10).foreach { case (k, e) => errJson.put(k, e) }
+    println(json.writeValueAsString(withLoad(record(slowest)
+      .put("n_queries", results.size).put("n_errors", errors.size)
+      .set[ObjectNode]("errors", errJson)
+      .put("shuffle_write_total", totalBytes(1)).put("spill_disk_total", totalBytes(3)))
+      .put("full_json", "target/bench_full.json")))
     spark.stop()
     if (errors.nonEmpty) {
       errors.foreach { case (k, e) => System.err.println(s"[bench] FAILED $k: $e") }

@@ -2,7 +2,12 @@ package graft.config
 
 import java.nio.file.{Files, Paths}
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.annotation.JsonProperty
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.node.{ObjectNode, TextNode}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 import graft.dq._
@@ -10,12 +15,16 @@ import graft.schema.SchemaRegistry
 
 /** Pipeline configuration: env + ordered jobs (reference
   * `/root/reference/src/main/scala/com/lakehouse/ingestion/config/
-  * ConfigModels.scala:41-57`). Two on-disk formats, one model: JSON (parses
-  * with the Jackson already on Spark's classpath) and the reference's HOCON
-  * `.conf` shape via [[Hocon]] + [[HoconConfigLoader]] (reference
-  * `config/ConfigLoader.scala:35`).
+  * ConfigModels.scala:41-57`). Two on-disk formats, one binding: JSON and
+  * the reference's HOCON `.conf` shape both bind through
+  * [[ConfigLoader]]'s Jackson mapper, HOCON after [[Hocon]] parses it and
+  * [[HoconConfigLoader]] rewrites the reference's spellings (reference
+  * `config/ConfigLoader.scala:35`). Each field, whether it is required,
+  * and its default are declared once, on these case classes. Numeric
+  * `Option`s name their content type: erasure would otherwise let Jackson
+  * box a JSON `5` as an Integer inside `Option[Long]`.
   */
-final case class PipelineConfig(env: String,
+final case class PipelineConfig(env: String = "dev",
                                 schemaRegistry: Option[String] = None,
                                 // durable high-water-mark file for
                                 // incremental sources (io.WatermarkStore)
@@ -42,9 +51,10 @@ final case class PipelineConfig(env: String,
   * "<kind>-index-compact" or "<kind>-index-rebucket" (O(index) rewrite to
   * `buckets` when the corpus outgrows the build-time layout) for kind
   * dedup, media or ann. Stateful stores commit through
-  * [[graft.core.Commit]] (`publish` = "rename" or "pointer"). Every field,
-  * `keep` included, is read from both JSON and HOCON. */
-final case class MaintenanceConfig(`type`: String, path: String,
+  * [[graft.core.Commit]] (`publish` = "rename" or "pointer"). `agg` and
+  * `publish` match in any case. */
+final case class MaintenanceConfig(@JsonProperty(required = true) `type`: String,
+                                   @JsonProperty(required = true) path: String,
                                    columns: Seq[String] = Seq.empty,
                                    targetFileMb: Int = 128,
                                    partitioned: Boolean = false,
@@ -74,7 +84,8 @@ final case class MaintenanceConfig(`type`: String, path: String,
   * `spark.sql.catalog.<name>.<key>` conf. Catalog plugins resolve
   * LAZILY through the session's CatalogManager, so registering conf at
   * runtime (before first use) is exactly as good as submit-time conf. */
-final case class CatalogConfig(name: String, `type`: String,
+final case class CatalogConfig(@JsonProperty(required = true) name: String,
+                               @JsonProperty(required = true) `type`: String,
                                options: Map[String, String] = Map.empty) {
 
   /** The reference's two deployed catalog plugins get shorthands; any
@@ -93,8 +104,12 @@ final case class CatalogConfig(name: String, `type`: String,
     sessionConf.foreach { case (k, v) => spark.conf.set(k, v) }
 }
 
-final case class JobConfig(domain: String, dataset: String, layer: String,
-                           source: SourceConfig, target: TargetConfig,
+final case class JobConfig(@JsonProperty(required = true) domain: String,
+                           @JsonProperty(required = true) dataset: String,
+                           layer: String = "bronze",
+                           @JsonProperty(required = true) source: SourceConfig,
+                           @JsonProperty(required = true) target: TargetConfig,
+                           @JsonDeserialize(contentAs = classOf[java.lang.Integer])
                            schemaVersion: Option[Int] = None,
                            validateSchema: Boolean = true,
                            // registry ref override when it differs from
@@ -112,7 +127,7 @@ final case class JobConfig(domain: String, dataset: String, layer: String,
   def registryDataset: String = schemaDataset.getOrElse(dataset)
 }
 
-final case class SourceConfig(`type`: String,
+final case class SourceConfig(@JsonProperty(required = true) `type`: String,
                               path: Option[String] = None,
                               topic: Option[String] = None,
                               bootstrapServers: Option[String] = None,
@@ -122,14 +137,18 @@ final case class SourceConfig(`type`: String,
                               // JDBC partitioned/incremental read controls
                               // (reference docs/07-developer-guide.md:665-671)
                               partitionColumn: Option[String] = None,
+                              @JsonDeserialize(contentAs = classOf[java.lang.Long])
                               lowerBound: Option[Long] = None,
+                              @JsonDeserialize(contentAs = classOf[java.lang.Long])
                               upperBound: Option[Long] = None,
+                              @JsonDeserialize(contentAs = classOf[java.lang.Integer])
                               numPartitions: Option[Int] = None,
                               watermarkColumn: Option[String] = None,
                               watermarkValue: Option[String] = None,
                               options: Map[String, String] = Map.empty)
 
-final case class TargetConfig(format: String, identifier: String,
+final case class TargetConfig(@JsonProperty(required = true) format: String,
+                              @JsonProperty(required = true) identifier: String,
                               partitions: Seq[String] = Seq.empty,
                               mode: String = "append",
                               checkpoint: Option[String] = None,
@@ -158,13 +177,16 @@ final case class DQConfig(policy: String = "log_only",
 /** One check definition; `type` selects the [[graft.dq.DQCheck]] subclass —
   * this wiring is what the reference hardcoded to `None`
   * (`core/IngestionRunner.scala:118-119`), leaving its DQ dead. */
-final case class CheckConfig(`type`: String,
+final case class CheckConfig(@JsonProperty(required = true) `type`: String,
                              column: Option[String] = None,
                              columns: Seq[String] = Seq.empty,
+                             @JsonDeserialize(contentAs = classOf[java.lang.Double])
                              min: Option[Double] = None,
+                             @JsonDeserialize(contentAs = classOf[java.lang.Double])
                              max: Option[Double] = None,
                              pattern: Option[String] = None,
                              allowed: Seq[String] = Seq.empty,
+                             @JsonDeserialize(contentAs = classOf[java.lang.Long])
                              minRows: Option[Long] = None,
                              name: Option[String] = None,
                              sql: Option[String] = None,
@@ -175,23 +197,16 @@ final case class CheckConfig(`type`: String,
     o.getOrElse(throw new IllegalArgumentException(
       s"check '${`type`}' needs $what"))
 
-  // Jackson + erasure can leave a boxed Integer inside Option[Double]
-  // (e.g. `"min": 0`); normalize through Number without unboxing.
-  private def asDouble(o: Option[Double]): Option[Double] =
-    o.asInstanceOf[Option[Number]].map(_.doubleValue)
-  private def asLong(o: Option[Long]): Option[Long] =
-    o.asInstanceOf[Option[Number]].map(_.longValue)
-
   def toCheck: DQCheck = `type`.toLowerCase match {
     case "not_null"       => NotNullCheck(req(column, "column"))
-    case "range"          => RangeCheck(req(column, "column"), asDouble(min), asDouble(max))
+    case "range"          => RangeCheck(req(column, "column"), min, max)
     case "regex"          => RegexCheck(req(column, "column"), req(pattern, "pattern"))
     case "allowed_values" => AllowedValuesCheck(req(column, "column"), allowed)
     case "unique_key"     => UniqueKeyCheck(if (columns.nonEmpty) columns else Seq(req(column, "column or columns")), exact)
-    case "row_count_min"  => RowCountCheck(req(asLong(minRows), "minRows"))
+    case "row_count_min"  => RowCountCheck(req(minRows, "minRows"))
     case "predicate"      => PredicateCheck(req(name, "name"), req(sql, "sql"))
     case "media_decodable" => MediaDecodableCheck(req(column, "column"),
-      req(typeColumn, "typeColumn"), asDouble(min).getOrElse(1.0))
+      req(typeColumn, "typeColumn"), min.getOrElse(1.0))
     case other => throw new IllegalArgumentException(s"unknown check type '$other'")
   }
 }
@@ -201,7 +216,8 @@ final case class CheckConfig(`type`: String,
   * `config/ConfigLoader.scala:69-100`). */
 object ConfigLoader {
 
-  private val mapper: ObjectMapper = {
+  /** The one binding of both formats. */
+  private[config] val mapper: ObjectMapper = {
     val m = new ObjectMapper()
     m.registerModule(DefaultScalaModule)
     m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, true)
@@ -213,6 +229,14 @@ object ConfigLoader {
 
   def parse(json: String): PipelineConfig =
     mapper.readValue(json, classOf[PipelineConfig])
+
+  /** Binds a rewritten HOCON tree. Unknown keys are ignored there, as
+    * reference configs carry keys the model has no field for
+    * (`data_quality.ruleset`); JSON stays strict. */
+  private[config] def bindHocon(tree: JsonNode): PipelineConfig =
+    mapper.readerFor(classOf[PipelineConfig])
+      .without(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+      .readValue[PipelineConfig](tree)
 
   /** Load a pipeline config — `.conf` parses as HOCON (the reference's
     * format), anything else as JSON. `schemaBasePath` mirrors the
@@ -241,164 +265,108 @@ object ConfigLoader {
   }
 }
 
-/** Maps a parsed [[Hocon]] tree to [[PipelineConfig]]. Accepts BOTH this
-  * engine's field names (`target.format`/`identifier`, `dq.policy`, ...)
-  * and the reference's `.conf` shape (`target.lakehouse_format`/`table`,
+/** Rewrites a parsed [[Hocon]] tree to the JSON shape and binds it through
+  * [[ConfigLoader]]. Accepts BOTH this engine's field names and the
+  * reference's `.conf` shape (`target.lakehouse_format`/`table`,
   * `schema.registry_domain`, `data_quality.on_fail`, source options with
   * dotted keys — `config/ConfigLoader.scala:104-166`), so every shipped
-  * reference config loads unchanged.
+  * reference config loads unchanged. When both spellings are present, the
+  * camelCase one wins.
   */
 object HoconConfigLoader {
   import Hocon.Obj
 
-  private def fail(msg: String): Nothing =
-    throw ConfigLoader.ConfigValidationException(msg)
+  /** Reference spelling -> model field, per block. */
+  private val aliases: Map[String, Seq[(String, String)]] = Map(
+    "root" -> Seq("schema_registry" -> "schemaRegistry",
+      "watermark_store" -> "watermarkStore"),
+    "catalog" -> Seq("impl" -> "type"),
+    "job" -> Seq("data_quality" -> "dq", "mask_pii" -> "maskPii",
+      "retention_column" -> "retentionColumn"),
+    "target" -> Seq("lakehouse_format" -> "format", "table" -> "identifier"),
+    "dq" -> Seq("warn_only" -> "warnOnly", "metadata_checks" -> "metadataChecks"),
+    "check" -> Seq("type_column" -> "typeColumn"),
+    "maintenance" -> Seq("target_file_mb" -> "targetFileMb",
+      "min_files" -> "minFiles", "view_path" -> "viewPath"))
 
-  private def str(o: Obj, k: String): Option[String] =
-    o.get(k).filter(_ != null).map(Hocon.render)
-  private def obj(o: Obj, k: String): Option[Obj] =
-    o.get(k).collect { case m: Obj => m }
-  private def arr(o: Obj, k: String): Seq[Any] =
-    o.get(k).collect { case l: List[_] => l }.getOrElse(Nil)
-  private def bool(o: Obj, k: String): Option[Boolean] =
-    o.get(k).map {
-      case b: Boolean => b
-      case s => Hocon.render(s).toBoolean
+  /** Source fields the reference spells as `source.options` keys (the
+    * first present key wins). */
+  private val sourceOptions = Seq("path" -> "path", "topic" -> "subscribe",
+    "bootstrapServers" -> "bootstrap.servers",
+    "bootstrapServers" -> "kafka.bootstrap.servers", "url" -> "url",
+    "table" -> "dbtable", "streaming" -> "streaming",
+    "partitionColumn" -> "partitionColumn", "lowerBound" -> "lowerBound",
+    "upperBound" -> "upperBound", "numPartitions" -> "numPartitions",
+    "watermarkColumn" -> "watermarkColumn", "watermarkValue" -> "watermarkValue")
+
+  def toPipelineConfig(root: Obj, defaultRegistry: Option[String] = None): PipelineConfig = {
+    val tree = ConfigLoader.mapper.valueToTree[ObjectNode](root)
+    rename(tree, "root")
+    defaultRegistry.foreach(r =>
+      if (!tree.hasNonNull("schemaRegistry")) tree.put("schemaRegistry", r))
+    obj(tree, "catalog").foreach { c =>
+      tree.remove("catalog")
+      tree.withArrayProperty("catalogs").insert(0, c)
     }
-  private def num(o: Obj, k: String): Option[Number] =
-    o.get(k).collect {
-      case n: Number => n
-      case s: String => java.lang.Double.parseDouble(s): java.lang.Double
-    }
-
-  /** Leaf values of a (possibly nested) object as dotted-path strings —
-    * how the reference reads `source.options` (`entrySet`, `:110-115`). */
-  private def flatten(o: Obj, prefix: String = ""): Map[String, String] =
-    o.iterator.flatMap { case (k, v) =>
-      val key = if (prefix.isEmpty) k else s"$prefix.$k"
-      v match {
-        case child: Obj => flatten(child, key)
-        case leaf       => Map(key -> Hocon.render(leaf))
-      }
-    }.toMap
-
-  def toPipelineConfig(root: Obj, defaultRegistry: Option[String] = None): PipelineConfig =
-    PipelineConfig(
-      env = str(root, "env").getOrElse("dev"),
-      schemaRegistry = str(root, "schemaRegistry")
-        .orElse(str(root, "schema_registry")).orElse(defaultRegistry),
-      watermarkStore = str(root, "watermarkStore")
-        .orElse(str(root, "watermark_store")),
-      catalogs = obj(root, "catalog").map(toCatalog).toSeq ++
-        arr(root, "catalogs").collect { case c: Obj => toCatalog(c) },
-      jobs = arr(root, "jobs").collect { case j: Obj => toJob(j) },
-      maintenance = arr(root, "maintenance").collect {
-        case m: Obj => toMaintenance(m) })
-
-  private def toCatalog(c: Obj): CatalogConfig = CatalogConfig(
-    name = str(c, "name").getOrElse(fail("catalog needs a name")),
-    `type` = str(c, "type").orElse(str(c, "impl"))
-      .getOrElse(fail("catalog needs a type (iceberg/delta or a plugin class)")),
-    options = obj(c, "options").map(flatten(_)).getOrElse(Map.empty))
-
-  private def toJob(j: Obj): JobConfig = {
-    val source = obj(j, "source").getOrElse(fail("job needs a source block"))
-    val target = obj(j, "target").getOrElse(fail("job needs a target block"))
-    val schemaBlock = obj(j, "schema")
-    val opts = obj(source, "options").map(flatten(_)).getOrElse(Map.empty)
-    val sc = SourceConfig(
-      `type` = str(source, "type").getOrElse(fail("source needs a type")),
-      path = str(source, "path").orElse(opts.get("path")),
-      topic = str(source, "topic").orElse(opts.get("subscribe")),
-      bootstrapServers = str(source, "bootstrapServers")
-        .orElse(opts.get("bootstrap.servers")).orElse(opts.get("kafka.bootstrap.servers")),
-      url = str(source, "url").orElse(opts.get("url")),
-      table = str(source, "table").orElse(opts.get("dbtable")),
-      streaming = bool(source, "streaming")
-        .orElse(opts.get("streaming").map(_.toBoolean)).getOrElse(false),
-      partitionColumn = str(source, "partitionColumn").orElse(opts.get("partitionColumn")),
-      lowerBound = num(source, "lowerBound").map(_.longValue)
-        .orElse(opts.get("lowerBound").map(_.toLong)),
-      upperBound = num(source, "upperBound").map(_.longValue)
-        .orElse(opts.get("upperBound").map(_.toLong)),
-      numPartitions = num(source, "numPartitions").map(_.intValue)
-        .orElse(opts.get("numPartitions").map(_.toInt)),
-      watermarkColumn = str(source, "watermarkColumn").orElse(opts.get("watermarkColumn")),
-      watermarkValue = str(source, "watermarkValue").orElse(opts.get("watermarkValue")),
-      options = opts)
-    val tc = TargetConfig(
-      format = str(target, "format").orElse(str(target, "lakehouse_format"))
-        .getOrElse(fail("target needs format/lakehouse_format")),
-      identifier = str(target, "identifier").orElse(str(target, "table"))
-        .getOrElse(fail("target needs identifier/table")),
-      partitions = arr(target, "partitions").map(Hocon.render),
-      mode = str(target, "mode").getOrElse("append"),
-      checkpoint = str(target, "checkpoint"),
-      triggerInterval = str(target, "triggerInterval").getOrElse("30 seconds"),
-      catalog = str(target, "catalog"))
-    JobConfig(
-      domain = str(j, "domain").getOrElse(fail("job needs a domain")),
-      dataset = str(j, "dataset").getOrElse(fail("job needs a dataset")),
-      layer = str(j, "layer").orElse(str(target, "layer")).getOrElse("bronze"),
-      source = sc, target = tc,
-      schemaVersion = num(j, "schemaVersion").map(_.intValue)
-        .orElse(schemaBlock.flatMap(str(_, "version")).map(parseVersion)),
-      validateSchema = bool(j, "validateSchema").getOrElse(true),
-      schemaDomain = schemaBlock.flatMap(str(_, "registry_domain")),
-      schemaDataset = schemaBlock.flatMap(str(_, "registry_dataset")),
-      dq = obj(j, "dq").orElse(obj(j, "data_quality")).map(toDq),
-      maskPii = str(j, "maskPii").orElse(str(j, "mask_pii")),
-      retentionColumn = str(j, "retentionColumn").orElse(str(j, "retention_column")))
+    objects(tree, "catalogs").foreach { c => rename(c, "catalog"); flattenOptions(c) }
+    objects(tree, "jobs").foreach(rewriteJob)
+    objects(tree, "maintenance").foreach(rename(_, "maintenance"))
+    ConfigLoader.bindHocon(tree)
   }
 
-  /** "v1" / "1" -> 1 (reference versions are "v<N>" strings). */
-  private def parseVersion(v: String): Int =
-    v.stripPrefix("v").toInt
+  private def rewriteJob(j: ObjectNode): Unit = {
+    rename(j, "job")
+    obj(j, "target").foreach { t => rename(t, "target"); move(t, "layer", j, "layer") }
+    obj(j, "schema").foreach { s =>
+      j.remove("schema")
+      // reference versions are "v<N>" strings
+      move(s, "version", j, "schemaVersion", v => TextNode.valueOf(v.asText.stripPrefix("v")))
+      move(s, "registry_domain", j, "schemaDomain")
+      move(s, "registry_dataset", j, "schemaDataset")
+    }
+    obj(j, "source").foreach { s =>
+      val opts = flattenOptions(s)
+      sourceOptions.foreach { case (field, key) =>
+        opts.get(key).foreach(v => if (!s.hasNonNull(field)) s.put(field, v))
+      }
+    }
+    obj(j, "dq").foreach { d =>
+      rename(d, "dq")
+      // the reference's policy names are upper case (LOG_ONLY, ...)
+      move(d, "on_fail", d, "policy", v => TextNode.valueOf(v.asText.toLowerCase))
+      objects(d, "checks").foreach(rename(_, "check"))
+    }
+  }
 
-  private def toMaintenance(m: Obj): MaintenanceConfig = MaintenanceConfig(
-    `type` = str(m, "type").getOrElse(fail("maintenance task needs a type")),
-    path = str(m, "path").getOrElse(fail("maintenance task needs a path")),
-    columns = arr(m, "columns").map(Hocon.render),
-    targetFileMb = num(m, "targetFileMb").orElse(num(m, "target_file_mb"))
-      .map(_.intValue).getOrElse(128),
-    partitioned = bool(m, "partitioned").getOrElse(false),
-    minFiles = num(m, "minFiles").orElse(num(m, "min_files"))
-      .map(_.intValue).getOrElse(2),
-    bits = num(m, "bits").map(_.intValue).getOrElse(8),
-    source = str(m, "source"),
-    keys = arr(m, "keys").map(Hocon.render),
-    sums = arr(m, "sums").map(Hocon.render),
-    viewPath = str(m, "viewPath").orElse(str(m, "view_path")),
-    agg = str(m, "agg").map(_.toLowerCase).getOrElse("group"),
-    base = str(m, "base"),
-    k = num(m, "k").map(_.intValue).getOrElse(10),
-    publish = str(m, "publish").map(_.toLowerCase).getOrElse("rename"),
-    buckets = num(m, "buckets").map(_.intValue).getOrElse(0),
-    keep = num(m, "keep").map(_.intValue).getOrElse(2))
+  private def rename(o: ObjectNode, block: String): Unit =
+    aliases(block).foreach { case (ref, field) => move(o, ref, o, field) }
 
-  private def toDq(d: Obj): DQConfig = DQConfig(
-    policy = str(d, "policy").orElse(str(d, "on_fail"))
-      .map(_.toLowerCase).getOrElse("log_only"),
-    quarantine = str(d, "quarantine"),
-    warnOnly = (arr(d, "warnOnly") match {
-      case Nil => arr(d, "warn_only") // reference snake_case spelling
-      case xs  => xs
-    }).map(Hocon.render),
-    metadataChecks = bool(d, "metadataChecks")
-      .orElse(bool(d, "metadata_checks")).getOrElse(false),
-    checks = arr(d, "checks").collect { case c: Obj => toCheck(c) })
+  /** Moves `from.key` to `to.field` unless `to` already sets that field. */
+  private def move(from: ObjectNode, key: String, to: ObjectNode, field: String,
+                   f: JsonNode => JsonNode = identity): Unit =
+    Option(from.remove(key)).filterNot(_.isNull).foreach(v =>
+      if (!to.hasNonNull(field)) to.set[JsonNode](field, f(v)))
 
-  private def toCheck(c: Obj): CheckConfig = CheckConfig(
-    `type` = str(c, "type").getOrElse(fail("check needs a type")),
-    column = str(c, "column"),
-    columns = arr(c, "columns").map(Hocon.render),
-    min = num(c, "min").map(_.doubleValue),
-    max = num(c, "max").map(_.doubleValue),
-    pattern = str(c, "pattern"),
-    allowed = arr(c, "allowed").map(Hocon.render),
-    minRows = num(c, "minRows").map(_.longValue),
-    name = str(c, "name"),
-    sql = str(c, "sql"),
-    exact = bool(c, "exact").getOrElse(true),
-    typeColumn = str(c, "typeColumn").orElse(str(c, "type_column")))
+  private def obj(o: ObjectNode, k: String): Option[ObjectNode] =
+    Option(o.get(k)).collect { case n: ObjectNode => n }
+
+  private def objects(o: ObjectNode, k: String): Seq[ObjectNode] =
+    Option(o.get(k)).toSeq.flatMap(_.values.asScala).collect { case n: ObjectNode => n }
+
+  /** Replaces `o.options` by its leaf values under dotted-path keys — how
+    * the reference reads `source.options` (`entrySet`, `:110-115`) — and
+    * returns them. */
+  private def flattenOptions(o: ObjectNode): Map[String, String] = {
+    def leaves(n: JsonNode, prefix: String): Seq[(String, String)] =
+      n.properties.asScala.toSeq.flatMap { e =>
+        val key = if (prefix.isEmpty) e.getKey else s"$prefix.${e.getKey}"
+        if (e.getValue.isObject) leaves(e.getValue, key) else Seq(key -> e.getValue.asText)
+      }
+    obj(o, "options").map { opts =>
+      val flat = leaves(opts, "")
+      val out = o.putObject("options")
+      flat.foreach { case (k, v) => out.put(k, v) }
+      flat.toMap
+    }.getOrElse(Map.empty)
+  }
 }

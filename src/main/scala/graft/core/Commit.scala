@@ -29,8 +29,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Commit {
 
-  /** Parses a config publish mode: true for "pointer", false for "rename". */
-  def pointerMode(publish: String): Boolean = publish match {
+  /** Parses a config publish mode, in any case: true for "pointer",
+    * false for "rename". */
+  def pointerMode(publish: String): Boolean = publish.toLowerCase match {
     case "rename"  => false
     case "pointer" => true
     case other => throw new IllegalArgumentException(

@@ -20,7 +20,7 @@ object IngestionRunner {
 
   def main(args: Array[String]): Unit = {
     val configPath = parseArgs(args).getOrElse(
-      sys.error("usage: IngestionRunner --config <pipeline.json>"))
+      sys.error("usage: IngestionRunner --config <pipeline.conf|pipeline.json>"))
     val cfg = ConfigLoader.loadFromFile(configPath)
     val spark = GraftSession.local(appName = s"graft-${cfg.env}")
     try runPipeline(spark, cfg)
@@ -130,7 +130,7 @@ object IngestionRunner {
     require(m.keys.nonEmpty, "ivm maintenance task needs keys")
     def needColumns(what: String) =
       require(m.columns.nonEmpty, s"ivm agg=${m.agg} needs columns=[$what]")
-    val fold: DataFrame => DataFrame = m.agg match {
+    val fold: DataFrame => DataFrame = m.agg.toLowerCase match {
       case "group" => Ivm.foldGroup(_, src, m.path, m.keys, m.sums)
       case "min" =>
         needColumns("<valueColumn>")

@@ -229,15 +229,12 @@ final case class ApiReader(pagination: Pagination,
 }
 
 object ApiReader {
-  /** Dotted-path field lookup in a JSON object body (JSON is a subset of
-    * the HOCON grammar the config layer already parses — no extra dep).
-    * Absent / null / empty-string → None, ending the cursor chain. */
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Dotted-path field lookup in a JSON object body. Absent / null /
+    * empty / non-string → None, ending the cursor chain. */
   private[graft] def extractField(body: String, dottedPath: String): Option[String] = {
-    val root = graft.config.Hocon.parse(body, env = Map.empty)
-    val value = dottedPath.split('.').foldLeft(Option[Any](root)) {
-      case (Some(o: graft.config.Hocon.Obj), key) => o.get(key)
-      case _ => None
-    }
-    value.collect { case s: String if s.nonEmpty => s }
+    val value = dottedPath.split('.').foldLeft(json.readTree(body))(_.path(_))
+    Some(value).collect { case v if v.isTextual && v.asText.nonEmpty => v.asText }
   }
 }

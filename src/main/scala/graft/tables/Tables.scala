@@ -14,6 +14,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Largest estimated input [[fan]] repartitions: 1 GiB. */
+  val FanMaxBytes: Long = 1L << 30
+
   /** Fan a SMALL unsplittable input out to the session's parallelism
     * before a CPU-heavy per-row kernel (decode, shingle+digest, DP).
     *
@@ -25,18 +28,16 @@ object Tables {
     * only the projected columns that feed the kernel.
     *
     * Scale guard: a no-op when the plan's estimated input exceeds
-    * `spark.graft.fan.maxBytes` (default 1 GiB) — a big production table
-    * arrives in many natural splits and must NOT be payload-shuffled for
-    * parallelism; `localCheckpoint`ed frames keep their origin stats, so
-    * the guard sees through pinned intermediates too. */
+    * [[FanMaxBytes]] — a big production table arrives in many natural
+    * splits and must NOT be payload-shuffled for parallelism;
+    * `localCheckpoint`ed frames keep their origin stats, so the guard sees
+    * through pinned intermediates too. */
   def fan[T](ds: org.apache.spark.sql.Dataset[T])
       : org.apache.spark.sql.Dataset[T] = {
     val spark = ds.sparkSession
     val par = spark.sparkContext.defaultParallelism
-    val cap = spark.conf.getOption("spark.graft.fan.maxBytes")
-      .map(_.toLong).getOrElse(1L << 30)
     val size = ds.queryExecution.analyzed.stats.sizeInBytes
-    if (par > 1 && size <= cap) ds.repartition(par) else ds
+    if (par > 1 && size <= FanMaxBytes) ds.repartition(par) else ds
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

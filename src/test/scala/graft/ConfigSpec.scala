@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.config._
-import graft.dq.{DQPolicy, NotNullCheck, RangeCheck, UniqueKeyCheck}
+import graft.dq.{DQPolicy, NotNullCheck, RangeCheck, RowCountCheck, UniqueKeyCheck}
 
 class ConfigSpec extends SparkSpec {
 
@@ -175,6 +175,53 @@ class ConfigSpec extends SparkSpec {
         |  {type = "ivm-prune", path = "/st2"}
         |]""".stripMargin))
     cfg.maintenance.map(_.keep) shouldBe Seq(5, 2)
+  }
+
+  test("JSON and HOCON load the same pipeline") {
+    val fromJson = ConfigLoader.parse(
+      """{"jobs": [{
+        |  "domain": "d", "dataset": "t", "schemaVersion": 1,
+        |  "validateSchema": false,
+        |  "source": {"type": "jdbc", "url": "jdbc:postgresql://db/x",
+        |    "table": "events", "partitionColumn": "id",
+        |    "lowerBound": 5, "upperBound": 1000, "numPartitions": 4},
+        |  "target": {"format": "parquet", "identifier": "/out"},
+        |  "dq": {"policy": "quarantine", "quarantine": "/q", "checks": [
+        |    {"type": "range", "column": "amount", "min": 0, "max": 100},
+        |    {"type": "row_count_min", "minRows": 1}]}
+        |}],
+        |"maintenance": [{"type": "ivm", "path": "/st", "source": "/in",
+        |  "keys": ["k"], "agg": "GROUP", "publish": "Pointer", "keep": 5}]
+        |}""".stripMargin)
+    // the reference's spellings: schema block, target.table/
+    // lakehouse_format, data_quality.on_fail
+    val fromHocon = HoconConfigLoader.toPipelineConfig(Hocon.parse(
+      """jobs = [{
+        |  domain = d, dataset = t, validateSchema = false
+        |  schema { version = "v1" }
+        |  source {
+        |    type = jdbc, url = "jdbc:postgresql://db/x", table = events
+        |    partitionColumn = id, lowerBound = 5, upperBound = 1000
+        |    numPartitions = 4
+        |  }
+        |  target { lakehouse_format = parquet, table = "/out" }
+        |  data_quality {
+        |    on_fail = QUARANTINE, quarantine = "/q"
+        |    checks = [{type = range, column = amount, min = 0, max = 100},
+        |              {type = row_count_min, minRows = 1}]
+        |  }
+        |}]
+        |maintenance = [{type = ivm, path = "/st", source = "/in", keys = [k],
+        |  agg = GROUP, publish = Pointer, keep = 5}]
+        |""".stripMargin))
+    fromHocon shouldBe fromJson
+    fromJson.env shouldBe "dev"
+    fromJson.jobs.head.layer shouldBe "bronze"
+    graft.core.IngestionRunner.buildReader(fromJson.jobs.head, None)
+      .asInstanceOf[graft.io.JdbcReader].readerOptions("lowerBound") shouldBe "5"
+    fromJson.jobs.head.dq.get.toRuleSet.checks shouldBe Seq(
+      RangeCheck("amount", Some(0.0), Some(100.0)), RowCountCheck(1L))
+    graft.core.Commit.pointerMode(fromJson.maintenance.head.publish) shouldBe true
   }
 
   test("Hocon: deep substitution chains resolve; genuine cycles fail") {

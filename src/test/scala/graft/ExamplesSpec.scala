@@ -27,8 +27,7 @@ class ExamplesSpec extends SparkSpec {
     hj.copy(dq = None) shouldBe jj.copy(dq = None)
     hj.dq.get.policy shouldBe jj.dq.get.policy
     hj.dq.get.quarantine shouldBe jj.dq.get.quarantine
-    // compare compiled checks (Jackson can box JSON ints inside
-    // Option[Double]; toCheck normalizes both sides)
+    // compare compiled checks
     hj.dq.get.checks.map(_.toCheck) shouldBe jj.dq.get.checks.map(_.toCheck)
   }
 
