@@ -1,28 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 import scala.util.{Failure, Success, Try}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
+/** Times every declared query (median of 3) at one scale factor and
+  * records its deterministic counters: shuffle/spill bytes, Spark jobs and
+  * stages, and the time spent building `fn(spark, sf)`.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=4 sbt "runMain graft.Bench"
+  *   SPARK_GRAFT_ONLY=q349,q348      restricts the set (prefix match)
+  *   SPARK_GRAFT_PLANS_DIR=plans/r12 SPARK_GRAFT_PLAN_TAG=before
+  *                                   dumps plans/r12/<query>_before.txt
+  *   SPARK_GRAFT_PLANS_ONLY=1        dumps the plans and times nothing
+  */
 object Bench {
   private val json = new ObjectMapper()
   /** A record number: NaN (an unavailable load average) is written null. */
   private def num(d: Double): java.lang.Double =
     if (d.isNaN) null else java.lang.Double.valueOf(d)
 
-  /** Accumulates per-task shuffle read/write and spill bytes across the
-    * whole app; per-query numbers are deltas between snapshots. Wall-time
-    * at sf0.1 swings up to 4x run-to-run on a shared box; bytes are
-    * deterministic, so they are the signal a plan-regression gate can
-    * actually trust (tools/bench_compare.py fails a round on a >1.5x
-    * shuffle-bytes regression). */
-  private final class BytesListener extends SparkListener {
+  /** Accumulates per-task shuffle read/write and spill bytes, jobs and
+    * completed stages across the whole app; per-query numbers are deltas
+    * between snapshots. Wall-time at sf0.1 swings up to 4x run-to-run on a
+    * shared box; these counters are deterministic, so they are the signal
+    * a plan-regression gate can actually trust (tools/bench_compare.py
+    * fails a round on a >1.5x shuffle-bytes, job or stage regression). */
+  private final class Counters extends SparkListener {
     val shuffleRead = new AtomicLong
     val shuffleWrite = new AtomicLong
     val spillMem = new AtomicLong
     val spillDisk = new AtomicLong
+    val jobs = new AtomicLong
+    val stages = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) {
@@ -32,8 +48,8 @@ object Bench {
         spillDisk.addAndGet(m.diskBytesSpilled)
       }
     }
-    def snapshot(): Seq[Long] =
-      Seq(shuffleRead.get, shuffleWrite.get, spillMem.get, spillDisk.get)
+    def snapshot(): Seq[Long] = Seq(shuffleRead.get, shuffleWrite.get,
+      spillMem.get, spillDisk.get, jobs.get, stages.get)
     /** Listener events post asynchronously; after an action returns, poll
       * until the counters are stable across two 50ms windows (bounded) so
       * the delta attributes to the query that just ran. */
@@ -99,23 +115,38 @@ object Bench {
     sampler.setDaemon(true)
     sampler.start()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val bytes = new BytesListener
-    spark.sparkContext.addSparkListener(bytes)
+    val spark = GraftSession.local(cpus.toInt, "graft-bench")
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
+    // SPARK_GRAFT_ONLY=q226,q283 restricts the set — dev-loop convenience
+    // mirroring Verify; unset, every declared query is timed.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val chosen = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    // Plan dump for the round record: `explain` never executes, so it runs
+    // before the warmup; SPARK_GRAFT_PLANS_ONLY=1 captures plans in bulk
+    // without a bench-length wait.
+    sys.env.get("SPARK_GRAFT_PLANS_DIR").foreach { d =>
+      val dir = java.nio.file.Paths.get(d)
+      val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
+      java.nio.file.Files.createDirectories(dir)
+      chosen.foreach { case (name, fn) =>
+        val txt = Try(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+          .getOrElse("explain failed")
+        java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"), txt)
+      }
+    }
+    if (sys.env.get("SPARK_GRAFT_PLANS_ONLY").contains("1")) {
+      spark.stop()
+      return
+    }
     // Untimed warmup: JIT/codegen/session init + parquet footers, so the
-    // first measured query isn't charged for cold-start. Goes through the
-    // Tables loaders (not raw spark.read) because events.parquet has shipped
-    // as TIMESTAMP(NANOS) in some testdata generations and the loader holds
-    // the compat handling; a warmup failure is a harness bug and must be
-    // visible, not swallowed.
-    Seq("lineitem", "orders", "documents", "embeddings").foreach(t =>
+    // first measured query isn't charged for cold-start; a warmup failure
+    // is a harness bug and must be visible, not swallowed.
+    Seq("lineitem", "orders", "documents", "embeddings", "events").foreach(t =>
       tables.Tables.load(spark, sfDir, t).count())
-    tables.Tables.events(spark, sfDir).count()
     // ...and one composite untimed pipeline: scan → regex normalize → md5 →
     // hash aggregate → join → window → sort. Counts alone leave the common
     // operator kernels un-JITed, so whichever query ran FIRST was charged
@@ -139,15 +170,10 @@ object Bench {
     // on the box) can swing one run 4x — the median ignores one outlier in
     // either direction, which best-of-N cannot. min/max are kept in the
     // full artifact so a noisy session is visible in the record itself.
-    // Shuffle/spill BYTES are measured on the last run only (they are
-    // plan-deterministic, identical across runs).
+    // Shuffle/spill bytes, job and stage counts and the build time are
+    // measured on the last run only (the counters are plan-deterministic,
+    // identical across runs).
     // A query that throws is recorded as an error entry — never as a time.
-    // SPARK_GRAFT_ONLY=q226,q283 restricts the timed set — dev-loop
-    // convenience mirroring Verify; the driver leaves it unset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
     // Per-query record. `load1m` is the max 1-min loadavg sampled at each
     // run's bracket (2 reads per run): the pre-flight guard only protects
     // the START of the run, so a mid-run co-tenant (r10: scattered
@@ -158,32 +184,38 @@ object Bench {
     // stays untouched (first record kept), the re-run column is what
     // makes a contaminated record's headline trustworthy.
     final case class QRes(med: Double, mn: Double, mx: Double, n: Int,
-                          bytes: Seq[Long], load1m: Double,
+                          counts: Seq[Long], buildS: Double, load1m: Double,
                           tRequiet: Option[Double] = None,
                           loadRequiet: Option[Double] = None)
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Either[String, Double], Double) = {
+    /** One run: its wall (build + count) or its error, the build time
+      * alone, and the max 1-min load at its bracket. */
+    def timeOnce(fn: (SparkSession, String) => DataFrame)
+        : (Either[String, Double], Double, Double) = {
       val l0 = loadAvg1m()
       val t0 = System.nanoTime()
-      val r = Try(fn(spark, sfDir).count()) match {
+      var buildS = Double.NaN
+      val r = Try {
+        val df = fn(spark, sfDir)
+        buildS = (System.nanoTime() - t0) / 1e9
+        df.count()
+      } match {
         case Success(_)  => Right((System.nanoTime() - t0) / 1e9)
         case Failure(ex) => Left(s"${ex.getClass.getSimpleName}: ${Option(ex.getMessage).getOrElse("").take(200)}")
       }
       val l1 = loadAvg1m()
-      (r, if (l0.isNaN) l1 else if (l1.isNaN) l0 else math.max(l0, l1))
+      (r, buildS, if (l0.isNaN) l1 else if (l1.isNaN) l0 else math.max(l0, l1))
     }
     val measured: Seq[(String, Either[String, QRes])] =
-      SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
-        .map { case (name, fn) =>
-        val (r1, la1) = timeOnce(fn)
-        val (r2, la2) = timeOnce(fn)
+      chosen.map { case (name, fn) =>
+        val (r1, _, la1) = timeOnce(fn)
+        val (r2, _, la2) = timeOnce(fn)
         // drain the listener queue BEFORE the bracketed run too: task-end
         // events still in flight from run 2 would otherwise inflate run
-        // 3's byte delta (up to ~2x one run's bytes — enough to falsely
-        // trip bench_compare's 1.5x gate)
-        val before = bytes.drainedSnapshot()
-        val (r3, la3) = timeOnce(fn)
-        val byteDelta = bytes.drainedSnapshot().zip(before).map(p => p._1 - p._2)
+        // 3's deltas (up to ~2x one run's bytes — enough to falsely trip
+        // bench_compare's 1.5x gate)
+        val before = counters.drainedSnapshot()
+        val (r3, buildS, la3) = timeOnce(fn)
+        val delta = counters.drainedSnapshot().zip(before).map(p => p._1 - p._2)
         val runs = Seq(r1, r2, r3)
         val ok = runs.collect { case Right(t) => t }.sorted
         val load = Seq(la1, la2, la3).filterNot(_.isNaN)
@@ -194,7 +226,7 @@ object Bench {
         // in the artifact records what the number actually is.
         name -> (if (ok.nonEmpty)
                    Right(QRes(if (ok.size == 3) ok(1) else ok.head,
-                     ok.head, ok.last, ok.size, byteDelta, load))
+                     ok.head, ok.last, ok.size, delta, buildS, load))
                  else Left(runs.collectFirst { case Left(e) => e }.getOrElse("unknown")))
       }
     // Re-run pass: queries whose runs overlapped concurrent load well
@@ -217,7 +249,7 @@ object Bench {
           Thread.sleep(10000)
         measured.map {
           case (k, Right(r)) if flagged(k) =>
-            val (rr, la) = timeOnce(SparkEntry.queries(k))
+            val (rr, _, la) = timeOnce(SparkEntry.queries(k))
             k -> Right(rr.fold(_ => r,
               t => r.copy(tRequiet = Some(t), loadRequiet = Some(la))))
           case other => other
@@ -229,8 +261,10 @@ object Bench {
         val q = qs.putObject(k).put("t", r.med).put("min", r.mn).put("max", r.mx)
           .put("n_runs", r.n).put("load_1m", num(r.load1m))
         r.tRequiet.foreach(t => q.put("t_requiet", t).put("load_requiet", num(r.loadRequiet.get)))
-        q.put("shuffle_read", r.bytes(0)).put("shuffle_write", r.bytes(1))
-          .put("spill_mem", r.bytes(2)).put("spill_disk", r.bytes(3))
+        q.put("shuffle_read", r.counts(0)).put("shuffle_write", r.counts(1))
+          .put("spill_mem", r.counts(2)).put("spill_disk", r.counts(3))
+          .put("jobs", r.counts(4)).put("stages", r.counts(5))
+          .put("build_s", num(r.buildS))
       case (k, Left(e)) => qs.putObject(k).put("error", e)
     }
     val errors = results.collect { case (k, Left(e)) => k -> e }
@@ -239,7 +273,7 @@ object Bench {
     // quiet re-run — equals `value` exactly when nothing was flagged
     val totalRequiet = results.collect {
       case (_, Right(r)) => r.tRequiet.getOrElse(r.med) }.sum
-    val totalBytes = results.collect { case (_, Right(r)) => r.bytes }
+    val totalBytes = results.collect { case (_, Right(r)) => r.counts.take(4) }
       .foldLeft(Seq(0L, 0L, 0L, 0L))((a, b) => a.zip(b).map(p => p._1 + p._2))
     val loadAfter = loadAvg1m()
     val loadPeak = java.lang.Double.longBitsToDouble(loadMax.get())

@@ -240,16 +240,18 @@ object ConfigLoader {
 
   /** Load a pipeline config — `.conf` parses as HOCON (the reference's
     * format), anything else as JSON. `schemaBasePath` mirrors the
-    * reference loader's default registry location for configs that don't
-    * name one (`config/ConfigLoader.scala:33`). */
+    * reference loader's default registry location for configs of either
+    * format that don't name one (`config/ConfigLoader.scala:33`). */
   def loadFromFile(path: String, validateSchemas: Boolean = true,
                    schemaBasePath: String = "schemas"): PipelineConfig = {
-    val cfg =
+    val bound =
       if (path.endsWith(".conf"))
         // parseFile (not parse-the-text): relative `include` directives
         // resolve against the config file's own directory
-        HoconConfigLoader.toPipelineConfig(Hocon.parseFile(path), Some(schemaBasePath))
+        HoconConfigLoader.toPipelineConfig(Hocon.parseFile(path))
       else parse(Files.readString(Paths.get(path)))
+    val cfg = bound.copy(
+      schemaRegistry = bound.schemaRegistry.orElse(Some(schemaBasePath)))
     if (validateSchemas) cfg.schemaRegistry.foreach { base =>
       val registry = new SchemaRegistry(base)
       cfg.jobs.filter(_.validateSchema).foreach { j =>
@@ -299,11 +301,9 @@ object HoconConfigLoader {
     "upperBound" -> "upperBound", "numPartitions" -> "numPartitions",
     "watermarkColumn" -> "watermarkColumn", "watermarkValue" -> "watermarkValue")
 
-  def toPipelineConfig(root: Obj, defaultRegistry: Option[String] = None): PipelineConfig = {
+  def toPipelineConfig(root: Obj): PipelineConfig = {
     val tree = ConfigLoader.mapper.valueToTree[ObjectNode](root)
     rename(tree, "root")
-    defaultRegistry.foreach(r =>
-      if (!tree.hasNonNull("schemaRegistry")) tree.put("schemaRegistry", r))
     obj(tree, "catalog").foreach { c =>
       tree.remove("catalog")
       tree.withArrayProperty("catalogs").insert(0, c)

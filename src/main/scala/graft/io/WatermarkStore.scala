@@ -28,19 +28,16 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 final class WatermarkStore(path: String) {
 
   private val file = Paths.get(path)
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def readAll(): Map[String, String] =
     if (!Files.isRegularFile(file)) Map.empty
-    else {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      mapper.readValue(Files.readString(file),
-        classOf[java.util.Map[String, String]]).asScala.toMap
-    }
+    else mapper.readValue(Files.readString(file),
+      classOf[java.util.Map[String, String]]).asScala.toMap
 
   def get(key: String): Option[String] = readAll().get(key)
 
   def put(key: String, value: String): Unit = synchronized {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val next = readAll() + (key -> value)
     Option(file.getParent).foreach(Files.createDirectories(_))
     val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")

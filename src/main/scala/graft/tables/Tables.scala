@@ -8,11 +8,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cluster these would be catalog tables partitioned by date; here the
   * loader is path-based but everything downstream goes through the same
   * DataFrame surface, so swapping in `spark.table(name)` is a one-liner.
+  *
+  * Every table's schema is declared below, so a load reads no parquet
+  * footer, starts no Spark job and sets no session conf. The files'
+  * timestamps are parquet TIMESTAMP(MICROS, isAdjustedToUTC=false); they
+  * are declared `TIMESTAMP` and read as instants (the session time zone
+  * is UTC), so epoch extraction works uniformly. TIMESTAMP(NANOS) files
+  * are not supported: a query that reads such a column fails in the scan
+  * with Spark's parquet column type mismatch.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** Table name -> declared schema (DDL), in star-schema order. */
+  val schemas: Seq[(String, String)] = Seq(
+    "region"     -> "r_regionkey INT, r_name STRING",
+    "nation"     -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer"   -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+                     "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier"   -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part"       -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+                     "p_size INT, p_retailprice DOUBLE"),
+    "orders"     -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+                     "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"),
+    "lineitem"   -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+                     "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+                     "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+                     "l_linestatus STRING, l_shipdate TIMESTAMP"),
+    "events"     -> ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
+                     "value DOUBLE, props STRING"),
+    "documents"  -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
+  val names: Seq[String] = schemas.map(_._1)
+  private val ddl = schemas.toMap
 
   /** Largest estimated input [[fan]] repartitions: 1 GiB. */
   val FanMaxBytes: Long = 1L << 30
@@ -40,12 +67,8 @@ object Tables {
     if (par > 1 && size <= FanMaxBytes) ds.repartition(par) else ds
   }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Testdata timestamps are parquet TIMESTAMP(isAdjustedToUTC=false); read
-    // them as instants (session TZ is UTC) so epoch extraction works uniformly.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.read.parquet(s"$dir/$name.parquet")
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(ddl(name)).parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -54,22 +77,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
-  /** `events.ts` has shipped as both TIMESTAMP(NANOS) (which Spark's parquet
-    * reader rejects without the legacy nanos-as-long conf) and plain
-    * TIMESTAMP(MICROS) across testdata generations. Handle both: read with
-    * the legacy conf on, and only rebuild the timestamp from the nanos long
-    * when the reader actually surfaced a long (truncation to micros is
-    * lossless — the generator emits exact micros). */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(s, d, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case _ => df
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -224,6 +224,25 @@ class ConfigSpec extends SparkSpec {
     graft.core.Commit.pointerMode(fromJson.maintenance.head.publish) shouldBe true
   }
 
+  test("JSON and HOCON files get the same default schema registry") {
+    val dir = Paths.get(tmpDir("cfg-default-registry"))
+    val jsonFile = dir.resolve("p.json")
+    val confFile = dir.resolve("p.conf")
+    Files.writeString(jsonFile,
+      """{"jobs": [{"domain": "d", "dataset": "t", "validateSchema": false,
+        |  "source": {"type": "parquet", "path": "/in"},
+        |  "target": {"format": "parquet", "identifier": "/out"}}]}""".stripMargin)
+    Files.writeString(confFile,
+      """jobs = [{domain = d, dataset = t, validateSchema = false
+        |  source { type = parquet, path = "/in" }
+        |  target { format = parquet, identifier = "/out" }}]
+        |""".stripMargin)
+    val fromJson = ConfigLoader.loadFromFile(jsonFile.toString, schemaBasePath = "reg")
+    val fromConf = ConfigLoader.loadFromFile(confFile.toString, schemaBasePath = "reg")
+    fromJson.schemaRegistry shouldBe Some("reg")
+    fromConf shouldBe fromJson
+  }
+
   test("Hocon: deep substitution chains resolve; genuine cycles fail") {
     // a 30-deep legitimate chain (the old fixed depth cap of 16 would
     // misreport this as a cycle)

@@ -3,16 +3,19 @@
 
 Wall-time at sf0.1 swings up to 4x run-to-run on a shared box (r7: q58
 1.75s vs 7.42s for the same plan), so this gate compares the
-DETERMINISTIC per-query byte counters instead: shuffle read/write and
-spill. A query whose shuffle bytes grew >1.5x (above a 16 MiB noise
-floor) almost certainly changed plan shape — fail the round recording
-until it is adjudicated.
+DETERMINISTIC per-query counters instead: shuffle read/write and spill
+bytes, and the Spark jobs and stages of the bracketed run. A query whose
+shuffle bytes grew >1.5x (above a 16 MiB noise floor), or whose job or
+stage count grew >1.5x, almost certainly changed plan shape — fail the
+round recording until it is adjudicated.
 
 Usage: tools/bench_compare.py OLD.json NEW.json
   exit 0 = no regression; exit 1 = regressions listed on stdout.
 
 OLD may be a pre-r8 artifact (plain  name->seconds  map); byte checks
-then skip (nothing to compare) and only error-count is gated.
+then skip (nothing to compare) and only error-count is gated. Job and
+stage checks skip for a record that lacks the fields (artifacts before
+Bench counted them).
 """
 import json
 import sys
@@ -21,6 +24,7 @@ RATIO = 1.5
 FLOOR = 16 * 1024 * 1024  # ignore moves below 16 MiB — codegen/broadcast jitter
 
 BYTE_KEYS = ("shuffle_read", "shuffle_write", "spill_disk")
+COUNT_KEYS = ("jobs", "stages")  # no floor: one extra job is a plan change
 
 
 def load(path):
@@ -50,18 +54,20 @@ def main(old_path, new_path):
         old_rec = oq.get(name)
         if not isinstance(old_rec, dict) or "error" in (old_rec or {}):
             continue  # new query or old format: nothing to compare
-        bytes_moved = False
-        for key in BYTE_KEYS:
+        plan_moved = False
+        for key in BYTE_KEYS + COUNT_KEYS:
             if key not in rec or key not in old_rec:
                 continue
             o, n = old_rec[key], rec[key]
             if n > o * RATIO or o > n * RATIO:
-                bytes_moved = True
-            if n > FLOOR and n > o * RATIO:
+                plan_moved = True
+            floor = FLOOR if key in BYTE_KEYS else 0
+            if n > floor and n > o * RATIO:
+                unit = " bytes" if key in BYTE_KEYS else ""
                 failures.append(
-                    f"{name}: {key} {o:,} -> {n:,} bytes "
+                    f"{name}: {key} {o:,} -> {n:,}{unit} "
                     f"({n / max(o, 1):.2f}x)")
-        # wall-time moved >2x with NO byte movement = the co-tenancy
+        # wall-time moved >2x with NO byte/job/stage movement = the co-tenancy
         # signature (r8: driver recorded 41.6s for a 1.68s query, bytes
         # identical) — report it with the QUERY's own concurrent load and
         # its quiet re-run when the record carries them (r11: Bench
@@ -69,7 +75,7 @@ def main(old_path, new_path):
         # a quiet-wait), so the record self-diagnoses; never fail on
         # wall-time alone
         ot, nt = old_rec.get("t"), rec.get("t")
-        if (not bytes_moved and isinstance(ot, (int, float))
+        if (not plan_moved and isinstance(ot, (int, float))
                 and isinstance(nt, (int, float)) and ot > 0
                 and nt > 1.0 and nt > 2 * ot):
             detail = ""
@@ -83,7 +89,7 @@ def main(old_path, new_path):
                          if isinstance(lrq, (int, float)) else "")
                 detail += f", quiet re-run {trq:.2f}s ({verdict}{lrq_s})"
             suspicious_walltime.append(f"{name}: {ot:.2f}s -> {nt:.2f}s "
-                                       f"({nt / ot:.1f}x, bytes unchanged"
+                                       f"({nt / ot:.1f}x, counters unchanged"
                                        f"{detail})")
 
     if new.get("n_requiet", 0):
@@ -112,7 +118,7 @@ def main(old_path, new_path):
                     ("load_1m_before", "load_1m_after", "load_1m_max",
                      "load_gate", "preflight_wait_s", "contaminated")
                     if new.get(k) is not None}
-        print(f"WALL-TIME OUTLIERS WITHOUT BYTE MOVEMENT "
+        print(f"WALL-TIME OUTLIERS WITHOUT COUNTER MOVEMENT "
               f"({len(suspicious_walltime)}) — likely box co-tenancy; "
               f"new-run load: {load_rec or 'not recorded'}")
         for s in suspicious_walltime[:20]:
@@ -123,7 +129,7 @@ def main(old_path, new_path):
         for f in failures:
             print(f"  {f}")
         return 1
-    print(f"bench_compare OK: {len(nq)} queries, no byte regressions "
+    print(f"bench_compare OK: {len(nq)} queries, no byte/job/stage regressions "
           f"vs {old_path}")
     return 0
 
