@@ -85,7 +85,7 @@ object IngestionRunner {
       "ivm" -> ivmTask,
       "ivm-prune" -> (m => spark => Commit(spark, m.path).prune(m.keep)),
       // build-or-append a document batch into a persistent MinHash-LSH
-      // dedup index (the batch twin of StreamOps.dedupIndexSink) —
+      // dedup index (the batch twin of StreamOps.dedupIndexBatch) —
       // per-batch cost O(batch), never O(corpus)
       "dedup-index" -> { m =>
         val src = source(m, "document batch path")

@@ -40,14 +40,22 @@ sealed trait DQCheck {
   def passes(violations: Long, rowCount: Long): Boolean = violations == 0L
 }
 
+/** A check whose violations are the rows `pred` flags: its metric counts
+  * them in the single DQ pass, and [[Quarantine]] splits on the same
+  * predicate. */
+sealed trait RowCheck extends DQCheck {
+  /** "This row violates." */
+  protected def pred: Column
+  final def aggExpr: Column =
+    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
+  final def rowPredicate: Option[Column] = Some(pred)
+}
+
 /** Count of nulls in `column` must be 0 (or below `maxNullFraction`). */
 final case class NotNullCheck(column: String, maxNullFraction: Double = 0.0)
-    extends DQCheck {
+    extends RowCheck {
   val name = s"notnull_$column"
-  private def pred = col(column).isNull
-  def aggExpr: Column =
-    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
-  def rowPredicate: Option[Column] = Some(pred)
+  protected def pred = col(column).isNull
   /** Tolerates up to `maxNullFraction` of rows being null. */
   override def passes(violations: Long, rowCount: Long): Boolean =
     if (rowCount <= 0L) violations == 0L
@@ -56,10 +64,10 @@ final case class NotNullCheck(column: String, maxNullFraction: Double = 0.0)
 
 /** Non-null values of `column` must fall inside [min, max]. */
 final case class RangeCheck(column: String, min: Option[Double],
-                            max: Option[Double]) extends DQCheck {
+                            max: Option[Double]) extends RowCheck {
   require(min.isDefined || max.isDefined, "RangeCheck needs a bound")
   val name = s"range_$column"
-  private def pred: Column = {
+  protected def pred: Column = {
     val below = min.map(m => col(column) < lit(m))
     val above = max.map(m => col(column) > lit(m))
     val out = (below, above) match {
@@ -70,40 +78,28 @@ final case class RangeCheck(column: String, min: Option[Double],
     }
     col(column).isNotNull && out
   }
-  def aggExpr: Column =
-    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
-  def rowPredicate: Option[Column] = Some(pred)
 }
 
 /** Non-null values of `column` must match `pattern` (Java regex). */
-final case class RegexCheck(column: String, pattern: String) extends DQCheck {
+final case class RegexCheck(column: String, pattern: String) extends RowCheck {
   val name = s"regex_$column"
-  private def pred = col(column).isNotNull && !col(column).rlike(pattern)
-  def aggExpr: Column =
-    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
-  def rowPredicate: Option[Column] = Some(pred)
+  protected def pred = col(column).isNotNull && !col(column).rlike(pattern)
 }
 
 /** Non-null values of `column` must be in `allowed`. */
 final case class AllowedValuesCheck(column: String, allowed: Seq[String])
-    extends DQCheck {
+    extends RowCheck {
   val name = s"allowed_$column"
-  private def pred =
+  protected def pred =
     col(column).isNotNull && !col(column).isin(allowed.map(lit): _*)
-  def aggExpr: Column =
-    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
-  def rowPredicate: Option[Column] = Some(pred)
 }
 
 /** Free-form SQL predicate describing a VIOLATION (reference: doc example
   * `df.filter("amount <= 0")`, `docs/07-developer-guide.md:294`). */
 final case class PredicateCheck(checkName: String, violationSql: String)
-    extends DQCheck {
+    extends RowCheck {
   val name = s"pred_$checkName"
-  private def pred = expr(violationSql)
-  def aggExpr: Column =
-    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
-  def rowPredicate: Option[Column] = Some(pred)
+  protected def pred = expr(violationSql)
 }
 
 /** Composite key must be unique. `exact=false` switches to HLL
@@ -134,14 +130,11 @@ final case class UniqueKeyCheck(columns: Seq[String], exact: Boolean = true)
 final case class MediaDecodableCheck(payloadColumn: String,
                                      mediaTypeColumn: String,
                                      minDecodableFraction: Double = 1.0)
-    extends DQCheck {
+    extends RowCheck {
   val name = s"media_$payloadColumn"
-  private def pred = !coalesce(
+  protected def pred = !coalesce(
     graft.functions.DecodableMedia.decodableMedia(
       col(payloadColumn), col(mediaTypeColumn)), lit(false))
-  def aggExpr: Column =
-    coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
-  def rowPredicate: Option[Column] = Some(pred)
   override def passes(violations: Long, rowCount: Long): Boolean =
     if (rowCount <= 0L) violations == 0L
     else violations.toDouble / rowCount.toDouble <= 1.0 - minDecodableFraction

@@ -3929,7 +3929,6 @@ object CorpusQueries {
   private def pqBase(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), CosineKnn.toDouble(col("embedding")).as("v"))
-      .localCheckpoint(true)
 
   /** Subspace slice s (16 dims) of the raw vectors. */
   private def pqSlice(base: DataFrame, s: Int): DataFrame =
@@ -4169,7 +4168,7 @@ object CorpusQueries {
       .select(col("id_a"), col("id_b"), col("jaccard")).localCheckpoint(true)
     def atThreshold(t: Double): DataFrame = {
       val kept = pairs.filter(col("jaccard") >= t)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b"))
       val members = graft.transform.Dedup
         .duplicateClusters(kept, docs.select(col("doc_id")), "doc_id")
       // dup clusters only (size >= 2): singletons are noise for the curve
@@ -4471,7 +4470,6 @@ object CorpusQueries {
       .localCheckpoint(true)
     var dist = docs.filter(col("doc_id") < 10)
       .select(col("doc_id").as("node"), lit(0L).as("d"))
-      .localCheckpoint(true)
     for (_ <- 1 to 4) {
       val next = dist.join(edges, dist("node") === edges("a"))
         .select(col("b").as("node"), (col("d") + 1).as("d"))
@@ -5216,7 +5214,6 @@ object CorpusQueries {
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("isa")).cast("long").as("na")),
         Seq(col("value")), Seq("n" -> "cum"))
-      .localCheckpoint(true)
     val s = grain.agg(
       sum(col("na")).cast("long").as("n_a"),
       sum(col("n") - col("na")).cast("long").as("n_b"),

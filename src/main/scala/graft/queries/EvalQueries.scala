@@ -35,7 +35,6 @@ object EvalQueries {
       .select(col("o_orderpriority").as("prio"), cents.as("cents"))
       .filter(col("cents") > 0)
       .withColumn("bucket", length(bin(col("cents"))).cast("int"))
-      .localCheckpoint(true)
     val perPrio = vals.groupBy(col("prio"), col("bucket"))
       .agg(count(lit(1)).cast("long").as("c"))
     val merged = perPrio.groupBy(col("bucket"))
@@ -2212,7 +2211,6 @@ object EvalQueries {
     val dims = Seq(8, 16, 32, 64)
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), CosineKnn.toDouble(col("embedding")).as("v"))
-      .localCheckpoint(true)
     def topk(d: Int): DataFrame = {
       val sliced = base.select(col("vec_id").as("id"),
         slice(col("v"), 1, d).as("v"))
@@ -2525,7 +2523,6 @@ object EvalQueries {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"),
         size(split(col("text"), " ")).cast("long").as("toks"))
-      .localCheckpoint(true)
     def nonCanonical(h: Column): DataFrame = {
       val hashed = docs.select(col("doc_id"), h.as("h"))
       hashed.join(hashed.groupBy(col("h"))
@@ -3319,7 +3316,6 @@ object EvalQueries {
       .groupBy(col("seg"))
       .agg(max(col("err")).as("seg_eps"),
         count(lit(1)).cast("long").as("seg_n"))
-      .localCheckpoint(true)
     eps.agg(sum(col("seg_n")).cast("long").as("n_keys"),
         count(lit(1)).cast("long").as("n_segments"),
         max(col("seg_eps")).as("max_eps_d"),
@@ -3956,11 +3952,9 @@ object EvalQueries {
     * range-partitioned prefix scans + two one-row broadcasts. */
   def q378_exact_mad(spark: SparkSession, dir: String): DataFrame = {
     import graft.transform.PrefixSum
-    // pin ev + grain: each otherwise re-scans (grain feeds tot AND the
-    // prefix pass; ev feeds both deviation grains) — guide §1.2
+    // pin the value grain: it feeds tot AND the prefix pass (guide §1.2)
     val ev = Tables.events(spark, dir)
       .select(col("value").cast("decimal(18,2)").as("v"))
-      .localCheckpoint(true)
     val grain = ev.groupBy(col("v")).agg(count(lit(1)).cast("long").as("n"))
       .localCheckpoint(true)
     val tot = grain.agg(sum(col("n")).cast("long").as("nt"))

@@ -52,29 +52,15 @@ object BandedHamming {
         Seq(col("bk.band").as("band"), col("bk.bkey").as("bkey")): _*)
   }
 
-  /** Drop rows in `keyCols` buckets larger than `cap` — the skew guard
-    * for degenerate corpora. Combinable count, joined back. */
-  private def capBuckets(banded: DataFrame, keyCols: Seq[String],
-                         maxBucket: Option[Int]): DataFrame =
-    maxBucket match {
-      case Some(cap) =>
-        val keys = keyCols.map(col)
-        val ok = banded.groupBy(keys: _*)
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") <= cap)
-          .select(keys: _*)
-        banded.join(ok, keyCols)
-      case None => banded
-    }
-
   /** Verified near-duplicate pairs `(id_a, id_b, hamming)` with
     * `id_a < id_b` and `hamming ≤ maxHamming`, candidates restricted to
     * pairs sharing at least one capped band key. */
   def nearDuplicatePairs(df: DataFrame, idCol: String, codeCol: String,
                          nBands: Int, bandBits: Int, maxHamming: Int,
                          maxBucket: Option[Int] = None): DataFrame = {
-    val capped = capBuckets(bandKeys(df, idCol, codeCol, nBands, bandBits),
-      Seq("band", "bkey"), maxBucket)
+    val capped = CapFold.capBuckets(
+      bandKeys(df, idCol, codeCol, nBands, bandBits), Seq("band", "bkey"),
+      maxBucket)
     val cand = capped.as("a")
       .join(capped.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -155,7 +141,8 @@ object BandedHamming {
       col(frameCol).as("fidx"), col(codeCol).as("code"))
     val banded = bandKeys(norm, "id", "code", nBands, bandBits,
       carryCols = Seq("fidx"))
-    val capped = capBuckets(banded, Seq("fidx", "band", "bkey"), maxBucket)
+    val capped =
+      CapFold.capBuckets(banded, Seq("fidx", "band", "bkey"), maxBucket)
     val cand = capped.as("a")
       .join(capped.as("b"),
         col("a.fidx") === col("b.fidx") && col("a.band") === col("b.band") &&
@@ -219,7 +206,7 @@ object BandedHamming {
       col(frameCol).as("fidx"), col(codeCol).as("code"))
     val banded = bandKeys(norm, "id", "code", nBands, bandBits,
       carryCols = Seq("fidx"))
-    val capped = capBuckets(banded, Seq("band", "bkey"), maxBucket)
+    val capped = CapFold.capBuckets(banded, Seq("band", "bkey"), maxBucket)
     val cand = capped.as("a")
       .join(capped.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&

@@ -47,22 +47,4 @@ object CosineKnn {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("id").as("neighbor_id"), col("rank"), col("cosine"))
   }
-
-  /** Most-similar pairs across the whole corpus (id_a < id_b), top-N by
-    * cosine — embedding near-dup detection shape. O(n^2) compare: only for
-    * bounded corpora; at scale route through [[LshAnn]] buckets first. */
-  def topPairs(vectors: DataFrame, idCol: String, vecCol: String,
-               topN: Int): DataFrame = {
-    // fan: see topK — the n² grid otherwise evaluates on one core
-    val base = graft.tables.Tables.fan(
-        vectors.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v")))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val a = base.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
-    val b = base.select(col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .select(col("id_a"), col("id_b"), col("cosine"))
-      .orderBy(col("cosine").desc, col("id_a").asc, col("id_b").asc)
-      .limit(topN)
-  }
 }

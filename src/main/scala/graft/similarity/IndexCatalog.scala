@@ -418,6 +418,26 @@ private[similarity] object CapFold {
       .select(keys: _*)
   }
 
+  /** One-shot cap, when the whole banded frame is in hand: drop rows in
+    * buckets (keyed by `keyCols`) larger than `maxBucket` — via a
+    * combinable `groupBy(keys).count` joined back, never a window over the
+    * key: a degenerate (boilerplate) bucket is exactly the case the cap
+    * exists for, and a window would buffer that whole bucket in ONE task
+    * before the cap could drop it. The surviving-bucket side is one row per
+    * bucket. */
+  def capBuckets(banded: DataFrame, keyCols: Seq[String],
+                 maxBucket: Option[Int]): DataFrame =
+    maxBucket match {
+      case Some(cap) =>
+        val keys = keyCols.map(col)
+        val ok = banded.groupBy(keys: _*)
+          .agg(count(lit(1)).as("__bsz"))
+          .filter(col("__bsz") <= cap)
+          .select(keys: _*)
+        banded.join(ok, keyCols)
+      case None => banded
+    }
+
   /** `batchBands` restricted to surviving buckets. */
   def applyCap(batchBands: DataFrame, keyCols: Seq[String],
                maxBucket: Option[Int], corpusSizes: DataFrame): DataFrame =

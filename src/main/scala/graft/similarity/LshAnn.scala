@@ -157,8 +157,8 @@ object LshAnn {
     def banded(df: DataFrame, side: String): DataFrame =
       df.select(col("id"), explode(array(keys: _*)).as("bkey"))
         .withColumn("__side", lit(side))
-    val capped = capBuckets(
-      banded(l, "l").unionByName(banded(r, "r")), maxBucket)
+    val capped = CapFold.capBuckets(
+      banded(l, "l").unionByName(banded(r, "r")), Seq("bkey"), maxBucket)
     val cand = capped.filter(col("__side") === "l").select(col("id"), col("bkey"))
       .join(capped.filter(col("__side") === "r")
         .select(col("id").as("rid"), col("bkey")), "bkey")
@@ -171,21 +171,6 @@ object LshAnn {
         .as("max_cos"))
   }
 
-  /** Drop band keys whose bucket exceeds `cap` — via a combinable
-    * `groupBy(bkey).count` joined back, never a window over bkey (a window
-    * would buffer the whole degenerate bucket in ONE task before the cap
-    * could drop it; same reasoning as `MinHashLsh.capBuckets`). */
-  private def capBuckets(banded: DataFrame, maxBucket: Option[Int]): DataFrame =
-    maxBucket match {
-      case Some(cap) =>
-        val ok = banded.groupBy(col("bkey"))
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") <= cap)
-          .drop("__bsz")
-        banded.join(ok, "bkey")
-      case None => banded
-    }
-
   private def bucketedPairsCosine(vectors: DataFrame, idCol: String,
                                   vecCol: String, nTables: Int, nBits: Int,
                                   dim: Int, seed: Long,
@@ -194,8 +179,9 @@ object LshAnn {
         vectors.select(col(idCol).as("id"), CosineKnn.toDouble(col(vecCol)).as("v")))
       .withColumn("nrm", sqrt(CosineKnn.dot(col("v"), col("v"))))
     val keys = bandKeys(col("v"), nTables, nBits, dim, seed)
-    val banded = capBuckets(
-      base.select(col("id"), explode(array(keys: _*)).as("bkey")), maxBucket)
+    val banded = CapFold.capBuckets(
+      base.select(col("id"), explode(array(keys: _*)).as("bkey")), Seq("bkey"),
+      maxBucket)
     val cand = banded.as("a")
       .join(banded.as("b"),
         col("a.bkey") === col("b.bkey") && col("a.id") < col("b.id"))

@@ -32,13 +32,6 @@ object MinHashLsh {
   def signature(shingleSet: Column, perms: Int): Column =
     graft.functions.MinHashSig.minhashSig(shingleSet, perms)
 
-  /** doc_id, shingles, sig — shingle + signature stage. */
-  def withSignatures(df: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int, perms: Int): DataFrame =
-    df.select(col(idCol),
-      TextOps.shingles(col(textCol), shingleN).as("shingle_set"))
-      .withColumn("sig", signature(col("shingle_set"), perms))
-
   /** Candidate pairs (idA < idB) sharing at least one complete band of
     * `rowsPerBand` consecutive signature slots. Band keys come from the
     * one-pass [[graft.functions.MinHashBands]] expression over
@@ -54,29 +47,13 @@ object MinHashLsh {
     val exploded = shingled.select(col(idCol),
       explode(graft.functions.MinHashBands.minhashBands(
         col("shingle_set"), bands, rowsPerBand)).as("band"))
-    val capped = capBuckets(exploded, maxBucket)
+    val capped = CapFold.capBuckets(exploded, Seq("band"), maxBucket)
     val a = capped.as("a")
     val b = capped.as("b")
     a.join(b, col("a.band") === col("b.band") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .distinct()
   }
-
-  /** Drop rows in band buckets larger than `cap` — via a combinable
-    * `groupBy(band).count` joined back, never a window over band: a
-    * degenerate (boilerplate) bucket is exactly the case the cap exists
-    * for, and a window would buffer that whole bucket in ONE task before
-    * the cap could drop it. The surviving-bucket side is one row per band. */
-  private def capBuckets(exploded: DataFrame, maxBucket: Option[Int]): DataFrame =
-    maxBucket match {
-      case Some(cap) =>
-        val ok = exploded.groupBy(col("band"))
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") <= cap)
-          .drop("__bsz")
-        exploded.join(ok, "band")
-      case None => exploded
-    }
 
   /** Full pipeline: near-dup pairs with exact shingle-Jaccard >= threshold.
     * Signature length is bands x rowsPerBand. */

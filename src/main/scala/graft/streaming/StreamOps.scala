@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -23,15 +23,6 @@ object StreamOps {
                      windowLength: String, keys: Seq[String]): DataFrame =
     df.withWatermark(tsCol, watermarkDelay)
       .groupBy((window(col(tsCol), windowLength) +: keys.map(col)): _*)
-      .agg(count(lit(1)).as("n_events"))
-
-  /** Sliding variant: `slide` < `windowLength` means each event lands in
-    * windowLength/slide windows (fan-out is bounded and known). */
-  def slidingCounts(df: DataFrame, tsCol: String, watermarkDelay: String,
-                    windowLength: String, slide: String,
-                    keys: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, watermarkDelay)
-      .groupBy((window(col(tsCol), windowLength, slide) +: keys.map(col)): _*)
       .agg(count(lit(1)).as("n_events"))
 
   /** Session windows with a gap — the built-in state-store implementation
@@ -200,23 +191,19 @@ object StreamOps {
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
 
-  private def foreachBatchSink(df: DataFrame, checkpoint: String)(
+  /** Run `body` on every micro-batch of `df`, checkpointed at
+    * `checkpoint` — the one streaming entry for this object's per-batch
+    * bodies ([[overwritePartition]], [[dedupIndexBatch]],
+    * [[annIndexBatch]], [[ivmBatch]], [[cmsBatch]], [[driftBatch]], ...).
+    * Each body is keyed by `batchId`, so a micro-batch replayed from the
+    * checkpoint replaces its own output instead of duplicating it. */
+  def sink(df: DataFrame, checkpoint: String)(
       body: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch(body)
       .start()
-
-  /** Idempotent foreachBatch write: data lands in a `batch_id=N` partition
-    * with per-partition overwrite, so a replayed micro-batch (checkpoint
-    * recovery) overwrites its own partition instead of duplicating rows —
-    * exactly-once on a plain parquet sink without a transaction log. */
-  def exactlyOnceParquet(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(df, checkpoint) { (batch, batchId) =>
-      overwritePartition(batch, "batch_id", batchId, path)
-    }
 
   /** One micro-batch of continuous dedup-index maintenance (the
     * [[graft.similarity.BucketedIndex.sinkBatch]] replay contract):
@@ -242,24 +229,6 @@ object StreamOps {
       DedupIndex.dedupBatch(batch.sparkSession, indexPath, batch, idCol,
           textCol, threshold, maxBucket)
         .filter(col("corpus_id") =!= col("batch_id"))
-    }
-
-  /** Continuous ingestion dedup: every micro-batch is near-dup-checked
-    * against the persistent index and then becomes part of it — the
-    * streaming twin of the q85 lifecycle (per-batch cost O(batch), the
-    * indexed corpus never re-read or re-shingled). Match output is
-    * exactly-once; index appends are idempotent (see
-    * [[dedupIndexBatch]]). */
-  def dedupIndexSink(docs: DataFrame, idCol: String, textCol: String,
-                     indexPath: String, matchesPath: String, checkpoint: String,
-                     threshold: Double = 0.5, maxBucket: Option[Int] = None,
-                     compactEveryNBatches: Int = 0,
-                     compactTargetFileBytes: Long = 128L * 1024 * 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(docs, checkpoint) { (batch, batchId) =>
-      dedupIndexBatch(batch, batchId, idCol, textCol, indexPath,
-        matchesPath, threshold, maxBucket, compactEveryNBatches,
-        compactTargetFileBytes)
     }
 
   /** One micro-batch of continuous MEDIA dedup-index maintenance (the
@@ -288,26 +257,6 @@ object StreamOps {
         .filter(col("corpus_id") =!= col("batch_id"))
     }
 
-  /** Continuous multimodal ingestion dedup: every micro-batch of media
-    * fingerprints is Hamming-checked against the persistent banded index
-    * and then becomes part of it — the streaming twin of q382/q385's
-    * batch dedup (per-batch cost O(batch); the corpus is never
-    * re-decoded or re-hashed). Match output is exactly-once; index
-    * appends are idempotent (see [[mediaDedupIndexBatch]]). */
-  def mediaDedupIndexSink(codes: DataFrame, idCol: String, codeCol: String,
-                          indexPath: String, matchesPath: String,
-                          checkpoint: String, maxHamming: Int,
-                          nBands: Int = 4, bandBits: Int = 16,
-                          maxBucket: Option[Int] = None,
-                          compactEveryNBatches: Int = 0,
-                          compactTargetFileBytes: Long = 128L * 1024 * 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(codes, checkpoint) { (batch, batchId) =>
-      mediaDedupIndexBatch(batch, batchId, idCol, codeCol, indexPath,
-        matchesPath, maxHamming, nBands, bandBits, maxBucket,
-        compactEveryNBatches, compactTargetFileBytes)
-    }
-
   /** One micro-batch of continuous ANN-index serving (the
     * [[graft.similarity.BucketedIndex.sinkBatch]] replay contract):
     * `batch` carries (id, vector) rows, top-k-matched against the
@@ -329,25 +278,6 @@ object StreamOps {
         compactEveryNBatches, compactTargetFileBytes) {
       AnnIndex.queryBatch(batch.sparkSession, indexPath, batch, idCol,
         vecCol, k, maxBucket)
-    }
-
-  /** Continuous embedding ingestion + similarity serving: every
-    * micro-batch is top-k-matched against the persistent ANN index and
-    * then becomes part of it — the streaming twin of the q399 lifecycle
-    * (per-batch cost O(batch); the indexed corpus is never re-banded).
-    * Match output is exactly-once; index appends are idempotent (see
-    * [[annIndexBatch]]). */
-  def annIndexSink(vectors: DataFrame, idCol: String, vecCol: String,
-                   indexPath: String, matchesPath: String, checkpoint: String,
-                   k: Int, nTables: Int = 8, nBits: Int = 6, dim: Int = 64,
-                   seed: Long = 42L, maxBucket: Option[Int] = None,
-                   compactEveryNBatches: Int = 0,
-                   compactTargetFileBytes: Long = 128L * 1024 * 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(vectors, checkpoint) { (batch, batchId) =>
-      annIndexBatch(batch, batchId, idCol, vecCol, indexPath, matchesPath,
-        k, nTables, nBits, dim, seed, maxBucket, compactEveryNBatches,
-        compactTargetFileBytes)
     }
 
   /** Per-micro-batch count-min-sketch maintenance — the streaming twin of
@@ -377,27 +307,11 @@ object StreamOps {
   def ivmBatch(delta: DataFrame, batchId: Long, statePath: String): Unit =
     overwritePartition(delta, "micro_batch_id", batchId, statePath)
 
-  /** Continuous view maintenance over a stream via [[ivmBatch]]. */
-  def ivmSink(df: DataFrame, toDelta: DataFrame => DataFrame,
-              statePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(df, checkpoint) { (batch, batchId) =>
-      ivmBatch(toDelta(batch), batchId, statePath)
-    }
-
   /** The current view: fold every stored per-batch delta partition. */
   def ivmView(spark: org.apache.spark.sql.SparkSession, statePath: String,
               keys: Seq[String]): DataFrame =
     graft.transform.Ivm.merge(
       spark.read.parquet(statePath).drop("micro_batch_id"), keys)
-
-  /** Continuous CMS over a token stream via [[cmsBatch]]. */
-  def cmsSink(tokens: DataFrame, tokenCol: String, cmsPath: String,
-              checkpoint: String, depth: Int = 4, width: Int = 256)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(tokens, checkpoint) { (batch, batchId) =>
-      cmsBatch(batch, batchId, tokenCol, cmsPath, depth, width)
-    }
 
   /** The live sketch: counter-wise sum over all batch partitions. */
   def cmsRead(spark: org.apache.spark.sql.SparkSession, cmsPath: String): DataFrame =
@@ -446,14 +360,6 @@ object StreamOps {
     overwritePartition(metrics, "micro_batch_id", batchId, metricsPath)
   }
 
-  /** Continuous drift monitoring over a token stream via [[driftBatch]]. */
-  def driftSink(tokens: DataFrame, tokenCol: String, baselinePath: String,
-                metricsPath: String, checkpoint: String, buckets: Int = 256)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(tokens, checkpoint) { (batch, batchId) =>
-      driftBatch(batch, batchId, tokenCol, baselinePath, metricsPath, buckets)
-    }
-
   /** Watermarked stream-stream inner join within a time bound: each left
     * row matches right rows with the same key whose event time lies in
     * [left.ts - tolerance, left.ts] (click-to-impression attribution
@@ -475,23 +381,6 @@ object StreamOps {
       "inner")
       .drop(r(key))
   }
-
-  /** Split one input stream into clean/quarantine sinks inside a single
-    * foreachBatch (one source read per micro-batch, exactly-once via
-    * checkpoint + idempotent parquet append). */
-  def foreachBatchSplit(df: DataFrame, violation: Column,
-                        cleanPath: String, quarantinePath: String,
-                        checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    foreachBatchSink(df, checkpoint) { (batch, _) =>
-      val tagged = batch.withColumn("__bad", violation).persist()
-      try {
-        tagged.filter(!col("__bad")).drop("__bad")
-          .write.mode("append").parquet(cleanPath)
-        tagged.filter(col("__bad")).drop("__bad")
-          .write.mode("append").parquet(quarantinePath)
-      } finally { tagged.unpersist(); () }
-    }
 }
 
 /** StreamingQueryListener bridge for per-batch metrics (reference's metric

@@ -214,8 +214,8 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("id", "text"),
       "id", "text", index)
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.dedupIndexSink(in.toDF().toDF("id", "text"),
-      "id", "text", index, matches, cp)
+    val q = StreamOps.sink(in.toDF().toDF("id", "text"), cp)(
+      StreamOps.dedupIndexBatch(_, _, "id", "text", index, matches))
     try {
       in.addData((20L, "alpha beta gamma delta epsilon zeta eta"))
       q.processAllAvailable()
@@ -237,8 +237,9 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("id", "text"),
       "id", "text", index)
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.dedupIndexSink(in.toDF().toDF("id", "text"),
-      "id", "text", index, matches, cp, compactEveryNBatches = 3)
+    val q = StreamOps.sink(in.toDF().toDF("id", "text"), cp)(
+      StreamOps.dedupIndexBatch(_, _, "id", "text", index, matches,
+        compactEveryNBatches = 3))
     try {
       (0 until 6).foreach { b =>
         in.addData((100L + b, s"alpha beta gamma delta epsilon zeta run$b"))
@@ -318,9 +319,9 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, vec(7L))).toDF("vec_id", "emb"), "vec_id", "emb", index,
       nTables = 4, nBits = 4, dim = 8)
     val in = MemoryStream[(Long, Array[Double])](spark)
-    val q = StreamOps.annIndexSink(in.toDF().toDF("vec_id", "emb"),
-      "vec_id", "emb", index, matches, cp, k = 2, nTables = 4, nBits = 4,
-      dim = 8, maxBucket = Some(1000))
+    val q = StreamOps.sink(in.toDF().toDF("vec_id", "emb"), cp)(
+      StreamOps.annIndexBatch(_, _, "vec_id", "emb", index, matches, k = 2,
+        nTables = 4, nBits = 4, dim = 8, maxBucket = Some(1000)))
     try {
       in.addData((20L, vec(7L))) // exact twin of the base corpus vector
       q.processAllAvailable()
@@ -361,8 +362,8 @@ class StreamingSpec extends SparkSpec {
     val root = tmpDir("cms")
     val (path, cp) = (root + "/cms", root + "/cp")
     val in = MemoryStream[String](spark)
-    val q = StreamOps.cmsSink(in.toDF().toDF("tok"), "tok", path, cp,
-      depth = 4, width = 16)
+    val q = StreamOps.sink(in.toDF().toDF("tok"), cp)(
+      StreamOps.cmsBatch(_, _, "tok", path, depth = 4, width = 16))
     try {
       in.addData("a", "a", "b")
       q.processAllAvailable()
@@ -394,7 +395,9 @@ class StreamingSpec extends SparkSpec {
       def toDelta(b: org.apache.spark.sql.DataFrame) =
         Ivm.viewDelta(Ivm.inserts(b.toDF("k", "v")), Seq("k"),
           Seq("sv" -> col("v")))
-      val q = StreamOps.ivmSink(in.toDF().toDF("k", "v"), toDelta, path, cp)
+      val q = StreamOps.sink(in.toDF().toDF("k", "v"), cp) { (b, id) =>
+        StreamOps.ivmBatch(toDelta(b), id, path)
+      }
       try {
         in.addData(("a", 1L), ("b", 5L)); q.processAllAvailable()
         in.addData(("a", 2L)); q.processAllAvailable()
@@ -422,8 +425,8 @@ class StreamingSpec extends SparkSpec {
     StreamOps.unigramHistogram(baseToks.toDF("tok"), "tok", buckets = 16)
       .write.parquet(basep)
     val in = MemoryStream[String](spark)
-    val q = StreamOps.driftSink(in.toDF().toDF("tok"), "tok", basep, metrics,
-      cp, buckets = 16)
+    val q = StreamOps.sink(in.toDF().toDF("tok"), cp)(
+      StreamOps.driftBatch(_, _, "tok", basep, metrics, buckets = 16))
     try {
       in.addData(Seq("a", "b", "c", "d", "e"): _*) // same distribution
       q.processAllAvailable()
@@ -448,7 +451,8 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)](spark)
     val out = tmpDir("eop") + "/t"
     val cp = tmpDir("eop") + "/cp"
-    val q = StreamOps.exactlyOnceParquet(in.toDF().toDF("id", "v"), out, cp)
+    val q = StreamOps.sink(in.toDF().toDF("id", "v"), cp)(
+      StreamOps.overwritePartition(_, "batch_id", _, out))
     try {
       in.addData((1L, "a"))
       q.processAllAvailable()
@@ -481,7 +485,9 @@ class StreamingSpec extends SparkSpec {
       val out = tmpDir("eopr") + "/t"
       val cp = tmpDir("eopr") + "/cp"
       val df = in.toDF().toDF("id", "v")
-      val q1 = StreamOps.exactlyOnceParquet(df, out, cp)
+      def start() = StreamOps.sink(df, cp)(
+        StreamOps.overwritePartition(_, "batch_id", _, out))
+      val q1 = start()
       try {
         in.addData((1L, "a")); q1.processAllAvailable()
         in.addData((2L, "b")); q1.processAllAvailable()
@@ -497,7 +503,7 @@ class StreamingSpec extends SparkSpec {
       // ...and its Hadoop LocalFS .crc sidecar, or the replayed commit's
       // atomic re-create trips the concurrent-writer guard
       new java.io.File(commits, s".${last.getName}.crc").delete()
-      val q2 = StreamOps.exactlyOnceParquet(df, out, cp)
+      val q2 = start()
       try {
         q2.processAllAvailable() // replays batch 1 from the retained source
         in.addData((3L, "c"))
@@ -510,21 +516,6 @@ class StreamingSpec extends SparkSpec {
       back.select("batch_id").distinct().as[Long].collect().sorted shouldBe
         Array(0L, 1L, 2L)
     }
-  }
-
-  test("foreachBatchSplit routes violations to quarantine") {
-    val in = MemoryStream[(Long, Double)](spark)
-    val clean = tmpDir("fbs") + "/clean"
-    val quar = tmpDir("fbs") + "/quar"
-    val cp = tmpDir("fbs") + "/cp"
-    val q = StreamOps.foreachBatchSplit(
-      in.toDF().toDF("id", "amount"), col("amount") < 0, clean, quar, cp)
-    try {
-      in.addData((1L, 5.0), (2L, -2.0), (3L, 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.read.parquet(clean).count() shouldBe 2
-    spark.read.parquet(quar).select("id").as[Long].collect() shouldBe Array(2L)
   }
 
   test("streaming near-dup: band collisions flag later near-identical docs") {

@@ -9,6 +9,12 @@ shuffle bytes grew >1.5x (above a 16 MiB noise floor), or whose job or
 stage count grew >1.5x, almost certainly changed plan shape — fail the
 round recording until it is adjudicated.
 
+The summary line also sums `jobs`, `stages` and `build_s` (seconds spent
+building the DataFrame, on the driver) over the queries both records
+carry without error, old -> new — the one-line effect of a change that
+adds or removes Spark jobs (an eager pin is one job at build time).
+build_s is wall time: read it with the records' load annotations.
+
 Usage: tools/bench_compare.py OLD.json NEW.json
   exit 0 = no regression; exit 1 = regressions listed on stdout.
 
@@ -30,6 +36,33 @@ COUNT_KEYS = ("jobs", "stages")  # no floor: one extra job is a plan change
 def load(path):
     with open(path) as f:
         return json.load(f)
+
+
+SUM_KEYS = ("jobs", "stages", "build_s")
+
+
+def shared_sums(oq, nq):
+    """{key: (old_sum, new_sum)} over queries both records carry without
+    error; a key counts only where both records have it."""
+    sums = {}
+    for name in sorted(set(oq) & set(nq)):
+        o, n = oq[name], nq[name]
+        if not (isinstance(o, dict) and isinstance(n, dict)) \
+                or "error" in o or "error" in n:
+            continue
+        for key in SUM_KEYS:
+            if key in o and key in n:
+                so, sn = sums.get(key, (0, 0))
+                sums[key] = (so + o[key], sn + n[key])
+    return sums
+
+
+def sums_line(sums):
+    def fmt(key, v):
+        return f"{v:.1f}" if key == "build_s" else f"{v:,}"
+    parts = [f"{key} {fmt(key, o)} -> {fmt(key, n)}"
+             for key, (o, n) in sums.items()]
+    return "; ".join(parts) if parts else "no shared counters"
 
 
 def main(old_path, new_path):
@@ -124,13 +157,15 @@ def main(old_path, new_path):
         for s in suspicious_walltime[:20]:
             print(f"  {s}")
 
+    shared = sums_line(shared_sums(oq, nq))
     if failures:
+        print(f"shared queries: {shared}")
         print(f"BENCH REGRESSION ({len(failures)}):")
         for f in failures:
             print(f"  {f}")
         return 1
     print(f"bench_compare OK: {len(nq)} queries, no byte/job/stage regressions "
-          f"vs {old_path}")
+          f"vs {old_path}; shared queries: {shared}")
     return 0
 
 
