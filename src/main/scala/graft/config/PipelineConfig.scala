@@ -51,8 +51,7 @@ final case class PipelineConfig(env: String = "dev",
   * "<kind>-index-compact" or "<kind>-index-rebucket" (O(index) rewrite to
   * `buckets` when the corpus outgrows the build-time layout) for kind
   * dedup, media or ann. Stateful stores commit through
-  * [[graft.core.Commit]] (`publish` = "rename" or "pointer"). `agg` and
-  * `publish` match in any case. */
+  * [[graft.core.Commit]]'s one protocol. `agg` matches in any case. */
 final case class MaintenanceConfig(@JsonProperty(required = true) `type`: String,
                                    @JsonProperty(required = true) path: String,
                                    columns: Seq[String] = Seq.empty,
@@ -67,7 +66,6 @@ final case class MaintenanceConfig(@JsonProperty(required = true) `type`: String
                                    agg: String = "group",
                                    base: Option[String] = None,
                                    k: Int = 10,
-                                   publish: String = "rename",
                                    buckets: Int = 0,
                                    keep: Int = 2) {
   def targetFileBytes: Long = targetFileMb.toLong * 1024 * 1024

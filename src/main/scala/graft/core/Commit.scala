@@ -10,38 +10,29 @@ import org.apache.spark.sql.SparkSession
   * generation snapshots (the IVM `min`/`topk` folds). Every on-disk name
   * the protocol uses is spelled here and nowhere else.
   *
-  * Two publish modes, chosen per task:
-  *  - `rename` (POSIX/HDFS default): data is written under a hidden temp
-  *    name and moved into place with one directory rename, so a published
-  *    unit is its own commit record.
-  *  - `pointer` (object stores without atomic directory rename): data
-  *    lands under a deterministic name a rerun overwrites in place, and
-  *    ONE create-no-overwrite file under `_commits/` (a conditional PUT)
-  *    makes it visible; readers skip data without one, so a torn write is
-  *    never read.
+  * Data lands under a deterministic name a rerun overwrites in place, and
+  * ONE create-no-overwrite file under `_commits/` (a conditional PUT on an
+  * object store) makes it visible; readers skip data without one, so a
+  * torn write is never read. No step needs an atomic directory rename, so
+  * the protocol holds on POSIX, HDFS and object stores alike.
   *
-  * Either way a crash leaves nothing visible (the rerun redoes the batch)
-  * or the whole batch (the rerun skips it). Stores are single-writer: a
-  * failed conditional create means another writer committed concurrently
-  * and is surfaced, never merged. On plain S3A without conditional-create
-  * support that create degrades to check-then-act, so lost-race DETECTION
-  * is best-effort there — the single-writer contract is the boundary.
+  * A crash leaves nothing visible (the rerun redoes the batch) or the
+  * whole batch (the rerun skips it). Stores are single-writer: a failed
+  * conditional create means another writer committed concurrently and is
+  * surfaced, never merged. On plain S3A without conditional-create support
+  * that create degrades to check-then-act, so lost-race DETECTION is
+  * best-effort there — the single-writer contract is the boundary.
+  *
+  * Stores written by the retired rename protocol still read: a
+  * `batch-<key>` unit or `state-<n>` generation is its own commit record,
+  * and its hidden `.tmp-*`/`.state-tmp-*` leftovers are never read.
   */
 object Commit {
 
-  /** Parses a config publish mode, in any case: true for "pointer",
-    * false for "rename". */
-  def pointerMode(publish: String): Boolean = publish.toLowerCase match {
-    case "rename"  => false
-    case "pointer" => true
-    case other => throw new IllegalArgumentException(
-      s"unknown publish mode '$other' (rename/pointer)")
-  }
-
   private val Commits = "_commits"
   private val Applied = "_applied"
-  private val UnitPrefix = "batch-"
-  private val PointerUnitPrefix = "batch-p-"
+  private val RenamedUnitPrefix = "batch-" // rename-era units, read only
+  private val UnitPrefix = "batch-p-"
   private val StatePrefix = "state-"
   private val BatchKeyFile = "_batch_key"
 
@@ -89,20 +80,13 @@ object Commit {
     private def committed: Set[String] =
       list(new Path(root, Commits)).map(_.getPath.getName).toSet
 
-    /** Write one unit through `write` and return its home: under rename
-      * `tmp`, then one rename to `dest`; under pointer `data`, unread until
-      * its commit. A crashed attempt's leftovers are cleared first. */
-    private def unit(pointer: Boolean, tmp: Path, dest: Path, data: Path)
-                    (write: String => Unit): Path =
-      if (pointer) { fs.delete(data, true); write(data.toString); data }
-      else {
-        fs.delete(tmp, true)
-        write(tmp.toString)
-        fs.delete(dest, true) // stale partial unit from a crashed attempt
-        if (!fs.rename(tmp, dest)) throw new IllegalStateException(
-          s"atomic publish failed: $tmp -> $dest")
-        dest
-      }
+    /** Write one unit through `write` at `data`, unread until its commit;
+      * a crashed attempt's leftovers under the same name are cleared first. */
+    private def unit(data: Path)(write: String => Unit): Path = {
+      fs.delete(data, true)
+      write(data.toString)
+      data
+    }
 
     /** Create `_commits/<name>` holding `text`, never overwriting: a file
       * already there means another writer committed `name` first.
@@ -114,7 +98,7 @@ object Commit {
       catch {
         case e: java.io.IOException if fs.exists(marker) =>
           onLost
-          throw new IllegalStateException(s"pointer publish lost a commit " +
+          throw new IllegalStateException(s"publish lost a commit " +
             s"race at $marker — another writer committed concurrently; " +
             "stores are single-writer", e)
       }
@@ -134,37 +118,35 @@ object Commit {
         .filter(k => fs.exists(new Path(root, s"$column=$k")))
         .getOrElse(batchKeyFor(src))
 
-    /** Publish the rows `write` stores in the dir it is given as table
-      * `table` ("" = the store root) of batch `key`: `<table>/batch-<key>`
-      * (rename) or `<table>/batch-p-<key>` (pointer, visible after
-      * [[commitBatch]]). Returns that dir. */
-    def putBatch(table: String, key: String, publish: String)
-                (write: String => Unit): String =
-      unit(pointerMode(publish), new Path(dir(table), s".tmp-$key"),
-        new Path(dir(table), s"$UnitPrefix$key"),
-        new Path(dir(table), s"$PointerUnitPrefix$key"))(write).toString
+    /** Write the rows `write` stores in the dir it is given as table
+      * `table` ("" = the store root) of batch `key`: `<table>/batch-p-<key>`,
+      * visible after [[commitBatch]]. A rename-era `batch-<key>` unit of
+      * the same key is a crashed batch's partial output and goes first, so
+      * the batch is never read twice. Returns the data dir. */
+    def putBatch(table: String, key: String)(write: String => Unit): String = {
+      fs.delete(new Path(dir(table), s"$RenamedUnitPrefix$key"), true)
+      unit(new Path(dir(table), s"$UnitPrefix$key"))(write).toString
+    }
 
-    /** Make batch `key` visible once all its tables are put: a rename unit
-      * is its own commit; a pointer batch needs its `_commits/<key>`. */
-    def commitBatch(key: String, publish: String): Unit =
-      if (pointerMode(publish)) commit(key, "")(())
+    /** Make batch `key` visible once all its tables are put. */
+    def commitBatch(key: String): Unit = commit(key, "")(())
 
-    /** True iff batch `key` is fully published: its rename unit of
-      * `lastTable` (the table put last) exists, or its pointer commit. */
+    /** True iff batch `key` is fully published: its `_commits/<key>`, or
+      * a rename-era unit of `lastTable` (the table put last). */
     def applied(key: String, lastTable: String = ""): Boolean =
-      fs.exists(new Path(dir(lastTable), s"$UnitPrefix$key")) ||
+      fs.exists(new Path(dir(lastTable), s"$RenamedUnitPrefix$key")) ||
         fs.exists(new Path(new Path(root, Commits), key))
 
     /** The readable data paths of `table` ("" = the store root): root-level
-      * files (plain appends), rename units and committed pointer units —
-      * never a hidden temp dir or an uncommitted unit. Fails on none. */
+      * files (plain appends), committed units and rename-era units — never
+      * a hidden temp dir or an uncommitted unit. Fails on none. */
     def published(table: String = ""): Seq[String] = {
       val commits = committed
       val paths = list(dir(table)).filter { st =>
         val n = st.getPath.getName
         !n.startsWith(".") && !n.startsWith("_") &&
-          !(st.isDirectory && n.startsWith(PointerUnitPrefix) &&
-            !commits.contains(n.stripPrefix(PointerUnitPrefix)))
+          !(st.isDirectory && n.startsWith(UnitPrefix) &&
+            !commits.contains(n.stripPrefix(UnitPrefix)))
       }.map(_.getPath.toString)
       if (paths.isEmpty) throw new IllegalStateException(
         s"no published batches under ${dir(table)}")
@@ -177,8 +159,8 @@ object Commit {
     def carryAppliedTo(to: String): Unit = {
       val dst = new Store(fs, new Path(to))
       val renameKeys = list(root).map(_.getPath.getName)
-        .filter(n => n.startsWith(UnitPrefix) && !n.startsWith(PointerUnitPrefix))
-        .map(_.stripPrefix(UnitPrefix))
+        .filter(n => n.startsWith(RenamedUnitPrefix) && !n.startsWith(UnitPrefix))
+        .map(_.stripPrefix(RenamedUnitPrefix))
       (committed ++ renameKeys).foreach(k => if (!dst.applied(k)) dst.commit(k, "")(()))
       val legacy = new Path(root, Applied)
       if (fs.exists(legacy))
@@ -187,26 +169,26 @@ object Commit {
 
     // Generation snapshots: each applied batch publishes a COMPLETE next
     // state plus a `_batch_key` file, so the applied record travels inside
-    // the unit. Rename publishes `state-<n>`; pointer writes `state-p-<n>-
-    // <keyhash>` and commits `_commits/<n>` holding that name. A flat
-    // `state` dir from before snapshots reads as the base.
+    // the unit: the data goes to `state-p-<n>-<keyhash>` and `_commits/<n>`
+    // holds that name. Rename-era `state-<n>` generations, and a flat
+    // `state` dir from before snapshots (the base), still read.
 
-    private case class Gen(n: Int, data: Path, pointer: Option[Path])
+    private case class Gen(n: Int, data: Path, record: Option[Path])
 
     private def generations: Seq[Gen] = {
       val renamed = list(root)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(StatePrefix))
         .flatMap(s => s.getPath.getName.stripPrefix(StatePrefix).toIntOption
           .map(Gen(_, s.getPath, None)))
-      val pointed = list(new Path(root, Commits)).flatMap(s =>
+      val recorded = list(new Path(root, Commits)).flatMap(s =>
         s.getPath.getName.toIntOption.map(n =>
           Gen(n, new Path(root, readText(fs, s.getPath).trim), Some(s.getPath))))
-      renamed ++ pointed
+      renamed ++ recorded
     }
 
-    // a pointer whose data dir is gone is not a readable generation
+    // a commit record whose data dir is gone is not a readable generation
     private def live: Seq[Gen] =
-      generations.filter(g => g.pointer.isEmpty || fs.exists(g.data))
+      generations.filter(g => g.record.isEmpty || fs.exists(g.data))
 
     /** The newest published state directory, if any. */
     def current: Option[String] =
@@ -226,22 +208,19 @@ object Commit {
     }
 
     /** Publish the state `write` stores in the directory it is given as
-      * the next generation, folding in the batch at `src`. A lost pointer
+      * the next generation, folding in the batch at `src`. A lost commit
       * race means the fold read stale state; retrying would silently drop
       * the other writer's batch, so it surfaces. */
-    def publishState(src: String, publish: String)(write: String => Unit): Unit = {
+    def publishState(src: String)(write: String => Unit): Unit = {
       val key = batchKeyFor(src)
       val n = live.map(_.n).maxOption.getOrElse(0) + 1
-      val pointer = pointerMode(publish)
-      // the pointer data dir is unique per (n, batch): a crashed attempt
-      // left the SAME name un-pointed, so the rerun overwrites it in place
-      val data = unit(pointer, new Path(root, s".state-tmp-$key"),
-          new Path(root, f"$StatePrefix$n%06d"),
-          new Path(root, f"${StatePrefix}p-$n%06d-${sha6(key)}")) { d =>
+      // the data dir is unique per (n, batch): a crashed attempt left the
+      // SAME name uncommitted, so the rerun overwrites it in place
+      val data = unit(new Path(root, f"${StatePrefix}p-$n%06d-${sha6(key)}")) { d =>
         write(d)
         writeText(fs, new Path(d, BatchKeyFile), key)
       }
-      if (pointer) commit(f"$n%06d", data.getName)(fs.delete(data, true))
+      commit(f"$n%06d", data.getName)(fs.delete(data, true))
     }
 
     /** Retire all but the newest `keep` (at least 1) generations; older
@@ -256,7 +235,7 @@ object Commit {
           val marker = new Path(new Path(root, Applied), readText(fs, bk))
           if (!fs.exists(marker)) writeText(fs, marker, "")
         }
-        g.pointer.foreach(fs.delete(_, false))
+        g.record.foreach(fs.delete(_, false))
         fs.delete(g.data, true)
       }
   }

@@ -60,13 +60,11 @@ object IngestionRunner {
   private type MaintenanceTask = SparkSession => Unit
 
   /** Resolve config task `m` to the call that runs it. Every config error
-    * (unknown `type`, `publish` or `agg`; missing `source`, `keys`,
-    * `columns` or `buckets`) surfaces here, before anything runs. */
-  private def maintenanceTask(m: MaintenanceConfig): MaintenanceTask = {
-    Commit.pointerMode(m.publish)
+    * (unknown `type` or `agg`; missing `source`, `keys`, `columns` or
+    * `buckets`) surfaces here, before anything runs. */
+  private def maintenanceTask(m: MaintenanceConfig): MaintenanceTask =
     tasks.getOrElse(m.`type`.toLowerCase, throw new IllegalArgumentException(
       s"unknown maintenance type '${m.`type`}' (${tasks.keys.toSeq.sorted.mkString("/")})"))(m)
-  }
 
   private def source(m: MaintenanceConfig, what: String): String =
     m.source.getOrElse(throw new IllegalArgumentException(
@@ -93,7 +91,7 @@ object IngestionRunner {
           "dedup-index needs columns=[<idColumn>, <textColumn>]")
         appendOnce(m.path, src)(DedupIndex.batchApplied) { (spark, key) =>
           DedupIndex.appendAtomic(spark.read.parquet(src), m.columns(0),
-            m.columns(1), m.path, key, publish = m.publish)
+            m.columns(1), m.path, key)
         }
       },
       // fold a batch's per-column profile into the monoid profile store
@@ -103,7 +101,7 @@ object IngestionRunner {
         require(m.columns.nonEmpty, "profile needs columns=[<col>, ...]")
         appendOnce(m.path, src)(ProfileStore.batchApplied) { (spark, key) =>
           ProfileStore.appendAtomic(spark.read.parquet(src), m.columns,
-            m.path, key, publish = m.publish)
+            m.path, key)
         }
       },
       "profile-compact" -> (m => spark => ProfileStore.compact(spark, m.path))
@@ -134,10 +132,10 @@ object IngestionRunner {
       case "group" => Ivm.foldGroup(_, src, m.path, m.keys, m.sums)
       case "min" =>
         needColumns("<valueColumn>")
-        Ivm.foldMin(_, src, m.path, m.keys, m.columns.head, m.base, m.publish)
+        Ivm.foldMin(_, src, m.path, m.keys, m.columns.head, m.base)
       case "topk" =>
         needColumns("<orderColumn>, <tiebreak>...")
-        Ivm.foldTopK(_, src, m.path, m.keys, m.columns, m.k, m.publish)
+        Ivm.foldTopK(_, src, m.path, m.keys, m.columns, m.k)
       case other => throw new IllegalArgumentException(
         s"unknown ivm agg '$other' (group/min/topk)")
     }

@@ -3,10 +3,10 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, StringType}
+import org.apache.spark.sql.types.{DataType, DecimalType}
 import org.apache.spark.sql.types.Decimal
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,19 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle is unchanged). Terms with c == 1 contribute ln(1) = 0 and are
   * skipped. Null elements are ignored; empty/all-null arrays yield 0.
   */
-case class EntropyTermSum(child: Expression) extends UnaryExpression {
+case class EntropyTermSum(child: Expression) extends StringArrayInput {
 
   override def dataType: DataType = DecimalType(27, 12)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"entropy_term_sum needs array<string>, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any =
     EntropyTermSum.compute(input.asInstanceOf[ArrayData])

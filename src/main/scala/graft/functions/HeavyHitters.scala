@@ -80,9 +80,4 @@ object HeavyHitters {
 
   /** Column-API entry point: heavyHitters(stringColumn) -> array<struct>. */
   def heavyHitters(c: Column): Column = udaf(aggregator).apply(c)
-
-  /** Exact reference for tests/small data. */
-  def exactTopK(items: Seq[String], k: Int): Seq[(String, Long)] =
-    items.groupBy(identity).view.mapValues(_.size.toLong).toSeq
-      .sortBy { case (i, c) => (-c, i) }.take(k)
 }

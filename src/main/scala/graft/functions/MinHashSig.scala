@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -27,19 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale: per-row, no shuffle, constant memory (k longs).
   */
-case class MinHashSig(child: Expression, perms: Int) extends UnaryExpression {
+case class MinHashSig(child: Expression, perms: Int) extends StringArrayInput {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig needs array<string>, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any =
     MinHashSig.compute(input.asInstanceOf[ArrayData], perms)
@@ -142,19 +132,9 @@ object MinHashSig {
   * shingle set is null, matching `||` null propagation in the oracle.
   */
 case class MinHashBands(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
+    extends StringArrayInput {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_bands needs array<string>, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any =
     MinHashBands.compute(input.asInstanceOf[ArrayData], bands, rowsPerBand)

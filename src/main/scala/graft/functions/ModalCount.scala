@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Occurrence count of the most frequent element in an array of strings,
@@ -22,19 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * a narrow column read. Null elements are ignored; an empty (or
   * all-null) array yields 0.
   */
-case class ModalCount(child: Expression) extends UnaryExpression {
+case class ModalCount(child: Expression) extends StringArrayInput {
 
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"modal_count needs array<string>, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any =
     java.lang.Long.valueOf(ModalCount.compute(input.asInstanceOf[ArrayData]))

@@ -3,10 +3,10 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 64-bit SimHash over an array of token strings, as a native Catalyst
   * expression with real codegen (evaluates via one static call from the
@@ -17,19 +17,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Near-duplicate docs differ in a few bits — pair search is then
   * `bit_count(a ^ b) <= k` with built-in expressions.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends StringArrayInput {
 
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash64 needs array<string>, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any =
     java.lang.Long.valueOf(SimHash64.compute(input.asInstanceOf[ArrayData]))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -14,19 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted per element and dominated MinHash runtime. Short inputs
   * (< n tokens) yield an empty array, matching the guarded HOF form.
   */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgrams(child: Expression, n: Int) extends StringArrayInput {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_ngrams needs array<string>, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any =
     WordNgrams.compute(input.asInstanceOf[ArrayData], n)

@@ -60,15 +60,15 @@ object ProfileStore {
     graft.core.Commit(spark, stateDir).applied(batchKey)
 
   /** CRASH-ATOMIC batch append: the profile rows are one
-    * [[graft.core.Commit]] keyed unit (`publish` = "rename" or "pointer"),
-    * so no crash window duplicates a batch's rows in the fold. The
-    * maintenance-task twin of [[append]]. */
+    * [[graft.core.Commit]] keyed unit, visible only once its `_commits`
+    * record exists, so no crash window duplicates a batch's rows in the
+    * fold. The maintenance-task twin of [[append]]. */
   def appendAtomic(df: DataFrame, columns: Seq[String], stateDir: String,
-                   batchKey: String, publish: String = "rename"): Unit = {
+                   batchKey: String): Unit = {
     val store = graft.core.Commit(df.sparkSession, stateDir)
-    store.putBatch("", batchKey, publish)(
+    store.putBatch("", batchKey)(
       profile(df, columns).write.mode("overwrite").parquet(_))
-    store.commitBatch(batchKey, publish)
+    store.commitBatch(batchKey)
   }
 
   /** Fold all stored batch profiles into the current table profile.

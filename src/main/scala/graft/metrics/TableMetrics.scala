@@ -21,9 +21,6 @@ object TableMetrics {
   final case class DistinctCount(column: String, name: String) extends MetricSpec {
     def expr: Column = count_distinct(col(column)).cast("long").as(name)
   }
-  final case class ApproxDistinctCount(column: String, name: String) extends MetricSpec {
-    def expr: Column = approx_count_distinct(col(column)).cast("long").as(name)
-  }
   final case class NullCount(column: String, name: String) extends MetricSpec {
     def expr: Column =
       coalesce(sum(when(col(column).isNull, 1L).otherwise(0L)), lit(0L))

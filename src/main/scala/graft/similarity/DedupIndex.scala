@@ -93,17 +93,17 @@ object DedupIndex extends BucketedIndex(
       exists(spark, path)
 
   /** CRASH-ATOMIC batch append on the LEGACY layout: one
-    * [[graft.core.Commit]] keyed unit (`publish` = "rename" or "pointer")
-    * over the fingerprints and bands tables — bands last, the manifest
-    * before the commit — so a rerun after any crash completes the batch
-    * or skips it, never double-appends. Creates the index (manifest
-    * without `numBuckets`) on first use. The maintenance-task twin of
-    * [[append]]: unit atomicity, at the cost of per-batch corpus-side
-    * shuffles in [[dedupBatch]] (no bucket co-location). */
+    * [[graft.core.Commit]] keyed unit over the fingerprints and bands
+    * tables — bands last, the manifest before the `_commits` record — so a
+    * rerun after any crash completes the batch or skips it, never
+    * double-appends. Creates the index (manifest without `numBuckets`) on
+    * first use. The maintenance-task twin of [[append]]: unit atomicity,
+    * at the cost of per-batch corpus-side shuffles in [[dedupBatch]] (no
+    * bucket co-location). */
   def appendAtomic(batch: DataFrame, idCol: String, textCol: String,
                    path: String, batchKey: String,
                    shingleN: Int = 3, bands: Int = 16,
-                   rowsPerBand: Int = 4, publish: String = "rename"): Unit = {
+                   rowsPerBand: Int = 4): Unit = {
     val spark = batch.sparkSession
     val m = if (exists(spark, path)) manifest(spark, path)
             else Manifest(shingleN, bands, rowsPerBand)
@@ -111,15 +111,15 @@ object DedupIndex extends BucketedIndex(
       s"index at $path is bucketed; appendAtomic's per-batch units would " +
         "corrupt the bucket layout — append via append")
     val store = graft.core.Commit(spark, path)
-    val fps = store.putBatch("fingerprints", batchKey, publish)(
+    val fps = store.putBatch("fingerprints", batchKey)(
       MinHashLsh.fingerprints(batch, idCol, textCol, m.shingleN)
         .write.mode("overwrite").parquet(_))
     // band keys from the PUBLISHED fingerprints (no re-shingle via lineage)
-    store.putBatch("bands", batchKey, publish)(MinHashLsh.bandIndex(
+    store.putBatch("bands", batchKey)(MinHashLsh.bandIndex(
       spark.read.parquet(fps), idCol, m.bands, m.rowsPerBand)
       .write.mode("overwrite").parquet(_))
     if (!exists(spark, path)) writeManifest(spark, path, m)
-    store.commitBatch(batchKey, publish)
+    store.commitBatch(batchKey)
   }
 
   /** Near-duplicates of `batch` against the stored index. Never re-reads

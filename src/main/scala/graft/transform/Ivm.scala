@@ -97,9 +97,8 @@ object Ivm {
     * `stateDir` and return the view (keys, min_v, n_rows): inserts fold
     * monoidally, retractions repair from the post-delete `base` path. */
   def foldMin(batch: DataFrame, src: String, stateDir: String,
-      keys: Seq[String], valueCol: String, base: Option[String],
-      publish: String): DataFrame =
-    foldSnapshot(batch, src, stateDir, publish) { (z, state) =>
+      keys: Seq[String], valueCol: String, base: Option[String]): DataFrame =
+    foldSnapshot(batch, src, stateDir) { (z, state) =>
       val state0 = state.getOrElse(z.limit(0).groupBy(keys.map(col): _*)
         .agg(min(col(valueCol)).as("min_v"),
           count(lit(1)).cast("long").as("n_rows")))
@@ -120,9 +119,8 @@ object Ivm {
     * tiebreaks ascending) and return it: a union-then-truncate monoid
     * fold over the spilling [[TopKPerKey]] heap. */
   def foldTopK(batch: DataFrame, src: String, stateDir: String,
-      keys: Seq[String], orderCols: Seq[String], k: Int,
-      publish: String): DataFrame =
-    foldSnapshot(batch, src, stateDir, publish) { (z, state) =>
+      keys: Seq[String], orderCols: Seq[String], k: Int): DataFrame =
+    foldSnapshot(batch, src, stateDir) { (z, state) =>
       val order = col(orderCols.head).desc +: orderCols.tail.map(c => col(c).asc)
       val kcols = keys.map(col)
       val top = TopKPerKey.topKPerKey(z.filter(col(MultCol) > 0).drop(MultCol),
@@ -133,13 +131,13 @@ object Ivm {
   /** The non-invertible folds: unless the batch from `src` is already
     * folded, `fold` it (as a z-set) into the newest state and publish the
     * next [[Commit]] generation; then read the current state. */
-  private def foldSnapshot(batch: DataFrame, src: String, stateDir: String,
-      publish: String)(fold: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+  private def foldSnapshot(batch: DataFrame, src: String, stateDir: String)(
+      fold: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
     val spark = batch.sparkSession
     val store = Commit(spark, stateDir)
     if (!store.folded(src)) {
       val next = fold(asZ(batch), store.current.map(p => spark.read.parquet(p)))
-      store.publishState(src, publish)(next.write.mode("overwrite").parquet(_))
+      store.publishState(src)(next.write.mode("overwrite").parquet(_))
     }
     spark.read.parquet(store.current.getOrElse(throw new IllegalStateException(
       s"no state under $stateDir after fold")))

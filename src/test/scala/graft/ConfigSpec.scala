@@ -191,7 +191,7 @@ class ConfigSpec extends SparkSpec {
         |    {"type": "row_count_min", "minRows": 1}]}
         |}],
         |"maintenance": [{"type": "ivm", "path": "/st", "source": "/in",
-        |  "keys": ["k"], "agg": "GROUP", "publish": "Pointer", "keep": 5}]
+        |  "keys": ["k"], "agg": "GROUP", "keep": 5}]
         |}""".stripMargin)
     // the reference's spellings: schema block, target.table/
     // lakehouse_format, data_quality.on_fail
@@ -212,7 +212,7 @@ class ConfigSpec extends SparkSpec {
         |  }
         |}]
         |maintenance = [{type = ivm, path = "/st", source = "/in", keys = [k],
-        |  agg = GROUP, publish = Pointer, keep = 5}]
+        |  agg = GROUP, keep = 5}]
         |""".stripMargin))
     fromHocon shouldBe fromJson
     fromJson.env shouldBe "dev"
@@ -221,7 +221,40 @@ class ConfigSpec extends SparkSpec {
       .asInstanceOf[graft.io.JdbcReader].readerOptions("lowerBound") shouldBe "5"
     fromJson.jobs.head.dq.get.toRuleSet.checks shouldBe Seq(
       RangeCheck("amount", Some(0.0), Some(100.0)), RowCountCheck(1L))
-    graft.core.Commit.pointerMode(fromJson.maintenance.head.publish) shouldBe true
+  }
+
+  test("a JSON pipeline that still sets the removed publish field fails at " +
+       "load, naming the field") {
+    val f = Paths.get(tmpDir("cfg-publish-json")).resolve("p.json")
+    Files.writeString(f,
+      """{"maintenance": [{"type": "profile", "path": "/st", "source": "/in",
+        |  "columns": ["id"], "publish": "pointer"}]}""".stripMargin)
+    val e = intercept[com.fasterxml.jackson.databind.exc.UnrecognizedPropertyException] {
+      ConfigLoader.loadFromFile(f.toString)
+    }
+    e.getPropertyName shouldBe "publish"
+    e.getMessage should include("Unrecognized field \"publish\"")
+  }
+
+  test("a HOCON pipeline that still sets publish loads, and its store " +
+       "commits through _commits") {
+    import spark.implicits._
+    val dir = Paths.get(tmpDir("cfg-publish-hocon"))
+    val src = dir.resolve("batch").toString
+    val store = dir.resolve("prof").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(src)
+    val f = dir.resolve("p.conf")
+    Files.writeString(f,
+      s"""maintenance = [{type = profile, path = "$store", source = "$src",
+         |  columns = [id], publish = rename}]""".stripMargin)
+    val cfg = ConfigLoader.loadFromFile(f.toString)
+    graft.core.IngestionRunner.runPipeline(spark, cfg)
+    val key = graft.core.Commit.batchKeyFor(src)
+    Files.exists(Paths.get(store, "_commits", key)) shouldBe true
+    Files.exists(Paths.get(store, s"batch-p-$key")) shouldBe true
+    Files.exists(Paths.get(store, s"batch-$key")) shouldBe false
+    graft.metrics.ProfileStore.current(spark, store)
+      .filter($"column" === "id").head().getAs[Long]("n_rows") shouldBe 2L
   }
 
   test("JSON and HOCON files get the same default schema registry") {

@@ -546,4 +546,21 @@ class ExpressionsSpec extends SparkSpec {
     rows(6L) shouldBe Some(false)
     rows(7L) shouldBe None // null payload propagates null
   }
+
+  test("array<string> expressions reject other input types by name") {
+    import graft.functions._
+    val x = col("x")
+    val ints = spark.range(1).select(lit(1).as("x"))
+    for ((name, c) <- Seq(
+        "simhash64" -> SimHash64.simhash64(x),
+        "entropy_term_sum" -> EntropyTermSum.entropyTermSum(x),
+        "modal_count" -> ModalCount.modalCount(x),
+        "word_ngrams" -> WordNgrams.wordNgrams(x, 3),
+        "minhash_sig" -> MinHashSig.minhashSig(x, 8),
+        "minhash_bands" -> MinHashBands.minhashBands(x, 4, 2)))
+      withClue(s"$name: ") {
+        intercept[org.apache.spark.sql.AnalysisException](ints.select(c))
+          .getMessage should include(s"$name needs array<string>, got IntegerType")
+      }
+  }
 }

@@ -111,11 +111,9 @@ class IngestionSpec extends SparkSpec {
       maintenance = Seq(m))
     for (m <- Seq(
         MaintenanceConfig(`type` = "nope", path = s"$root/st"),
-        MaintenanceConfig(`type` = "profile", path = s"$root/prof",
-          source = Some(out), columns = Seq("id"), publish = "nope"),
         MaintenanceConfig(`type` = "ivm", path = s"$root/view-state",
           keys = Seq("currency"), sums = Seq("amount"))))
-      withClue(s"${m.`type`}/${m.publish}: ") {
+      withClue(s"${m.`type`}: ") {
         an[IllegalArgumentException] should be thrownBy
           IngestionRunner.runPipeline(spark, pipeline(m))
         new java.io.File(out).exists() shouldBe false
@@ -369,26 +367,25 @@ class IngestionSpec extends SparkSpec {
       `type` = "ivm", path = s"$root/st", source = Some(src),
       keys = Seq("k"), columns = Seq("v"), agg = "min",
       viewPath = Some(s"$root/view"))
-    // crash BEFORE the atomic rename: a fully-written tmp dir exists but
-    // no snapshot — the rerun must refold from nothing and publish once
+    // a rename-era crash BEFORE the atomic rename left a fully-written
+    // tmp dir but no snapshot — the rerun must refold from nothing and
+    // publish once (generation 1, named up to its key hash)
     val tmp = new java.io.File(s"$root/st/.state-tmp-stale")
     tmp.mkdirs()
     java.nio.file.Files.writeString(tmp.toPath.resolve("junk"), "partial")
     IngestionRunner.runMaintenance(spark, cfg)
-    val snaps = new java.io.File(s"$root/st").listFiles()
-      .filter(_.getName.startsWith("state-")).map(_.getName).sorted
-    snaps shouldBe Array("state-000001")
+    def snaps() = new java.io.File(s"$root/st").listFiles()
+      .filter(_.getName.startsWith("state-")).map(_.getName.take(14)).sorted
+    snaps() shouldBe Array("state-p-000001")
     def view() = spark.read.parquet(s"$root/view").collect()
       .map(r => r.getAs[String]("k") -> r.getAs[Number]("min_v").longValue())
       .toMap
     view() shouldBe Map("x" -> 10L, "y" -> 5L)
-    // crash AFTER snapshot + marker but BEFORE the view write: rerun must
-    // NOT refold (no state-000002), yet must re-publish the view
+    // crash AFTER the committed snapshot but BEFORE the view write: rerun
+    // must NOT refold (no generation 2), yet must re-publish the view
     rmrfDir(new java.io.File(s"$root/view"))
     IngestionRunner.runMaintenance(spark, cfg)
-    new java.io.File(s"$root/st").listFiles()
-      .filter(_.getName.startsWith("state-"))
-      .map(_.getName).sorted shouldBe Array("state-000001")
+    snaps() shouldBe Array("state-p-000001")
     view() shouldBe Map("x" -> 10L, "y" -> 5L)
   }
 
@@ -404,7 +401,7 @@ class IngestionSpec extends SparkSpec {
     def cfg(src: String) = graft.config.MaintenanceConfig(
       `type` = "ivm", path = s"$root/st", source = Some(src),
       keys = Seq("k"), columns = Seq("v"), agg = "min",
-      viewPath = Some(s"$root/view"), publish = "pointer")
+      viewPath = Some(s"$root/view"))
     // crash BEFORE the commit pointer: a fully-written data dir exists
     // but no _commits entry — it must stay invisible and the rerun must
     // overwrite it in place (same deterministic name) and commit once
@@ -434,16 +431,18 @@ class IngestionSpec extends SparkSpec {
       Array("000001", "000002")
     view() shouldBe Map("x" -> 7L, "y" -> 5L, "z" -> 2L)
     // mixed-protocol history: a store with a rename-published snapshot
-    // continues under pointer publish, reading the rename snapshot as base
+    // (planted as the retired rename protocol wrote it) continues under
+    // pointer publish, reading the rename snapshot as base
     val root2 = tmpDir("graft-ivm-ptr2")
     Seq(("x", 10L), ("y", 5L)).toDF("k", "v").write.parquet(s"$root2/b1")
     Seq(("x", 7L), ("z", 2L)).toDF("k", "v").write.parquet(s"$root2/b2")
-    def cfg2(src: String, publish: String) = graft.config.MaintenanceConfig(
+    def cfg2(src: String) = graft.config.MaintenanceConfig(
       `type` = "ivm", path = s"$root2/st", source = Some(src),
       keys = Seq("k"), columns = Seq("v"), agg = "min",
-      viewPath = Some(s"$root2/view"), publish = publish)
-    IngestionRunner.runMaintenance(spark, cfg2(s"$root2/b1", "rename"))
-    IngestionRunner.runMaintenance(spark, cfg2(s"$root2/b2", "pointer"))
+      viewPath = Some(s"$root2/view"))
+    plantRenamedGeneration(s"$root2/st", 1, s"$root2/b1",
+      Seq(("x", 10L, 1L), ("y", 5L, 1L)))
+    IngestionRunner.runMaintenance(spark, cfg2(s"$root2/b2"))
     spark.read.parquet(s"$root2/view").collect()
       .map(r => r.getAs[String]("k") -> r.getAs[Number]("min_v").longValue())
       .toMap shouldBe Map("x" -> 7L, "y" -> 5L, "z" -> 2L)
@@ -472,13 +471,15 @@ class IngestionSpec extends SparkSpec {
     val (fps, bands) = graft.similarity.DedupIndex.load(spark, idx)
     fps.count() shouldBe 2
     val bandCount = bands.count()
-    // replay: nothing re-appended (appliedness is the bands batch dir)
+    // replay: nothing re-appended (appliedness is the batch's commit record)
     IngestionRunner.runMaintenance(spark, idxTask)
     val (fps2, bands2) = graft.similarity.DedupIndex.load(spark, idx)
     fps2.count() shouldBe 2
     bands2.count() shouldBe bandCount
-    // crash window: bands unit missing -> not applied -> rerun completes
+    // crash window: bands unit and commit record missing -> not applied
+    // -> rerun completes
     rmrfDir(new java.io.File(s"$idx/bands"))
+    rmrfDir(new java.io.File(s"$idx/_commits"))
     IngestionRunner.runMaintenance(spark, idxTask)
     graft.similarity.DedupIndex.load(spark, idx)._2.count() shouldBe bandCount
     // --- profile: batch unit is atomic, replay skips, legacy root files
@@ -512,21 +513,18 @@ class IngestionSpec extends SparkSpec {
     val b1 = Seq((1L, "alpha beta gamma delta"),
       (2L, "epsilon zeta eta theta")).toDF("doc_id", "text")
     // --- dedup-index, pointer mode: publish, read, replay-skip
-    DedupIndex.appendAtomic(b1, "doc_id", "text", idx, "k1",
-      publish = "pointer")
+    DedupIndex.appendAtomic(b1, "doc_id", "text", idx, "k1")
     DedupIndex.batchApplied(spark, idx, "k1") shouldBe true
     DedupIndex.load(spark, idx)._1.count() shouldBe 2
     // crash window: data dirs fully written but the commit file missing —
     // the batch reads as NOT applied and its rows are INVISIBLE
     val b2 = Seq((3L, "iota kappa lambda mu")).toDF("doc_id", "text")
-    DedupIndex.appendAtomic(b2, "doc_id", "text", idx, "k2",
-      publish = "pointer")
+    DedupIndex.appendAtomic(b2, "doc_id", "text", idx, "k2")
     new java.io.File(s"$idx/_commits/k2").delete() shouldBe true
     DedupIndex.batchApplied(spark, idx, "k2") shouldBe false
     DedupIndex.load(spark, idx)._1.count() shouldBe 2
     // the rerun overwrites the orphaned unit in place and commits it
-    DedupIndex.appendAtomic(b2, "doc_id", "text", idx, "k2",
-      publish = "pointer")
+    DedupIndex.appendAtomic(b2, "doc_id", "text", idx, "k2")
     DedupIndex.batchApplied(spark, idx, "k2") shouldBe true
     DedupIndex.load(spark, idx)._1.count() shouldBe 3
     // lost commit race: someone else published this key concurrently
@@ -534,46 +532,74 @@ class IngestionSpec extends SparkSpec {
     marker.createNewFile() shouldBe true
     val b3 = Seq((4L, "nu xi omicron pi")).toDF("doc_id", "text")
     intercept[IllegalStateException] {
-      DedupIndex.appendAtomic(b3, "doc_id", "text", idx, "k3",
-        publish = "pointer")
+      DedupIndex.appendAtomic(b3, "doc_id", "text", idx, "k3")
     }.getMessage should include("commit race")
-    // modes mix on one store: a rename-published unit reads alongside
-    // the committed pointer units (it is its own commit)
+    // modes mix on one store: a rename-published unit (planted as the
+    // retired rename protocol wrote it) reads alongside the committed
+    // pointer units (it is its own commit)
     marker.delete() shouldBe true
-    DedupIndex.appendAtomic(b3, "doc_id", "text", idx, "k4")
+    plantRenamedUnits(b3, idx, "k4")
     DedupIndex.load(spark, idx)._1.count() shouldBe 4
-    // runMaintenance drives the pointer mode through config
+    // runMaintenance publishes the same way through config
     val src = s"$root/docs"
     Seq((9L, "rho sigma tau upsilon")).toDF("doc_id", "text")
       .write.parquet(src)
     val task = graft.config.MaintenanceConfig(
       `type` = "dedup-index", path = idx, source = Some(src),
-      columns = Seq("doc_id", "text"), publish = "pointer")
+      columns = Seq("doc_id", "text"))
     IngestionRunner.runMaintenance(spark, task)
     DedupIndex.load(spark, idx)._1.count() shouldBe 5
     IngestionRunner.runMaintenance(spark, task) // replay: no change
     DedupIndex.load(spark, idx)._1.count() shouldBe 5
     // --- profile store, pointer mode: same three windows
     val store = s"$root/prof"
-    ProfileStore.appendAtomic(b1, Seq("doc_id"), store, "p1",
-      publish = "pointer")
+    ProfileStore.appendAtomic(b1, Seq("doc_id"), store, "p1")
     def nRows2() = ProfileStore.current(spark, store)
       .filter(col("column") === "doc_id").collect()
       .head.getAs[Number]("n_rows").longValue()
     nRows2() shouldBe 2
-    ProfileStore.appendAtomic(b2, Seq("doc_id"), store, "p2",
-      publish = "pointer")
+    ProfileStore.appendAtomic(b2, Seq("doc_id"), store, "p2")
     new java.io.File(s"$store/_commits/p2").delete() shouldBe true
     ProfileStore.batchApplied(spark, store, "p2") shouldBe false
     nRows2() shouldBe 2 // uncommitted unit invisible to the fold
-    ProfileStore.appendAtomic(b2, Seq("doc_id"), store, "p2",
-      publish = "pointer")
+    ProfileStore.appendAtomic(b2, Seq("doc_id"), store, "p2")
     nRows2() shouldBe 3
     new java.io.File(s"$store/_commits/p9").createNewFile() shouldBe true
     intercept[IllegalStateException] {
-      ProfileStore.appendAtomic(b3, Seq("doc_id"), store, "p9",
-        publish = "pointer")
+      ProfileStore.appendAtomic(b3, Seq("doc_id"), store, "p9")
     }.getMessage should include("commit race")
+  }
+
+  test("a rename-era dedup-index batch torn between its fingerprints and " +
+       "bands units finishes on rerun with its fingerprints exactly once") {
+    import graft.similarity.DedupIndex
+    val root = tmpDir("graft-renamed-torn")
+    val idx = s"$root/idx"
+    def task(src: String) = graft.config.MaintenanceConfig(
+      `type` = "dedup-index", path = idx, source = Some(src),
+      columns = Seq("doc_id", "text"))
+    val b1 = s"$root/b1"
+    val b2 = s"$root/b2"
+    Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
+      .toDF("doc_id", "text").write.parquet(b1)
+    Seq((3L, "iota kappa lambda mu"), (4L, "nu xi omicron pi"))
+      .toDF("doc_id", "text").write.parquet(b2)
+    IngestionRunner.runMaintenance(spark, task(b1))
+    // the rename protocol published b2's fingerprints unit, then crashed
+    // before its bands unit: the batch is not applied, yet its rows read
+    graft.similarity.MinHashLsh.fingerprints(spark.read.parquet(b2),
+      "doc_id", "text", 3)
+      .write.parquet(s"$idx/fingerprints/batch-${Commit.batchKeyFor(b2)}")
+    DedupIndex.batchApplied(spark, idx, Commit.batchKeyFor(b2)) shouldBe false
+    def ids() = DedupIndex.load(spark, idx)._1.select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    ids() shouldBe Seq(1L, 2L, 3L, 4L)
+    IngestionRunner.runMaintenance(spark, task(b2))
+    ids() shouldBe Seq(1L, 2L, 3L, 4L)
+    DedupIndex.load(spark, idx)._2.select("doc_id").distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq shouldBe Seq(1L, 2L, 3L, 4L)
+    IngestionRunner.runMaintenance(spark, task(b2)) // replay: no change
+    ids() shouldBe Seq(1L, 2L, 3L, 4L)
   }
 
   test("pre-r8 stores (unsuffixed batch keys) are not refolded: legacy " +
@@ -650,8 +676,15 @@ class IngestionSpec extends SparkSpec {
       def cfg(src: String) = graft.config.MaintenanceConfig(
         `type` = "ivm", path = s"$root/st", source = Some(src),
         keys = Seq("k"), columns = Seq("v"), agg = "min",
-        viewPath = Some(s"$root/view"), publish = publish)
-      srcs.foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
+        viewPath = Some(s"$root/view"))
+      if (publish == "rename") {
+        // a store the retired rename protocol wrote: four generations,
+        // each the complete min state after its batch; the replay of the
+        // last one skips and publishes the view
+        srcs.indices.foreach(i => plantRenamedGeneration(s"$root/st", i + 1,
+          srcs(i), (0 to i).map(j => (s"k${j + 1}", (j + 1) * 10L, 1L))))
+        IngestionRunner.runMaintenance(spark, cfg(srcs.last))
+      } else srcs.foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
       // a generation's dir: state-<n>, or state-p-<n>-<keyhash> (compared
       // up to the key hash) under pointer publish
       def gen(n: Int) =
@@ -758,6 +791,27 @@ class IngestionSpec extends SparkSpec {
               `type` = s"$kind-index-rebucket", path = idx))
       }
     }
+  }
+
+  /** Plant generation `n` of the min state at `stateDir` as the retired
+    * rename protocol published it: `state-<n>` holding the complete state
+    * after the batch at `src`, with that batch's key inside. */
+  private def plantRenamedGeneration(stateDir: String, n: Int, src: String,
+                                     rows: Seq[(String, Long, Long)]): Unit = {
+    val gen = f"$stateDir/state-$n%06d"
+    rows.toDF("k", "min_v", "n_rows").write.parquet(gen)
+    Files.writeString(Paths.get(gen, "_batch_key"), Commit.batchKeyFor(src))
+  }
+
+  /** Plant batch `key` of the legacy dedup index at `idx` as the retired
+    * rename protocol published it: `batch-<key>` units of both tables. */
+  private def plantRenamedUnits(docs: org.apache.spark.sql.DataFrame,
+                                idx: String, key: String): Unit = {
+    import graft.similarity.MinHashLsh
+    val fps = s"$idx/fingerprints/batch-$key"
+    MinHashLsh.fingerprints(docs, "doc_id", "text", 3).write.parquet(fps)
+    MinHashLsh.bandIndex(spark.read.parquet(fps), "doc_id", 16, 4)
+      .write.parquet(s"$idx/bands/batch-$key")
   }
 
   private def rmrfDir(p: java.io.File): Unit = {

@@ -103,10 +103,11 @@ class ProfileStoreSpec extends SparkSpec {
     val docs = graft.tables.Tables.documents(spark, dir)
     val state = tmpDir("profile-compact")
     def slice(i: Int) = docs.filter(col("doc_id") % 5 === i)
-    // mixed layouts: plain appends + rename-published + pointer-published
+    // mixed layouts: plain appends + rename-published (planted as the
+    // retired rename protocol wrote it) + pointer-published
     ProfileStore.append(slice(0), cols, state)
-    ProfileStore.appendAtomic(slice(1), cols, state, "k1")
-    ProfileStore.appendAtomic(slice(2), cols, state, "k2", publish = "pointer")
+    ProfileStore.profile(slice(1), cols).write.parquet(s"$state/batch-k1")
+    ProfileStore.appendAtomic(slice(2), cols, state, "k2")
     def summaryRows() = ProfileStore
       .summary(ProfileStore.current(spark, state))
       .collect().map(_.toString).toSeq
