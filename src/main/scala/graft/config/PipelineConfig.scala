@@ -44,14 +44,15 @@ final case class PipelineConfig(env: String = "dev",
   * stats prune scans filtered on any of them); "ivm" (fold the change
   * batch at `source` into the [[graft.transform.Ivm]] state at `path` —
   * `agg` group/min/topk — and publish the view at `view_path`; the base
-  * data is never re-read) or "ivm-prune" (retire superseded min/topk
-  * generations, keeping the newest `keep`; replays of pruned batches
-  * still skip); "dedup-index" or "profile" (append the batch at `source`)
-  * or "profile-compact" (fold the profile store to one snapshot);
-  * "<kind>-index-compact" or "<kind>-index-rebucket" (O(index) rewrite to
-  * `buckets` when the corpus outgrows the build-time layout) for kind
-  * dedup, media or ann. Stateful stores commit through
-  * [[graft.core.Commit]]'s one protocol. `agg` matches in any case. */
+  * data is never re-read); "profile" (fold the batch at `source` into the
+  * profile store); "ivm-prune" or "profile-compact" (the same prune:
+  * retire an ivm or profile store's superseded generations, keeping the
+  * newest `keep`; replays of pruned batches still skip); "dedup-index"
+  * (append the batch at `source`); "<kind>-index-compact" or
+  * "<kind>-index-rebucket" (O(index) rewrite to `buckets` when the corpus
+  * outgrows the build-time layout) for kind dedup, media or ann. Every
+  * fold publishes one [[graft.core.Commit]] generation per batch.
+  * `agg` matches in any case. */
 final case class MaintenanceConfig(@JsonProperty(required = true) `type`: String,
                                    @JsonProperty(required = true) path: String,
                                    columns: Seq[String] = Seq.empty,

@@ -2,13 +2,16 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** The crash-safe commit protocol of every stateful maintenance store:
-  * keyed batch units (the profile store, legacy dedup-index appends) and
-  * generation snapshots (the IVM `min`/`topk` folds). Every on-disk name
-  * the protocol uses is spelled here and nowhere else.
+/** The crash-safe commit protocol of every stateful maintenance store.
+  * Every config fold — the profile store and the IVM `group`/`min`/`topk`
+  * views — publishes its next state as one generation snapshot through
+  * [[Store.fold]]; keyed batch units serve only the legacy (unbucketed)
+  * dedup-index layout. Every on-disk name the protocol uses is spelled
+  * here and nowhere else.
   *
   * Data lands under a deterministic name a rerun overwrites in place, and
   * ONE create-no-overwrite file under `_commits/` (a conditional PUT on an
@@ -23,9 +26,12 @@ import org.apache.spark.sql.SparkSession
   * that create degrades to check-then-act, so lost-race DETECTION is
   * best-effort there — the single-writer contract is the boundary.
   *
-  * Stores written by the retired rename protocol still read: a
-  * `batch-<key>` unit or `state-<n>` generation is its own commit record,
-  * and its hidden `.tmp-*`/`.state-tmp-*` leftovers are never read.
+  * Stores written by earlier layouts still read: a `batch-<key>` unit or
+  * `state-<n>` generation is its own commit record, and its hidden
+  * `.tmp-*`/`.state-tmp-*` leftovers are never read. A fold store without
+  * generations — a flat `state` dir, the profile store's root files and
+  * keyed units, the group view's `_batch_key=<key>` partitions — is the
+  * first fold's base, and every batch it recorded stays folded.
   */
 object Commit {
 
@@ -67,18 +73,31 @@ object Commit {
   /** The store rooted at `root`. */
   def apply(spark: SparkSession, root: String): Store = {
     val p = new Path(root)
-    new Store(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    new Store(spark, p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  final class Store private[Commit] (fs: FileSystem, root: Path) {
+  final class Store private[Commit] (spark: SparkSession, fs: FileSystem,
+                                     root: Path) {
 
     private def dir(table: String) = if (table.isEmpty) root else new Path(root, table)
 
     private def list(d: Path): Seq[FileStatus] =
       if (fs.exists(d)) fs.listStatus(d).toSeq else Seq.empty
 
-    private def committed: Set[String] =
-      list(new Path(root, Commits)).map(_.getPath.getName).toSet
+    private def names(d: Path): Set[String] = list(d).map(_.getPath.getName).toSet
+
+    /** The readable data paths under `d`: files and dirs (plain appends, a
+      * flat `state` dir), committed and rename-era units and `_batch_key=`
+      * partitions — never a hidden temp dir, an uncommitted unit or a
+      * generation dir. */
+    private def readable(d: Path, commits: Set[String]): Seq[String] =
+      list(d).filter { st =>
+        val n = st.getPath.getName
+        n.startsWith(s"$BatchKeyFile=") ||
+          !n.startsWith(".") && !n.startsWith("_") && !n.startsWith(StatePrefix) &&
+            !(st.isDirectory && n.startsWith(UnitPrefix) &&
+              !commits.contains(n.stripPrefix(UnitPrefix)))
+      }.map(_.getPath.toString)
 
     /** Write one unit through `write` at `data`, unread until its commit;
       * a crashed attempt's leftovers under the same name are cleared first. */
@@ -110,13 +129,9 @@ object Commit {
     def markerApplied(src: String): Boolean =
       batchKeys(src).exists(k => fs.exists(new Path(new Path(root, Applied), k)))
 
-    /** The key the batch at `src` is stored under in a store partitioned
-      * by `column`: the pre-r8 key when a partition already holds it, so
-      * an overwrite REPLACES it instead of double-counting the batch. */
-    def partitionKey(src: String, column: String): String =
-      Some(legacyBatchKeyFor(src))
-        .filter(k => fs.exists(new Path(root, s"$column=$k")))
-        .getOrElse(batchKeyFor(src))
+    // Keyed batch units (the legacy dedup-index layout): each table of a
+    // batch lands as `<table>/batch-p-<key>` and `_commits/<key>` makes
+    // the whole batch visible.
 
     /** Write the rows `write` stores in the dir it is given as table
       * `table` ("" = the store root) of batch `key`: `<table>/batch-p-<key>`,
@@ -133,94 +148,106 @@ object Commit {
 
     /** True iff batch `key` is fully published: its `_commits/<key>`, or
       * a rename-era unit of `lastTable` (the table put last). */
-    def applied(key: String, lastTable: String = ""): Boolean =
+    def applied(key: String, lastTable: String): Boolean =
       fs.exists(new Path(dir(lastTable), s"$RenamedUnitPrefix$key")) ||
         fs.exists(new Path(new Path(root, Commits), key))
 
-    /** The readable data paths of `table` ("" = the store root): root-level
-      * files (plain appends), committed units and rename-era units — never
-      * a hidden temp dir or an uncommitted unit. Fails on none. */
-    def published(table: String = ""): Seq[String] = {
-      val commits = committed
-      val paths = list(dir(table)).filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith(".") && !n.startsWith("_") &&
-          !(st.isDirectory && n.startsWith(UnitPrefix) &&
-            !commits.contains(n.stripPrefix(UnitPrefix)))
-      }.map(_.getPath.toString)
+    /** The readable data paths of `table`: root-level files (plain
+      * appends), committed units and rename-era units — never a hidden temp
+      * dir or an uncommitted unit. Fails on none. */
+    def published(table: String): Seq[String] = {
+      val paths = readable(dir(table), names(new Path(root, Commits)))
       if (paths.isEmpty) throw new IllegalStateException(
         s"no published batches under ${dir(table)}")
       paths
     }
 
-    /** Re-record every batch applied here in the store at `to` — as
-      * `_commits/<key>` files, pre-r9 `_applied` markers copied — so a
-      * store rewritten from this one's rows still skips every batch. */
-    def carryAppliedTo(to: String): Unit = {
-      val dst = new Store(fs, new Path(to))
-      val renameKeys = list(root).map(_.getPath.getName)
-        .filter(n => n.startsWith(RenamedUnitPrefix) && !n.startsWith(UnitPrefix))
-        .map(_.stripPrefix(RenamedUnitPrefix))
-      (committed ++ renameKeys).foreach(k => if (!dst.applied(k)) dst.commit(k, "")(()))
-      val legacy = new Path(root, Applied)
-      if (fs.exists(legacy))
-        FileUtil.copy(fs, legacy, fs, new Path(to, Applied), false, fs.getConf)
-    }
-
-    // Generation snapshots: each applied batch publishes a COMPLETE next
+    // Generation snapshots: each folded batch publishes a COMPLETE next
     // state plus a `_batch_key` file, so the applied record travels inside
     // the unit: the data goes to `state-p-<n>-<keyhash>` and `_commits/<n>`
-    // holds that name. Rename-era `state-<n>` generations, and a flat
-    // `state` dir from before snapshots (the base), still read.
+    // holds that name. Rename-era `state-<n>` generations still read.
 
-    private case class Gen(n: Int, data: Path, record: Option[Path])
+    private case class Gen(n: Int, data: String, record: Option[Path])
 
-    private def generations: Seq[Gen] = {
-      val renamed = list(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(StatePrefix))
-        .flatMap(s => s.getPath.getName.stripPrefix(StatePrefix).toIntOption
-          .map(Gen(_, s.getPath, None)))
-      val recorded = list(new Path(root, Commits)).flatMap(s =>
-        s.getPath.getName.toIntOption.map(n =>
-          Gen(n, new Path(root, readText(fs, s.getPath).trim), Some(s.getPath))))
-      renamed ++ recorded
+    /** One look at the store: its root names, its `_commits` names and
+      * every generation, each record read once. A record whose data dir
+      * is gone is not a `live` generation. */
+    private final class Listing {
+      val names: Set[String] = Store.this.names(root)
+      private val records = list(new Path(root, Commits))
+      val commits: Set[String] = records.map(_.getPath.getName).toSet
+      val gens: Seq[Gen] =
+        names.toSeq.filter(_.startsWith(StatePrefix)).flatMap(n =>
+          n.stripPrefix(StatePrefix).toIntOption.map(Gen(_, n, None))) ++
+          records.flatMap(s => s.getPath.getName.toIntOption.map(n =>
+            Gen(n, readText(fs, s.getPath).trim, Some(s.getPath))))
+      val live: Seq[Gen] = gens.filter(g => names.contains(g.data))
     }
 
-    // a commit record whose data dir is gone is not a readable generation
-    private def live: Seq[Gen] =
-      generations.filter(g => g.record.isEmpty || fs.exists(g.data))
+    private def load(schema: StructType, paths: String*): DataFrame =
+      spark.read.schema(schema).parquet(paths: _*)
 
-    /** The newest published state directory, if any. */
-    def current: Option[String] =
-      live.maxByOption(_.n).map(_.data)
-        .orElse(Some(new Path(root, "state")).filter(fs.exists))
-        .map(_.toString)
+    /** The state `l` shows, read as `schema` so no inference job runs: the
+      * newest generation; else the parent-format data, which `base` turns
+      * into a state (the first fold's base); else None. */
+    private def read(l: Listing, schema: StructType,
+                     base: DataFrame => DataFrame): Option[DataFrame] =
+      l.live.maxByOption(_.n) match {
+        case Some(g) => Some(load(schema, new Path(root, g.data).toString))
+        case None =>
+          val paths = readable(root, l.commits)
+          Option.when(paths.nonEmpty)(base(load(schema, paths: _*)))
+      }
 
-    /** True iff the batch at `src` is folded in: a published generation's
-      * `_batch_key` or a marker holds its key, in either format (ignoring
-      * the pre-r8 key would re-fold it: min double-counts n_rows). */
-    def folded(src: String): Boolean = {
+    /** The current state read as `schema` (see [[fold]] for `base`); None
+      * when the store is empty. */
+    def state(schema: StructType, base: DataFrame => DataFrame): Option[DataFrame] =
+      read(new Listing, schema, base)
+
+    /** True iff the batch at `src` is folded in, under either key format
+      * (ignoring the pre-r8 key would re-fold it: min double-counts
+      * n_rows): a live generation's `_batch_key`, or a parent-format
+      * record — `_commits/<key>`, a rename-era `batch-<key>` unit, a
+      * `_batch_key=<key>` partition or an `_applied` marker. */
+    private def folded(src: String, l: Listing): Boolean = {
       val keys = batchKeys(src)
-      live.exists { g =>
-        val f = new Path(g.data, BatchKeyFile)
-        fs.exists(f) && keys.contains(readText(fs, f))
-      } || markerApplied(src)
+      keys.exists(k => l.commits(k) || l.names(s"$RenamedUnitPrefix$k") ||
+        l.names(s"$BatchKeyFile=$k")) ||
+        l.live.exists { g =>
+          // a recorded generation's name ends in its key's hash, so only
+          // a candidate's `_batch_key` is read
+          (g.record.isEmpty || keys.exists(k => g.data.endsWith(sha6(k)))) && {
+            val f = new Path(new Path(root, g.data), BatchKeyFile)
+            fs.exists(f) && keys.contains(readText(fs, f))
+          }
+        } || markerApplied(src)
     }
 
-    /** Publish the state `write` stores in the directory it is given as
-      * the next generation, folding in the batch at `src`. A lost commit
+    /** Fold the batch at `src` in once, however often the caller reruns:
+      * unless it is already folded, `merge` it into the current state
+      * (None = an empty store) and publish the result as the next
+      * generation. Returns the current state read as `schema` (which
+      * `merge` must also produce); None when the store is empty. A store
+      * without generations holds parent-format data — per-batch rows, or
+      * a flat `state` dir — that `base` turns into a state. A lost commit
       * race means the fold read stale state; retrying would silently drop
       * the other writer's batch, so it surfaces. */
-    def publishState(src: String)(write: String => Unit): Unit = {
-      val key = batchKeyFor(src)
-      val n = live.map(_.n).maxOption.getOrElse(0) + 1
-      // the data dir is unique per (n, batch): a crashed attempt left the
-      // SAME name uncommitted, so the rerun overwrites it in place
-      val data = unit(new Path(root, f"${StatePrefix}p-$n%06d-${sha6(key)}")) { d =>
-        write(d)
-        writeText(fs, new Path(d, BatchKeyFile), key)
+    def fold(src: String, schema: StructType, base: DataFrame => DataFrame)(
+        merge: Option[DataFrame] => DataFrame): Option[DataFrame] = {
+      val l = new Listing
+      if (folded(src, l)) read(l, schema, base)
+      else {
+        val key = batchKeyFor(src)
+        val n = l.live.map(_.n).maxOption.getOrElse(0) + 1
+        // the data dir is unique per (n, batch): a crashed attempt left the
+        // SAME name uncommitted, so the rerun overwrites it in place
+        val data = unit(new Path(root, f"${StatePrefix}p-$n%06d-${sha6(key)}")) { d =>
+          merge(read(l, schema, base)).write.mode("overwrite").parquet(d)
+          writeText(fs, new Path(d, BatchKeyFile), key)
+        }
+        commit(f"$n%06d", data.getName)(fs.delete(data, true))
+        Some(load(schema, data.toString))
       }
-      commit(f"$n%06d", data.getName)(fs.delete(data, true))
     }
 
     /** Retire all but the newest `keep` (at least 1) generations; older
@@ -229,14 +256,15 @@ object Commit {
       * so a replay still skips: a crash between marker and delete is
       * merely redundant, and the current generation is never touched. */
     def prune(keep: Int): Unit =
-      generations.sortBy(_.n).dropRight(math.max(1, keep)).foreach { g =>
-        val bk = new Path(g.data, BatchKeyFile)
+      (new Listing).gens.sortBy(_.n).dropRight(math.max(1, keep)).foreach { g =>
+        val data = new Path(root, g.data)
+        val bk = new Path(data, BatchKeyFile)
         if (fs.exists(bk)) {
           val marker = new Path(new Path(root, Applied), readText(fs, bk))
           if (!fs.exists(marker)) writeText(fs, marker, "")
         }
         g.record.foreach(fs.delete(_, false))
-        fs.delete(g.data, true)
+        fs.delete(data, true)
       }
   }
 }

@@ -70,6 +70,10 @@ object IngestionRunner {
     m.source.getOrElse(throw new IllegalArgumentException(
       s"${m.`type`} maintenance task needs a source ($what)"))
 
+  /** Retire the fold store's generations older than the newest `keep`. */
+  private def prune(m: MaintenanceConfig): MaintenanceTask =
+    spark => Commit(spark, m.path).prune(m.keep)
+
   private lazy val tasks: Map[String, MaintenanceConfig => MaintenanceTask] = {
     import graft.similarity.{BucketedIndex, DedupIndex}
     import graft.metrics.ProfileStore
@@ -81,17 +85,21 @@ object IngestionRunner {
       "zorder" -> (m => spark =>
         ZOrder.rewrite(spark, m.path, m.columns, m.targetFileBytes, m.bits)),
       "ivm" -> ivmTask,
-      "ivm-prune" -> (m => spark => Commit(spark, m.path).prune(m.keep)),
+      "ivm-prune" -> prune,
       // build-or-append a document batch into a persistent MinHash-LSH
       // dedup index (the batch twin of StreamOps.dedupIndexBatch) —
-      // per-batch cost O(batch), never O(corpus)
+      // per-batch cost O(batch), never O(corpus); applied once, whether
+      // recorded by its commit or by a pre-r9 marker
       "dedup-index" -> { m =>
         val src = source(m, "document batch path")
         require(m.columns.length >= 2,
           "dedup-index needs columns=[<idColumn>, <textColumn>]")
-        appendOnce(m.path, src)(DedupIndex.batchApplied) { (spark, key) =>
-          DedupIndex.appendAtomic(spark.read.parquet(src), m.columns(0),
-            m.columns(1), m.path, key)
+        spark => {
+          val key = Commit.batchKeyFor(src)
+          if (!Commit(spark, m.path).markerApplied(src) &&
+              !DedupIndex.batchApplied(spark, m.path, key))
+            DedupIndex.appendAtomic(spark.read.parquet(src), m.columns(0),
+              m.columns(1), m.path, key)
         }
       },
       // fold a batch's per-column profile into the monoid profile store
@@ -99,12 +107,10 @@ object IngestionRunner {
       "profile" -> { m =>
         val src = source(m, "batch path")
         require(m.columns.nonEmpty, "profile needs columns=[<col>, ...]")
-        appendOnce(m.path, src)(ProfileStore.batchApplied) { (spark, key) =>
-          ProfileStore.appendAtomic(spark.read.parquet(src), m.columns,
-            m.path, key)
-        }
+        spark => ProfileStore.fold(spark, m.path, src, m.columns)(
+          spark.read.parquet(src))
       },
-      "profile-compact" -> (m => spark => ProfileStore.compact(spark, m.path))
+      "profile-compact" -> prune
     ) ++ BucketedIndex.kinds.flatMap { case (kind, index) =>
       Seq[(String, MaintenanceConfig => MaintenanceTask)](
         // bucket-preserving small-file rewrite + band_sizes delta fold:
@@ -143,16 +149,6 @@ object IngestionRunner {
       val view = fold(spark.read.parquet(src))
       m.viewPath.foreach(v => view.write.mode("overwrite").parquet(v))
     }
-  }
-
-  /** Append the batch at `src` to the keyed store at `path` unless it is
-    * already applied there, or by a pre-r9 marker. */
-  private def appendOnce(path: String, src: String)(
-      applied: (SparkSession, String, String) => Boolean)(
-      append: (SparkSession, String) => Unit): MaintenanceTask = spark => {
-    val key = Commit.batchKeyFor(src)
-    if (!Commit(spark, path).markerApplied(src) && !applied(spark, path, key))
-      append(spark, key)
   }
 
   def buildJob(j: JobConfig, registry: Option[SchemaRegistry],

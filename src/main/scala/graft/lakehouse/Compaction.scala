@@ -36,17 +36,19 @@ object Compaction {
     (bytes, math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt))
   }
 
+  private val OldSuffix = "__rewrite_old"
+
   /** Crash-safe in-place rewrite: `write` lands the new layout in a
     * sibling temp dir, then two renames publish it — the table is never
-    * half-rewritten in place, and the pre-swap state survives any crash.
-    * Shared by [[compact]], [[ZOrder.rewrite]] and the bucketed-index
-    * maintenance in [[graft.similarity.IndexCatalog]]. */
+    * half-rewritten in place, and the pre-swap state survives any crash
+    * (see [[restoreSwapped]] for the crash between the renames). Shared
+    * by [[compact]], [[ZOrder.rewrite]] and [[Retention.enforce]]. */
   private[graft] def swapRewrite(spark: SparkSession, dir: String)
                                 (write: String => Unit): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir + "__rewrite_tmp")
-    val old = new Path(dir + "__rewrite_old")
+    val old = new Path(dir + OldSuffix)
     write(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     if (!fs.rename(p, old))
@@ -58,8 +60,20 @@ object Compaction {
     fs.delete(old, true)
   }
 
+  /** Heal a crash between [[swapRewrite]]'s two renames, which leaves the
+    * table only at `<dir>__rewrite_old`: move it back to `<dir>`. Every
+    * rewrite calls this before it plans over or reads `<dir>`. */
+  private[graft] def restoreSwapped(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new Path(dir + OldSuffix)
+    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
+      throw new IllegalStateException(s"rewrite: could not restore $old to $p")
+  }
+
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): CompactionResult = {
+    restoreSwapped(spark, dir)
     val (bytes, nFiles) = plannedFiles(spark, dir, targetFileBytes)
     val before = parquetFileCount(spark, dir)
     swapRewrite(spark, dir) { tmp =>

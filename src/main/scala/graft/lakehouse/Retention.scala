@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.StructType
   *     comparison against a literal cutoff, so when the table is
   *     partitioned by the time column it becomes a PARTITION filter and
   *     expired partitions are never opened (asserted in IoSpec); and
-  *  2. a table maintenance rewrite ([[enforce]]) next to [[Compaction]] —
-  *     same atomic sibling-rewrite + two-rename swap, so a crash never
+  *  2. a table maintenance rewrite ([[enforce]]) published through
+  *     [[Compaction.swapRewrite]]'s sibling-rewrite swap, so a crash never
   *     leaves the table half-expired. At cluster scale run it per
   *     partition directory: expired partitions DELETE wholesale without
   *     reading a row; only the boundary partition rewrites.
@@ -60,13 +60,14 @@ object Retention {
       .map(d => currentRows(df, timeCol, d, asOf)).getOrElse(df)
 
   /** In-place enforcement for a parquet table path: rewrite surviving rows
-    * to a sibling dir, swap via two renames (see [[Compaction]] for the
-    * crash-safety argument). Preserves the table's partition layout when
-    * `partitionCols` is passed. */
+    * to a sibling dir and publish them through [[Compaction.swapRewrite]].
+    * Preserves the table's partition layout when `partitionCols` is
+    * passed. */
   def enforce(spark: SparkSession, dir: String, timeCol: String, days: Long,
               asOf: LocalDate = LocalDate.now(),
               partitionCols: Seq[String] = Seq.empty): RetentionResult = {
     import org.apache.hadoop.fs.Path
+    Compaction.restoreSwapped(spark, dir)
     val p = new Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
@@ -80,19 +81,11 @@ object Retention {
     val obs = org.apache.spark.sql.Observation()
     val kept = currentRows(table, timeCol, days, asOf)
       .observe(obs, count(lit(1)).as("n_kept"))
-    val tmp = new Path(dir + "__retention_tmp")
-    val old = new Path(dir + "__retention_old")
-    val writer = kept.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old))
-      throw new IllegalStateException(s"retention: could not move $p aside")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // roll back
-      throw new IllegalStateException(s"retention: could not publish $tmp")
+    Compaction.swapRewrite(spark, dir) { tmp =>
+      val writer = kept.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(tmp)
     }
-    fs.delete(old, true)
     RetentionResult(before, obs.get("n_kept").asInstanceOf[Long],
       cutoffFor(asOf, days))
   }

@@ -82,6 +82,7 @@ object ZOrder {
               targetFileBytes: Long = 128L * 1024 * 1024,
               bits: Int = 8): Compaction.CompactionResult = {
     require(cols.nonEmpty, "z-order rewrite needs at least one column")
+    Compaction.restoreSwapped(spark, dir)
     val (bytes, nFiles) = Compaction.plannedFiles(spark, dir, targetFileBytes)
     val before = Compaction.parquetFileCount(spark, dir)
     Compaction.swapRewrite(spark, dir) { tmp =>

@@ -2,16 +2,17 @@ package graft.metrics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types._
+
+import graft.core.Commit
 
 /** Mergeable (monoid) per-column table profiles — the incremental
   * complement of [[TableMetrics]]' single-batch observation: profile each
-  * ingest batch ONCE as it lands, append the tiny per-batch summary to a
-  * parquet state dir, and fold summaries whenever a current profile is
-  * needed. The 100 TB property: a table ingested over a year is profiled
-  * by touching each byte exactly once at ingest time — the fold input is
-  * #batches × #columns rows of metadata, never the data again (the
-  * [[graft.similarity.BucketedIndex]] lifecycle, for metrics).
+  * ingest batch ONCE as it lands and merge the tiny per-batch summary into
+  * the stored profile, one [[Commit]] generation per batch (the IVM folds'
+  * protocol). The 100 TB property: a table ingested over a year is
+  * profiled by touching each byte exactly once at ingest time, and a read
+  * is #columns rows of metadata, never the data again.
   *
   * Every statistic kept is a commutative monoid (counts and sums add,
   * min/max fold by least/greatest, HLL sketches union via Spark's
@@ -27,56 +28,54 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   */
 object ProfileStore {
 
-  private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean =
+  private def isIntegral(dt: DataType): Boolean =
     dt == LongType || dt == IntegerType || dt == ShortType || dt == ByteType
+
+  /** The storage row, fixed, so a state read starts no inference job. */
+  private val RowSchema: StructType = StructType(Seq(
+    StructField("column", StringType), StructField("dtype", StringType),
+    StructField("n_rows", LongType), StructField("n_null", LongType),
+    StructField("min_s", StringType), StructField("max_s", StringType),
+    StructField("sum_l", LongType), StructField("hll", BinaryType)))
 
   /** One aggregate pass over a batch → one profile row per column. */
   def profile(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val rows = columns.map { c =>
-      val dt = df.schema(c).dataType
+    val stats = columns.zipWithIndex.flatMap { case (c, i) =>
       val native = col(c)
-      df.agg(
-        count(lit(1)).cast("long").as("n_rows"),
-        sum(when(native.isNull, 1L).otherwise(0L)).cast("long").as("n_null"),
-        min(native).cast("string").as("min_s"),
-        max(native).cast("string").as("max_s"),
-        (if (isIntegral(dt)) sum(native).cast("long")
-         else lit(null).cast("long")).as("sum_l"),
-        hll_sketch_agg(native.cast("string")).as("hll"))
-        .select(lit(c).as("column"), lit(dt.simpleString).as("dtype"),
-          col("n_rows"), col("n_null"), col("min_s"), col("max_s"),
-          col("sum_l"), col("hll"))
+      Seq(sum(when(native.isNull, 1L).otherwise(0L)).cast("long").as(s"n_null$i"),
+        min(native).cast("string").as(s"min_s$i"),
+        max(native).cast("string").as(s"max_s$i"),
+        (if (isIntegral(df.schema(c).dataType)) sum(native).cast("long")
+         else lit(null).cast("long")).as(s"sum_l$i"),
+        hll_sketch_agg(native.cast("string")).as(s"hll$i"))
     }
-    rows.reduce(_ unionByName _)
+    val rows = columns.zipWithIndex.map { case (c, i) =>
+      struct(lit(c).as("column"), lit(df.schema(c).dataType.simpleString).as("dtype"),
+        col("n_rows"), col(s"n_null$i").as("n_null"), col(s"min_s$i").as("min_s"),
+        col(s"max_s$i").as("max_s"), col(s"sum_l$i").as("sum_l"),
+        col(s"hll$i").as("hll"))
+    }
+    df.agg(count(lit(1)).cast("long").as("n_rows"), stats: _*)
+      .select(explode(array(rows: _*)).as("p")).select("p.*")
   }
 
-  /** Append a batch profile to the state dir (tiny metadata write). */
-  def append(df: DataFrame, columns: Seq[String], stateDir: String): Unit =
-    profile(df, columns).write.mode("append").parquet(stateDir)
+  /** Fold the profile of the batch landed at `src` into the store at
+    * `stateDir` unless it is already folded there: merge it into the
+    * stored rows and publish one [[Commit]] generation. `batch` is only
+    * evaluated when the batch is not yet folded. */
+  def fold(spark: SparkSession, stateDir: String, src: String,
+           columns: Seq[String])(batch: => DataFrame): Unit =
+    Commit(spark, stateDir).fold(src, RowSchema, merge) { state =>
+      val p = profile(batch, columns)
+      // a few rows per column: one partition, so the merge needs no shuffle
+      merge(state.fold(p)(_.unionByName(p)).coalesce(1))
+    }
 
-  /** True iff [[appendAtomic]] fully published batch `batchKey`. */
-  def batchApplied(spark: SparkSession, stateDir: String,
-                   batchKey: String): Boolean =
-    graft.core.Commit(spark, stateDir).applied(batchKey)
-
-  /** CRASH-ATOMIC batch append: the profile rows are one
-    * [[graft.core.Commit]] keyed unit, visible only once its `_commits`
-    * record exists, so no crash window duplicates a batch's rows in the
-    * fold. The maintenance-task twin of [[append]]. */
-  def appendAtomic(df: DataFrame, columns: Seq[String], stateDir: String,
-                   batchKey: String): Unit = {
-    val store = graft.core.Commit(df.sparkSession, stateDir)
-    store.putBatch("", batchKey)(
-      profile(df, columns).write.mode("overwrite").parquet(_))
-    store.commitBatch(batchKey)
-  }
-
-  /** Fold all stored batch profiles into the current table profile.
-    * Monoid fold: one #batches×#columns-row aggregate — the data itself
-    * is never re-read. Reads every published unit: [[append]]'s root
-    * files and [[appendAtomic]]'s committed units, never a torn one. */
+  /** The current table profile: the newest generation's #columns rows, or
+    * the merged rows of a store written before generations. */
   def current(spark: SparkSession, stateDir: String): DataFrame =
-    merge(spark.read.parquet(graft.core.Commit(spark, stateDir).published(): _*))
+    Commit(spark, stateDir).state(RowSchema, merge).getOrElse(
+      throw new IllegalStateException(s"no profile under $stateDir"))
 
   /** Merge profile rows (from any number of batches) by column. min/max
     * compare in the recorded native type; integral sums add exactly. */
@@ -118,36 +117,4 @@ object ProfileStore {
       col("min_s"), col("max_s"), col("sum_l"),
       hll_sketch_estimate(col("hll")).cast("long").as("n_distinct_approx"))
       .orderBy(col("column"))
-
-  final case class StoreCompaction(unitsBefore: Int, unitsAfter: Int)
-
-  /** Fold the whole store to ONE on-disk snapshot — the maintenance op
-    * the append-only layout needs (every [[append]]/[[appendAtomic]] adds
-    * a file/unit per batch FOREVER; [[current]] folds at read time but
-    * the per-read listing/footer cost grows without bound). The fold is
-    * exactly [[merge]] — every statistic is a commutative monoid, so
-    * fold(fold(rows)) == fold(rows) and the snapshot replaces the units
-    * it folded without changing any reader's answer.
-    *
-    * Crash safety: the snapshot (plus the preserved appliedness record)
-    * is built in a sibling temp dir and published by the two-rename swap
-    * ([[graft.lakehouse.Compaction.swapRewrite]]) — the pre-compaction
-    * store survives any crash; a stale temp from a crashed attempt is
-    * overwritten, never adopted. APPLIEDNESS IS PRESERVED
-    * ([[graft.core.Commit.Store.carryAppliedTo]]), so [[batchApplied]] still
-    * reports every folded batch as applied and a maintenance replay can
-    * never re-append one. */
-  def compact(spark: SparkSession, stateDir: String): StoreCompaction = {
-    val store = graft.core.Commit(spark, stateDir)
-    val before = store.published().size
-    // pin the fold BEFORE the swap moves the source files it reads
-    // (#batches × #columns rows — tiny by construction)
-    val folded = current(spark, stateDir).localCheckpoint(true)
-    graft.lakehouse.Compaction.swapRewrite(spark, stateDir) { tmp =>
-      // Overwrite clears any stale junk from a crashed earlier attempt
-      folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-      store.carryAppliedTo(tmp)
-    }
-    StoreCompaction(before, store.published().size)
-  }
 }

@@ -1166,8 +1166,8 @@ object PipelineQueries {
 
   /** Incremental profile maintenance (the DedupIndex lifecycle for
     * METRICS): the corpus arrives as three batches, each profiled ONCE
-    * (one aggregate pass per batch) into a parquet state dir; the
-    * current table profile is then a monoid fold over #batches×#columns
+    * (one aggregate pass per batch) and merged into the stored profile,
+    * one generation per batch; the current table profile is #columns
     * metadata rows — the data is never re-read. The oracle computes the
     * same statistics directly over the whole table, so the gate proves
     * the merge law exactly: counts and integral sums add, min/max fold
@@ -1180,8 +1180,8 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val state = graft.core.Scratch.dir("graft-profile-state")
     val cols = Seq("doc_id", "lang", "n_chars")
-    (0 until 3).foreach(b =>
-      ProfileStore.append(docs.filter(col("doc_id") % 3 === b), cols, state))
+    (0 until 3).foreach(b => ProfileStore.fold(spark, state, s"$state/slice=$b",
+      cols)(docs.filter(col("doc_id") % 3 === b)))
     ProfileStore.summary(ProfileStore.current(spark, state))
       .select(col("column"), col("dtype"), col("n_rows"), col("n_null"),
         col("min_s"), col("max_s"), col("sum_l"))

@@ -2,6 +2,7 @@ package graft.transform
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Commit
 import graft.plans.TopKPerKey
@@ -27,11 +28,14 @@ import graft.plans.TopKPerKey
   * covers the insert-only monoid family; this covers the group family
   * under deletes.
   *
-  * State lifecycle mirrors the [[graft.similarity.BucketedIndex]] /
-  * [[graft.metrics.ProfileStore]] one: `append` writes tiny per-batch delta
-  * parquet into a state dir; `current` folds all stored deltas and
-  * drops groups whose net multiplicity reached zero (a fully-retracted
-  * group must VANISH from the view, not linger as a zero row).
+  * State lifecycle: the config folds ([[foldGroup]], [[foldMin]],
+  * [[foldTopK]]) merge each batch into the newest state and publish the
+  * result as one [[Commit]] generation, as [[graft.metrics.ProfileStore]]
+  * does, so a view read costs O(#groups), never O(#batches). The plain
+  * `append`/`current` pair keeps tiny per-batch delta parquet in a state
+  * dir and folds it on read. Either way groups whose net multiplicity
+  * reached zero are dropped (a fully-retracted group must VANISH from the
+  * view, not linger as a zero row).
   */
 object Ivm {
 
@@ -63,20 +67,6 @@ object Ivm {
   def append(delta: DataFrame, stateDir: String): Unit =
     delta.write.mode("append").parquet(stateDir)
 
-  /** Batch-identity partition column written by [[appendIdempotent]]. */
-  val BatchCol = "_batch_key"
-
-  /** Persist one view delta under an explicit batch identity, REPLACING
-    * any previously stored delta with the same identity (dynamic
-    * partition overwrite — the batch-mode twin of
-    * [[graft.streaming.StreamOps.ivmBatch]]'s micro-batch partitions).
-    * This is what makes a re-run pipeline idempotent: the same source
-    * path folds into the view once, however many times the job runs. */
-  def appendIdempotent(delta: DataFrame, stateDir: String,
-      batchKey: String): Unit =
-    graft.streaming.StreamOps.overwritePartition(delta, BatchCol, batchKey,
-      stateDir)
-
   /** Fold stored deltas into the current view. Sums add by key; groups
     * with net multiplicity 0 are dropped. One #batches x #groups-row
     * aggregate — the base data is never re-read. */
@@ -85,24 +75,28 @@ object Ivm {
 
   /** Fold the change batch read from `src` into the state at `stateDir`,
     * by `keys` summing `sums`, and return the view. Count and sum are
-    * invertible, so a replay is idempotent by overwriting its partition. */
+    * invertible, so retractions fold exactly into the merged state. */
   def foldGroup(batch: DataFrame, src: String, stateDir: String,
       keys: Seq[String], sums: Seq[String]): DataFrame = {
-    appendIdempotent(viewDelta(asZ(batch), keys, sums.map(c => c -> col(c))),
-      stateDir, Commit(batch.sparkSession, stateDir).partitionKey(src, BatchCol))
-    current(batch.sparkSession, stateDir, keys)
+    val delta = viewDelta(asZ(batch), keys, sums.map(c => c -> col(c)))
+    // a merge widens decimal sums; the state keeps the delta's types
+    val typed = delta.schema.map(f => col(f.name).cast(f.dataType))
+    fold(batch, src, stateDir, delta.schema, merge(_, keys)) { state =>
+      merge(state.fold(delta)(_.unionByName(delta)), keys).select(typed: _*)
+    }
   }
 
   /** Fold the change batch read from `src` into the MIN state at
     * `stateDir` and return the view (keys, min_v, n_rows): inserts fold
     * monoidally, retractions repair from the post-delete `base` path. */
   def foldMin(batch: DataFrame, src: String, stateDir: String,
-      keys: Seq[String], valueCol: String, base: Option[String]): DataFrame =
-    foldSnapshot(batch, src, stateDir) { (z, state) =>
-      val state0 = state.getOrElse(z.limit(0).groupBy(keys.map(col): _*)
-        .agg(min(col(valueCol)).as("min_v"),
-          count(lit(1)).cast("long").as("n_rows")))
-      val afterIns = minInsert(state0, z.filter(col(MultCol) > 0), keys, valueCol)
+      keys: Seq[String], valueCol: String, base: Option[String]): DataFrame = {
+    val z = asZ(batch)
+    val empty = z.limit(0).groupBy(keys.map(col): _*)
+      .agg(min(col(valueCol)).as("min_v"), count(lit(1)).cast("long").as("n_rows"))
+    fold(batch, src, stateDir, empty.schema, identity) { state =>
+      val afterIns = minInsert(state.getOrElse(empty), z.filter(col(MultCol) > 0),
+        keys, valueCol)
       val rets = z.filter(col(MultCol) < 0)
       if (rets.isEmpty) afterIns
       else {
@@ -113,35 +107,29 @@ object Ivm {
           keys, valueCol).drop("recomputed")
       }
     }
+  }
 
   /** Fold the inserts of the change batch read from `src` into the per-key
     * top-`k` leaderboard at `stateDir` (first of `orderCols` descending,
     * tiebreaks ascending) and return it: a union-then-truncate monoid
     * fold over the spilling [[TopKPerKey]] heap. */
   def foldTopK(batch: DataFrame, src: String, stateDir: String,
-      keys: Seq[String], orderCols: Seq[String], k: Int): DataFrame =
-    foldSnapshot(batch, src, stateDir) { (z, state) =>
-      val order = col(orderCols.head).desc +: orderCols.tail.map(c => col(c).asc)
-      val kcols = keys.map(col)
-      val top = TopKPerKey.topKPerKey(z.filter(col(MultCol) > 0).drop(MultCol),
-        kcols, order, k)
-      state.fold(top)(s => TopKPerKey.topKPerKey(s.unionByName(top), kcols, order, k))
-    }
-
-  /** The non-invertible folds: unless the batch from `src` is already
-    * folded, `fold` it (as a z-set) into the newest state and publish the
-    * next [[Commit]] generation; then read the current state. */
-  private def foldSnapshot(batch: DataFrame, src: String, stateDir: String)(
-      fold: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
-    val spark = batch.sparkSession
-    val store = Commit(spark, stateDir)
-    if (!store.folded(src)) {
-      val next = fold(asZ(batch), store.current.map(p => spark.read.parquet(p)))
-      store.publishState(src)(next.write.mode("overwrite").parquet(_))
-    }
-    spark.read.parquet(store.current.getOrElse(throw new IllegalStateException(
-      s"no state under $stateDir after fold")))
+      keys: Seq[String], orderCols: Seq[String], k: Int): DataFrame = {
+    val order = col(orderCols.head).desc +: orderCols.tail.map(c => col(c).asc)
+    val kcols = keys.map(col)
+    val top = TopKPerKey.topKPerKey(asZ(batch).filter(col(MultCol) > 0).drop(MultCol),
+      kcols, order, k)
+    fold(batch, src, stateDir, top.schema, identity)(
+      _.fold(top)(s => TopKPerKey.topKPerKey(s.unionByName(top), kcols, order, k)))
   }
+
+  /** [[Commit.Store.fold]] the batch from `src` into the state at
+    * `stateDir` and read the current state as `schema`. */
+  private def fold(batch: DataFrame, src: String, stateDir: String,
+      schema: StructType, base: DataFrame => DataFrame)(
+      next: Option[DataFrame] => DataFrame): DataFrame =
+    Commit(batch.sparkSession, stateDir).fold(src, schema, base)(next)
+      .getOrElse(throw new IllegalStateException(s"no state under $stateDir after fold"))
 
   /** Lift an unsigned (plain) relation into the z-set view: every stored
     * row has multiplicity +1. */
@@ -219,7 +207,6 @@ object Ivm {
   /** Merge delta rows (any number of batches, any order) by key. */
   def merge(deltas: DataFrame, keys: Seq[String]): DataFrame = {
     val sumCols = deltas.columns.filterNot(keys.contains)
-      .filterNot(_ == BatchCol)
     val aggs = sumCols.map(c =>
       (if (c == "n_rows") sum(col(c)).cast("long") else sum(col(c))).as(c))
     deltas.groupBy(keys.map(col): _*)

@@ -249,10 +249,9 @@ class ConfigSpec extends SparkSpec {
          |  columns = [id], publish = rename}]""".stripMargin)
     val cfg = ConfigLoader.loadFromFile(f.toString)
     graft.core.IngestionRunner.runPipeline(spark, cfg)
-    val key = graft.core.Commit.batchKeyFor(src)
-    Files.exists(Paths.get(store, "_commits", key)) shouldBe true
-    Files.exists(Paths.get(store, s"batch-p-$key")) shouldBe true
-    Files.exists(Paths.get(store, s"batch-$key")) shouldBe false
+    Files.exists(Paths.get(store, "_commits", "000001")) shouldBe true
+    new java.io.File(store).list().count(_.startsWith("state-p-000001-")) shouldBe 1
+    new java.io.File(store).list().count(_.startsWith("batch-")) shouldBe 0
     graft.metrics.ProfileStore.current(spark, store)
       .filter($"column" === "id").head().getAs[Long]("n_rows") shouldBe 2L
   }

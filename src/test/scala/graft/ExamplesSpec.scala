@@ -154,9 +154,9 @@ class ExamplesSpec extends SparkSpec {
     spark.read.parquet("/tmp/graft-maint/topk-view")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .collect().map(_.toSeq).toSet shouldBe topDirect
-    // RERUN the whole pipeline: every ivm task must be idempotent — the
-    // group fold replaces its batch partition, min/topk skip via the
-    // applied marker; all three views unchanged
+    // RERUN the whole pipeline: every ivm task must be idempotent — each
+    // fold skips a batch its newest generation already holds; all three
+    // views unchanged
     IngestionRunner.runPipeline(spark, cfg)
     spark.read.parquet("/tmp/graft-maint/view")
       .select(col("o_orderstatus"), col("n_rows"),

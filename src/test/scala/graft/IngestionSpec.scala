@@ -485,8 +485,9 @@ class IngestionSpec extends SparkSpec {
     // --- profile: batch unit is atomic, replay skips, legacy root files
     // (pre-r9 plain append) still participate in the fold
     val store = s"$root/prof"
-    graft.metrics.ProfileStore.append(
-      Seq((9L, "legacy")).toDF("doc_id", "text"), Seq("doc_id"), store)
+    graft.metrics.ProfileStore.profile(
+      Seq((9L, "legacy")).toDF("doc_id", "text"), Seq("doc_id"))
+      .write.parquet(store)
     def profTask = graft.config.MaintenanceConfig(
       `type` = "profile", path = store, source = Some(src),
       columns = Seq("doc_id"))
@@ -500,14 +501,33 @@ class IngestionSpec extends SparkSpec {
     // leftover tmp dir from a crashed attempt is invisible to the fold
     new java.io.File(s"$store/.tmp-stale").mkdirs()
     nRows() shouldBe 3
+    // --- profile and group generations: a crash after a generation's data
+    // but before its commit leaves it unread; the rerun overwrites the
+    // torn data in place and commits once; replays skip
+    val kv = s"$root/kv"
+    Seq(("x", 10L), ("y", 5L)).toDF("k", "v").write.parquet(kv)
+    for ((kind, task, result) <- foldKinds(s"$root/folds")) withClue(s"$kind: ") {
+      val st = task(kv).path
+      IngestionRunner.runMaintenance(spark, task(kv))
+      val folded = result()
+      val gen = new java.io.File(st).listFiles()
+        .filter(_.getName.startsWith("state-p-000001-")).head
+      new java.io.File(s"$st/_commits/000001").delete() shouldBe true
+      Files.writeString(gen.toPath.resolve("part-torn.parquet"), "partial")
+      IngestionRunner.runMaintenance(spark, task(kv))
+      result() shouldBe folded
+      commits(st) shouldBe Seq("000001")
+      IngestionRunner.runMaintenance(spark, task(kv)) // replay: no change
+      commits(st) shouldBe Seq("000001")
+      new java.io.File(s"$st/.state-tmp-stale").mkdirs()
+      result() shouldBe folded
+    }
   }
 
   test("pointer-publish appends heal every crash window on dedup-index " +
        "and profile stores: uncommitted units invisible, reruns complete, " +
        "replays skip, lost commit races surface, modes mix on one store") {
-    import org.apache.spark.sql.functions._
     import graft.similarity.DedupIndex
-    import graft.metrics.ProfileStore
     val root = tmpDir("graft-pointer-append")
     val idx = s"$root/idx"
     val b1 = Seq((1L, "alpha beta gamma delta"),
@@ -551,23 +571,40 @@ class IngestionSpec extends SparkSpec {
     DedupIndex.load(spark, idx)._1.count() shouldBe 5
     IngestionRunner.runMaintenance(spark, task) // replay: no change
     DedupIndex.load(spark, idx)._1.count() shouldBe 5
-    // --- profile store, pointer mode: same three windows
-    val store = s"$root/prof"
-    ProfileStore.appendAtomic(b1, Seq("doc_id"), store, "p1")
-    def nRows2() = ProfileStore.current(spark, store)
-      .filter(col("column") === "doc_id").collect()
-      .head.getAs[Number]("n_rows").longValue()
-    nRows2() shouldBe 2
-    ProfileStore.appendAtomic(b2, Seq("doc_id"), store, "p2")
-    new java.io.File(s"$store/_commits/p2").delete() shouldBe true
-    ProfileStore.batchApplied(spark, store, "p2") shouldBe false
-    nRows2() shouldBe 2 // uncommitted unit invisible to the fold
-    ProfileStore.appendAtomic(b2, Seq("doc_id"), store, "p2")
-    nRows2() shouldBe 3
-    new java.io.File(s"$store/_commits/p9").createNewFile() shouldBe true
-    intercept[IllegalStateException] {
-      ProfileStore.appendAtomic(b3, Seq("doc_id"), store, "p9")
-    }.getMessage should include("commit race")
+    // --- profile and group generations: the same windows
+    val kvs = (1 to 3).map { i =>
+      val p = s"$root/kv$i"
+      Seq((s"k$i", i * 10L), ("x", 1L)).toDF("k", "v").write.parquet(p)
+      p
+    }
+    for ((kind, task, result) <- foldKinds(s"$root/folds")) withClue(s"$kind: ") {
+      val st = task(kvs(0)).path
+      IngestionRunner.runMaintenance(spark, task(kvs(0)))
+      val r1 = result()
+      IngestionRunner.runMaintenance(spark, task(kvs(1)))
+      val r2 = result()
+      (r2 == r1) shouldBe false
+      // generation 2's commit record lost: its data is invisible, and a
+      // replay of batch 1 publishes from generation 1
+      new java.io.File(s"$st/_commits/000002").delete() shouldBe true
+      IngestionRunner.runMaintenance(spark, task(kvs(0)))
+      result() shouldBe r1
+      // the rerun overwrites the orphaned generation in place and commits it
+      IngestionRunner.runMaintenance(spark, task(kvs(1)))
+      result() shouldBe r2
+      commits(st) shouldBe Seq("000001", "000002")
+      IngestionRunner.runMaintenance(spark, task(kvs(1))) // replay: no change
+      commits(st) shouldBe Seq("000001", "000002")
+      result() shouldBe r2
+      // lost commit race: another writer committed generation 3, whose
+      // data this fold did not see
+      Files.writeString(Paths.get(st, "_commits", "000003"),
+        "state-p-000003-000000")
+      intercept[IllegalStateException] {
+        IngestionRunner.runMaintenance(spark, task(kvs(2)))
+      }.getMessage should include("commit race")
+      result() shouldBe r2
+    }
   }
 
   test("a rename-era dedup-index batch torn between its fingerprints and " +
@@ -612,13 +649,9 @@ class IngestionSpec extends SparkSpec {
     Seq(("x", 10L), ("y", 5L)).toDF("k", "v")
       .write.mode("overwrite").parquet(src)
     // --- group: a legacy partition exists for this source; the rerun must
-    // REPLACE it (same key), not write a second sha-suffixed partition
-    // that double-counts the batch in the fold
-    graft.transform.Ivm.appendIdempotent(
-      graft.transform.Ivm.viewDelta(
-        graft.transform.Ivm.asZ(spark.read.parquet(src)),
-        Seq("k"), Seq("v" -> col("v"))),
-      s"$root/stg", legacyKey)
+    // skip the batch (the partition is its applied record), not fold it a
+    // second time
+    plantGroupPartition(s"$root/stg", legacyKey, src)
     IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
       `type` = "ivm", path = s"$root/stg", source = Some(src),
       keys = Seq("k"), sums = Seq("v"), agg = "group",
@@ -665,86 +698,131 @@ class IngestionSpec extends SparkSpec {
        "keeps the newest `keep`, and replays of pruned batches still skip " +
        "via the preserved _applied markers") {
     import org.apache.spark.sql.functions._
-    for (publish <- Seq("rename", "pointer")) withClue(s"publish=$publish: ") {
-      val root = tmpDir(s"graft-ivm-prune-$publish")
-      val srcs = (1 to 4).map { i =>
+    // min over a store the retired rename protocol wrote, then min, group
+    // and profile (pruned by its `profile-compact` type) over generations
+    for (kind <- Seq("min-rename", "min", "group", "profile")) withClue(s"$kind: ") {
+      val root = tmpDir(s"graft-prune-$kind")
+      val srcs = (1 to 5).map { i =>
         val p = s"$root/b$i"
         Seq((s"k$i", i.toLong * 10)).toDF("k", "v")
           .write.mode("overwrite").parquet(p)
         p
       }
-      def cfg(src: String) = graft.config.MaintenanceConfig(
-        `type` = "ivm", path = s"$root/st", source = Some(src),
-        keys = Seq("k"), columns = Seq("v"), agg = "min",
-        viewPath = Some(s"$root/view"))
-      if (publish == "rename") {
-        // a store the retired rename protocol wrote: four generations,
-        // each the complete min state after its batch; the replay of the
-        // last one skips and publishes the view
-        srcs.indices.foreach(i => plantRenamedGeneration(s"$root/st", i + 1,
+      def cfg(src: String) = kind match {
+        case "profile" => graft.config.MaintenanceConfig(`type` = "profile",
+          path = s"$root/st", source = Some(src), columns = Seq("v"))
+        case "group" => graft.config.MaintenanceConfig(`type` = "ivm",
+          path = s"$root/st", source = Some(src), keys = Seq("k"),
+          sums = Seq("v"), agg = "group", viewPath = Some(s"$root/view"))
+        case _ => graft.config.MaintenanceConfig(`type` = "ivm",
+          path = s"$root/st", source = Some(src), keys = Seq("k"),
+          columns = Seq("v"), agg = "min", viewPath = Some(s"$root/view"))
+      }
+      // the view's value per key, or the profile's row count
+      def result(): Map[String, Long] =
+        if (kind == "profile") Map("n_rows" ->
+          graft.metrics.ProfileStore.current(spark, s"$root/st")
+            .filter(col("column") === "v").head().getAs[Long]("n_rows"))
+        else spark.read.parquet(s"$root/view").collect()
+          .map(r => r.getAs[String]("k") ->
+            r.getAs[Number](if (kind == "group") "v" else "min_v").longValue())
+          .toMap
+      def expected(n: Int): Map[String, Long] =
+        if (kind == "profile") Map("n_rows" -> n.toLong)
+        else (1 to n).map(i => s"k$i" -> i * 10L).toMap
+      if (kind == "min-rename") {
+        // four generations, each the complete min state after its batch;
+        // the replay of the last one skips and publishes the view
+        (0 until 4).foreach(i => plantRenamedGeneration(s"$root/st", i + 1,
           srcs(i), (0 to i).map(j => (s"k${j + 1}", (j + 1) * 10L, 1L))))
-        IngestionRunner.runMaintenance(spark, cfg(srcs.last))
-      } else srcs.foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
-      // a generation's dir: state-<n>, or state-p-<n>-<keyhash> (compared
-      // up to the key hash) under pointer publish
+        IngestionRunner.runMaintenance(spark, cfg(srcs(3)))
+      } else srcs.take(4).foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
+      // a generation's dir: state-<n> as the rename protocol wrote it, or
+      // state-p-<n>-<keyhash> (compared up to the key hash)
       def gen(n: Int) =
-        if (publish == "rename") f"state-$n%06d" else f"state-p-$n%06d-"
+        if (kind == "min-rename") f"state-$n%06d" else f"state-p-$n%06d-"
       def stateDirs() = new java.io.File(s"$root/st").listFiles()
         .filter(_.getName.startsWith("state-")).map(_.getName).sorted.toSeq
         .map(_.take(gen(0).length))
-      def commits() = Option(new java.io.File(s"$root/st/_commits").list())
-        .map(_.filterNot(_.startsWith(".")).sorted.toSeq).getOrElse(Seq.empty)
       stateDirs() shouldBe (1 to 4).map(gen)
-      def view() = spark.read.parquet(s"$root/view").collect()
-        .map(r => r.getAs[String]("k") -> r.getAs[Number]("min_v").longValue())
-        .toMap
-      val full = view()
-      full.keySet shouldBe Set("k1", "k2", "k3", "k4")
+      result() shouldBe expected(4)
       IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-        `type` = "ivm-prune", path = s"$root/st", keep = 2))
+        `type` = if (kind == "profile") "profile-compact" else "ivm-prune",
+        path = s"$root/st", keep = 2))
       stateDirs() shouldBe Seq(gen(3), gen(4))
-      // the retired generations' commit pointers went with them
-      if (publish == "pointer") commits() shouldBe Seq("000003", "000004")
+      // the retired generations' commit records went with them
+      if (kind != "min-rename") commits(s"$root/st") shouldBe Seq("000003", "000004")
       // pruned generations left _applied markers behind (ignore the local
       // filesystem's .crc sidecars)
       new java.io.File(s"$root/st/_applied").list()
         .count(!_.startsWith(".")) shouldBe 2
-      // replaying a PRUNED batch is a no-op: no new generation, view intact
+      // replaying a PRUNED batch is a no-op: no new generation, result intact
       rmrfDir(new java.io.File(s"$root/view"))
       IngestionRunner.runMaintenance(spark, cfg(srcs.head))
       stateDirs() shouldBe Seq(gen(3), gen(4))
-      view() shouldBe full
+      result() shouldBe expected(4)
       // a genuinely new batch still folds on top of the surviving state
-      val src5 = s"$root/b5"
-      Seq(("k5", 50L)).toDF("k", "v").write.parquet(src5)
-      IngestionRunner.runMaintenance(spark, cfg(src5))
-      view().keySet shouldBe Set("k1", "k2", "k3", "k4", "k5")
+      IngestionRunner.runMaintenance(spark, cfg(srcs(4)))
+      result() shouldBe expected(5)
     }
   }
 
-  test("maintenance: profile-compact folds the store through pipeline " +
-       "config") {
-    val root = tmpDir("graft-prof-compact")
-    val src = s"$root/batch"
-    Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "s")
-      .write.mode("overwrite").parquet(src)
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "profile", path = s"$root/prof", source = Some(src),
-      columns = Seq("id", "s")))
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "profile-compact", path = s"$root/prof"))
-    val s = graft.metrics.ProfileStore.summary(
-      graft.metrics.ProfileStore.current(spark, s"$root/prof"))
-      .collect().map(r => r.getAs[String]("column") -> r).toMap
-    s("id").getAs[Long]("n_rows") shouldBe 3L
-    // the folded batch's appliedness survived: a replay skips
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "profile", path = s"$root/prof", source = Some(src),
-      columns = Seq("id", "s")))
-    graft.metrics.ProfileStore.summary(
-      graft.metrics.ProfileStore.current(spark, s"$root/prof"))
-      .collect().map(r => r.getAs[String]("column") -> r).toMap
-      .apply("id").getAs[Long]("n_rows") shouldBe 3L
+  test("parent-format fold stores continue without refolding: keyed " +
+       "profile units with root files, group partitions under both key " +
+       "formats") {
+    import org.apache.spark.sql.functions._
+    import graft.metrics.ProfileStore
+    val root = tmpDir("graft-parent-format")
+    val b = (0 to 3).map { i =>
+      val p = s"$root/deltas/b$i"
+      Seq(("x", i + 1L), (s"k$i", 10L * (i + 1))).toDF("k", "v").write.parquet(p)
+      p
+    }
+    // --- profile: b0 as root files (a plain append), b1 as a keyed unit
+    // with its commit record, b2 as a rename-era unit
+    val store = s"$root/prof"
+    def prof(i: Int) = ProfileStore.profile(spark.read.parquet(b(i)), Seq("v"))
+    prof(0).write.parquet(store)
+    val k1 = Commit.batchKeyFor(b(1))
+    prof(1).write.parquet(s"$store/batch-p-$k1")
+    Files.createDirectories(Paths.get(store, "_commits"))
+    Files.createFile(Paths.get(store, "_commits", k1))
+    prof(2).write.parquet(s"$store/batch-${Commit.batchKeyFor(b(2))}")
+    def profTask(i: Int) = graft.config.MaintenanceConfig(`type` = "profile",
+      path = store, source = Some(b(i)), columns = Seq("v"))
+    def nRows() = ProfileStore.current(spark, store)
+      .filter(col("column") === "v").head().getAs[Long]("n_rows")
+    nRows() shouldBe 6
+    // the parent's batches are folded already: no generation is written
+    Seq(1, 2).foreach(i => IngestionRunner.runMaintenance(spark, profTask(i)))
+    gens(store) shouldBe empty
+    nRows() shouldBe 6
+    // a new batch folds onto the parent-format data as generation 1
+    IngestionRunner.runMaintenance(spark, profTask(3))
+    gens(store) shouldBe Seq("state-p-000001")
+    nRows() shouldBe 8
+    (1 to 3).foreach(i => IngestionRunner.runMaintenance(spark, profTask(i)))
+    gens(store) shouldBe Seq("state-p-000001")
+    nRows() shouldBe 8
+    // --- group: b0's partition under the pre-r8 key, b1's under the
+    // current key
+    val stg = s"$root/stg"
+    plantGroupPartition(stg, b(0).replaceAll("[^A-Za-z0-9._-]", "_"), b(0))
+    plantGroupPartition(stg, Commit.batchKeyFor(b(1)), b(1))
+    def grpTask(i: Int) = graft.config.MaintenanceConfig(`type` = "ivm",
+      path = stg, source = Some(b(i)), keys = Seq("k"), sums = Seq("v"),
+      agg = "group", viewPath = Some(s"$root/view"))
+    def view() = spark.read.parquet(s"$root/view").collect()
+      .map(r => r.getAs[String]("k") -> r.getAs[Number]("v").longValue()).toMap
+    Seq(0, 1).foreach(i => IngestionRunner.runMaintenance(spark, grpTask(i)))
+    gens(stg) shouldBe empty
+    view() shouldBe Map("x" -> 3L, "k0" -> 10L, "k1" -> 20L)
+    IngestionRunner.runMaintenance(spark, grpTask(2))
+    gens(stg) shouldBe Seq("state-p-000001")
+    view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
+    (0 to 2).foreach(i => IngestionRunner.runMaintenance(spark, grpTask(i)))
+    gens(stg) shouldBe Seq("state-p-000001")
+    view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
   }
 
   test("maintenance: dedup-index-compact and dedup-index-rebucket run the " +
@@ -812,6 +890,52 @@ class IngestionSpec extends SparkSpec {
     MinHashLsh.fingerprints(docs, "doc_id", "text", 3).write.parquet(fps)
     MinHashLsh.bandIndex(spark.read.parquet(fps), "doc_id", 16, 4)
       .write.parquet(s"$idx/bands/batch-$key")
+  }
+
+  /** The config folds that publish Commit generations, over (k, v)
+    * batches under `root`: each kind's task for a batch path and a reader
+    * of its result (the view's v per k, or the profile's n_rows and sum
+    * of v). */
+  private def foldKinds(root: String): Seq[(String,
+      String => graft.config.MaintenanceConfig, () => Map[String, Long])] = {
+    import org.apache.spark.sql.functions.col
+    Seq(
+      ("profile",
+        src => graft.config.MaintenanceConfig(`type` = "profile",
+          path = s"$root/prof", source = Some(src), columns = Seq("v")),
+        () => {
+          val r = graft.metrics.ProfileStore.current(spark, s"$root/prof")
+            .filter(col("column") === "v").head()
+          Map("n_rows" -> r.getAs[Long]("n_rows"), "sum" -> r.getAs[Long]("sum_l"))
+        }),
+      ("group",
+        src => graft.config.MaintenanceConfig(`type` = "ivm",
+          path = s"$root/grp", source = Some(src), keys = Seq("k"),
+          sums = Seq("v"), agg = "group", viewPath = Some(s"$root/grp-view")),
+        () => spark.read.parquet(s"$root/grp-view").collect()
+          .map(r => r.getAs[String]("k") -> r.getAs[Number]("v").longValue())
+          .toMap))
+  }
+
+  /** The generation record names under `store`'s `_commits`, sorted. */
+  private def commits(store: String): Seq[String] =
+    Option(new java.io.File(s"$store/_commits").list()).toSeq.flatten
+      .filter(_.forall(_.isDigit)).sorted
+
+  /** The generation dirs of `store`, named up to their key hash. */
+  private def gens(store: String): Seq[String] =
+    new java.io.File(store).list().filter(_.startsWith("state-p-"))
+      .map(_.take("state-p-000000".length)).sorted.toSeq
+
+  /** Plant the batch at `src` in the group store at `stateDir` as the
+    * parent's partition layout wrote it: its view delta (keys k, sums v)
+    * under `_batch_key=<key>`. */
+  private def plantGroupPartition(stateDir: String, key: String,
+                                  src: String): Unit = {
+    import graft.transform.Ivm
+    Ivm.viewDelta(Ivm.asZ(spark.read.parquet(src)), Seq("k"),
+      Seq("v" -> org.apache.spark.sql.functions.col("v")))
+      .write.parquet(s"$stateDir/_batch_key=$key")
   }
 
   private def rmrfDir(p: java.io.File): Unit = {

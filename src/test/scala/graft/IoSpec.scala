@@ -231,8 +231,28 @@ class IoSpec extends SparkSpec {
     r.filesAfter should be < 5
     spark.read.parquet(dir).count() shouldBe 10000
     // temp/old dirs are gone after the swap
-    new java.io.File(dir + "__compact_tmp").exists() shouldBe false
-    new java.io.File(dir + "__compact_old").exists() shouldBe false
+    new java.io.File(dir + "__rewrite_tmp").exists() shouldBe false
+    new java.io.File(dir + "__rewrite_old").exists() shouldBe false
+  }
+
+  test("a crash between swapRewrite's two renames heals: the next compact " +
+       "or zorder restores the table from __rewrite_old, rows intact") {
+    import graft.lakehouse.{Compaction, ZOrder}
+    for (op <- Seq("compact", "zorder")) withClue(s"$op: ") {
+      val dir = tmpDir("swap-crash") + "/t"
+      spark.range(1000).toDF("id").repartition(8).write.parquet(dir)
+      // the state the crash leaves: the table moved aside, and a fully
+      // written rewrite not yet published
+      new java.io.File(dir).renameTo(new java.io.File(dir + "__rewrite_old")) shouldBe true
+      spark.range(5).toDF("id").write.parquet(dir + "__rewrite_tmp")
+      if (op == "compact") Compaction.compact(spark, dir, targetFileBytes = 1L * 1024 * 1024)
+      else ZOrder.rewrite(spark, dir, Seq("id"), targetFileBytes = 1L * 1024 * 1024)
+      val back = spark.read.parquet(dir)
+      back.count() shouldBe 1000
+      back.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) shouldBe 499500L
+      new java.io.File(dir + "__rewrite_old").exists() shouldBe false
+      new java.io.File(dir + "__rewrite_tmp").exists() shouldBe false
+    }
   }
 
   test("compactPartitioned compacts each partition dir independently") {
@@ -309,8 +329,8 @@ class IoSpec extends SparkSpec {
     r.rowsAfter shouldBe 2
     spark.read.parquet(dir).select("customer_id").as[Long].collect().sorted shouldBe
       Array(2L, 3L)
-    new java.io.File(dir + "__retention_tmp").exists() shouldBe false
-    new java.io.File(dir + "__retention_old").exists() shouldBe false
+    new java.io.File(dir + "__rewrite_tmp").exists() shouldBe false
+    new java.io.File(dir + "__rewrite_old").exists() shouldBe false
   }
 
   test("Retention.enforcePartitioned deletes expired partitions wholesale") {

@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
 import graft.metrics.ProfileStore
 
 /** Monoid laws for incremental profiles: batch profiles folded in any
@@ -82,8 +85,8 @@ class ProfileStoreSpec extends SparkSpec {
   test("state-dir round trip: append batches, fold, distinct estimate sane") {
     val docs = graft.tables.Tables.documents(spark, dir)
     val state = tmpDir("profile-state")
-    (0 until 3).foreach(i =>
-      ProfileStore.append(docs.filter(col("doc_id") % 3 === i), cols, state))
+    (0 until 3).foreach(i => ProfileStore.fold(spark, state, s"$state-src/$i",
+      cols)(docs.filter(col("doc_id") % 3 === i)))
     val s = ProfileStore.summary(ProfileStore.current(spark, state))
       .collect().map(r => r.getAs[String]("column") -> r).toMap
     val n = docs.count()
@@ -97,53 +100,49 @@ class ProfileStoreSpec extends SparkSpec {
     s("lang").getAs[Long]("n_distinct_approx") shouldBe 5L
   }
 
-  test("compact folds the store to one snapshot: summary identical, " +
-       "appliedness of every folded batch preserved, post-compact appends " +
-       "still fold, stale crash leftovers never adopted") {
+  test("a parent-format store is the first fold's base: summary " +
+       "identical, its batches never refold, later batches fold on top, " +
+       "orphan generations never adopted") {
     val docs = graft.tables.Tables.documents(spark, dir)
-    val state = tmpDir("profile-compact")
+    val state = tmpDir("profile-parent")
     def slice(i: Int) = docs.filter(col("doc_id") % 5 === i)
-    // mixed layouts: plain appends + rename-published (planted as the
-    // retired rename protocol wrote it) + pointer-published
-    ProfileStore.append(slice(0), cols, state)
-    ProfileStore.profile(slice(1), cols).write.parquet(s"$state/batch-k1")
-    ProfileStore.appendAtomic(slice(2), cols, state, "k2")
+    def src(i: Int) = s"$state-src/slice=$i"
+    def fold(i: Int) = ProfileStore.fold(spark, state, src(i), cols)(slice(i))
+    // mixed parent layouts: plain appends (root files), a rename-era unit,
+    // and a keyed unit with its commit record
+    ProfileStore.profile(slice(0), cols).write.mode("append").parquet(state)
+    ProfileStore.profile(slice(1), cols)
+      .write.parquet(s"$state/batch-${Commit.batchKeyFor(src(1))}")
+    ProfileStore.profile(slice(2), cols)
+      .write.parquet(s"$state/batch-p-${Commit.batchKeyFor(src(2))}")
+    Files.createDirectories(Paths.get(state, "_commits"))
+    Files.createFile(Paths.get(state, "_commits", Commit.batchKeyFor(src(2))))
     def summaryRows() = ProfileStore
       .summary(ProfileStore.current(spark, state))
       .collect().map(_.toString).toSeq
     val before = summaryRows()
-    // plant a crashed earlier compaction attempt holding a COPY of the
-    // store (worst case: adopting it would double every count)
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, new org.apache.hadoop.fs.Path(state),
-      fs, new org.apache.hadoop.fs.Path(state + "__rewrite_tmp"),
-      false, spark.sparkContext.hadoopConfiguration)
-    val stats = ProfileStore.compact(spark, state)
-    // ≥3 published units before (root part files count individually);
-    // exactly ONE snapshot file after
-    stats.unitsBefore should be >= 3
-    stats.unitsAfter shouldBe 1
+    // an uncommitted generation from a crashed attempt holding the WHOLE
+    // table's profile (worst case: adopting it would double every count)
+    ProfileStore.profile(docs, cols).write.parquet(s"$state/state-p-000001-000000")
     summaryRows() shouldBe before
-    // appliedness survived the fold: replays of k1/k2 must skip
-    ProfileStore.batchApplied(spark, state, "k1") shouldBe true
-    ProfileStore.batchApplied(spark, state, "k2") shouldBe true
-    ProfileStore.batchApplied(spark, state, "k9") shouldBe false
-    // the store still accepts and folds post-compact batches
-    ProfileStore.appendAtomic(slice(3), cols, state, "k3")
-    ProfileStore.appendAtomic(slice(4), cols, state, "k4")
-    val all = ProfileStore.summary(ProfileStore.current(spark, state))
+    // replays of the parent's batches skip: no generation is written
+    fold(1)
+    fold(2)
+    new java.io.File(state).list().count(_.startsWith("state-p-")) shouldBe 1
+    summaryRows() shouldBe before
+    // later batches fold on top, one generation each
+    fold(3)
+    fold(4)
+    def all() = ProfileStore.summary(ProfileStore.current(spark, state))
       .collect().map(r => r.getAs[String]("column") -> r).toMap
-    all("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
-    all("doc_id").getAs[Long]("sum_l") shouldBe
+    all()("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
+    all()("doc_id").getAs[Long]("sum_l") shouldBe
       docs.agg(sum(col("doc_id"))).head.getLong(0)
-    // a second compact folds back to one unit (idempotent fold-of-fold)
-    ProfileStore.compact(spark, state).unitsAfter shouldBe 1
-    ProfileStore.summary(ProfileStore.current(spark, state))
-      .collect().map(r => r.getAs[String]("column") -> r).toMap
-      .apply("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
-    ProfileStore.batchApplied(spark, state, "k3") shouldBe true
+    new java.io.File(state).list().count(_.startsWith("state-p-")) shouldBe 3
+    // replays after generations exist still skip
+    (1 to 4).foreach(fold)
+    all()("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
+    new java.io.File(state).list().count(_.startsWith("state-p-")) shouldBe 3
   }
 
   test("nulls count per batch and never poison min/max or sums") {
