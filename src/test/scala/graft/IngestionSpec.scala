@@ -825,6 +825,34 @@ class IngestionSpec extends SparkSpec {
     view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
   }
 
+  test("maintenance: profile-compact folds the store through pipeline " +
+       "config") {
+    val root = tmpDir("graft-prof-compact")
+    val srcs = Seq("b1" -> Seq((1L, "a"), (2L, "b"), (3L, "a")),
+                   "b2" -> Seq((4L, "c"))).map { case (name, rows) =>
+      val p = s"$root/$name"
+      rows.toDF("id", "s").write.mode("overwrite").parquet(p)
+      p
+    }
+    def fold(src: String): Unit = IngestionRunner.runMaintenance(spark,
+      graft.config.MaintenanceConfig(`type` = "profile", path = s"$root/prof",
+        source = Some(src), columns = Seq("id", "s")))
+    def nRows(): Long = graft.metrics.ProfileStore.summary(
+      graft.metrics.ProfileStore.current(spark, s"$root/prof"))
+      .collect().map(r => r.getAs[String]("column") -> r).toMap
+      .apply("id").getAs[Long]("n_rows")
+    srcs.foreach(fold)
+    gens(s"$root/prof") shouldBe Seq("state-p-000001", "state-p-000002")
+    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+      `type` = "profile-compact", path = s"$root/prof", keep = 1))
+    gens(s"$root/prof") shouldBe Seq("state-p-000002")
+    nRows() shouldBe 4L
+    // every folded batch's appliedness survived: a replay skips
+    srcs.foreach(fold)
+    gens(s"$root/prof") shouldBe Seq("state-p-000002")
+    nRows() shouldBe 4L
+  }
+
   test("maintenance: dedup-index-compact and dedup-index-rebucket run the " +
        "index maintenance from pipeline config") {
     import graft.core.IngestionRunner
