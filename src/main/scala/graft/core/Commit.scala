@@ -26,12 +26,11 @@ import org.apache.spark.sql.types.StructType
   * that create degrades to check-then-act, so lost-race DETECTION is
   * best-effort there — the single-writer contract is the boundary.
   *
-  * Stores written by earlier layouts still read: a `batch-<key>` unit or
-  * `state-<n>` generation is its own commit record, and its hidden
-  * `.tmp-*`/`.state-tmp-*` leftovers are never read. A fold store without
-  * generations — a flat `state` dir, the profile store's root files and
-  * keyed units, the group view's `_batch_key=<key>` partitions — is the
-  * first fold's base, and every batch it recorded stays folded.
+  * A fold store knows one layout: committed generations plus `_applied`
+  * markers. A store an older layout wrote (root files, keyed or
+  * rename-era units, `_batch_key=<key>` partitions, rename-era `state-<n>`
+  * generations, hidden temp leftovers) is upgraded ONCE by its next fold
+  * (see [[Store.fold]]); until then reading or pruning it fails loudly.
   */
 object Commit {
 
@@ -40,6 +39,7 @@ object Commit {
   private val RenamedUnitPrefix = "batch-" // rename-era units, read only
   private val UnitPrefix = "batch-p-"
   private val StatePrefix = "state-"
+  private val GenPrefix = "state-p-"
   private val BatchKeyFile = "_batch_key"
 
   /** Injective batch key for idempotent maintenance folds: sanitized
@@ -48,12 +48,10 @@ object Commit {
   def batchKeyFor(src: String): String = s"${legacyBatchKeyFor(src)}-${sha6(src)}"
 
   /** The pre-r8 key format (sanitized path, no hash suffix) — still
-    * ACCEPTED when checking applied-ness so stores written before the
+    * ACCEPTED in `_applied` markers so stores written before the
     * injective-key change don't re-fold their batches; never written. */
   private def legacyBatchKeyFor(src: String): String =
     src.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def batchKeys(src: String) = Seq(batchKeyFor(src), legacyBatchKeyFor(src))
 
   private def sha6(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
@@ -87,16 +85,14 @@ object Commit {
     private def names(d: Path): Set[String] = list(d).map(_.getPath.getName).toSet
 
     /** The readable data paths under `d`: files and dirs (plain appends, a
-      * flat `state` dir), committed and rename-era units and `_batch_key=`
-      * partitions — never a hidden temp dir, an uncommitted unit or a
-      * generation dir. */
+      * flat `state` dir), committed and rename-era units — never a hidden
+      * temp dir, an uncommitted unit or a generation dir. */
     private def readable(d: Path, commits: Set[String]): Seq[String] =
       list(d).filter { st =>
         val n = st.getPath.getName
-        n.startsWith(s"$BatchKeyFile=") ||
-          !n.startsWith(".") && !n.startsWith("_") && !n.startsWith(StatePrefix) &&
-            !(st.isDirectory && n.startsWith(UnitPrefix) &&
-              !commits.contains(n.stripPrefix(UnitPrefix)))
+        !n.startsWith(".") && !n.startsWith("_") && !n.startsWith(StatePrefix) &&
+          !(st.isDirectory && n.startsWith(UnitPrefix) &&
+            !commits.contains(n.stripPrefix(UnitPrefix)))
       }.map(_.getPath.toString)
 
     /** Write one unit through `write` at `data`, unread until its commit;
@@ -123,11 +119,18 @@ object Commit {
       }
     }
 
-    /** Pre-r9 stores recorded appliedness as a SEPARATE, not crash-atomic
-      * `_applied/<key>` marker. Those markers stay honored, under both key
-      * formats, so a migrated store never re-applies the batch at `src`. */
+    /** Record batch `key` as applied by an `_applied/<key>` marker. */
+    private def markApplied(key: String): Unit = {
+      val marker = new Path(new Path(root, Applied), key)
+      if (!fs.exists(marker)) writeText(fs, marker, "")
+    }
+
+    /** True iff an `_applied` marker records the batch at `src`, under
+      * either key format, so a store never re-applies a batch whose
+      * record outlived its data (a pruned generation, a pre-r9 append). */
     def markerApplied(src: String): Boolean =
-      batchKeys(src).exists(k => fs.exists(new Path(new Path(root, Applied), k)))
+      Seq(batchKeyFor(src), legacyBatchKeyFor(src))
+        .exists(k => fs.exists(new Path(new Path(root, Applied), k)))
 
     // Keyed batch units (the legacy dedup-index layout): each table of a
     // batch lands as `<table>/batch-p-<key>` and `_commits/<key>` makes
@@ -163,11 +166,10 @@ object Commit {
     }
 
     // Generation snapshots: each folded batch publishes a COMPLETE next
-    // state plus a `_batch_key` file, so the applied record travels inside
-    // the unit: the data goes to `state-p-<n>-<keyhash>` and `_commits/<n>`
-    // holds that name. Rename-era `state-<n>` generations still read.
+    // state plus its `_batch_key` file as `state-p-<n>-<keyhash>`, and
+    // `_commits/<n>` holds that name.
 
-    private case class Gen(n: Int, data: String, record: Option[Path])
+    private case class Gen(n: Int, data: String, record: Path)
 
     /** One look at the store: its root names, its `_commits` names and
       * every generation, each record read once. A record whose data dir
@@ -175,77 +177,103 @@ object Commit {
     private final class Listing {
       val names: Set[String] = Store.this.names(root)
       private val records = list(new Path(root, Commits))
-      val commits: Set[String] = records.map(_.getPath.getName).toSet
-      val gens: Seq[Gen] =
-        names.toSeq.filter(_.startsWith(StatePrefix)).flatMap(n =>
-          n.stripPrefix(StatePrefix).toIntOption.map(Gen(_, n, None))) ++
-          records.flatMap(s => s.getPath.getName.toIntOption.map(n =>
-            Gen(n, readText(fs, s.getPath).trim, Some(s.getPath))))
+      val gens: Seq[Gen] = records.flatMap(s => s.getPath.getName.toIntOption.map(n =>
+        Gen(n, readText(fs, s.getPath).trim, s.getPath)))
       val live: Seq[Gen] = gens.filter(g => names.contains(g.data))
+      // the root names and `_commits` records no generation store writes
+      val oldNames: Seq[String] = names.toSeq.filterNot(n =>
+        n == Commits || n == Applied || n.startsWith(GenPrefix))
+      val oldRecords: Seq[String] =
+        records.map(_.getPath.getName).filter(_.toIntOption.isEmpty)
+      def upgraded: Boolean = oldNames.isEmpty && oldRecords.isEmpty
+      def orFail: Listing = if (upgraded) this else throw new IllegalStateException(
+        s"fold store $root holds an older layout (${(oldNames ++ oldRecords).sorted
+          .take(5).mkString(", ")}); run its profile or ivm maintenance task once to upgrade it")
     }
 
     private def load(schema: StructType, paths: String*): DataFrame =
       spark.read.schema(schema).parquet(paths: _*)
 
-    /** The state `l` shows, read as `schema` so no inference job runs: the
-      * newest generation; else the parent-format data, which `base` turns
-      * into a state (the first fold's base); else None. */
-    private def read(l: Listing, schema: StructType,
-                     base: DataFrame => DataFrame): Option[DataFrame] =
-      l.live.maxByOption(_.n) match {
-        case Some(g) => Some(load(schema, new Path(root, g.data).toString))
-        case None =>
-          val paths = readable(root, l.commits)
-          Option.when(paths.nonEmpty)(base(load(schema, paths: _*)))
-      }
+    /** The newest generation `l` shows, read as `schema` so no inference
+      * job runs; None when the store is empty. */
+    private def read(l: Listing, schema: StructType): Option[DataFrame] =
+      l.live.maxByOption(_.n).map(g => load(schema, new Path(root, g.data).toString))
 
-    /** The current state read as `schema` (see [[fold]] for `base`); None
-      * when the store is empty. */
-    def state(schema: StructType, base: DataFrame => DataFrame): Option[DataFrame] =
-      read(new Listing, schema, base)
+    /** The current state read as `schema`; None when the store is empty. */
+    def state(schema: StructType): Option[DataFrame] = read((new Listing).orFail, schema)
 
-    /** True iff the batch at `src` is folded in, under either key format
-      * (ignoring the pre-r8 key would re-fold it: min double-counts
-      * n_rows): a live generation's `_batch_key`, or a parent-format
-      * record — `_commits/<key>`, a rename-era `batch-<key>` unit, a
-      * `_batch_key=<key>` partition or an `_applied` marker. */
+    /** True iff the batch at `src` is folded in: a live generation's
+      * `_batch_key`, or an `_applied` marker. */
     private def folded(src: String, l: Listing): Boolean = {
-      val keys = batchKeys(src)
-      keys.exists(k => l.commits(k) || l.names(s"$RenamedUnitPrefix$k") ||
-        l.names(s"$BatchKeyFile=$k")) ||
-        l.live.exists { g =>
-          // a recorded generation's name ends in its key's hash, so only
-          // a candidate's `_batch_key` is read
-          (g.record.isEmpty || keys.exists(k => g.data.endsWith(sha6(k)))) && {
-            val f = new Path(new Path(root, g.data), BatchKeyFile)
-            fs.exists(f) && keys.contains(readText(fs, f))
-          }
-        } || markerApplied(src)
+      val key = batchKeyFor(src)
+      l.live.exists { g =>
+        // a generation's name ends in its key's hash, so only a
+        // candidate's `_batch_key` is read
+        g.data.endsWith(sha6(key)) && {
+          val f = new Path(new Path(root, g.data), BatchKeyFile)
+          fs.exists(f) && readText(fs, f) == key
+        }
+      } || markerApplied(src)
+    }
+
+    /** Publish generation `n` of batch `key` under a name unique per (n,
+      * batch): a crashed attempt's uncommitted data is overwritten in place. */
+    private def publish(n: Int, key: String)(write: String => Unit): Path = {
+      val data = unit(new Path(root, f"$GenPrefix$n%06d-${sha6(key)}"))(write)
+      commit(f"$n%06d", data.getName)(fs.delete(data, true))
+      data
+    }
+
+    /** Bring a store an older layout wrote to the one layout in three
+      * steps, each safe to redo after a crash: (1) an `_applied` marker for
+      * every batch key its old names record, in the format found; (2)
+      * unless a live generation already holds it, the state as one
+      * committed generation — `base` over the newest `state-<n>`, else
+      * over the readable data; (3) delete the old names. */
+    private def upgrade(l: Listing, schema: StructType,
+                        base: DataFrame => DataFrame): Listing = {
+      val partitions = l.oldNames.filter(_.startsWith(s"$BatchKeyFile="))
+      val renamedGens = l.oldNames.flatMap(n =>
+        n.stripPrefix(StatePrefix).toIntOption.map(_ -> n))
+      (l.oldRecords ++ partitions.map(_.stripPrefix(s"$BatchKeyFile=")) ++
+        l.oldNames.filter(n => n.startsWith(RenamedUnitPrefix) &&
+          !n.startsWith(UnitPrefix)).map(_.stripPrefix(RenamedUnitPrefix)) ++
+        renamedGens.map(g => new Path(new Path(root, g._2), BatchKeyFile))
+          .filter(fs.exists).map(readText(fs, _))).foreach(markApplied)
+      val liveN = l.live.map(_.n).maxOption.getOrElse(0)
+      val state = renamedGens.maxByOption(_._1).filter(_._1 > liveN) match {
+        case Some((_, n)) => Seq(new Path(root, n).toString)
+        case None if l.live.isEmpty => readable(root, l.oldRecords.toSet) ++
+          partitions.map(n => new Path(root, n).toString)
+        case None => Nil
+      }
+      if (state.nonEmpty) publish((liveN +: renamedGens.map(_._1)).max + 1, "")(
+        base(load(schema, state: _*)).write.mode("overwrite").parquet(_))
+      l.oldNames.foreach(n => fs.delete(new Path(root, n), true))
+      l.oldRecords.foreach(n => fs.delete(new Path(new Path(root, Commits), n), false))
+      new Listing
     }
 
     /** Fold the batch at `src` in once, however often the caller reruns:
       * unless it is already folded, `merge` it into the current state
       * (None = an empty store) and publish the result as the next
       * generation. Returns the current state read as `schema` (which
-      * `merge` must also produce); None when the store is empty. A store
-      * without generations holds parent-format data — per-batch rows, or
-      * a flat `state` dir — that `base` turns into a state. A lost commit
-      * race means the fold read stale state; retrying would silently drop
-      * the other writer's batch, so it surfaces. */
+      * `merge` and `base` must also produce); None when the store is empty.
+      * A store an older layout wrote is upgraded first, `base` turning its
+      * per-batch rows into a state. A lost commit race means the fold read
+      * stale state; retrying would silently drop the other writer's batch,
+      * so it surfaces. */
     def fold(src: String, schema: StructType, base: DataFrame => DataFrame)(
         merge: Option[DataFrame] => DataFrame): Option[DataFrame] = {
-      val l = new Listing
-      if (folded(src, l)) read(l, schema, base)
+      val first = new Listing
+      val l = if (first.upgraded) first else upgrade(first, schema, base)
+      if (folded(src, l)) read(l, schema)
       else {
         val key = batchKeyFor(src)
-        val n = l.live.map(_.n).maxOption.getOrElse(0) + 1
-        // the data dir is unique per (n, batch): a crashed attempt left the
-        // SAME name uncommitted, so the rerun overwrites it in place
-        val data = unit(new Path(root, f"${StatePrefix}p-$n%06d-${sha6(key)}")) { d =>
-          merge(read(l, schema, base)).write.mode("overwrite").parquet(d)
+        val data = publish(l.live.map(_.n).maxOption.getOrElse(0) + 1, key) { d =>
+          merge(read(l, schema)).write.mode("overwrite").parquet(d)
           writeText(fs, new Path(d, BatchKeyFile), key)
         }
-        commit(f"$n%06d", data.getName)(fs.delete(data, true))
         Some(load(schema, data.toString))
       }
     }
@@ -256,14 +284,11 @@ object Commit {
       * so a replay still skips: a crash between marker and delete is
       * merely redundant, and the current generation is never touched. */
     def prune(keep: Int): Unit =
-      (new Listing).gens.sortBy(_.n).dropRight(math.max(1, keep)).foreach { g =>
+      (new Listing).orFail.gens.sortBy(_.n).dropRight(math.max(1, keep)).foreach { g =>
         val data = new Path(root, g.data)
         val bk = new Path(data, BatchKeyFile)
-        if (fs.exists(bk)) {
-          val marker = new Path(new Path(root, Applied), readText(fs, bk))
-          if (!fs.exists(marker)) writeText(fs, marker, "")
-        }
-        g.record.foreach(fs.delete(_, false))
+        if (fs.exists(bk)) markApplied(readText(fs, bk))
+        fs.delete(g.record, false)
         fs.delete(data, true)
       }
   }

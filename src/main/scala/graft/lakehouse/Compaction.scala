@@ -37,20 +37,22 @@ object Compaction {
   }
 
   private val OldSuffix = "__rewrite_old"
+  private val TmpSuffix = "__rewrite_tmp"
 
   /** Crash-safe in-place rewrite: `write` lands the new layout in a
     * sibling temp dir, then two renames publish it — the table is never
     * half-rewritten in place, and the pre-swap state survives any crash
-    * (see [[restoreSwapped]] for the crash between the renames). Shared
+    * (see [[restoreSwapped]], which every caller runs first). Shared
     * by [[compact]], [[ZOrder.rewrite]] and [[Retention.enforce]]. */
   private[graft] def swapRewrite(spark: SparkSession, dir: String)
                                 (write: String => Unit): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + "__rewrite_tmp")
+    val tmp = new Path(dir + TmpSuffix)
     val old = new Path(dir + OldSuffix)
     write(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(old)) throw new IllegalStateException(
+      s"rewrite: $old exists; restore it before rewriting $p")
     if (!fs.rename(p, old))
       throw new IllegalStateException(s"rewrite: could not move $p aside")
     if (!fs.rename(tmp, p)) {
@@ -60,15 +62,27 @@ object Compaction {
     fs.delete(old, true)
   }
 
-  /** Heal a crash between [[swapRewrite]]'s two renames, which leaves the
-    * table only at `<dir>__rewrite_old`: move it back to `<dir>`. Every
-    * rewrite calls this before it plans over or reads `<dir>`. */
+  /** Heal a crashed [[swapRewrite]] by what `<dir>__rewrite_old` sits
+    * beside. Without `<dir>`, it is the table a crash between the renames
+    * moved aside: move it back. Beside `<dir>` with no `__rewrite_tmp`,
+    * the crash came after the publish, so it is superseded: delete it.
+    * Beside both, `<dir>` was recreated (say, by an ingest) after a crash
+    * between the renames, and neither dir holds the whole table: fail,
+    * naming both, and delete nothing. Every rewrite calls this before it
+    * plans over or reads `<dir>`. */
   private[graft] def restoreSwapped(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new Path(dir + OldSuffix)
-    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-      throw new IllegalStateException(s"rewrite: could not restore $old to $p")
+    if (fs.exists(old)) {
+      if (!fs.exists(p)) {
+        if (!fs.rename(old, p))
+          throw new IllegalStateException(s"rewrite: could not restore $old to $p")
+      } else if (!fs.exists(new Path(dir + TmpSuffix))) fs.delete(old, true)
+      else throw new IllegalStateException(s"rewrite: $p was recreated after " +
+        s"a crashed rewrite moved its earlier rows to $old; merge the two " +
+        "dirs by hand before rewriting")
+    }
   }
 
   def compact(spark: SparkSession, dir: String,

@@ -71,10 +71,10 @@ object ProfileStore {
       merge(state.fold(p)(_.unionByName(p)).coalesce(1))
     }
 
-  /** The current table profile: the newest generation's #columns rows, or
-    * the merged rows of a store written before generations. */
+  /** The current table profile: the newest generation's #columns rows;
+    * fails on a store an older layout wrote until a `profile` fold upgrades it. */
   def current(spark: SparkSession, stateDir: String): DataFrame =
-    Commit(spark, stateDir).state(RowSchema, merge).getOrElse(
+    Commit(spark, stateDir).state(RowSchema).getOrElse(
       throw new IllegalStateException(s"no profile under $stateDir"))
 
   /** Merge profile rows (from any number of batches) by column. min/max

@@ -40,8 +40,7 @@ object AnnIndex extends BucketedIndex(
     * `<path>/index.json` (see [[BucketedIndex.Layout]]). */
   final case class Manifest(nTables: Int, nBits: Int, dim: Int, seed: Long,
                             numBuckets: Int = 8, version: Int = 0,
-                            vecsDdl: String = "", bandsDdl: String = "",
-                            epoch: Int = 0)
+                            vecsDdl: String = "", bandsDdl: String = "")
       extends BucketedIndex.Manifest {
     def idCol: String = "id"
     def primaryDdl: String = vecsDdl
@@ -54,7 +53,7 @@ object AnnIndex extends BucketedIndex(
   protected def manifestOf(c: String => Long,
                            l: BucketedIndex.Layout): Manifest =
     Manifest(c("nTables").toInt, c("nBits").toInt, c("dim").toInt, c("seed"),
-      l.numBuckets, l.version, l.primaryDdl, l.bandsDdl, l.epoch)
+      l.numBuckets, l.version, l.primaryDdl, l.bandsDdl)
 
   /** (id, v, nrm) — cast to float64 once, norm precomputed once. Zero
     * vectors are the caller's concern (cosine is undefined for them), the

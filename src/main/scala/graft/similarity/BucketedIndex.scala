@@ -70,17 +70,16 @@ abstract class BucketedIndex(
 
   private def relayout(m: M, f: Layout => Layout): M =
     manifestOf(constants(m).toMap, f(Layout(m.numBuckets, m.version,
-      m.epoch, m.idCol, m.primaryDdl, m.bandsDdl)))
+      m.idCol, m.primaryDdl, m.bandsDdl)))
 
   /** Manifest JSON: the band constants, then (bucketed layouts only —
     * legacy [[DedupIndex]] manifests carry constants alone) the layout
-    * fields, under the field names every earlier release wrote. */
+    * fields, under the field names earlier releases wrote. */
   private def encode(m: M): String = {
     val o = BucketedIndex.json.createObjectNode()
     constants(m).foreach { case (k, v) => o.put(k, v) }
     if (m.bucketed) {
       o.put("numBuckets", m.numBuckets).put("version", m.version)
-        .put("epoch", m.epoch)
       if (keepsIdCol) o.put("idCol", m.idCol)
       o.put(primaryDdlField, m.primaryDdl).put("bandsDdl", m.bandsDdl)
     }
@@ -99,10 +98,10 @@ abstract class BucketedIndex(
 
   /** Read the constants the index was built with (healing a crashed
     * manifest replace — see [[IndexCatalog.readManifestText]]). Fields
-    * later releases added default when absent: `version`/`epoch` to 0,
+    * later releases added default when absent: `version` to 0,
     * the DDLs to "" (schema from the parquet footers), `idCol` to ""
     * (the stored schema's first column), `numBuckets` to 0 (the legacy
-    * unbucketed layout). */
+    * unbucketed layout); retired fields are ignored. */
   def manifest(spark: SparkSession, path: String): M = {
     val p = manifestPath(path)
     val n = BucketedIndex.json.readTree(IndexCatalog.readManifestText(spark, p))
@@ -113,7 +112,7 @@ abstract class BucketedIndex(
       name => field(name).filter(_.isNumber).map(_.asLong).getOrElse(
         throw new IllegalStateException(
           s"$label index manifest at $p missing field $name")),
-      Layout(num("numBuckets"), num("version"), num("epoch"), str("idCol"),
+      Layout(num("numBuckets"), num("version"), str("idCol"),
         str(primaryDdlField), str("bandsDdl")))
   }
 
@@ -140,13 +139,13 @@ abstract class BucketedIndex(
       * the bucketing metadata and with it the shuffle-free join. */
     def read(spark: SparkSession): DataFrame = {
       IndexCatalog.ensureRegistered(spark, name, dir, cols, m.numBuckets,
-        knownDdl, m.epoch)
+        knownDdl)
       spark.table(name)
     }
     def writeFresh(df: DataFrame): Unit =
       IndexCatalog.writeFresh(df, name, dir, cols, m.numBuckets)
     def append(df: DataFrame): Unit = IndexCatalog.appendTo(df, name, dir,
-      cols, m.numBuckets, knownDdl, m.epoch)
+      cols, m.numBuckets, knownDdl)
   }
 
   private def tables(spark: SparkSession, path: String, m: M): Seq[Table] =
@@ -292,7 +291,7 @@ abstract class BucketedIndex(
       idCol = ts.head.cols.head))
     val stats = ts.zip(tables(spark, path, next)).map { case (t, n) =>
         t.base -> IndexCatalog.rewriteBucketed(spark, t.name, t.dir, n.name,
-          n.dir, t.cols, m.numBuckets, targetFileBytes, t.knownDdl, m.epoch)
+          n.dir, t.cols, m.numBuckets, targetFileBytes, t.knownDdl)
       }.toMap +
       (SizesBase -> IndexCatalog.foldSizeDeltasTo(spark,
         sizesDir(path, m.version), sizesDir(path, next.version), bandCols,
@@ -316,7 +315,7 @@ abstract class BucketedIndex(
     // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
     cleanRetired(spark, path, keep = m.version)
     val next = relayout(m, _.copy(numBuckets = newBuckets,
-      version = m.version + 1, epoch = 0, idCol = ts.head.cols.head,
+      version = m.version + 1, idCol = ts.head.cols.head,
       primaryDdl = "", bandsDdl = ""))
     ts.zip(tables(spark, path, next)).foreach { case (t, n) =>
       n.writeFresh(t.read(spark))
@@ -366,15 +365,13 @@ object BucketedIndex {
     * table dirs ([[IndexCatalog.tableDir]]); `idCol` and the two schema
     * DDLs make fresh-session re-registration O(1) metadata instead of a
     * footer read of a possibly-huge index. */
-  final case class Layout(numBuckets: Int, version: Int, epoch: Int,
-                          idCol: String, primaryDdl: String,
-                          bandsDdl: String)
+  final case class Layout(numBuckets: Int, version: Int, idCol: String,
+                          primaryDdl: String, bandsDdl: String)
 
   /** What the shared lifecycle reads from a kind's manifest. */
   trait Manifest {
     def numBuckets: Int
     def version: Int
-    def epoch: Int
     def idCol: String
     def primaryDdl: String
     def bandsDdl: String

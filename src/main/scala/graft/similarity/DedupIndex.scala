@@ -36,7 +36,7 @@ object DedupIndex extends BucketedIndex(
   final case class Manifest(shingleN: Int, bands: Int, rowsPerBand: Int,
                             numBuckets: Int = 0, version: Int = 0,
                             idCol: String = "", fpsDdl: String = "",
-                            bandsDdl: String = "", epoch: Int = 0)
+                            bandsDdl: String = "")
       extends BucketedIndex.Manifest {
     def primaryDdl: String = fpsDdl
   }
@@ -48,7 +48,7 @@ object DedupIndex extends BucketedIndex(
   protected def manifestOf(c: String => Long,
                            l: BucketedIndex.Layout): Manifest =
     Manifest(c("shingleN").toInt, c("bands").toInt, c("rowsPerBand").toInt,
-      l.numBuckets, l.version, l.idCol, l.primaryDdl, l.bandsDdl, l.epoch)
+      l.numBuckets, l.version, l.idCol, l.primaryDdl, l.bandsDdl)
   protected def primaryRows(docs: DataFrame, idCol: String, textCol: String,
                             m: Manifest): DataFrame =
     MinHashLsh.fingerprints(docs, idCol, textCol, m.shingleN)

@@ -35,8 +35,8 @@ private[similarity] object IndexCatalog {
 
   /** Drop any stale definition and write `df` as a fresh bucketed
     * external table at `location` (deleting leftover files first, so a
-    * rebuild over a previous index is exact). Records the layout epoch
-    * for this (session, table): a table THIS session just wrote needs no
+    * rebuild over a previous index is exact). Records the table as seen
+    * by this session: a table THIS session just wrote needs no
     * first-touch `refreshTable` — without the record, every fresh build
     * paid a relation-cache invalidation + lazy re-listing on its first
     * [[ensureRegistered]] touch (r11 verdict: q85's bench floor rose
@@ -52,8 +52,7 @@ private[similarity] object IndexCatalog {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .option("path", location)
       .saveAsTable(name)
-    // a fresh table carries no epoch property, i.e. layout epoch 0
-    recordSeen(spark, name, 0, "")
+    seen(spark, name, "")
   }
 
   /** Append `df` to the bucketed table (re-registering it in this
@@ -68,10 +67,9 @@ private[similarity] object IndexCatalog {
     * refresh for its own append. */
   def appendTo(df: DataFrame, name: String, location: String,
                bucketCols: Seq[String], numBuckets: Int,
-               schemaDdl: Option[String] = None, epoch: Int = 0): Unit = {
+               schemaDdl: Option[String] = None): Unit = {
     val spark = df.sparkSession
-    ensureRegistered(spark, name, location, bucketCols, numBuckets,
-      schemaDdl, epoch)
+    ensureRegistered(spark, name, location, bucketCols, numBuckets, schemaDdl)
     df.write.format("parquet")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
@@ -80,20 +78,8 @@ private[similarity] object IndexCatalog {
     val gen = java.util.UUID.randomUUID().toString
     spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES " +
       s"('$AppendGenProp' = '$gen')")
-    recordSeen(spark, name, epoch, gen)
+    seen(spark, name, gen)
   }
-
-  /** Table property carrying the layout EPOCH — the guard against a
-    * SAME-NAME in-place rewrite by another JVM (a session holding the
-    * pre-rewrite file listing would hard-fail mid-scan). Since r12,
-    * compaction publishes into fresh `_v<N>` dirs (fresh names) instead
-    * of rewriting in place, so the epoch stays constant on the
-    * maintenance path — it remains honored for manifests that carry one
-    * (r11-era compacted indexes) and for any future same-name rewrite.
-    * Appends never bump it: an appended-to table only ever GAINS files,
-    * so a stale listing reads a consistent older snapshot, never a
-    * missing file. */
-  private val EpochProp = "graft.layout.epoch"
 
   /** Table property carrying the APPEND GENERATION — a fresh token every
     * [[appendTo]] writes after its rows land. The session catalog caches
@@ -128,48 +114,43 @@ private[similarity] object IndexCatalog {
   private def staleRegistration(
       t: org.apache.spark.sql.catalyst.catalog.CatalogTable,
       location: String, bucketCols: Seq[String],
-      numBuckets: Int, epoch: Int): Boolean = {
+      numBuckets: Int): Boolean = {
     val want = new org.apache.hadoop.fs.Path(location).toUri.getPath
     val got = new org.apache.hadoop.fs.Path(t.location).toUri.getPath
     !t.bucketSpec.exists(b => b.numBuckets == numBuckets &&
-      b.bucketColumnNames == bucketCols) || got != want ||
-      t.properties.getOrElse(EpochProp, "0") != epoch.toString
+      b.bucketColumnNames == bucketCols) || got != want
   }
 
-  /** The last (layout epoch, append generation) at which each SESSION's
-    * relation cache for each table was known fresh. Weak keys: sessions
-    * drop out when they are collected. */
+  /** The last append generation at which each SESSION's relation cache
+    * for each table was known fresh. Weak keys: sessions drop out when
+    * they are collected. */
   private val seenState =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (Int, String)]]
-  private def recordSeen(spark: SparkSession, name: String, epoch: Int,
-                         gen: String): Unit = {
-    stateMoved(spark, name, epoch, gen); ()
-  }
-  /** Record (epoch, gen) as seen; true iff it differs from the last. */
-  private def stateMoved(spark: SparkSession, name: String, epoch: Int,
-                         gen: String): Boolean = seenState.synchronized {
+      scala.collection.mutable.Map[String, String]]
+  /** Record `gen` as seen; true iff it differs from the last. */
+  private def seen(spark: SparkSession, name: String,
+                   gen: String): Boolean = seenState.synchronized {
     var m = seenState.get(spark)
     if (m == null) {
       m = scala.collection.mutable.Map.empty
       seenState.put(spark, m)
     }
-    val prev = m.put(name, (epoch, gen))
+    val prev = m.put(name, gen)
     // None counts as moved: the session may hold a relation cached by a
     // code path that never recorded state (a direct spark.table) —
     // refreshTable on first observation is cheap (cache invalidation
     // only; re-listing is lazy) and restores coherence no matter who
     // wrote the files in between. writeFresh/appendTo record their own
     // writes, so self-written tables never take this branch.
-    prev.forall(_ != ((epoch, gen)))
+    prev.forall(_ != gen)
   }
 
   /** Make sure the session catalog has the (current) table definition —
     * a NEW session re-creates it over the existing bucketed files; a
-    * STALE definition (different bucket count / columns / location /
-    * layout epoch than the manifest expects) is dropped and re-created
-    * rather than trusted; and a same-definition table whose layout epoch
-    * or append generation MOVED since this session last looked gets a
+    * STALE definition (different bucket count / columns / location than
+    * the manifest expects) is dropped and re-created rather than trusted;
+    * and a same-definition table whose append generation MOVED since
+    * this session last looked gets a
     * `refreshTable` (the write ran in another session — the metadata is
     * shared, the relation cache is not). `schemaDdl` is the
     * manifest-persisted column DDL: with it, registration is O(1)
@@ -179,11 +160,10 @@ private[similarity] object IndexCatalog {
     * come from file names either way). */
   def ensureRegistered(spark: SparkSession, name: String, location: String,
                        bucketCols: Seq[String], numBuckets: Int,
-                       schemaDdl: Option[String] = None,
-                       epoch: Int = 0): Unit = {
+                       schemaDdl: Option[String] = None): Unit = {
     val existing = registration(spark, name)
     if (existing.exists(staleRegistration(_, location, bucketCols,
-        numBuckets, epoch)))
+        numBuckets)))
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
     if (!spark.catalog.tableExists(name)) {
       val ddl = schemaDdl.filter(_.nonEmpty)
@@ -192,15 +172,14 @@ private[similarity] object IndexCatalog {
       spark.sql(
         s"""CREATE TABLE `$name` ($ddl) USING PARQUET
            |CLUSTERED BY ($cols) SORTED BY ($cols) INTO $numBuckets BUCKETS
-           |LOCATION '$location'
-           |TBLPROPERTIES ('$EpochProp' = '$epoch')""".stripMargin)
+           |LOCATION '$location'""".stripMargin)
       // fresh registration (no relation cached yet); its generation
       // baseline is "no appends recorded on this definition"
-      recordSeen(spark, name, epoch, "")
+      seen(spark, name, "")
     } else {
       val gen = existing
         .map(_.properties.getOrElse(AppendGenProp, "")).getOrElse("")
-      if (stateMoved(spark, name, epoch, gen))
+      if (seen(spark, name, gen))
         spark.catalog.refreshTable(name)
     }
   }
@@ -249,11 +228,9 @@ private[similarity] object IndexCatalog {
                       destName: String, destLocation: String,
                       bucketCols: Seq[String], numBuckets: Int,
                       targetFileBytes: Long = 128L * 1024 * 1024,
-                      schemaDdl: Option[String] = None,
-                      epoch: Int = 0): TableCompaction = {
+                      schemaDdl: Option[String] = None): TableCompaction = {
     import graft.lakehouse.Compaction
-    ensureRegistered(spark, name, location, bucketCols, numBuckets,
-      schemaDdl, epoch)
+    ensureRegistered(spark, name, location, bucketCols, numBuckets, schemaDdl)
     val before = Compaction.parquetFileCount(spark, location)
     val (bytes, _) = Compaction.plannedFiles(spark, location, targetFileBytes)
     val maint = spark.newSession()

@@ -26,7 +26,7 @@ object MediaDedupIndex extends BucketedIndex(
     * `<path>/index.json` (see [[BucketedIndex.Layout]]). */
   final case class Manifest(nBands: Int, bandBits: Int, numBuckets: Int = 8,
                             version: Int = 0, codesDdl: String = "",
-                            bandsDdl: String = "", epoch: Int = 0)
+                            bandsDdl: String = "")
       extends BucketedIndex.Manifest {
     def idCol: String = "id"
     def primaryDdl: String = codesDdl
@@ -38,7 +38,7 @@ object MediaDedupIndex extends BucketedIndex(
   protected def manifestOf(c: String => Long,
                            l: BucketedIndex.Layout): Manifest =
     Manifest(c("nBands").toInt, c("bandBits").toInt, l.numBuckets, l.version,
-      l.primaryDdl, l.bandsDdl, l.epoch)
+      l.primaryDdl, l.bandsDdl)
   protected def primaryRows(codes: DataFrame, idCol: String, codeCol: String,
                             m: Manifest): DataFrame =
     codes.select(col(idCol).as("id"), col(codeCol).as("code"))

@@ -81,9 +81,9 @@ object Ivm {
     val delta = viewDelta(asZ(batch), keys, sums.map(c => c -> col(c)))
     // a merge widens decimal sums; the state keeps the delta's types
     val typed = delta.schema.map(f => col(f.name).cast(f.dataType))
-    fold(batch, src, stateDir, delta.schema, merge(_, keys)) { state =>
-      merge(state.fold(delta)(_.unionByName(delta)), keys).select(typed: _*)
-    }
+    val mergeTyped = (d: DataFrame) => merge(d, keys).select(typed: _*)
+    fold(batch, src, stateDir, delta.schema, mergeTyped)(state =>
+      mergeTyped(state.fold(delta)(_.unionByName(delta))))
   }
 
   /** Fold the change batch read from `src` into the MIN state at

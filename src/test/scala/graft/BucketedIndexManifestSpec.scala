@@ -99,8 +99,7 @@ class BucketedIndexManifestSpec extends SparkSpec {
         """, "bandsDdl": "id BIGINT,bkey STRING"}""")
     AnnIndex.exists(spark, ann) shouldBe true
     AnnIndex.manifest(spark, ann) shouldBe AnnIndex.Manifest(4, 6, 8, -7L,
-      16, 1, "id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE", "id BIGINT,bkey STRING",
-      epoch = 3)
+      16, 1, "id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE", "id BIGINT,bkey STRING")
 
     val text = tmpDir("mf-tmp-text")
     writeText(text, "index.json.tmp",
@@ -136,19 +135,20 @@ class BucketedIndexManifestSpec extends SparkSpec {
   }
 
   test("new manifests keep the field names earlier releases wrote") {
+    // less `epoch`, a retired layout field the fixtures above still carry
     val text = tmpDir("mf-names-text")
     DedupIndex.build(docs(0L, 10L), "doc_id", "text", text)
     fieldNames(text) shouldBe Set("shingleN", "bands", "rowsPerBand",
-      "numBuckets", "version", "epoch", "idCol", "fpsDdl", "bandsDdl")
+      "numBuckets", "version", "idCol", "fpsDdl", "bandsDdl")
     val media = tmpDir("mf-names-media")
     MediaDedupIndex.build(Seq((1L, 7L)).toDF("media_id", "dhash"),
       "media_id", "dhash", media)
     fieldNames(media) shouldBe Set("nBands", "bandBits", "numBuckets",
-      "version", "epoch", "codesDdl", "bandsDdl")
+      "version", "codesDdl", "bandsDdl")
     val ann = tmpDir("mf-names-ann")
     AnnIndex.build(Seq((1L, Array.fill(8)(1.0))).toDF("vec_id", "emb"),
       "vec_id", "emb", ann, nTables = 2, nBits = 2, dim = 8)
     fieldNames(ann) shouldBe Set("nTables", "nBits", "dim", "seed",
-      "numBuckets", "version", "epoch", "vecsDdl", "bandsDdl")
+      "numBuckets", "version", "vecsDdl", "bandsDdl")
   }
 }

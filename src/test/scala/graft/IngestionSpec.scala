@@ -367,12 +367,8 @@ class IngestionSpec extends SparkSpec {
       `type` = "ivm", path = s"$root/st", source = Some(src),
       keys = Seq("k"), columns = Seq("v"), agg = "min",
       viewPath = Some(s"$root/view"))
-    // a rename-era crash BEFORE the atomic rename left a fully-written
-    // tmp dir but no snapshot — the rerun must refold from nothing and
-    // publish once (generation 1, named up to its key hash)
-    val tmp = new java.io.File(s"$root/st/.state-tmp-stale")
-    tmp.mkdirs()
-    java.nio.file.Files.writeString(tmp.toPath.resolve("junk"), "partial")
+    // the first run publishes generation 1 (named up to its key hash);
+    // rename-era tmp leftovers are FoldStoreUpgradeSpec's
     IngestionRunner.runMaintenance(spark, cfg)
     def snaps() = new java.io.File(s"$root/st").listFiles()
       .filter(_.getName.startsWith("state-")).map(_.getName.take(14)).sorted
@@ -430,24 +426,8 @@ class IngestionSpec extends SparkSpec {
       .filterNot(_.startsWith(".")).sorted shouldBe
       Array("000001", "000002")
     view() shouldBe Map("x" -> 7L, "y" -> 5L, "z" -> 2L)
-    // mixed-protocol history: a store with a rename-published snapshot
-    // (planted as the retired rename protocol wrote it) continues under
-    // pointer publish, reading the rename snapshot as base
-    val root2 = tmpDir("graft-ivm-ptr2")
-    Seq(("x", 10L), ("y", 5L)).toDF("k", "v").write.parquet(s"$root2/b1")
-    Seq(("x", 7L), ("z", 2L)).toDF("k", "v").write.parquet(s"$root2/b2")
-    def cfg2(src: String) = graft.config.MaintenanceConfig(
-      `type` = "ivm", path = s"$root2/st", source = Some(src),
-      keys = Seq("k"), columns = Seq("v"), agg = "min",
-      viewPath = Some(s"$root2/view"))
-    plantRenamedGeneration(s"$root2/st", 1, s"$root2/b1",
-      Seq(("x", 10L, 1L), ("y", 5L, 1L)))
-    IngestionRunner.runMaintenance(spark, cfg2(s"$root2/b2"))
-    spark.read.parquet(s"$root2/view").collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[Number]("min_v").longValue())
-      .toMap shouldBe Map("x" -> 7L, "y" -> 5L, "z" -> 2L)
-    new java.io.File(s"$root2/st").list().count(_ == "state-000001") shouldBe 1
-    new java.io.File(s"$root2/st/_commits").list().filterNot(_.startsWith(".")).sorted shouldBe Array("000002")
+    // rename-published history upgrades on its next fold
+    // (FoldStoreUpgradeSpec)
   }
 
   test("dedup-index and profile maintenance are crash-atomic: appliedness " +
@@ -482,12 +462,9 @@ class IngestionSpec extends SparkSpec {
     rmrfDir(new java.io.File(s"$idx/_commits"))
     IngestionRunner.runMaintenance(spark, idxTask)
     graft.similarity.DedupIndex.load(spark, idx)._2.count() shouldBe bandCount
-    // --- profile: batch unit is atomic, replay skips, legacy root files
-    // (pre-r9 plain append) still participate in the fold
+    // --- profile: the fold is one generation, replay skips (legacy root
+    // files and tmp leftovers are FoldStoreUpgradeSpec's)
     val store = s"$root/prof"
-    graft.metrics.ProfileStore.profile(
-      Seq((9L, "legacy")).toDF("doc_id", "text"), Seq("doc_id"))
-      .write.parquet(store)
     def profTask = graft.config.MaintenanceConfig(
       `type` = "profile", path = store, source = Some(src),
       columns = Seq("doc_id"))
@@ -495,12 +472,9 @@ class IngestionSpec extends SparkSpec {
     def nRows() = graft.metrics.ProfileStore.current(spark, store)
       .filter(col("column") === "doc_id").collect()
       .head.getAs[Number]("n_rows").longValue()
-    nRows() shouldBe 3 // 1 legacy + 2 batch rows folded together
+    nRows() shouldBe 2
     IngestionRunner.runMaintenance(spark, profTask) // replay: no change
-    nRows() shouldBe 3
-    // leftover tmp dir from a crashed attempt is invisible to the fold
-    new java.io.File(s"$store/.tmp-stale").mkdirs()
-    nRows() shouldBe 3
+    nRows() shouldBe 2
     // --- profile and group generations: a crash after a generation's data
     // but before its commit leaves it unread; the rerun overwrites the
     // torn data in place and commits once; replays skip
@@ -519,7 +493,6 @@ class IngestionSpec extends SparkSpec {
       commits(st) shouldBe Seq("000001")
       IngestionRunner.runMaintenance(spark, task(kv)) // replay: no change
       commits(st) shouldBe Seq("000001")
-      new java.io.File(s"$st/.state-tmp-stale").mkdirs()
       result() shouldBe folded
     }
   }
@@ -639,68 +612,13 @@ class IngestionSpec extends SparkSpec {
     ids() shouldBe Seq(1L, 2L, 3L, 4L)
   }
 
-  test("pre-r8 stores (unsuffixed batch keys) are not refolded: legacy " +
-       "group partitions overwrite in place, legacy min snapshots and " +
-       "_applied markers still count as applied") {
-    import org.apache.spark.sql.functions._
-    val root = tmpDir("graft-ivm-legacy")
-    val src = s"$root/deltas/b1"
-    val legacyKey = src.replaceAll("[^A-Za-z0-9._-]", "_") // pre-r8 format
-    Seq(("x", 10L), ("y", 5L)).toDF("k", "v")
-      .write.mode("overwrite").parquet(src)
-    // --- group: a legacy partition exists for this source; the rerun must
-    // skip the batch (the partition is its applied record), not fold it a
-    // second time
-    plantGroupPartition(s"$root/stg", legacyKey, src)
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "ivm", path = s"$root/stg", source = Some(src),
-      keys = Seq("k"), sums = Seq("v"), agg = "group",
-      viewPath = Some(s"$root/view-g")))
-    spark.read.parquet(s"$root/view-g").collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[Number]("v").longValue())
-      .toMap shouldBe Map("x" -> 10L, "y" -> 5L)
-    new java.io.File(s"$root/stg").listFiles()
-      .count(_.getName.startsWith("_batch_key=")) shouldBe 1
-    // --- min: a legacy snapshot whose _batch_key holds the UNSUFFIXED key
-    // must read as already-applied (no state-000002, no double-counted
-    // n_rows), and the view must re-publish from it
-    val snap = s"$root/stm/state-000001"
-    Seq(("x", 10L, 1L), ("y", 5L, 1L)).toDF("k", "min_v", "n_rows")
-      .write.mode("overwrite").parquet(snap)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(snap, "_batch_key"), legacyKey)
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "ivm", path = s"$root/stm", source = Some(src),
-      keys = Seq("k"), columns = Seq("v"), agg = "min",
-      viewPath = Some(s"$root/view-m")))
-    new java.io.File(s"$root/stm").listFiles()
-      .filter(_.getName.startsWith("state-"))
-      .map(_.getName).sorted shouldBe Array("state-000001")
-    spark.read.parquet(s"$root/view-m").collect()
-      .map(r => r.getAs[String]("k") ->
-        (r.getAs[Number]("min_v").longValue(),
-          r.getAs[Number]("n_rows").longValue()))
-      .toMap shouldBe Map("x" -> (10L, 1L), "y" -> (5L, 1L))
-    // --- profile (ifNotApplied): a legacy marker must skip the append
-    val store = s"$root/prof"
-    new java.io.File(s"$store/_applied").mkdirs()
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(store, "_applied", legacyKey))
-    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
-      `type` = "profile", path = store, source = Some(src),
-      columns = Seq("k", "v")))
-    // skipped: no profile data landed beyond the marker dir
-    new java.io.File(store).listFiles().map(_.getName).toSet shouldBe
-      Set("_applied")
-  }
-
   test("maintenance: ivm-prune retires superseded snapshot generations, " +
        "keeps the newest `keep`, and replays of pruned batches still skip " +
        "via the preserved _applied markers") {
     import org.apache.spark.sql.functions._
-    // min over a store the retired rename protocol wrote, then min, group
-    // and profile (pruned by its `profile-compact` type) over generations
-    for (kind <- Seq("min-rename", "min", "group", "profile")) withClue(s"$kind: ") {
+    // min, group and profile (pruned by its `profile-compact` type); a
+    // store the rename protocol wrote is FoldStoreUpgradeSpec's
+    for (kind <- Seq("min", "group", "profile")) withClue(s"$kind: ") {
       val root = tmpDir(s"graft-prune-$kind")
       val srcs = (1 to 5).map { i =>
         val p = s"$root/b$i"
@@ -730,17 +648,9 @@ class IngestionSpec extends SparkSpec {
       def expected(n: Int): Map[String, Long] =
         if (kind == "profile") Map("n_rows" -> n.toLong)
         else (1 to n).map(i => s"k$i" -> i * 10L).toMap
-      if (kind == "min-rename") {
-        // four generations, each the complete min state after its batch;
-        // the replay of the last one skips and publishes the view
-        (0 until 4).foreach(i => plantRenamedGeneration(s"$root/st", i + 1,
-          srcs(i), (0 to i).map(j => (s"k${j + 1}", (j + 1) * 10L, 1L))))
-        IngestionRunner.runMaintenance(spark, cfg(srcs(3)))
-      } else srcs.take(4).foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
-      // a generation's dir: state-<n> as the rename protocol wrote it, or
-      // state-p-<n>-<keyhash> (compared up to the key hash)
-      def gen(n: Int) =
-        if (kind == "min-rename") f"state-$n%06d" else f"state-p-$n%06d-"
+      srcs.take(4).foreach(s => IngestionRunner.runMaintenance(spark, cfg(s)))
+      // a generation's dir, compared up to its key hash
+      def gen(n: Int) = f"state-p-$n%06d-"
       def stateDirs() = new java.io.File(s"$root/st").listFiles()
         .filter(_.getName.startsWith("state-")).map(_.getName).sorted.toSeq
         .map(_.take(gen(0).length))
@@ -751,7 +661,7 @@ class IngestionSpec extends SparkSpec {
         path = s"$root/st", keep = 2))
       stateDirs() shouldBe Seq(gen(3), gen(4))
       // the retired generations' commit records went with them
-      if (kind != "min-rename") commits(s"$root/st") shouldBe Seq("000003", "000004")
+      commits(s"$root/st") shouldBe Seq("000003", "000004")
       // pruned generations left _applied markers behind (ignore the local
       // filesystem's .crc sidecars)
       new java.io.File(s"$root/st/_applied").list()
@@ -765,64 +675,6 @@ class IngestionSpec extends SparkSpec {
       IngestionRunner.runMaintenance(spark, cfg(srcs(4)))
       result() shouldBe expected(5)
     }
-  }
-
-  test("parent-format fold stores continue without refolding: keyed " +
-       "profile units with root files, group partitions under both key " +
-       "formats") {
-    import org.apache.spark.sql.functions._
-    import graft.metrics.ProfileStore
-    val root = tmpDir("graft-parent-format")
-    val b = (0 to 3).map { i =>
-      val p = s"$root/deltas/b$i"
-      Seq(("x", i + 1L), (s"k$i", 10L * (i + 1))).toDF("k", "v").write.parquet(p)
-      p
-    }
-    // --- profile: b0 as root files (a plain append), b1 as a keyed unit
-    // with its commit record, b2 as a rename-era unit
-    val store = s"$root/prof"
-    def prof(i: Int) = ProfileStore.profile(spark.read.parquet(b(i)), Seq("v"))
-    prof(0).write.parquet(store)
-    val k1 = Commit.batchKeyFor(b(1))
-    prof(1).write.parquet(s"$store/batch-p-$k1")
-    Files.createDirectories(Paths.get(store, "_commits"))
-    Files.createFile(Paths.get(store, "_commits", k1))
-    prof(2).write.parquet(s"$store/batch-${Commit.batchKeyFor(b(2))}")
-    def profTask(i: Int) = graft.config.MaintenanceConfig(`type` = "profile",
-      path = store, source = Some(b(i)), columns = Seq("v"))
-    def nRows() = ProfileStore.current(spark, store)
-      .filter(col("column") === "v").head().getAs[Long]("n_rows")
-    nRows() shouldBe 6
-    // the parent's batches are folded already: no generation is written
-    Seq(1, 2).foreach(i => IngestionRunner.runMaintenance(spark, profTask(i)))
-    gens(store) shouldBe empty
-    nRows() shouldBe 6
-    // a new batch folds onto the parent-format data as generation 1
-    IngestionRunner.runMaintenance(spark, profTask(3))
-    gens(store) shouldBe Seq("state-p-000001")
-    nRows() shouldBe 8
-    (1 to 3).foreach(i => IngestionRunner.runMaintenance(spark, profTask(i)))
-    gens(store) shouldBe Seq("state-p-000001")
-    nRows() shouldBe 8
-    // --- group: b0's partition under the pre-r8 key, b1's under the
-    // current key
-    val stg = s"$root/stg"
-    plantGroupPartition(stg, b(0).replaceAll("[^A-Za-z0-9._-]", "_"), b(0))
-    plantGroupPartition(stg, Commit.batchKeyFor(b(1)), b(1))
-    def grpTask(i: Int) = graft.config.MaintenanceConfig(`type` = "ivm",
-      path = stg, source = Some(b(i)), keys = Seq("k"), sums = Seq("v"),
-      agg = "group", viewPath = Some(s"$root/view"))
-    def view() = spark.read.parquet(s"$root/view").collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[Number]("v").longValue()).toMap
-    Seq(0, 1).foreach(i => IngestionRunner.runMaintenance(spark, grpTask(i)))
-    gens(stg) shouldBe empty
-    view() shouldBe Map("x" -> 3L, "k0" -> 10L, "k1" -> 20L)
-    IngestionRunner.runMaintenance(spark, grpTask(2))
-    gens(stg) shouldBe Seq("state-p-000001")
-    view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
-    (0 to 2).foreach(i => IngestionRunner.runMaintenance(spark, grpTask(i)))
-    gens(stg) shouldBe Seq("state-p-000001")
-    view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
   }
 
   test("maintenance: profile-compact folds the store through pipeline " +
@@ -899,16 +751,6 @@ class IngestionSpec extends SparkSpec {
     }
   }
 
-  /** Plant generation `n` of the min state at `stateDir` as the retired
-    * rename protocol published it: `state-<n>` holding the complete state
-    * after the batch at `src`, with that batch's key inside. */
-  private def plantRenamedGeneration(stateDir: String, n: Int, src: String,
-                                     rows: Seq[(String, Long, Long)]): Unit = {
-    val gen = f"$stateDir/state-$n%06d"
-    rows.toDF("k", "min_v", "n_rows").write.parquet(gen)
-    Files.writeString(Paths.get(gen, "_batch_key"), Commit.batchKeyFor(src))
-  }
-
   /** Plant batch `key` of the legacy dedup index at `idx` as the retired
     * rename protocol published it: `batch-<key>` units of both tables. */
   private def plantRenamedUnits(docs: org.apache.spark.sql.DataFrame,
@@ -954,17 +796,6 @@ class IngestionSpec extends SparkSpec {
   private def gens(store: String): Seq[String] =
     new java.io.File(store).list().filter(_.startsWith("state-p-"))
       .map(_.take("state-p-000000".length)).sorted.toSeq
-
-  /** Plant the batch at `src` in the group store at `stateDir` as the
-    * parent's partition layout wrote it: its view delta (keys k, sums v)
-    * under `_batch_key=<key>`. */
-  private def plantGroupPartition(stateDir: String, key: String,
-                                  src: String): Unit = {
-    import graft.transform.Ivm
-    Ivm.viewDelta(Ivm.asZ(spark.read.parquet(src)), Seq("k"),
-      Seq("v" -> org.apache.spark.sql.functions.col("v")))
-      .write.parquet(s"$stateDir/_batch_key=$key")
-  }
 
   private def rmrfDir(p: java.io.File): Unit = {
     if (p.isDirectory) p.listFiles.foreach(rmrfDir)

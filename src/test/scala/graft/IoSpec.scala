@@ -255,6 +255,34 @@ class IoSpec extends SparkSpec {
     }
   }
 
+  test("a rewrite never deletes rows a crashed swap left beside a " +
+       "recreated table, and drops a superseded __rewrite_old") {
+    import graft.lakehouse.{Compaction, ZOrder}
+    def rows(d: String) = spark.read.parquet(d).count()
+    for (op <- Seq("compact", "zorder")) withClue(s"$op: ") {
+      def rewrite(dir: String): Unit =
+        if (op == "compact") Compaction.compact(spark, dir, 1L * 1024 * 1024)
+        else ZOrder.rewrite(spark, dir, Seq("id"), 1L * 1024 * 1024)
+      // a crash between the renames left the 1000-row table aside and its
+      // complete rewrite in tmp; an ingest then recreated the table
+      val dir = tmpDir("swap-recreated") + "/t"
+      spark.range(1000).toDF("id").write.parquet(dir + "__rewrite_old")
+      spark.range(1000).toDF("id").coalesce(1).write.parquet(dir + "__rewrite_tmp")
+      spark.range(1000, 1005).toDF("id").write.parquet(dir)
+      intercept[IllegalStateException](rewrite(dir)).getMessage should (
+        include(s"$dir ") and include(s"${dir}__rewrite_old"))
+      rows(dir + "__rewrite_old") + rows(dir) shouldBe 1005L
+      // a crash after the publish left the superseded table beside the
+      // published one: the next rewrite drops it
+      val done = tmpDir("swap-published") + "/t"
+      spark.range(1000).toDF("id").write.parquet(done + "__rewrite_old")
+      spark.range(1000).toDF("id").coalesce(1).write.parquet(done)
+      rewrite(done)
+      rows(done) shouldBe 1000L
+      new java.io.File(done + "__rewrite_old").exists() shouldBe false
+    }
+  }
+
   test("compactPartitioned compacts each partition dir independently") {
     import graft.lakehouse.Compaction
     val dir = tmpDir("pcompact") + "/t"

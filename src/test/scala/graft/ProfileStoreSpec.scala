@@ -1,10 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.core.Commit
 import graft.metrics.ProfileStore
 
 /** Monoid laws for incremental profiles: batch profiles folded in any
@@ -98,51 +95,6 @@ class ProfileStoreSpec extends SparkSpec {
     est shouldBe (n.toDouble +- n * 0.05)
     // lang has 5 distinct values; a tiny-cardinality sketch is near-exact
     s("lang").getAs[Long]("n_distinct_approx") shouldBe 5L
-  }
-
-  test("a parent-format store is the first fold's base: summary " +
-       "identical, its batches never refold, later batches fold on top, " +
-       "orphan generations never adopted") {
-    val docs = graft.tables.Tables.documents(spark, dir)
-    val state = tmpDir("profile-parent")
-    def slice(i: Int) = docs.filter(col("doc_id") % 5 === i)
-    def src(i: Int) = s"$state-src/slice=$i"
-    def fold(i: Int) = ProfileStore.fold(spark, state, src(i), cols)(slice(i))
-    // mixed parent layouts: plain appends (root files), a rename-era unit,
-    // and a keyed unit with its commit record
-    ProfileStore.profile(slice(0), cols).write.mode("append").parquet(state)
-    ProfileStore.profile(slice(1), cols)
-      .write.parquet(s"$state/batch-${Commit.batchKeyFor(src(1))}")
-    ProfileStore.profile(slice(2), cols)
-      .write.parquet(s"$state/batch-p-${Commit.batchKeyFor(src(2))}")
-    Files.createDirectories(Paths.get(state, "_commits"))
-    Files.createFile(Paths.get(state, "_commits", Commit.batchKeyFor(src(2))))
-    def summaryRows() = ProfileStore
-      .summary(ProfileStore.current(spark, state))
-      .collect().map(_.toString).toSeq
-    val before = summaryRows()
-    // an uncommitted generation from a crashed attempt holding the WHOLE
-    // table's profile (worst case: adopting it would double every count)
-    ProfileStore.profile(docs, cols).write.parquet(s"$state/state-p-000001-000000")
-    summaryRows() shouldBe before
-    // replays of the parent's batches skip: no generation is written
-    fold(1)
-    fold(2)
-    new java.io.File(state).list().count(_.startsWith("state-p-")) shouldBe 1
-    summaryRows() shouldBe before
-    // later batches fold on top, one generation each
-    fold(3)
-    fold(4)
-    def all() = ProfileStore.summary(ProfileStore.current(spark, state))
-      .collect().map(r => r.getAs[String]("column") -> r).toMap
-    all()("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
-    all()("doc_id").getAs[Long]("sum_l") shouldBe
-      docs.agg(sum(col("doc_id"))).head.getLong(0)
-    new java.io.File(state).list().count(_.startsWith("state-p-")) shouldBe 3
-    // replays after generations exist still skip
-    (1 to 4).foreach(fold)
-    all()("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
-    new java.io.File(state).list().count(_.startsWith("state-p-")) shouldBe 3
   }
 
   test("nulls count per batch and never poison min/max or sums") {
