@@ -612,6 +612,65 @@ class IngestionSpec extends SparkSpec {
     ids() shouldBe Seq(1L, 2L, 3L, 4L)
   }
 
+  test("pre-r8 stores (unsuffixed batch keys) are not refolded: legacy " +
+       "group partitions overwrite in place, legacy min snapshots and " +
+       "_applied markers still count as applied") {
+    val root = tmpDir("graft-ivm-legacy")
+    val src = s"$root/deltas/b1"
+    val legacyKey = src.replaceAll("[^A-Za-z0-9._-]", "_") // pre-r8 format
+    Seq(("x", 10L), ("y", 5L)).toDF("k", "v")
+      .write.mode("overwrite").parquet(src)
+    // --- group: a legacy partition exists for this source; the rerun must
+    // skip the batch (the partition is its applied record), not fold it a
+    // second time: the upgrade republishes the partition's rows in place
+    // as the store's one generation and keeps its key as a marker
+    plantGroupPartition(s"$root/stg", legacyKey, src)
+    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+      `type` = "ivm", path = s"$root/stg", source = Some(src),
+      keys = Seq("k"), sums = Seq("v"), agg = "group",
+      viewPath = Some(s"$root/view-g")))
+    spark.read.parquet(s"$root/view-g").collect()
+      .map(r => r.getAs[String]("k") -> r.getAs[Number]("v").longValue())
+      .toMap shouldBe Map("x" -> 10L, "y" -> 5L)
+    new java.io.File(s"$root/stg").listFiles()
+      .count(_.getName.startsWith("_batch_key=")) shouldBe 0
+    gens(s"$root/stg") shouldBe Seq("state-p-000001")
+    new java.io.File(s"$root/stg/_applied").list() should contain (legacyKey)
+    // --- min: a legacy snapshot whose _batch_key holds the UNSUFFIXED key
+    // must read as already-applied (no fold of its own, no double-counted
+    // n_rows), and the view must re-publish from it
+    val snap = s"$root/stm/state-000001"
+    Seq(("x", 10L, 1L), ("y", 5L, 1L)).toDF("k", "min_v", "n_rows")
+      .write.mode("overwrite").parquet(snap)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(snap, "_batch_key"), legacyKey)
+    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+      `type` = "ivm", path = s"$root/stm", source = Some(src),
+      keys = Seq("k"), columns = Seq("v"), agg = "min",
+      viewPath = Some(s"$root/view-m")))
+    // the snapshot is upgraded into the one generation after it
+    new java.io.File(s"$root/stm").listFiles()
+      .filter(_.getName.startsWith("state-"))
+      .map(_.getName.take(14)).sorted shouldBe Array("state-p-000002")
+    commits(s"$root/stm") shouldBe Seq("000002")
+    spark.read.parquet(s"$root/view-m").collect()
+      .map(r => r.getAs[String]("k") ->
+        (r.getAs[Number]("min_v").longValue(),
+          r.getAs[Number]("n_rows").longValue()))
+      .toMap shouldBe Map("x" -> (10L, 1L), "y" -> (5L, 1L))
+    // --- profile (ifNotApplied): a legacy marker must skip the append
+    val store = s"$root/prof"
+    new java.io.File(s"$store/_applied").mkdirs()
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(store, "_applied", legacyKey))
+    IngestionRunner.runMaintenance(spark, graft.config.MaintenanceConfig(
+      `type` = "profile", path = store, source = Some(src),
+      columns = Seq("k", "v")))
+    // skipped: no profile data landed beyond the marker dir
+    new java.io.File(store).listFiles().map(_.getName).toSet shouldBe
+      Set("_applied")
+  }
+
   test("maintenance: ivm-prune retires superseded snapshot generations, " +
        "keeps the newest `keep`, and replays of pruned batches still skip " +
        "via the preserved _applied markers") {
@@ -675,6 +734,67 @@ class IngestionSpec extends SparkSpec {
       IngestionRunner.runMaintenance(spark, cfg(srcs(4)))
       result() shouldBe expected(5)
     }
+  }
+
+  test("parent-format fold stores continue without refolding: keyed " +
+       "profile units with root files, group partitions under both key " +
+       "formats") {
+    import org.apache.spark.sql.functions._
+    import graft.metrics.ProfileStore
+    val root = tmpDir("graft-parent-format")
+    val b = (0 to 3).map { i =>
+      val p = s"$root/deltas/b$i"
+      Seq(("x", i + 1L), (s"k$i", 10L * (i + 1))).toDF("k", "v").write.parquet(p)
+      p
+    }
+    // --- profile: b0 as root files (a plain append), b1 as a keyed unit
+    // with its commit record, b2 as a rename-era unit
+    val store = s"$root/prof"
+    def prof(i: Int) = ProfileStore.profile(spark.read.parquet(b(i)), Seq("v"))
+    prof(0).write.parquet(store)
+    val k1 = Commit.batchKeyFor(b(1))
+    prof(1).write.parquet(s"$store/batch-p-$k1")
+    Files.createDirectories(Paths.get(store, "_commits"))
+    Files.createFile(Paths.get(store, "_commits", k1))
+    prof(2).write.parquet(s"$store/batch-${Commit.batchKeyFor(b(2))}")
+    def profTask(i: Int) = graft.config.MaintenanceConfig(`type` = "profile",
+      path = store, source = Some(b(i)), columns = Seq("v"))
+    def nRows() = ProfileStore.current(spark, store)
+      .filter(col("column") === "v").head().getAs[Long]("n_rows")
+    // unread until its next fold upgrades it
+    intercept[IllegalStateException](nRows()).getMessage should
+      include("older layout")
+    // the parent's batches are folded already: their replays upgrade the
+    // store into one generation and fold nothing
+    Seq(1, 2).foreach(i => IngestionRunner.runMaintenance(spark, profTask(i)))
+    gens(store) shouldBe Seq("state-p-000001")
+    nRows() shouldBe 6
+    // a new batch folds onto the parent-format data as generation 2
+    IngestionRunner.runMaintenance(spark, profTask(3))
+    gens(store) shouldBe Seq("state-p-000001", "state-p-000002")
+    nRows() shouldBe 8
+    (1 to 3).foreach(i => IngestionRunner.runMaintenance(spark, profTask(i)))
+    gens(store) shouldBe Seq("state-p-000001", "state-p-000002")
+    nRows() shouldBe 8
+    // --- group: b0's partition under the pre-r8 key, b1's under the
+    // current key
+    val stg = s"$root/stg"
+    plantGroupPartition(stg, b(0).replaceAll("[^A-Za-z0-9._-]", "_"), b(0))
+    plantGroupPartition(stg, Commit.batchKeyFor(b(1)), b(1))
+    def grpTask(i: Int) = graft.config.MaintenanceConfig(`type` = "ivm",
+      path = stg, source = Some(b(i)), keys = Seq("k"), sums = Seq("v"),
+      agg = "group", viewPath = Some(s"$root/view"))
+    def view() = spark.read.parquet(s"$root/view").collect()
+      .map(r => r.getAs[String]("k") -> r.getAs[Number]("v").longValue()).toMap
+    Seq(0, 1).foreach(i => IngestionRunner.runMaintenance(spark, grpTask(i)))
+    gens(stg) shouldBe Seq("state-p-000001")
+    view() shouldBe Map("x" -> 3L, "k0" -> 10L, "k1" -> 20L)
+    IngestionRunner.runMaintenance(spark, grpTask(2))
+    gens(stg) shouldBe Seq("state-p-000001", "state-p-000002")
+    view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
+    (0 to 2).foreach(i => IngestionRunner.runMaintenance(spark, grpTask(i)))
+    gens(stg) shouldBe Seq("state-p-000001", "state-p-000002")
+    view() shouldBe Map("x" -> 6L, "k0" -> 10L, "k1" -> 20L, "k2" -> 30L)
   }
 
   test("maintenance: profile-compact folds the store through pipeline " +
@@ -796,6 +916,16 @@ class IngestionSpec extends SparkSpec {
   private def gens(store: String): Seq[String] =
     new java.io.File(store).list().filter(_.startsWith("state-p-"))
       .map(_.take("state-p-000000".length)).sorted.toSeq
+
+  /** A `group` store's per-batch partition as the pre-generation layout
+    * wrote it: the z-set delta of `src` under `_batch_key=<key>`. */
+  private def plantGroupPartition(stateDir: String, key: String,
+                                  src: String): Unit = {
+    import graft.transform.Ivm
+    Ivm.viewDelta(Ivm.asZ(spark.read.parquet(src)), Seq("k"),
+      Seq("v" -> org.apache.spark.sql.functions.col("v")))
+      .write.parquet(s"$stateDir/_batch_key=$key")
+  }
 
   private def rmrfDir(p: java.io.File): Unit = {
     if (p.isDirectory) p.listFiles.foreach(rmrfDir)

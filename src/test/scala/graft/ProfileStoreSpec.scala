@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
 import graft.metrics.ProfileStore
 
 /** Monoid laws for incremental profiles: batch profiles folded in any
@@ -95,6 +98,59 @@ class ProfileStoreSpec extends SparkSpec {
     est shouldBe (n.toDouble +- n * 0.05)
     // lang has 5 distinct values; a tiny-cardinality sketch is near-exact
     s("lang").getAs[Long]("n_distinct_approx") shouldBe 5L
+  }
+
+  test("a parent-format store is the first fold's base: summary " +
+       "identical, its batches never refold, later batches fold on top, " +
+       "orphan generations never adopted") {
+    val docs = graft.tables.Tables.documents(spark, dir)
+    val state = tmpDir("profile-parent")
+    def slice(i: Int) = docs.filter(col("doc_id") % 5 === i)
+    def src(i: Int) = s"$state-src/slice=$i"
+    def fold(i: Int) = ProfileStore.fold(spark, state, src(i), cols)(slice(i))
+    // mixed parent layouts: plain appends (root files), a rename-era unit,
+    // and a keyed unit with its commit record
+    ProfileStore.profile(slice(0), cols).write.mode("append").parquet(state)
+    ProfileStore.profile(slice(1), cols)
+      .write.parquet(s"$state/batch-${Commit.batchKeyFor(src(1))}")
+    ProfileStore.profile(slice(2), cols)
+      .write.parquet(s"$state/batch-p-${Commit.batchKeyFor(src(2))}")
+    Files.createDirectories(Paths.get(state, "_commits"))
+    Files.createFile(Paths.get(state, "_commits", Commit.batchKeyFor(src(2))))
+    def summaryRows() = ProfileStore
+      .summary(ProfileStore.current(spark, state))
+      .collect().map(_.toString).toSeq.sorted
+    // the parent's summary: its three batches' profiles merged
+    val before = ProfileStore.summary(ProfileStore.merge((0 to 2)
+      .map(i => ProfileStore.profile(slice(i), cols)).reduce(_ unionByName _)))
+      .collect().map(_.toString).toSeq.sorted
+    // an uncommitted generation from a crashed attempt holding the WHOLE
+    // table's profile (worst case: adopting it would double every count)
+    ProfileStore.profile(docs, cols).write.parquet(s"$state/state-p-000001-000000")
+    // unread until its next fold upgrades it
+    intercept[IllegalStateException](summaryRows()).getMessage should
+      include("older layout")
+    // replays of the parent's batches skip: the first upgrades the store
+    // into one committed generation, neither folds its batch again
+    fold(1)
+    fold(2)
+    def committed() = new java.io.File(s"$state/_commits").list()
+      .count(_.forall(_.isDigit))
+    committed() shouldBe 1
+    summaryRows() shouldBe before
+    // later batches fold on top, one generation each
+    fold(3)
+    fold(4)
+    def all() = ProfileStore.summary(ProfileStore.current(spark, state))
+      .collect().map(r => r.getAs[String]("column") -> r).toMap
+    all()("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
+    all()("doc_id").getAs[Long]("sum_l") shouldBe
+      docs.agg(sum(col("doc_id"))).head.getLong(0)
+    committed() shouldBe 3
+    // replays after generations exist still skip
+    (1 to 4).foreach(fold)
+    all()("doc_id").getAs[Long]("n_rows") shouldBe docs.count()
+    committed() shouldBe 3
   }
 
   test("nulls count per batch and never poison min/max or sums") {
