@@ -36,8 +36,21 @@ object Compaction {
     (bytes, math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt))
   }
 
-  private val OldSuffix = "__rewrite_old"
-  private val TmpSuffix = "__rewrite_tmp"
+  /** The (old, tmp) swap siblings of `dir`: `.<name>__rewrite_old` and
+    * `.<name>__rewrite_tmp`. Dot-prefixed, so Spark's file listing skips
+    * them — a partition dir's siblings sit inside the table root, where
+    * partition discovery would otherwise read them as partitions. */
+  private def swapSiblings(dir: Path): (Path, Path) = {
+    def sibling(suffix: String) =
+      new Path(dir.getParent, "." + dir.getName + suffix)
+    (sibling("__rewrite_old"), sibling("__rewrite_tmp"))
+  }
+
+  /** The visible `<dir>__rewrite_old`/`__rewrite_tmp` siblings earlier
+    * releases swapped through; [[restoreSwapped]] still heals them. */
+  private def visibleSwapSiblings(dir: Path): (Path, Path) =
+    (new Path(dir.toString + "__rewrite_old"),
+      new Path(dir.toString + "__rewrite_tmp"))
 
   /** Crash-safe in-place rewrite: `write` lands the new layout in a
     * sibling temp dir, then two renames publish it — the table is never
@@ -48,8 +61,7 @@ object Compaction {
                                 (write: String => Unit): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + TmpSuffix)
-    val old = new Path(dir + OldSuffix)
+    val (old, tmp) = swapSiblings(p)
     write(tmp.toString)
     if (fs.exists(old)) throw new IllegalStateException(
       s"rewrite: $old exists; restore it before rewriting $p")
@@ -62,27 +74,31 @@ object Compaction {
     fs.delete(old, true)
   }
 
-  /** Heal a crashed [[swapRewrite]] by what `<dir>__rewrite_old` sits
+  /** Heal a crashed [[swapRewrite]] by what its old sibling sits
     * beside. Without `<dir>`, it is the table a crash between the renames
-    * moved aside: move it back. Beside `<dir>` with no `__rewrite_tmp`,
-    * the crash came after the publish, so it is superseded: delete it.
+    * moved aside: move it back. Beside `<dir>` with no tmp sibling, the
+    * crash came after the publish, so it is superseded: delete it.
     * Beside both, `<dir>` was recreated (say, by an ingest) after a crash
     * between the renames, and neither dir holds the whole table: fail,
-    * naming both, and delete nothing. Every rewrite calls this before it
+    * naming both, and delete nothing. The visible siblings of earlier
+    * releases heal the same way, and their tmp is then deleted (no
+    * rewrite overwrites it any more). Every rewrite calls this before it
     * plans over or reads `<dir>`. */
   private[graft] def restoreSwapped(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(dir + OldSuffix)
-    if (fs.exists(old)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(old, p))
-          throw new IllegalStateException(s"rewrite: could not restore $old to $p")
-      } else if (!fs.exists(new Path(dir + TmpSuffix))) fs.delete(old, true)
-      else throw new IllegalStateException(s"rewrite: $p was recreated after " +
-        s"a crashed rewrite moved its earlier rows to $old; merge the two " +
-        "dirs by hand before rewriting")
+    for ((old, tmp) <- Seq(swapSiblings(p), visibleSwapSiblings(p))) {
+      if (fs.exists(old)) {
+        if (!fs.exists(p)) {
+          if (!fs.rename(old, p))
+            throw new IllegalStateException(s"rewrite: could not restore $old to $p")
+        } else if (!fs.exists(tmp)) fs.delete(old, true)
+        else throw new IllegalStateException(s"rewrite: $p was recreated after " +
+          s"a crashed rewrite moved its earlier rows to $old; merge the two " +
+          "dirs by hand before rewriting")
+      }
     }
+    fs.delete(visibleSwapSiblings(p)._2, true)
   }
 
   def compact(spark: SparkSession, dir: String,
@@ -101,14 +117,18 @@ object Compaction {
     * the cluster-scale spelling: each `col=value` directory compacts (and
     * swaps) independently, so the working set is one partition, a crash
     * affects at most the partition mid-swap, and partitions can compact on
-    * different cadences. `minFiles` skips directories already compact. */
+    * different cadences. `minFiles` skips directories already compact.
+    * Hidden dirs (a partition's swap siblings among them) are not
+    * partitions and are skipped, as Spark's partition discovery skips
+    * them. */
   def compactPartitioned(spark: SparkSession, dir: String,
                          targetFileBytes: Long = 128L * 1024 * 1024,
                          minFiles: Int = 2): Map[String, CompactionResult] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+      .filter(s => s.isDirectory && s.getPath.getName.contains("=") &&
+        !s.getPath.getName.startsWith("."))
       .flatMap { s =>
         val part = s.getPath.getName
         if (parquetFileCount(spark, s.getPath.toString) < minFiles) None

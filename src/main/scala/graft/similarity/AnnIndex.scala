@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Persistent ANN SERVING index — the [[BucketedIndex]] lifecycle for
   * embedding similarity search: hyperplane-band the corpus ONCE into
-  * bucketed catalog tables, then serve "top-k neighbors of this new
+  * bucketed tables, then serve "top-k neighbors of this new
   * batch" queries against the STORED bands at O(batch) shuffle cost,
   * appending each served batch into the index so later batches see it as
   * corpus. Before this, every ANN query ([[LshAnn.topKBucketed]] and
@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions._
   * size to hold per-bucket cardinality, nTables for recall.
   */
 object AnnIndex extends BucketedIndex(
-    label = "ann", primaryBase = "vectors", primaryPrefix = "graft_ann_vecs",
-    bandsPrefix = "graft_ann_bands", bandCols = Seq("bkey"),
+    label = "ann", primaryBase = "vectors", bandCols = Seq("bkey"),
     primaryDdlField = "vecsDdl", keepsIdCol = false) {
 
   /** Banding constants + bucketed-layout metadata, persisted as

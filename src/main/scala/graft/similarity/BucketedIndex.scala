@@ -4,6 +4,8 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.StructType
 
 /** The lifecycle every persistent BUCKETED index shares — [[DedupIndex]]
   * (MinHash), [[MediaDedupIndex]] (banded Hamming) and [[AnnIndex]]
@@ -29,18 +31,19 @@ import org.apache.spark.sql.functions._
   *   <path>/index.json      — band constants + bucket count + live
   *                            version + schema DDLs, pinned at build
   *
-  * The two big tables are external bucketed catalog tables
-  * ([[IndexCatalog]]): every per-batch join against them co-locates on
-  * the bucket layout, so a batch exchanges ONLY its own side — the
-  * property that keeps continuous ingestion alive at 100 TB.
+  * The two big tables are bucketed parquet dirs read and written by path
+  * with the manifest's bucket spec ([[IndexCatalog]]): every per-batch
+  * join against them co-locates on the bucket layout, so a batch
+  * exchanges ONLY its own side — the property that keeps continuous
+  * ingestion alive at 100 TB. A read lists the live dir when its frame
+  * is built, so it sees every append that finished before it, from any
+  * session.
   * `numBuckets` sizes the per-batch join width: 8 suits test scale; a
   * 100 TB corpus would use O(thousands) so each bucket fits an executor.
   */
 abstract class BucketedIndex(
     label: String,
     primaryBase: String,
-    primaryPrefix: String,
-    bandsPrefix: String,
     bandCols: Seq[String],
     primaryDdlField: String,
     keepsIdCol: Boolean) {
@@ -125,33 +128,34 @@ abstract class BucketedIndex(
 
   // ---- versioned tables ---------------------------------------------------
 
-  /** One of the two bucketed tables at manifest `m`'s version; catalog
-    * names hash the versioned dir, so a new layout (new dir) gets a fresh
-    * name and no session can confuse two registrations. */
-  private final class Table(val base: String, prefix: String,
-                            val cols: Seq[String], ddl: String, path: String,
-                            m: M) {
+  /** One of the two bucketed tables at manifest `m`'s version, read and
+    * written by path with the manifest's bucket spec. */
+  private final class Table(val base: String, val cols: Seq[String],
+                            ddl: String, path: String, m: M) {
     val dir: String = IndexCatalog.tableDir(path, base, m.version)
-    val name: String = IndexCatalog.tableName(prefix, dir)
-    val knownDdl: Option[String] = Some(ddl).filter(_.nonEmpty)
-    /** The table as a DataFrame (registering on first touch in this
-      * session). Reads via `spark.table` — a plain path read would lose
-      * the bucketing metadata and with it the shuffle-free join. */
-    def read(spark: SparkSession): DataFrame = {
-      IndexCatalog.ensureRegistered(spark, name, dir, cols, m.numBuckets,
-        knownDdl)
-      spark.table(name)
+    /** The stored schema: the manifest's DDL, else (pre-r11 manifests)
+      * the parquet footers. */
+    def schema(spark: SparkSession): StructType =
+      if (ddl.nonEmpty) StructType.fromDDL(ddl)
+      else spark.read.parquet(dir).schema
+    /** The table as a DataFrame — a bucketed scan; a plain path read
+      * would lose the bucket spec and with it the shuffle-free join. */
+    def read(spark: SparkSession): DataFrame = readAs(spark, schema(spark))
+    private def readAs(spark: SparkSession, s: StructType): DataFrame =
+      bridge.readBucketed(spark, dir, s, cols, m.numBuckets)
+    /** Replace the table with `df`'s rows; the stored table, read back. */
+    def writeFresh(df: DataFrame): DataFrame = {
+      bridge.writeBucketed(df, dir, cols, m.numBuckets, append = false)
+      readAs(df.sparkSession, df.schema)
     }
-    def writeFresh(df: DataFrame): Unit =
-      IndexCatalog.writeFresh(df, name, dir, cols, m.numBuckets)
-    def append(df: DataFrame): Unit = IndexCatalog.appendTo(df, name, dir,
-      cols, m.numBuckets, knownDdl)
+    def append(df: DataFrame): Unit =
+      bridge.writeBucketed(df, dir, cols, m.numBuckets, append = true)
   }
 
   private def tables(spark: SparkSession, path: String, m: M): Seq[Table] =
-    Seq(new Table(primaryBase, primaryPrefix,
-        Seq(storedIdCol(spark, path, m)), m.primaryDdl, path, m),
-      new Table("bands", bandsPrefix, bandCols, m.bandsDdl, path, m))
+    Seq(new Table(primaryBase, Seq(storedIdCol(spark, path, m)),
+        m.primaryDdl, path, m),
+      new Table("bands", bandCols, m.bandsDdl, path, m))
 
   /** The stored primary table's id column — from the manifest when
     * present, else from the stored schema (pre-r11 manifests). */
@@ -176,38 +180,30 @@ abstract class BucketedIndex(
   protected def bandSizes(spark: SparkSession, path: String, m: M): DataFrame =
     spark.read.parquet(sizesDir(path, m.version))
 
-  /** Drop the catalog names and delete the files of every table-dir
-    * version other than `keep` — the grace-period expiry: a compact or
-    * rebucket leaves its predecessor's dirs in place (in-flight scans in
-    * other sessions finish against their resolved listings) and the NEXT
-    * maintenance run, or an explicit rebuild, reclaims them. */
+  /** Delete the files of every table-dir version other than `keep` — the
+    * grace-period expiry: a compact or rebucket leaves its predecessor's
+    * dirs in place (in-flight scans in other sessions finish against
+    * their resolved listings) and the NEXT maintenance run, or an
+    * explicit rebuild, reclaims them. */
   private def cleanRetired(spark: SparkSession, path: String,
-                           keep: Int): Unit = {
-    val prefixes = Map(primaryBase -> primaryPrefix, "bands" -> bandsPrefix)
+                           keep: Int): Unit =
     IndexCatalog.retiredVersions(spark, path,
       Seq(primaryBase, "bands", SizesBase), keep).foreach { case (base, ver) =>
-      val dir = IndexCatalog.tableDir(path, base, ver)
-      prefixes.get(base).foreach(p =>
-        spark.sql(s"DROP TABLE IF EXISTS `${IndexCatalog.tableName(p, dir)}`"))
-      val d = new org.apache.hadoop.fs.Path(dir)
+      val d = new org.apache.hadoop.fs.Path(
+        IndexCatalog.tableDir(path, base, ver))
       d.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(d, true)
     }
-  }
 
-  /** Publish `next` through ONE atomic manifest replace (schema DDLs
-    * filled from the new tables where the manifest lacks them), then
-    * retire `prev`'s catalog NAMES — metadata only: other sessions
-    * re-derive the new names from the manifest on their next touch, and
-    * the old FILES stay for the grace period. */
-  private def publish(spark: SparkSession, path: String, prev: M,
-                      next: M): Unit = {
+  /** Publish `next` through ONE atomic manifest replace, schema DDLs
+    * filled from the new tables where the manifest lacks them (pre-r11
+    * manifests). Other sessions read the new dirs from the manifest on
+    * their next read; the old files stay for the grace period. */
+  private def publish(spark: SparkSession, path: String, next: M): Unit = {
     val Seq(p, b) = tables(spark, path, next)
     def ddl(have: String, t: Table) =
-      if (have.nonEmpty) have else spark.table(t.name).schema.toDDL
+      if (have.nonEmpty) have else t.schema(spark).toDDL
     writeManifest(spark, path, relayout(next, _.copy(
       primaryDdl = ddl(next.primaryDdl, p), bandsDdl = ddl(next.bandsDdl, b))))
-    tables(spark, path, prev).foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
   }
 
   // ---- lifecycle ----------------------------------------------------------
@@ -227,10 +223,8 @@ abstract class BucketedIndex(
     val rows = primaryRows(input, idCol, valueCol, m0)
     val m = relayout(m0, _.copy(version = 0, idCol = rows.columns.head))
     val Seq(p, b) = tables(spark, path, m)
-    p.writeFresh(rows)
-    val stored = spark.table(p.name)
-    b.writeFresh(bandRows(stored, m))
-    val bandsT = spark.table(b.name)
+    val stored = p.writeFresh(rows)
+    val bandsT = b.writeFresh(bandRows(stored, m))
     sizeDeltas(bandsT).write.mode("overwrite").parquet(sizesDir(path, 0))
     writeManifest(spark, path, relayout(m, _.copy(
       primaryDdl = stored.schema.toDDL, bandsDdl = bandsT.schema.toDDL)))
@@ -242,11 +236,10 @@ abstract class BucketedIndex(
   def append(input: DataFrame, idCol: String, valueCol: String,
              path: String): Unit = {
     val m = bucketedManifest(input.sparkSession, path)
-    // pin the batch BEFORE mutating any index table: the caller's frame
-    // may reference the index itself (the idempotent-append anti-join in
-    // sinkBatch does), and the primary append refreshes the table's file
-    // index IN PLACE — a lazy recompute after it would see the batch's
-    // own ids as already indexed and silently append zero band rows
+    // pin the batch: one pass over the caller's lineage (the shingling,
+    // and in sinkBatch the idempotent-append anti-join and its exchange)
+    // feeds both tables and the size deltas, instead of one recompute per
+    // write (a sinkBatch runs one Spark job fewer pinned than unpinned)
     val rows = primaryRows(input, idCol, valueCol, m).localCheckpoint(true)
     val Seq(p, b) = tables(input.sparkSession, path,
       relayout(m, _.copy(idCol = rows.columns.head)))
@@ -290,13 +283,13 @@ abstract class BucketedIndex(
     val next = relayout(m, _.copy(version = m.version + 1,
       idCol = ts.head.cols.head))
     val stats = ts.zip(tables(spark, path, next)).map { case (t, n) =>
-        t.base -> IndexCatalog.rewriteBucketed(spark, t.name, t.dir, n.name,
-          n.dir, t.cols, m.numBuckets, targetFileBytes, t.knownDdl)
+        t.base -> IndexCatalog.rewriteBucketed(spark, t.dir, n.dir,
+          t.schema(spark), t.cols, m.numBuckets, targetFileBytes)
       }.toMap +
       (SizesBase -> IndexCatalog.foldSizeDeltasTo(spark,
         sizesDir(path, m.version), sizesDir(path, next.version), bandCols,
         targetFileBytes))
-    publish(spark, path, m, next)
+    publish(spark, path, next)
     stats
   }
 
@@ -306,8 +299,7 @@ abstract class BucketedIndex(
     * never a re-derivation from the source column — into fresh `_v<N+1>`
     * dirs, published by ONE atomic manifest replace (the [[compact]]
     * discipline). Appends and matches pick up the new bucket count from
-    * the manifest; stale same-session registrations of the old layout are
-    * dropped. */
+    * the manifest on their next read. */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
     val m = bucketedManifest(spark, path)
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
@@ -315,14 +307,13 @@ abstract class BucketedIndex(
     // grace expiry: reclaim the dirs the PREVIOUS maintenance run retired
     cleanRetired(spark, path, keep = m.version)
     val next = relayout(m, _.copy(numBuckets = newBuckets,
-      version = m.version + 1, idCol = ts.head.cols.head,
-      primaryDdl = "", bandsDdl = ""))
+      version = m.version + 1, idCol = ts.head.cols.head))
     ts.zip(tables(spark, path, next)).foreach { case (t, n) =>
       n.writeFresh(t.read(spark))
     }
     IndexCatalog.foldSizeDeltasTo(spark, sizesDir(path, m.version),
       sizesDir(path, next.version), bandCols)
-    publish(spark, path, m, next)
+    publish(spark, path, next)
   }
 
   /** One micro-batch of continuous index maintenance — the body every
@@ -363,8 +354,7 @@ object BucketedIndex {
 
   /** The layout half every manifest shares. `version` names the live
     * table dirs ([[IndexCatalog.tableDir]]); `idCol` and the two schema
-    * DDLs make fresh-session re-registration O(1) metadata instead of a
-    * footer read of a possibly-huge index. */
+    * DDLs type a read without a footer read of a possibly-huge index. */
   final case class Layout(numBuckets: Int, version: Int, idCol: String,
                           primaryDdl: String, bandsDdl: String)
 

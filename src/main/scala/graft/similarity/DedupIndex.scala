@@ -12,9 +12,12 @@ import org.apache.spark.sql.functions._
   * Tables: `fingerprints` — (idCol, shingle_set), bucketed by the
   * caller's id column (kept in the manifest as `idCol`); `bands` —
   * (idCol, band), bucketed by band; `band_sizes` — (band, n) deltas.
-  * Scans of the corpus tables are still O(index) I/O per batch — the
-  * index is a few percent of the text it covers — and the cap fold
-  * reads only the small band_sizes deltas, never the bands table.
+  * The two bucketed tables are read by path with the manifest's bucket
+  * spec, so a [[load]] or [[dedupBatch]] sees every append finished
+  * before it, from any session. Scans of the corpus tables are still
+  * O(index) I/O per batch — the index is a few percent of the text it
+  * covers — and the cap fold reads only the small band_sizes deltas,
+  * never the bands table.
   *
   * LEGACY layout (manifest without `numBuckets`): flat/recursive parquet
   * dirs as written by [[appendAtomic]]'s per-batch units — still read by
@@ -26,7 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex extends BucketedIndex(
     label = "dedup", primaryBase = "fingerprints",
-    primaryPrefix = "graft_dedup_fps", bandsPrefix = "graft_dedup_bands",
     bandCols = Seq("band"), primaryDdlField = "fpsDdl", keepsIdCol = true) {
 
   /** Band constants + bucketed-layout metadata, persisted as
@@ -64,7 +66,7 @@ object DedupIndex extends BucketedIndex(
       Manifest(shingleN, bands, rowsPerBand, numBuckets))
 
   /** Load the two index tables: (fingerprints, bands). Bucketed indexes
-    * come back as catalog tables (partitioning-aware); legacy indexes by
+    * come back as bucketed path reads (partitioning-aware); legacy indexes by
     * enumerating published units ([[appendAtomic]]'s committed units and
     * pre-atomic root-level files), one read covering every legacy shape. */
   def load(spark: SparkSession, path: String): (DataFrame, DataFrame) = {

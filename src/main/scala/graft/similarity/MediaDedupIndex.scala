@@ -18,7 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object MediaDedupIndex extends BucketedIndex(
     label = "media dedup", primaryBase = "codes",
-    primaryPrefix = "graft_media_codes", bandsPrefix = "graft_media_bands",
     bandCols = Seq("band", "bkey"), primaryDdlField = "codesDdl",
     keepsIdCol = false) {
 

@@ -39,11 +39,8 @@ class BucketedIndexManifestSpec extends SparkSpec {
     DedupIndex.build(docs(0L, 30L), "doc_id", "text", path)
     writeText(path, "index.json",
       """{"shingleN": 3, "bands": 16, "rowsPerBand": 4, "numBuckets": 8}""")
-    // a fresh session: no registrations, so the schema and the id column
-    // come from the parquet footers
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_dedup_"))
-      .foreach(t => spark.sql(s"DROP TABLE `${t.name}`"))
+    // no DDLs and no idCol: the schema and the id column come from the
+    // parquet footers
     DedupIndex.manifest(spark, path) shouldBe DedupIndex.Manifest(3, 16, 4, 8)
     DedupIndex.indexedIds(spark, path).columns shouldBe Array("doc_id")
     DedupIndex.load(spark, path)._1.count() shouldBe 30L

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -24,8 +28,10 @@ import org.apache.spark.sql.functions._
   */
 class BucketedIndexPlanSpec extends SparkSpec {
 
-  private def withStaticPlan[A](body: => A): A = {
-    val conf = spark.conf
+  private def withStaticPlan[A](body: => A): A = withStaticPlanOn(spark)(body)
+
+  private def withStaticPlanOn[A](session: SparkSession)(body: => A): A = {
+    val conf = session.conf
     val aqe = conf.get("spark.sql.adaptive.enabled")
     val thr = conf.get("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.adaptive.enabled", "false")
@@ -131,24 +137,23 @@ class BucketedIndexPlanSpec extends SparkSpec {
       .map(i => (i, s"kappa lambda mu nu xi omicron doc $i tail ${i * 13}"))
       .toDF("doc_id", "text")
     graft.similarity.DedupIndex.build(corpus, "doc_id", "text", path)
-    // simulate a NEW session: the in-memory catalog loses all table
-    // metadata across JVMs — drop every graft index table definition
-    spark.catalog.listTables().collect()
-      .filter(t => t.name.startsWith("graft_dedup_"))
-      .foreach(t => spark.sql(s"DROP TABLE `${t.name}`"))
-    val batch = Seq((900L, "kappa lambda mu nu xi omicron doc 3 tail 39"))
+    // a NEW session shares nothing with the writer but the files: the
+    // bucket spec comes from the manifest, bucket ids from file names
+    val fresh = spark.newSession()
+    val batch = fresh.createDataFrame(
+        Seq((900L, "kappa lambda mu nu xi omicron doc 3 tail 39")))
       .toDF("doc_id", "text")
-    withStaticPlan {
-      val df = graft.similarity.DedupIndex.dedupBatch(spark, path, batch,
+    withStaticPlanOn(fresh) {
+      val df = graft.similarity.DedupIndex.dedupBatch(fresh, path, batch,
         "doc_id", "text", threshold = 0.3, maxBucket = Some(100))
-      // re-registration restored BUCKETED scans, not plain file scans
+      // the fresh session reads BUCKETED scans, not plain file scans
       assertCorpusSideUnshuffled(df, "/bands")
       assertCorpusSideUnshuffled(df, "/fingerprints")
       df.select("corpus_id").as[Long].collect() should contain(3L)
     }
-    // append still validates against the re-registered spec
+    // the fresh session appends in the manifest's layout
     graft.similarity.DedupIndex.append(batch, "doc_id", "text", path)
-    graft.similarity.DedupIndex.load(spark, path)._1.count() shouldBe 81L
+    graft.similarity.DedupIndex.load(fresh, path)._1.count() shouldBe 81L
   }
 
   test("compact: many appends grow per-bucket file counts; compaction " +
@@ -451,26 +456,83 @@ class BucketedIndexPlanSpec extends SparkSpec {
       .toDF("doc_id", "text")
     graft.similarity.DedupIndex.build(corpus, "doc_id", "text", path,
       numBuckets = 8)
-    // simulate another JVM's stale view: re-register the bands table at
-    // the WRONG bucket count over the same files
-    val bandsLoc = path + "/bands"
-    val name = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_dedup_bands_"))
-      .find { n =>
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(n))
-          .location.getPath.contains(bandsLoc)
-      }.getOrElse(fail("bands table not registered"))
-    val ddl = spark.table(name).schema.toDDL
-    spark.sql(s"DROP TABLE `$name`")
-    spark.sql(s"""CREATE TABLE `$name` ($ddl) USING PARQUET
-                 |CLUSTERED BY (`band`) SORTED BY (`band`) INTO 4 BUCKETS
-                 |LOCATION '$bandsLoc'""".stripMargin)
-    // any index touch must detect the mismatch and restore 8 buckets
-    graft.similarity.DedupIndex.load(spark, path)
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(name))
-      .bucketSpec.map(_.numBuckets) shouldBe Some(8)
+    /** The bucket count the bands scan of `df` plans with. */
+    def planned(df: DataFrame): Seq[Int] = df.queryExecution.sparkPlan
+      .collect { case f: FileSourceScanExec =>
+        f.relation.bucketSpec.map(_.numBuckets)
+      }.flatten
+    planned(graft.similarity.DedupIndex.load(spark, path)._2) shouldBe Seq(8)
+    // another session (as another JVM would) rebuilds the index at the
+    // same path with 4 buckets
+    val other = spark.newSession()
+    graft.similarity.DedupIndex.build(other.createDataFrame(
+        (0L until 50L).map(i => (i, s"iota kappa doc $i tail ${i * 7}")))
+      .toDF("doc_id", "text"), "doc_id", "text", path, numBuckets = 4)
+    // this session's next read plans with the manifest's 4 buckets
+    val bands = graft.similarity.DedupIndex.load(spark, path)._2
+    planned(bands) shouldBe Seq(4)
+    bands.queryExecution.sparkPlan.outputPartitioning
+      .numPartitions shouldBe 4
+    bands.count() shouldBe 50L * 16
+    withStaticPlan {
+      val df = graft.similarity.DedupIndex.dedupBatch(spark, path,
+        Seq((900L, "iota kappa doc 3 tail 21")).toDF("doc_id", "text"),
+        "doc_id", "text", threshold = 0.3)
+      assertCorpusSideUnshuffled(df, "/bands")
+      df.select("corpus_id").as[Long].collect() should contain(3L)
+    }
+  }
+
+  test("an append in another session is seen by this session's next " +
+       "read, and a sink replay of the appended batch here appends " +
+       "nothing") {
+    import spark.implicits._
+    val path = tmpDir("bidx-xappend")
+    def docs(session: SparkSession, lo: Long, hi: Long) =
+      session.createDataFrame((lo until hi)
+        .map(i => (i, s"lambda mu nu doc $i tail ${i * 19} end ${i % 5}")))
+        .toDF("doc_id", "text")
+    graft.similarity.DedupIndex.build(docs(spark, 0L, 40L), "doc_id",
+      "text", path)
+    val sessionB = spark.newSession()
+    // copies of the docs session A is about to append, under fresh ids
+    val probe = docs(sessionB, 100L, 110L)
+      .withColumn("doc_id", col("doc_id") + 9000L)
+    def matched(): Set[Long] = graft.similarity.DedupIndex
+      .dedupBatch(sessionB, path, probe, "doc_id", "text", threshold = 0.3)
+      .select("corpus_id").as[Long].collect().toSet
+    val appended = (100L until 110L).toSet
+    matched().intersect(appended) shouldBe empty
+    graft.similarity.DedupIndex.append(docs(spark, 100L, 110L), "doc_id",
+      "text", path)
+    matched() should contain allElementsOf appended
+    // B replays the appended batch as a sink batch: every id is indexed
+    def stored(): (Long, Long, Long) = {
+      val (fps, bands) = graft.similarity.DedupIndex.load(sessionB, path)
+      (fps.count(), bands.count(), sessionB.read.parquet(path + "/band_sizes")
+        .agg(sum("n")).as[Long].collect().head)
+    }
+    val before = stored()
+    before shouldBe ((50L, 50L * 16, 50L * 16))
+    graft.streaming.StreamOps.dedupIndexBatch(docs(sessionB, 100L, 110L),
+      batchId = 0L, "doc_id", "text", path, tmpDir("bidx-xappend-matches"),
+      threshold = 0.3)
+    stored() shouldBe before
+  }
+
+  test("no session-catalog call under graft/similarity: the index " +
+       "tables live by path") {
+    val names = Seq("saveAsTable", ".table(", "spark.catalog",
+      "sessionState.catalog", "CREATE TABLE", "DROP TABLE", "TBLPROPERTIES")
+    val files = Files.list(Paths.get("src/main/scala/graft/similarity"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    files.size should be > 10
+    files.map { p =>
+      val code = ScalaSource.uncommented(Files.readString(p))
+      val upper = code.toUpperCase // SQL keywords in any case
+      p.getFileName.toString -> names.filter(n =>
+        code.contains(n) || upper.contains(n))
+    }.filter(_._2.nonEmpty) shouldBe empty
   }
 
   /** Seeded test vectors: all-ones plus a seed-sized spike at dimension

@@ -240,46 +240,10 @@ class FoldStoreUpgradeSpec extends SparkSpec {
     val files = Files.walk(main).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     files.size should be > 50
-    def spelled(p: Path) = literals(Files.readString(p))
+    def spelled(p: Path) = ScalaSource.literals(Files.readString(p))
       .flatMap(l => names.filter(l.contains)).distinct
     spelled(main.resolve("graft/core/Commit.scala")) should contain theSameElementsAs names
     files.filterNot(_.endsWith("graft/core/Commit.scala"))
       .map(p => p -> spelled(p)).filter(_._2.nonEmpty) shouldBe empty
-  }
-
-  /** The string literals of Scala source `src`, comments skipped. */
-  private def literals(src: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    def upTo(end: String, from: Int) = src.indexOf(end, from) match {
-      case -1 => src.length
-      case j => j
-    }
-    while (i < src.length) {
-      if (src.startsWith("//", i)) i = upTo("\n", i)
-      else if (src.startsWith("/*", i)) {
-        var depth = 1
-        i += 2
-        while (depth > 0 && i < src.length) {
-          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
-          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
-          else i += 1
-        }
-      } else if (src.startsWith("\"\"\"", i)) {
-        val j = upTo("\"\"\"", i + 3)
-        out += src.substring(i + 3, j)
-        i = j + 3
-      } else if (src.charAt(i) == '"') {
-        var j = i + 1
-        while (j < src.length && src.charAt(j) != '"' && src.charAt(j) != '\n')
-          j += (if (src.charAt(j) == '\\') 2 else 1)
-        out += src.substring(i + 1, math.min(j, src.length))
-        i = j + 1
-      } else if (src.charAt(i) == '\'' && i + 2 < src.length &&
-                 (src.charAt(i + 1) == '\\' || src.charAt(i + 2) == '\'')) {
-        i = upTo("'", i + 2) + 1 // a char literal, such as '"'
-      } else i += 1
-    }
-    out.result()
   }
 }

@@ -17,6 +17,12 @@ class IoSpec extends SparkSpec {
     StructField("name", StringType),
   ))
 
+  /** Names of the swap siblings (hidden or, from earlier releases,
+    * visible) a rewrite of `dir` left beside it. */
+  private def swapLeftovers(dir: String): Seq[String] =
+    new java.io.File(dir).getParentFile.listFiles.toSeq.map(_.getName)
+      .filter(_.contains("__rewrite_"))
+
   test("FileReader reads csv with explicit schema, no inference") {
     val dir = tmpDir("csv")
     Files.writeString(Paths.get(dir, "data.csv"), "1,alpha\n2,beta\n")
@@ -231,27 +237,34 @@ class IoSpec extends SparkSpec {
     r.filesAfter should be < 5
     spark.read.parquet(dir).count() shouldBe 10000
     // temp/old dirs are gone after the swap
-    new java.io.File(dir + "__rewrite_tmp").exists() shouldBe false
-    new java.io.File(dir + "__rewrite_old").exists() shouldBe false
+    swapLeftovers(dir) shouldBe empty
   }
 
   test("a crash between swapRewrite's two renames heals: the next compact " +
        "or zorder restores the table from __rewrite_old, rows intact") {
     import graft.lakehouse.{Compaction, ZOrder}
-    for (op <- Seq("compact", "zorder")) withClue(s"$op: ") {
+    // the hidden sibling names, and the visible ones earlier releases used
+    def hidden(dir: String, suffix: String) = {
+      val f = new java.io.File(dir)
+      s"${f.getParent}/.${f.getName}$suffix"
+    }
+    def visible(dir: String, suffix: String) = dir + suffix
+    for (op <- Seq("compact", "zorder");
+         (naming, sibling) <- Seq("hidden" -> hidden _, "visible" -> visible _))
+        withClue(s"$op, $naming siblings: ") {
       val dir = tmpDir("swap-crash") + "/t"
       spark.range(1000).toDF("id").repartition(8).write.parquet(dir)
       // the state the crash leaves: the table moved aside, and a fully
       // written rewrite not yet published
-      new java.io.File(dir).renameTo(new java.io.File(dir + "__rewrite_old")) shouldBe true
-      spark.range(5).toDF("id").write.parquet(dir + "__rewrite_tmp")
+      new java.io.File(dir).renameTo(
+        new java.io.File(sibling(dir, "__rewrite_old"))) shouldBe true
+      spark.range(5).toDF("id").write.parquet(sibling(dir, "__rewrite_tmp"))
       if (op == "compact") Compaction.compact(spark, dir, targetFileBytes = 1L * 1024 * 1024)
       else ZOrder.rewrite(spark, dir, Seq("id"), targetFileBytes = 1L * 1024 * 1024)
       val back = spark.read.parquet(dir)
       back.count() shouldBe 1000
       back.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) shouldBe 499500L
-      new java.io.File(dir + "__rewrite_old").exists() shouldBe false
-      new java.io.File(dir + "__rewrite_tmp").exists() shouldBe false
+      swapLeftovers(dir) shouldBe empty
     }
   }
 
@@ -299,6 +312,33 @@ class IoSpec extends SparkSpec {
     back.where("part = 'a'").count() shouldBe 1000
     // second run is a no-op (already compact)
     Compaction.compactPartitioned(spark, dir) shouldBe empty
+  }
+
+  test("a partition's swap sibling stays out of the table: a 100-row " +
+       "table reads 100 rows mid-rewrite, and compactPartitioned skips it") {
+    import graft.lakehouse.Compaction
+    val dir = tmpDir("psibling") + "/t"
+    val df = Seq.tabulate(100)(i => (i.toLong, if (i % 2 == 0) "a" else "b"))
+      .toDF("id", "part")
+    df.where("part = 'a'").coalesce(1).write.partitionBy("part").parquet(dir)
+    df.where("part = 'b'").repartition(4)
+      .write.mode("append").partitionBy("part").parquet(dir)
+    // a rewrite of part=a stopped after landing its new files, before the
+    // swap: the state every reader sees while that partition compacts
+    intercept[IllegalStateException] {
+      Compaction.swapRewrite(spark, s"$dir/part=a") { tmp =>
+        spark.read.parquet(s"$dir/part=a").repartition(2).write.parquet(tmp)
+        throw new IllegalStateException("stopped before the swap")
+      }
+    }
+    val sibling = swapLeftovers(s"$dir/part=a")
+    sibling should have size 1
+    spark.read.parquet(dir).count() shouldBe 100L
+    // part=a is one file (below minFiles); its sibling is not a partition
+    Compaction.compactPartitioned(spark, dir).keySet shouldBe Set("part=b")
+    new java.io.File(dir, sibling.head).exists() shouldBe true
+    spark.read.parquet(dir).select("part").distinct().as[String]
+      .collect().sorted shouldBe Array("a", "b")
   }
 
   test("FileReader passes 'avro' through to the datasource resolver (contract)") {
@@ -357,8 +397,7 @@ class IoSpec extends SparkSpec {
     r.rowsAfter shouldBe 2
     spark.read.parquet(dir).select("customer_id").as[Long].collect().sorted shouldBe
       Array(2L, 3L)
-    new java.io.File(dir + "__rewrite_tmp").exists() shouldBe false
-    new java.io.File(dir + "__rewrite_old").exists() shouldBe false
+    swapLeftovers(dir) shouldBe empty
   }
 
   test("Retention.enforcePartitioned deletes expired partitions wholesale") {
